@@ -737,11 +737,9 @@ def stream_bm25_index_append_exec(spark, sf_dir):
     and stats merges commute — addition is associative and the posting
     sets are disjoint by doc).
 
-    Replay safety note: the memory-batch appends here are idempotent
-    per run (fresh scratch copy each execution); a production sink
-    would key delta segment directories by batch_id exactly like
-    idempotent_parquet_writer to make checkpoint replays overwrite
-    rather than double-append."""
+    Replay safety: each fold passes its micro-batch id, so a batch
+    replayed from the checkpoint is a no-op append (the id is already
+    in the index manifest)."""
     import os
     import shutil
 
@@ -765,7 +763,7 @@ def stream_bm25_index_append_exec(spark, sf_dir):
         batch = batch_df.filter(F.col("doc_id") % 10 == 0)
         if batch.isEmpty():
             return
-        append_to_bm25_index(spark, work, batch)
+        append_to_bm25_index(spark, work, batch, batch_id=batch_id)
 
     stream = read_documents_stream(spark, sf_dir)
     q = (

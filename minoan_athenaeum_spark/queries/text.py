@@ -735,25 +735,28 @@ def bm25_per_doc(spark, sf_dir):
 
 
 def bm25_serve_from_index(spark, idx_path: str):
-    """Serve the standard _BM25_TERMS top-20 from a persisted posting
-    index directory (postings + stats) — the ONE serve path shared by
-    the fresh-index, append, compact, and streaming-append queries, so
-    every maintenance variant is gated through identical scoring. Term
-    IN-filter pushed into the parquet scan (row-group min/max pruning
-    over base + any delta segments), df recomputed exactly from the
-    pruned postings, broadcast stats, shared scoring expression."""
-    import os
+    """Serve the standard _BM25_TERMS top-20 from a persisted BM25
+    index — the ONE serve path shared by the fresh-index, append,
+    compact, and streaming-append queries, so every maintenance variant
+    is gated through identical scoring. One manifest read fixes the
+    snapshot: its exact posting files are scanned with the pinned
+    schema (no listing, no schema-inference job) and the term IN-filter
+    pushed down (row-group min/max pruning over base + delta
+    generations); df is recomputed exactly from the pruned postings;
+    n_docs and avgdl are the manifest's exact stats, bound as literals.
+    The returned DataFrame reads that snapshot even if one further
+    append or compaction commits before it is collected."""
+    from minoan_athenaeum_spark.sources.posting_sink import bm25_snapshot
 
-    from minoan_athenaeum_spark.sources.posting_sink import bm25_stats
-
-    p = spark.read.parquet(os.path.join(idx_path, "postings")).where(
-        F.col("term").isin(*_BM25_TERMS)
-    )
-    # sidecar generations collapsed to one exact (n_docs, avgdl) row
-    stats = bm25_stats(spark, idx_path).select("n_docs", "avgdl")
+    postings, stats = bm25_snapshot(spark, idx_path)
+    p = postings.where(F.col("term").isin(*_BM25_TERMS))
     tf = p.select("doc_id", "term", F.col("tf").cast("double").alias("tf"), "dl")
     df_ = tf.groupBy("term").agg(F.count("*").cast("double").alias("df"))
-    scored = tf.join(F.broadcast(df_), "term").crossJoin(F.broadcast(stats))
+    scored = tf.join(F.broadcast(df_), "term").select(
+        "*",
+        F.lit(float(stats.n_docs)).alias("n_docs"),
+        F.lit(stats.avgdl).alias("avgdl"),
+    )
     return (
         _bm25_rank_per_doc(scored)
         .orderBy(F.col("bm25").desc(), "doc_id")
@@ -772,13 +775,14 @@ def text_bm25_search_indexed(spark, sf_dir):
     `sources/posting_sink.py::ensure_bm25_index` materializes
     term-range-segmented postings (term, doc_id, tf, dl — the length
     norm denormalized onto each posting, so query-time scoring is
-    JOIN-FREE against the corpus) plus a 1-row stats table, once per
-    source fingerprint. Query time: a parquet scan with the term
-    IN-filter PUSHED DOWN (row-group min/max on the term-sorted
-    segments prune to the matching ranges — no tokenize, no explode,
-    no corpus scan), df recomputed from the pruned postings (exact:
-    df(t) = posting count of t), broadcast stats, the SAME shared
-    scoring expression as the explode path (bit-identical doubles),
+    JOIN-FREE against the corpus) plus a manifest holding the exact
+    corpus stats, once per source fingerprint. Query time: a parquet
+    scan with the term IN-filter PUSHED DOWN (row-group min/max on the
+    term-sorted segments prune to the matching ranges — no tokenize,
+    no explode, no corpus scan), df recomputed from the pruned postings
+    (exact: df(t) = posting count of t), corpus stats as literals, the
+    SAME shared scoring expression as the explode path (bit-identical
+    doubles),
     TakeOrdered top-20. Same oracle as text_bm25_search — the two
     paths must return identical rows.
 
@@ -1620,9 +1624,9 @@ def text_bm25_index_append(spark, sf_dir):
     index holds the EXISTING corpus (doc_id % 10 != 0, built once per
     source fingerprint — the same generation convention as the
     incremental LSH dedup), the arriving batch (doc_id % 10 == 0) is
-    folded in via `append_to_bm25_index` (delta posting segments +
-    exact stats merge), and the standard _BM25_TERMS query is served
-    from the APPENDED index. The oracle is the full-corpus BM25 twin —
+    folded in via `append_to_bm25_index` (a delta posting generation +
+    exact integer stats merge, one manifest commit), and the standard
+    _BM25_TERMS query is served from the APPENDED index. The oracle is the full-corpus BM25 twin —
     identical to text_bm25_search's — so a green row proves
     append-then-serve ≡ rebuild-then-serve through the entire ranking
     math (df from base+delta postings, avgdl from merged exact sums).
@@ -1632,9 +1636,10 @@ def text_bm25_index_append(spark, sf_dir):
     query is deterministic under re-execution.
 
     Scale shape: the corpus pays NOTHING per batch — only the batch is
-    tokenized (map-only) and its delta segments written; stats merge
-    is 1-row arithmetic. Serving reads base + one delta generation
-    with the term filter pushed into both (row-group min/max pruning);
+    tokenized (map-only) and its delta segments written; the stats
+    merge is integer arithmetic in the manifest. Serving reads base +
+    one delta generation with the term filter pushed into both
+    (row-group min/max pruning);
     generations compact by rewriting through write_posting_segments."""
     import os
     import shutil
@@ -1663,7 +1668,7 @@ def text_bm25_index_compact(spark, sf_dir):
     """BM25 INDEX COMPACTION, gated end-to-end (VERDICT r7 #4): the
     arriving corpus tenth lands as THREE separate append generations
     (doc_id % 30 ∈ {0, 10, 20} — three independent
-    `append_to_bm25_index` folds, each its own delta segment file +
+    `append_to_bm25_index` folds, each its own delta generation +
     exact stats merge), then `compact_bm25_index` rewrites base +
     deltas into fresh term-range segments, and the standard
     _BM25_TERMS query is served from the COMPACTED index. The oracle
@@ -1677,11 +1682,11 @@ def text_bm25_index_compact(spark, sf_dir):
     fold (serve-time row-group pruning still works, but file-open
     cost grows linearly), and compaction restores the
     one-segment-per-term-range layout with one index-sized rewrite —
-    rows unchanged by construction, swapped in by directory rename so
-    serving never sees a half-written index. The measured many-delta
-    vs compacted serve A/B lives in BASELINE.md (scripts/
-    compaction_probe.py); the file-count + row-identity pins in
-    tests/test_text_ops.py."""
+    rows unchanged by construction, published as one new generation by
+    a manifest commit so serving never sees a half-written index. The
+    measured many-delta vs compacted serve A/B lives in BASELINE.md
+    (scripts/compaction_probe.py); the file-count + row-identity pins
+    in tests/test_posting_sink.py."""
     import os
     import shutil
 

@@ -507,8 +507,7 @@ def query(name: str, oracle: str | None = None, tags: tuple[str, ...] = ()):
 #       VERDICT r12 #1, incl. the fit/score/bucketize refactor),
 #     pipeline_curation_v3 + stream_quality_gate_exec (warehouse-
 #       cached perceptron weights),
-#     text_bm25_index_append (append_index2 intent markers, ADVICE
-#       r12).
+#     text_bm25_index_append (BM25 append path, ADVICE r12).
 #   Incoming staleness re-greens (37): the 4 remaining r1 rows
 #   (agg_distinct, agg_min_max, fn_date_parts, misc_like_family), the
 #   full r2 cohort (15: mm_binary_meta, pipeline_stratified_sample,

@@ -1,54 +1,46 @@
 """Shared lifecycle harness for the persisted-index families.
 
-Six index families keep serving state in the Spark warehouse (LSH
-bands, BM25 postings, IVF cells, first-occurrence grams, training
-shards, line fingerprints) and by round 9 each carried a privately
-duplicated copy of the same lifecycle: freshness-fingerprinted path
-resolution, crash-recovering ensure, delta-generation append, and
-merge+swap compaction (VERDICT r9 #5 named the ~5× duplication). This
-module is the single implementation.
-
-Two layers:
+Several index families keep serving state in the Spark warehouse (LSH
+bands, BM25 postings, IVF cells, first-occurrence grams, LM scores,
+line fingerprints). This module holds the lifecycle they share, in
+three layers:
 
 1. :func:`warehouse_index_path` — the path/freshness convention EVERY
    family shares (warehouse dir + sf_dir tag + source-parquet
    fingerprint, so a changed corpus resolves to a new path and a stale
-   index is never served). All six families now call this one
-   function.
+   index is never served).
 
-2. :class:`MergeableIndexFamily` + ensure/append/compact — the full
-   LSM lifecycle for families whose state is a per-key MERGEABLE
-   aggregate: appends land as delta generations, a reader (or the
-   compactor) restores the exact rebuilt-from-union index by applying
-   ``merge_fn`` across generations, and compaction swaps live via the
-   crash-safe two-rename dance (sources/swap.py). The gram and line
-   families — both pure per-key MIN — are defined entirely on this
-   layer (sources/gram_index.py, sources/line_index.py).
+2. :class:`MergeableIndexFamily` + ensure/append/compact — the LSM
+   lifecycle for families whose state is a per-key MERGEABLE
+   aggregate: appends land as delta files in one live directory, a
+   reader (or the compactor) restores the exact rebuilt-from-union
+   index by applying ``merge_fn`` across them, and compaction swaps
+   live via the crash-safe two-rename dance (sources/swap.py). The
+   gram and line families are defined entirely on this layer; the LSH
+   band index compacts through it.
 
-Round 11 widened layer 2 with per-family ``layout_fn``/``append_fn``
-hooks and a :class:`TwoTableIndexFamily` main+sidecar wrapper
-(VERDICT r10 #7), which brought BM25 into the shared lifecycle: its
-postings are a merge-free (disjoint-rows) family with the
-term-range-segment layout, and its 1-row corpus-stats sidecar is an
-additive-merge family whose generations collapse at read time — the
-old private read-modify-write of the stats file is gone, both tables
-are append-only between compactions.
+3. Snapshot manifests — immutable generation directories plus one JSON
+   manifest per index (:func:`stage_generation`, :func:`commit`,
+   :func:`read_manifest`). Each write stages its files, renames them
+   into ``<index>/<subdir>/<gen>/`` and publishes a new manifest with
+   one ``os.replace``; a reader reads the manifest once and then
+   exactly its files with its pinned schema. A published manifest is
+   the only commit point, so a crash at any step leaves the previous
+   snapshot served, and a reader that built its plan on one snapshot
+   can still read it after the next commit. The BM25 index
+   (sources/posting_sink.py) is built on this layer.
 
-Adjudication for the families that still keep their own writers: the
-IVF index's mutable half (cell members) already compacts through
-:mod:`swap`, while its codebook is immutable-by-construction (k-means
-fit once per corpus fingerprint — "compacting" a codebook is
-retraining, not a rewrite); the LSH band index is rebuilt per corpus
-fingerprint rather than appended (its incremental query folds batches
-at SERVE time), so the only lifecycle it shares is path resolution.
-Each therefore uses layer 1 and keeps its own layer-2, with its
-invariants pinned in tests/test_crash_safety.py exactly as before.
+The IVF and LM-score families keep their own writers on layer 1 and
+sources/swap.py. Every family's crash invariants are pinned in
+tests/test_crash_safety.py.
 """
 
 from __future__ import annotations
 
 import hashlib
+import json
 import os
+import shutil
 import uuid
 from collections.abc import Callable
 from dataclasses import dataclass
@@ -120,8 +112,6 @@ class MergeableIndexFamily:
     part_col: str
     source_table: str = "documents"
     params: str = ""
-    layout_fn: Callable[[DataFrame, str, int], None] | None = None
-    append_fn: Callable[[DataFrame, str], None] | None = None
 
     def path(self, spark: SparkSession, sf_dir: str) -> str | None:
         return warehouse_index_path(
@@ -159,14 +149,11 @@ def ensure_index(
 def _write_layout(
     fam: MergeableIndexFamily, rows: DataFrame, target: str, n_files: int
 ) -> None:
-    if fam.layout_fn is not None:
-        fam.layout_fn(rows, target, n_files)
-    else:
-        (
-            rows.repartition(n_files, F.col(fam.part_col))
-            .write.mode("overwrite")
-            .parquet(target)
-        )
+    (
+        rows.repartition(n_files, F.col(fam.part_col))
+        .write.mode("overwrite")
+        .parquet(target)
+    )
 
 
 def append_index(
@@ -177,11 +164,7 @@ def append_index(
     read-modify-write: ``merge_fn`` over generations ≡ rebuild from
     the unioned source under any interleaving. Per-record idempotence
     (each source row appended once) is the caller's contract."""
-    rows = fam.rows_fn(new_slice)
-    if fam.append_fn is not None:
-        fam.append_fn(rows, fam.live_dir(path))
-    else:
-        rows.write.mode("append").parquet(fam.live_dir(path))
+    fam.rows_fn(new_slice).write.mode("append").parquet(fam.live_dir(path))
 
 
 def compact_index(
@@ -202,142 +185,97 @@ def compact_index(
     swap_live(live)
 
 
+
+
 # --------------------------------------------------------------------------
-# Two-table families (VERDICT r10 #7): an index whose serving state is
-# a MAIN table plus a co-updated mergeable SIDECAR (the BM25 postings +
-# corpus-stats pair). Both halves are plain MergeableIndexFamily
-# components sharing one warehouse path; the sidecar is itself
-# generation-appended (additive merge applied at READ time), which
-# removes the read-modify-write the old private BM25 writer did on the
-# stats file — an append now touches both tables append-only. The
-# reader's sidecar merge tolerates ANY set of landed generations (extra
-# or compacted), but it cannot repair a TORN append: a crash after the
-# main (postings) append and before the sidecar append leaves postings
-# counted in the main table but missing from n_docs/sum_dl. To make
-# that state DETECTABLE (not just documented — ADVICE r12),
-# ``append_index2`` keeps a tiny intent log under ``<path>/_append_log``:
-# it drops ``<batch_id>.pending`` before touching either table and
-# atomically renames it to ``.done`` only after BOTH halves land.
-# ``torn_appends2(path)`` lists the batch ids whose marker never
-# flipped — each names a batch that may have landed main-only (or not
-# at all; Spark's append commit is all-or-nothing per table, so a
-# pending marker brackets exactly three states: nothing landed, main
-# landed, both landed but the rename was lost). Repair remains the
-# caller's: for each torn id, compare main vs sidecar doc counts for
-# that batch and append the SAME batch's sidecar row if missing
-# (appends carry no generation-id dedup — re-driving the whole append
-# would double-count the main table), or rebuild the index from
-# source, then clear the marker.
+# Snapshot manifests (layer 3). A manifest is a JSON object holding
+# ``generations`` ({gen dir relative to the index: its data file
+# names}), ``previous`` (the generation dirs of the manifest it
+# replaced) and whatever fields the family keeps beside them. Paths are
+# relative, so a copied index directory stays valid. One writer per
+# index; readers never take a lock.
 # --------------------------------------------------------------------------
 
-
-@dataclass(frozen=True)
-class TwoTableIndexFamily:
-    """``main`` + ``side`` MUST share prefix/source_table/params (one
-    warehouse path). ``side.merge_fn`` must be additive/idempotent so
-    a reader can collapse any set of sidecar generations."""
-
-    main: MergeableIndexFamily
-    side: MergeableIndexFamily
-
-    def __post_init__(self) -> None:
-        same = (
-            self.main.prefix == self.side.prefix
-            and self.main.source_table == self.side.source_table
-            and self.main.params == self.side.params
-        )
-        if not same or self.main.subdir == self.side.subdir:
-            raise ValueError(
-                "TwoTableIndexFamily halves must share prefix/source/params "
-                "and use distinct subdirs"
-            )
-
-    def path(self, spark: SparkSession, sf_dir: str) -> str | None:
-        return self.main.path(spark, sf_dir)
+MANIFEST = "_manifest.json"
+_STAGING = "_staging"
 
 
-def ensure_index2(
-    fam: TwoTableIndexFamily,
-    spark: SparkSession,
-    sf_dir: str,
-    existing: DataFrame,
-    n_files: int = 8,
-) -> str:
-    """Materialize both tables; idempotent per source fingerprint,
-    repairing interrupted compaction swaps on BOTH halves first. The
-    index counts as present only when both subdirs carry _SUCCESS."""
-    path = fam.path(spark, sf_dir)
-    if path is None:
-        raise RuntimeError(f"{fam.main.prefix} index needs a local warehouse dir")
-    main_live = fam.main.live_dir(path)
-    side_live = fam.side.live_dir(path)
-    recover_swap(main_live)
-    recover_swap(side_live)
-    if os.path.isfile(os.path.join(main_live, "_SUCCESS")) and os.path.isfile(
-        os.path.join(side_live, "_SUCCESS")
-    ):
-        return path
-    _write_layout(fam.main, fam.main.rows_fn(existing), main_live, n_files)
-    _write_layout(fam.side, fam.side.rows_fn(existing), side_live, n_files)
-    return path
+def read_manifest(path: str) -> dict:
+    """The index's current manifest; FileNotFoundError when none was
+    ever published."""
+    with open(os.path.join(path, MANIFEST), encoding="utf-8") as f:
+        return json.load(f)
 
 
-def append_index2(
-    fam: TwoTableIndexFamily,
+def manifest_files(path: str, manifest: dict) -> list[str]:
+    """Absolute paths of exactly the data files the manifest lists."""
+    return [
+        os.path.join(path, gen, name)
+        for gen, names in manifest["generations"].items()
+        for name in names
+    ]
+
+
+def stage_generation(
+    path: str, subdir: str, write: Callable[[str], None]
+) -> dict[str, list[str]]:
+    """Run ``write(staging_dir)``, then rename the finished directory to
+    a fresh ``<path>/<subdir>/<gen>/``. Returns ``{gen: data files}``;
+    readers see the generation only once a committed manifest names it."""
+    name = uuid.uuid4().hex
+    staging = os.path.join(path, _STAGING, name)
+    write(staging)
+    files = sorted(f for f in os.listdir(staging) if f.endswith(".parquet"))
+    gen = os.path.join(subdir, name)
+    os.makedirs(os.path.join(path, subdir), exist_ok=True)
+    os.rename(staging, os.path.join(path, gen))
+    return {gen: files}
+
+
+def publish_manifest(path: str, manifest: dict) -> None:
+    """Make ``manifest`` current: write and fsync a temp file, then one
+    ``os.replace`` (and a directory fsync so the rename is durable)."""
+    tmp = os.path.join(path, f".{MANIFEST}.tmp")
+    with open(tmp, "w", encoding="utf-8") as f:
+        json.dump(manifest, f)
+        f.flush()
+        os.fsync(f.fileno())
+    os.replace(tmp, os.path.join(path, MANIFEST))
+    fd = os.open(path, os.O_RDONLY)
+    try:
+        os.fsync(fd)
+    finally:
+        os.close(fd)
+
+
+def collect_garbage(path: str, manifest: dict) -> None:
+    """Delete every generation dir neither ``manifest`` nor the one it
+    replaced names (compacted-away inputs, orphans of a crashed write),
+    and any leftover staging output."""
+    keep = set(manifest["generations"]) | set(manifest["previous"])
+    for subdir in {os.path.dirname(g) for g in keep}:
+        for name in os.listdir(os.path.join(path, subdir)):
+            if os.path.join(subdir, name) not in keep:
+                shutil.rmtree(os.path.join(path, subdir, name))
+    if os.path.isdir(os.path.join(path, _STAGING)):
+        shutil.rmtree(os.path.join(path, _STAGING))
+
+
+def commit(
     path: str,
-    new_slice: DataFrame,
-    batch_id: str | None = None,
+    prev: dict | None,
+    generations: dict[str, list[str]],
+    **fields,
 ) -> None:
-    """Fold a batch into both tables as delta generations — main rows
-    first, then the sidecar row, both append-only — bracketed by an
-    intent marker so a torn append is detectable afterwards
-    (``torn_appends2``): ``_append_log/<batch_id>.pending`` is written
-    before either table is touched and os.replace-renamed to ``.done``
-    only once both halves land. ``batch_id`` defaults to a fresh uuid;
-    callers that re-drive batches should pass their own stable id so
-    the torn marker names the batch they know how to reconcile."""
-    log_dir = os.path.join(path, "_append_log")
-    os.makedirs(log_dir, exist_ok=True)
-    bid = batch_id if batch_id is not None else uuid.uuid4().hex
-    pending = os.path.join(log_dir, f"{bid}.pending")
-    with open(pending, "w", encoding="utf-8"):
-        pass
-    append_index(fam.main, path, new_slice)
-    append_index(fam.side, path, new_slice)
-    os.replace(pending, os.path.join(log_dir, f"{bid}.done"))
-
-
-def torn_appends2(path: str) -> list[str]:
-    """Batch ids whose ``append_index2`` intent marker never flipped to
-    ``.done`` — each bounds a possibly-torn append (nothing landed /
-    main-only / both landed but the rename was lost). Repair per the
-    module contract above, then ``clear_append_marker2`` the id."""
-    log_dir = os.path.join(path, "_append_log")
-    if not os.path.isdir(log_dir):
-        return []
-    return sorted(
-        f[: -len(".pending")]
-        for f in os.listdir(log_dir)
-        if f.endswith(".pending")
-    )
-
-
-def clear_append_marker2(path: str, batch_id: str) -> None:
-    """Acknowledge a reconciled torn append: flip its marker to
-    ``.done`` (atomic rename, idempotent if already flipped)."""
-    pending = os.path.join(path, "_append_log", f"{batch_id}.pending")
-    if os.path.isfile(pending):
-        os.replace(pending, os.path.join(path, "_append_log", f"{batch_id}.done"))
-
-
-def compact_index2(
-    fam: TwoTableIndexFamily,
-    spark: SparkSession,
-    path: str,
-    n_files: int = 8,
-) -> None:
-    """Compact both tables through the shared crash-safe swap: the
-    main table back to its full layout, the sidecar generations down
-    to one merged row."""
-    compact_index(fam.main, spark, path, n_files)
-    compact_index(fam.side, spark, path, n_files)
+    """Publish the manifest that follows ``prev`` (None for a new
+    index): ``generations`` live, ``fields`` replacing prev's family
+    fields, the rest carried over. Then collect garbage."""
+    base = prev if prev is not None else {"generations": {}}
+    manifest = {
+        **base,
+        **fields,
+        "generations": generations,
+        "previous": list(base["generations"]),
+    }
+    publish_manifest(path, manifest)
+    collect_garbage(path, manifest)

@@ -109,7 +109,7 @@ def compact_ivf_members(spark: SparkSession, path: str) -> None:
     file per appended batch) back into N_CELLS cell-partitioned files
     — the same LSM compaction contract as
     posting_sink.compact_bm25_index: rows unchanged by construction
-    (one repartition-by-cell rewrite), swapped in by directory rename
+    (one repartition-by-cell rewrite), here swapped in by directory rename
     so a reader never sees a half-written index. Centroids are
     untouched (retraining the codebook is a model event, not a
     layout event). Pinned by tests/test_dedup_similarity.py::

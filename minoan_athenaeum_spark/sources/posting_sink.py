@@ -16,12 +16,42 @@ sort is the executor's external sort, spilling as needed, so no task
 ever holds a posting list in memory. Parquet keeps row-group min/max
 stats on term, giving the one-file-per-lookup property to any reader
 that pushes a term predicate down.
+
+The BM25 serving index below is built from such segments, one
+immutable generation directory per build, append or compaction, and
+one snapshot manifest (sources/index_family.py, layer 3):
+
+  <index>/_manifest.json     live generations, postings schema, applied
+                             batch ids, exact n_docs and sum_dl
+  <index>/postings/<gen>/    term-range-sorted parquet segments
+
+Every write stages a generation, renames it under ``postings/`` and
+publishes the next manifest with one ``os.replace``; that publish is
+the only commit point. A serve reads the manifest once, then exactly
+its files with its schema (no listing, no schema inference), and takes
+the corpus stats from it as literals. A generation is deleted only
+once neither the current manifest nor the one it replaced names it, so
+a serve built on one snapshot still reads after the next commit. One
+writer per index; any number of readers.
 """
 
 from __future__ import annotations
 
+import os
+from typing import NamedTuple
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+from minoan_athenaeum_spark.sources.index_family import (
+    MANIFEST,
+    commit,
+    manifest_files,
+    read_manifest,
+    stage_generation,
+    warehouse_index_path,
+)
 
 
 def write_posting_segments(
@@ -52,7 +82,7 @@ def lookup_term(
 
 
 # ---------------------------------------------------------------------------
-# BM25 serving index: postings + norms + corpus stats, built once
+# BM25 serving index: posting generations + one snapshot manifest
 # ---------------------------------------------------------------------------
 
 def bm25_index_path(
@@ -64,20 +94,12 @@ def bm25_index_path(
     never served). ``slice_`` distinguishes the full-corpus index from
     the existing-corpus base the incremental queries append onto. None
     when the warehouse isn't a local filesystem."""
-    from minoan_athenaeum_spark.sources.index_family import (
-        warehouse_index_path,
-    )
-
-    # v3 (VERDICT r10 #7): the stats sidecar became generation-appended
-    # (one (n_docs, sum_dl) row per append, additive merge applied at
-    # read) when the lifecycle moved onto the shared index_family
-    # harness; the version bump keeps pre-harness warehouse dirs —
-    # whose stats file stored a single read-modify-written row with a
-    # derived avgdl column — from ever being served by the new reader.
+    # v4: manifest + generation layout; the bump keeps v3 directories
+    # (live postings dir + stats sidecar table) from ever being served.
     return warehouse_index_path(
         spark,
         sf_dir,
-        "mas_bm25idx3",
+        "mas_bm25idx4",
         "documents",
         params="" if slice_ == "full" else slice_,
     )
@@ -99,182 +121,168 @@ def doc_postings(docs: DataFrame) -> DataFrame:
     )
 
 
-def _stats_rows(docs: DataFrame) -> DataFrame:
-    """1-row (n_docs, sum_dl) over a documents slice, computed from the
+def _doc_stats(docs: DataFrame) -> tuple[int, int]:
+    """Exact (n_docs, sum_dl) of a documents slice, computed from the
     docs themselves (not the postings) so token-less documents still
-    count toward the corpus stats. Doc lengths are integer-valued
-    doubles, so sums are exact below 2^53 and any set of generation
-    rows merges to values bit-equal to a from-scratch rebuild's."""
+    count toward the corpus stats."""
     from minoan_athenaeum_spark.operators.text import tokens
 
-    return docs.select(F.size(tokens()).cast("double").alias("dl")).agg(
-        F.count("*").cast("double").alias("n_docs"),
-        F.coalesce(F.sum("dl"), F.lit(0.0)).alias("sum_dl"),
-    )
+    row = docs.select(F.size(tokens()).alias("dl")).agg(
+        F.count("*").alias("n_docs"),
+        F.coalesce(F.sum("dl"), F.lit(0)).alias("sum_dl"),
+    ).first()
+    return int(row.n_docs), int(row.sum_dl)
 
 
-def _merge_stats(gens: DataFrame) -> DataFrame:
-    return gens.agg(
-        F.sum("n_docs").alias("n_docs"), F.sum("sum_dl").alias("sum_dl")
-    )
+class Bm25Stats(NamedTuple):
+    """A BM25 index's corpus stats; n_docs and sum_dl are exact."""
+
+    n_docs: int
+    avgdl: float
+    sum_dl: int
 
 
-def bm25_stats(spark: SparkSession, path: str) -> DataFrame:
-    """The index's corpus stats as ONE row — sidecar generations
-    collapsed by the additive merge, avgdl derived from the exact sums
-    (bit-equal to a rebuild's sum/count, however many appends landed)."""
-    import os
-
-    return _merge_stats(
-        spark.read.parquet(os.path.join(path, "stats"))
-    ).select(
-        "n_docs", (F.col("sum_dl") / F.col("n_docs")).alias("avgdl"), "sum_dl"
-    )
+def _stats(manifest: dict) -> Bm25Stats:
+    # the same IEEE division of the same exact integers as a rebuild's
+    # sum(dl) / count(*), however many appends landed
+    n, s = manifest["n_docs"], manifest["sum_dl"]
+    return Bm25Stats(n, float(s) / float(n), s)
 
 
-def _bm25_family(slice_: str = "full"):
-    """The BM25 serving index as a harness-driven two-table family
-    (VERDICT r10 #7): term-range-segmented postings (rows disjoint
-    across generations — merge is the identity) + the additive-merge
-    stats sidecar. Layout and append shapes are exactly the pre-harness
-    writers' (write_posting_segments for the full layout, a
-    within-batch term-sorted delta for appends)."""
-    from minoan_athenaeum_spark.sources.index_family import (
-        MergeableIndexFamily,
-        TwoTableIndexFamily,
-    )
+def _postings(spark: SparkSession, path: str, manifest: dict) -> DataFrame:
+    schema = StructType.fromJson(manifest["schema"])
+    return spark.read.schema(schema).parquet(*manifest_files(path, manifest))
 
-    params = "" if slice_ == "full" else slice_
-    postings = MergeableIndexFamily(
-        prefix="mas_bm25idx3",
-        subdir="postings",
-        rows_fn=doc_postings,
-        merge_fn=lambda df: df,
-        part_col="term",
-        params=params,
-        layout_fn=lambda rows, target, n: write_posting_segments(
-            rows, target, num_segments=n
-        ),
-        append_fn=lambda rows, live: (
-            rows.repartitionByRange(1, F.col("term"))
-            .sortWithinPartitions("term", "doc_id")
-            .write.mode("append")
-            .parquet(live)
+
+def bm25_snapshot(spark: SparkSession, path: str) -> tuple[DataFrame, Bm25Stats]:
+    """One consistent read of a BM25 index: the (term, doc_id, tf, dl)
+    postings of exactly the current manifest's files, read with its
+    pinned schema, and the same manifest's exact corpus stats. The
+    DataFrame stays readable across the next commit."""
+    m = read_manifest(path)
+    return _postings(spark, path, m), _stats(m)
+
+
+def bm25_stats(spark: SparkSession, path: str) -> Bm25Stats:
+    """The index's exact corpus stats (n_docs, avgdl, sum_dl)."""
+    return _stats(read_manifest(path))
+
+
+def _stage_postings(path: str, rows: DataFrame, num_segments: int) -> dict:
+    return stage_generation(
+        path,
+        "postings",
+        lambda staging: write_posting_segments(
+            rows, staging, num_segments=num_segments
         ),
     )
-    stats = MergeableIndexFamily(
-        prefix="mas_bm25idx3",
-        subdir="stats",
-        rows_fn=_stats_rows,
-        merge_fn=_merge_stats,
-        part_col="n_docs",  # unused: layout_fn below coalesces to 1 file
-        params=params,
-        layout_fn=lambda rows, target, n: (
-            rows.coalesce(1).write.mode("overwrite").parquet(target)
-        ),
-    )
-    return TwoTableIndexFamily(main=postings, side=stats)
 
 
 def ensure_bm25_index(
     spark: SparkSession, sf_dir: str, num_segments: int = 8, slice_: str = "full"
 ) -> str:
-    """Materialize a BM25 serving index under the warehouse:
-    term-range-segmented postings (term, doc_id, tf, dl — the
-    doc-length norm is DENORMALIZED onto each posting, the standard
-    trick that makes query-time scoring join-free) plus a 1-row
-    corpus-stats table (n_docs, avgdl, sum_dl — sum_dl is stored so an
-    append can merge stats EXACTLY: doc lengths are integer-valued
-    doubles, their sums are exact below 2^53, so merged avgdl is
-    bit-equal to a rebuild's). Idempotent per source fingerprint; the
-    tokenize+explode+count happens HERE, once at index-build time,
-    never at query time. ``slice_='existing'`` indexes only
-    ``doc_id % 10 != 0`` — the base corpus of the incremental
-    append/serve queries (same convention as sources/lsh_index.py)."""
-    import os
-
+    """Materialize a BM25 serving index under the warehouse: one
+    generation of term-range-segmented postings (term, doc_id, tf, dl —
+    the doc-length norm is DENORMALIZED onto each posting, the standard
+    trick that makes query-time scoring join-free) and a manifest
+    holding the corpus stats as exact integers (n_docs, sum_dl), so
+    appends merge them by integer addition and avgdl stays bit-equal to
+    a rebuild's. Idempotent per source fingerprint (an index exists
+    once its manifest does); the tokenize+explode+count happens HERE,
+    once at index-build time, never at query time. ``slice_='existing'``
+    indexes only ``doc_id % 10 != 0`` — the base corpus of the
+    incremental append/serve queries (same convention as
+    sources/lsh_index.py)."""
     from minoan_athenaeum_spark.catalog import load_table
-    from minoan_athenaeum_spark.sources.index_family import ensure_index2
 
-    fam = _bm25_family(slice_)
-    path = fam.path(spark, sf_dir)
+    path = bm25_index_path(spark, sf_dir, slice_)
     if path is None:
         raise RuntimeError("BM25 index needs a local warehouse dir")
+    if os.path.isfile(os.path.join(path, MANIFEST)):
+        return path
     docs = load_table(spark, sf_dir, "documents")
     if slice_ == "existing":
         docs = docs.filter(F.col("doc_id") % 10 != 0)
-    built = os.path.isfile(
-        os.path.join(path, "postings", "_SUCCESS")
-    ) and os.path.isfile(os.path.join(path, "stats", "_SUCCESS"))
-    if not built and docs.limit(1).count() == 0:
+    n_docs, sum_dl = _doc_stats(docs)
+    if n_docs == 0:
         raise ValueError(
             "BM25 index stats over an empty documents slice (n_docs=0): "
             "refusing to write a 0-doc index — check the slice filter / "
             "source path"
         )
-    return ensure_index2(fam, spark, sf_dir, docs, num_segments)
+    rows = doc_postings(docs)
+    commit(
+        path,
+        None,
+        _stage_postings(path, rows, num_segments),
+        schema=rows.schema.jsonValue(),
+        batches=[],
+        n_docs=n_docs,
+        sum_dl=sum_dl,
+    )
+    return path
 
 
 def compact_bm25_index(
     spark: SparkSession, path: str, num_segments: int = 8
 ) -> None:
-    """Rewrite the accumulated posting generations (base segments +
-    any number of appended delta files) into ``num_segments`` fresh
-    term-range-sorted segments — the LSM compaction step that caps
-    read amplification on a long-lived ingest path.
+    """Rewrite the manifest's posting generations (base segments + any
+    number of appended delta generations) into ``num_segments`` fresh
+    term-range-sorted segments in ONE new generation — the LSM
+    compaction step that caps read amplification on a long-lived
+    ingest path.
 
-    Every appended generation adds one-or-more delta files a term
-    lookup must consult (row-group pruning keeps each touch cheap,
-    but the FILE count grows linearly with generations); compaction
-    restores the one-base-segment-per-term layout at the cost of one
-    full index rewrite. Correctness is definitional: the posting ROWS
-    are unchanged, only re-partitioned/re-sorted through the same
-    write_posting_segments the full build uses, so compacted ≡
-    appended ≡ rebuilt (pinned by
-    tests/test_text_ops.py::test_bm25_compact_equals_append_equals_rebuild
-    and by text_bm25_index_compact's full-rebuild oracle). Stats are
-    untouched — append already merged them exactly.
-
-    The rewrite lands in a sibling directory and is swapped in with
-    two renames (old → .old, new → live), so a reader never sees a
-    half-written index directory; the .old generation is removed
-    last, and any state an interrupted prior swap left behind is
-    repaired first (sources/swap.py — pinned by
-    tests/test_crash_safety.py). Driven through the shared harness
-    (compact_index2): the stats sidecar's generations are collapsed to
-    one merged row in the same pass — the merged VALUES are unchanged
-    (additive merge), only the generation count drops."""
-    from minoan_athenaeum_spark.sources.index_family import compact_index2
-
-    compact_index2(_bm25_family(), spark, path, num_segments)
+    Correctness is definitional: the posting ROWS are unchanged, only
+    re-partitioned/re-sorted through the same write_posting_segments
+    the full build uses, so compacted ≡ appended ≡ rebuilt (pinned by
+    tests/test_posting_sink.py and by text_bm25_index_compact's
+    full-rebuild oracle). The stats and batch ids carry over unchanged.
+    The new manifest lists only the new generation; the replaced ones
+    stay on disk until the next commit, so a serve planned before this
+    compaction still reads its snapshot."""
+    m = read_manifest(path)
+    commit(path, m, _stage_postings(path, _postings(spark, path, m), num_segments))
 
 
 def append_to_bm25_index(
-    spark: SparkSession, path: str, new_docs: DataFrame, num_segments: int = 1
+    spark: SparkSession,
+    path: str,
+    new_docs: DataFrame,
+    num_segments: int = 1,
+    batch_id: str | int | None = None,
 ) -> None:
-    """Fold a document batch INTO a persisted BM25 index — the
-    maintenance step that keeps a growing corpus searchable without
-    the full tokenize+segment rebuild (mirror of
-    lsh_index.append_to_minhash_index, r6's LSH maintenance pattern).
+    """Fold a document batch INTO a persisted BM25 index as one new
+    posting generation — the maintenance step that keeps a growing
+    corpus searchable without the full tokenize+segment rebuild.
 
-    Postings: the batch's (term, doc_id, tf, dl) rows are written as
-    DELTA segments (parquet append, term-range-sorted within the
-    batch) — term lookups still prune by row-group min/max, now over
-    base + delta files; a lookup touches one base segment plus one
-    delta segment per appended generation, the classic LSM read
-    shape (compaction = rewrite through write_posting_segments when
-    generations accumulate). Stats: n_docs and sum_dl merge by exact
-    addition (integer-valued doubles), so the merged avgdl is
-    BIT-EQUAL to a from-scratch rebuild — pinned by
-    tests/test_text_ops.py::test_bm25_append_equals_rebuild and by
-    text_bm25_index_append's full-rebuild oracle. Per-doc_id
-    idempotence is the caller's contract (each doc appended once).
+    The batch's (term, doc_id, tf, dl) rows, cast to the manifest's
+    schema, are written as a term-range-sorted delta generation; a
+    term lookup prunes by row-group min/max over base + delta files,
+    the classic LSM read shape (compact_bm25_index rewrites them when
+    generations accumulate). The batch's exact (n_docs, sum_dl) are
+    added to the manifest's, so the merged avgdl is BIT-EQUAL to a
+    from-scratch rebuild — pinned by tests/test_posting_sink.py and
+    by text_bm25_index_append's full-rebuild oracle. The postings and
+    the stats land in one manifest publish, so an append is all or
+    nothing.
 
-    Driven through the shared harness (append_index2): both tables are
-    now APPEND-ONLY — the stats sidecar gains one (n_docs, sum_dl)
-    generation row per batch instead of the old read-modify-write of a
-    single stats file, and :func:`bm25_stats` collapses generations at
-    read time with the same exact integer-double sums."""
-    from minoan_athenaeum_spark.sources.index_family import append_index2
-
-    append_index2(_bm25_family(), path, new_docs)
+    ``batch_id`` makes a re-sent batch a no-op: an id already in the
+    manifest is skipped, and a fresh one is recorded with the commit.
+    Without it, each doc appended once is the caller's contract."""
+    m = read_manifest(path)
+    if batch_id is not None and str(batch_id) in m["batches"]:
+        return
+    schema = StructType.fromJson(m["schema"])
+    rows = doc_postings(new_docs).select(
+        *[F.col(f.name).cast(f.dataType) for f in schema.fields]
+    )
+    n_docs, sum_dl = _doc_stats(new_docs)
+    gen = _stage_postings(path, rows, num_segments)
+    commit(
+        path,
+        m,
+        {**m["generations"], **gen},
+        batches=m["batches"] + ([] if batch_id is None else [str(batch_id)]),
+        n_docs=m["n_docs"] + n_docs,
+        sum_dl=m["sum_dl"] + sum_dl,
+    )

@@ -1,8 +1,9 @@
-"""Crash-safe live-directory swap for the persisted index families.
+"""Crash-safe live-directory swap for the swap-based index families.
 
-Every LSM-style index in this repo (BM25 postings, IVF members,
-first-occurrence grams) compacts by writing a rewritten copy into a
-``<live>_compacting`` sibling and swapping it in with two renames:
+The LSM-style indexes that keep one live directory (IVF members, LM
+scores, first-occurrence grams, line fingerprints) compact by writing
+a rewritten copy into a ``<live>_compacting`` sibling and swapping it
+in with two renames:
 
   rename(live, live_old); rename(tmp, live); rmtree(live_old)
 
@@ -17,6 +18,10 @@ its ``_SUCCESS`` marker) and BACK otherwise, then clears leftovers.
 Either way the live directory again contains exactly one committed
 generation set — never a mix. Re-running the interrupted compaction
 afterwards is always safe (it is a pure rewrite).
+
+A swap does not keep the old generation for a reader that planned
+against it; the BM25 index uses the snapshot manifest of
+sources/index_family.py instead, which does.
 
 Pinned per index family by tests/test_crash_safety.py, which
 fabricates each intermediate crash state on disk and asserts the

@@ -1,9 +1,9 @@
-"""Crash-safety pins for the two-rename compaction swap (VERDICT r8 #6).
+"""Crash-safety pins for the persisted-index write protocols.
 
-Each persisted-index family (BM25 postings, IVF members, first-occurrence
-grams) compacts by writing a rewritten sibling directory and swapping it
-live with two renames. These tests fabricate every intermediate state a
-crash can leave on disk and prove that
+The swap families (IVF members, first-occurrence grams, line
+fingerprints, LM scores, LSH) compact by writing a rewritten sibling
+directory and swapping it live with two renames. These tests fabricate
+every intermediate state a crash can leave on disk and prove that
 
   * a subsequent reader (via the family's ``ensure_*`` entry point)
     serves either the OLD or the NEW generation set in full — never a
@@ -17,6 +17,9 @@ The fabricated states, in the order a real crash would produce them:
   between-renames: live renamed to _old, complete tmp (_SUCCESS) present
   rollback       : live renamed to _old, tmp incomplete (no _SUCCESS)
   after-swap     : new live in place, stale _old not yet removed
+
+The BM25 index commits through a snapshot manifest instead; its tests
+inject a crash at each step of that protocol (CRASH_POINTS below).
 """
 
 from __future__ import annotations
@@ -131,11 +134,39 @@ def test_gram_index_crash_recovery(spark, tmp_path, state):
     assert spark.read.parquet(live).count() == len(before)
 
 
-@pytest.mark.parametrize("state", ["between-renames", "rollback"])
-def test_bm25_postings_crash_recovery(spark, tmp_path, state):
+# BM25 is on the snapshot-manifest protocol instead of the swap: a write
+# stages a generation, renames it under postings/, publishes the next
+# manifest, then collects garbage. A crash is injected at each step.
+CRASH_POINTS = ["mid-staging", "before-publish", "before-gc"]
+
+
+class _Crash(Exception):
+    pass
+
+
+def _crash_at(monkeypatch, point):
+    from minoan_athenaeum_spark.sources import index_family, posting_sink
+
+    def boom(*_args, **_kwargs):
+        raise _Crash(point)
+
+    if point == "mid-staging":
+        real = posting_sink.write_posting_segments
+
+        def partial(rows, path, **kw):
+            real(rows, path, **kw)
+            os.remove(os.path.join(path, "_SUCCESS"))
+            raise _Crash(point)
+
+        monkeypatch.setattr(posting_sink, "write_posting_segments", partial)
+    else:
+        name = {"before-publish": "publish_manifest", "before-gc": "collect_garbage"}
+        monkeypatch.setattr(index_family, name[point], boom)
+
+
+def _bm25_index(spark, tmp_path):
     from minoan_athenaeum_spark.sources.posting_sink import (
         append_to_bm25_index,
-        compact_bm25_index,
         ensure_bm25_index,
     )
 
@@ -144,25 +175,92 @@ def test_bm25_postings_crash_recovery(spark, tmp_path, state):
         [(1, "alpha beta gamma", "en", "a"), (11, "beta delta", "en", "a")],
     )
     idx = ensure_bm25_index(spark, sf)
-    append_to_bm25_index(
-        spark,
-        idx,
-        spark.createDataFrame(
-            pd.DataFrame(
-                [(20, "gamma epsilon", "en", "a")],
-                columns=["doc_id", "text", "lang", "source"],
-            )
-        ),
+    append_to_bm25_index(spark, idx, _batch(spark, 20, "gamma epsilon"))
+    return sf, idx
+
+
+def _batch(spark, doc_id, text):
+    return spark.createDataFrame(
+        pd.DataFrame(
+            [(doc_id, text, "en", "a")],
+            columns=["doc_id", "text", "lang", "source"],
+        )
     )
-    live = os.path.join(idx, "postings")
-    cols = ["term", "doc_id", "tf", "dl"]
-    before = _rows(spark, live, cols)
-    assert any(t[1] == 20 for t in before)
-    _fabricate(live, state)
+
+
+def _bm25_state(spark, idx):
+    """What a serve of ``idx`` reads: the posting multiset and stats."""
+    from minoan_athenaeum_spark.sources.posting_sink import bm25_snapshot
+
+    postings, stats = bm25_snapshot(spark, idx)
+    rows = postings.select("term", "doc_id", "tf", "dl").collect()
+    return sorted(map(tuple, rows)), tuple(stats)
+
+
+def _gen_dirs(idx):
+    return {
+        os.path.join("postings", d) for d in os.listdir(os.path.join(idx, "postings"))
+    }
+
+
+@pytest.mark.parametrize("point", CRASH_POINTS)
+def test_bm25_postings_crash_recovery(spark, tmp_path, monkeypatch, point):
+    """A compaction that crashes at any step leaves the pre-crash
+    snapshot served (the appended generation included, no corpus-only
+    rebuild); re-running it converges, and garbage collection removes
+    what the crash left behind."""
+    from minoan_athenaeum_spark.sources.index_family import read_manifest
+    from minoan_athenaeum_spark.sources.posting_sink import (
+        compact_bm25_index,
+        ensure_bm25_index,
+    )
+
+    sf, idx = _bm25_index(spark, tmp_path)
+    before = _bm25_state(spark, idx)
+    assert any(t[1] == 20 for t in before[0])
+    with monkeypatch.context() as m:
+        _crash_at(m, point)
+        with pytest.raises(_Crash):
+            compact_bm25_index(spark, idx)
     assert ensure_bm25_index(spark, sf) == idx
-    assert _rows(spark, live, cols) == before
+    assert _bm25_state(spark, idx) == before
     compact_bm25_index(spark, idx)
-    assert _rows(spark, live, cols) == before
+    assert _bm25_state(spark, idx) == before
+    man = read_manifest(idx)
+    assert len(man["generations"]) == 1
+    assert _gen_dirs(idx) == set(man["generations"]) | set(man["previous"])
+    assert not os.path.exists(os.path.join(idx, "_staging"))
+
+
+@pytest.mark.parametrize("point", CRASH_POINTS)
+def test_bm25_append_crash_resend_applies_once(spark, tmp_path, monkeypatch, point):
+    """An append is all or nothing: a crash before the manifest publish
+    leaves the pre-append snapshot served (no torn postings-without-
+    stats state), a crash after it the committed one. Re-sending the
+    batch under its id then applies it exactly once — equal to one
+    clean append."""
+    from minoan_athenaeum_spark.sources.index_family import read_manifest
+    from minoan_athenaeum_spark.sources.posting_sink import append_to_bm25_index
+
+    _sf, idx = _bm25_index(spark, tmp_path)
+    ref = str(tmp_path / "ref")
+    shutil.copytree(idx, ref)
+    batch = _batch(spark, 30, "epsilon zeta")
+    append_to_bm25_index(spark, ref, batch, batch_id="b30")
+    pre, post = _bm25_state(spark, idx), _bm25_state(spark, ref)
+    assert pre != post
+
+    with monkeypatch.context() as m:
+        _crash_at(m, point)
+        with pytest.raises(_Crash):
+            append_to_bm25_index(spark, idx, batch, batch_id="b30")
+    assert _bm25_state(spark, idx) == (post if point == "before-gc" else pre)
+
+    append_to_bm25_index(spark, idx, batch, batch_id="b30")
+    assert _bm25_state(spark, idx) == post
+    man = read_manifest(idx)
+    assert man["batches"] == ["b30"]
+    assert _gen_dirs(idx) == set(man["generations"]) | set(man["previous"])
 
 
 @pytest.mark.parametrize("state", ["between-renames", "rollback"])
@@ -268,67 +366,6 @@ def test_gram_index_path_keys_on_n(spark, tmp_path):
     g3 = spark.read.parquet(os.path.join(i3, "grams"))
     # 10 tokens -> 6 5-grams vs 8 3-grams: genuinely different indexes
     assert g5.count() == 6 and g3.count() == 8
-
-
-def test_two_table_torn_append_detectable(spark, tmp_path):
-    """ADVICE r12: a crash between the main (postings) append and the
-    sidecar (stats) append must be DETECTABLE after the fact, not just
-    documented. append_index2 brackets both appends with an intent
-    marker (_append_log/<batch>.pending -> .done); torn_appends2 lists
-    the ids whose marker never flipped, and clear_append_marker2
-    acknowledges a reconciled one."""
-    from minoan_athenaeum_spark.sources.index_family import (
-        append_index,
-        append_index2,
-        clear_append_marker2,
-        torn_appends2,
-    )
-    from minoan_athenaeum_spark.sources.posting_sink import (
-        _bm25_family,
-        ensure_bm25_index,
-    )
-
-    sf = _docs_sf(
-        tmp_path,
-        [(1, "alpha beta gamma", "en", "a"), (11, "beta delta", "en", "a")],
-    )
-    idx = ensure_bm25_index(spark, sf)
-    fam = _bm25_family()
-    batch = spark.createDataFrame(
-        pd.DataFrame(
-            [(20, "gamma epsilon", "en", "a")],
-            columns=["doc_id", "text", "lang", "source"],
-        )
-    )
-    # clean append: marker flips to .done, nothing reported torn
-    append_index2(fam, idx, batch, batch_id="b-clean")
-    assert torn_appends2(idx) == []
-    assert os.path.isfile(os.path.join(idx, "_append_log", "b-clean.done"))
-
-    # fabricate the torn state a crash between the two appends leaves:
-    # pending marker + main-table generation landed, sidecar missing
-    torn_batch = spark.createDataFrame(
-        pd.DataFrame(
-            [(30, "epsilon zeta", "en", "a")],
-            columns=["doc_id", "text", "lang", "source"],
-        )
-    )
-    log_dir = os.path.join(idx, "_append_log")
-    with open(os.path.join(log_dir, "b-torn.pending"), "w"):
-        pass
-    append_index(fam.main, idx, torn_batch)
-    assert torn_appends2(idx) == ["b-torn"]
-
-    # reconcile per the module contract: append the SAME batch's
-    # sidecar row, then acknowledge the marker
-    append_index(fam.side, idx, torn_batch)
-    clear_append_marker2(idx, "b-torn")
-    assert torn_appends2(idx) == []
-    # and the reconciled index equals what an untorn append would give:
-    # stats n_docs counts all four docs
-    from minoan_athenaeum_spark.sources.posting_sink import bm25_stats
-
-    assert bm25_stats(spark, idx).collect()[0]["n_docs"] == 4
 
 
 @pytest.mark.parametrize("state", ["between-renames", "rollback"])
