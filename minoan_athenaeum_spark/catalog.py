@@ -2,8 +2,14 @@
 
 The reference resolves ``<name>.table.json`` files relative to CWD as its
 catalog (``/root/reference/database.py:905-996``); ours is a directory of
-parquet files registered as temp views. Loading is lazy (Spark scans) —
-no eager materialization, so the same code handles 100 TB directories.
+parquet files registered as temp views. ``load_table`` returns a lazy
+Spark scan, so the same code handles 100 TB directories. The scan's
+schema is pinned from the parquet footer (read in-process with
+pyarrow), so opening a table runs no schema-inference Spark job. Handles
+are cached per session and source fingerprint: a rewritten source gets a
+fresh scan. ``engine.Athenaeum.register_parquet_dir`` snapshots small
+tables into in-memory local relations on top of these scans; the
+handles returned here stay file scans.
 
 Special case: ``events.parquet``'s ``ts`` column. Some driver rounds
 generate it as parquet TIMESTAMP(NANOS), which Spark's parquet reader
@@ -23,6 +29,12 @@ import weakref
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from minoan_athenaeum_spark.sources.bucketed import (
+    _source_fingerprint,
+    bucketed_fact_table_name,
+    source_files,
+)
 
 TABLES = (
     "region",
@@ -131,7 +143,10 @@ def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 # footers and re-lists files; reusing the analyzed relation skips that
 # (plans are immutable, so sharing is safe). Weak-keyed on the
 # SparkSession itself so a stopped, garbage-collected session's entries
-# vanish with it — no id()-reuse hazard, no unbounded growth.
+# vanish with it — no id()-reuse hazard, no unbounded growth. Each
+# entry keeps the source fingerprint it was opened at; a rewritten
+# source (new part files, sizes or mtimes) gets a fresh scan instead of
+# a handle whose file listing no longer exists.
 _HANDLE_CACHE: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
 
@@ -141,40 +156,64 @@ def _use_bucketed_facts() -> bool:
     return os.environ.get("SPARK_GRAFT_BUCKETED_FACTS", "") not in ("", "0")
 
 
+def footer_schema(spark: SparkSession, path: str) -> T.StructType | None:
+    """A read schema for the parquet source at ``path``, taken in-process
+    from the footer of its first part file instead of by a Spark job. A
+    scan given it has the schema ``spark.read.parquet(path)`` infers:
+    Spark's reader makes a given schema nullable throughout, as its
+    inference does, and timestamps without a UTC adjustment map to
+    TIMESTAMP_NTZ under the same session conf. None when there is no
+    part file or a top-level nanosecond timestamp (INT96 or
+    TIMESTAMP(NANOS), which Spark's inference maps differently): the
+    caller then lets Spark infer."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    files = source_files(path)
+    if not files:
+        return None
+    arrow = pq.read_schema(files[0])
+    if any(pa.types.is_timestamp(f.type) and f.type.unit == "ns" for f in arrow):
+        return None
+    ntz = spark.conf.get("spark.sql.parquet.inferTimestampNTZ.enabled") == "true"
+    return from_arrow_schema(arrow, prefer_timestamp_ntz=ntz)
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     per_session = _HANDLE_CACHE.get(spark)
     if per_session is None:
         per_session = {}
         _HANDLE_CACHE[spark] = per_session
+    path = f"{sf_dir}/{name}.parquet"
+    fingerprint = _source_fingerprint(path)
     # Opt-in pre-bucketed fact layout: when SPARK_GRAFT_BUCKETED_FACTS
     # is set and sources.bucketed.ensure_bucketed_facts has materialized
     # this table for this sf_dir, serve the managed bucketed table —
     # same rows and schema, but hash-bucketed + sorted on orderkey, so
     # every orderkey join/aggregate downstream skips its Exchange.
     if _use_bucketed_facts() and name in ("lineitem", "orders"):
-        df = per_session.get((sf_dir, name, True))
-        if df is None:
-            from minoan_athenaeum_spark.sources.bucketed import (
-                bucketed_fact_table_name,
-            )
-
-            table = bucketed_fact_table_name(sf_dir, name)
-            if spark.catalog.tableExists(table):
-                df = spark.table(table)
-                per_session[(sf_dir, name, True)] = df
-        if df is not None:
+        cached = per_session.get((sf_dir, name, True))
+        if cached is not None and cached[0] == fingerprint:
+            return cached[1]
+        table = bucketed_fact_table_name(sf_dir, name)
+        if spark.catalog.tableExists(table):
+            df = spark.table(table)
+            per_session[(sf_dir, name, True)] = (fingerprint, df)
             return df
         # Not materialized yet: fall through to the raw parquet WITHOUT
         # caching it under the bucketed key — a later
         # ensure_bucketed_facts in this session must take effect on the
         # next load_table call, not be shadowed by this fallback.
-    df = per_session.get((sf_dir, name, False))
-    if df is None:
-        if name == "events":
-            df = load_events(spark, sf_dir)
-        else:
-            df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-        per_session[(sf_dir, name, False)] = df
+    cached = per_session.get((sf_dir, name, False))
+    if cached is not None and cached[0] == fingerprint:
+        return cached[1]
+    if name == "events":
+        df = load_events(spark, sf_dir)
+    else:
+        schema = footer_schema(spark, path)
+        df = (spark.read if schema is None else spark.read.schema(schema)).parquet(path)
+    per_session[(sf_dir, name, False)] = (fingerprint, df)
     return df
 
 

@@ -10,6 +10,16 @@ switches to.
     eng.register_parquet_dir("/root/testdata/sf0.01")    # modern catalog
     eng.sql("SELECT l_returnflag, count(*) FROM lineitem GROUP BY 1")  # ANSI
 
+Two table tiers, split by the byte size of a table's parquet source:
+  - small tables (at most ``SMALL_TABLE_BYTES``) are read once, when
+    ``register_parquet_dir`` runs, and served from an in-memory local
+    relation. Catalyst folds filters and projections over it while
+    planning, so a point lookup runs no Spark job. The relation is a
+    snapshot: a later change to the file is seen only after registering
+    the directory again.
+  - larger tables stay lazy parquet scans (``catalog.load_table``), so
+    the same code handles 100 TB directories.
+
 Two query paths:
   - ``sql_strict``: the reference dialect with its exact error semantics
     (SURVEY §2 T1/T2/E2-E6) — parsed/validated by plans/, executed as
@@ -24,11 +34,24 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from minoan_athenaeum_spark.catalog import load_table
 from minoan_athenaeum_spark.plans.dialect import parse
 from minoan_athenaeum_spark.plans.executor import Executor, check_duplicate_aliases
 from minoan_athenaeum_spark.session import get_spark
 from minoan_athenaeum_spark.sink import format_results
+from minoan_athenaeum_spark.sources.bucketed import source_files
 from minoan_athenaeum_spark.sources.table_json import load_table_json
+
+
+# Byte bound of the small-table tier. Measured warm on a 4-vCPU host
+# (pyspark 4.1.2, local[4]): a point lookup on the 279 KB, 15k-row
+# orders table took 0.02 s from a local relation against 0.10 s from
+# its parquet scan, while a filtered aggregate over the 1.04 MB, 60k-row
+# lineitem table went from 0.11 s to 0.135 s, because Catalyst
+# evaluates a filter over a local relation row by row, in one thread,
+# while planning.
+# The crossover lies between the two sizes.
+SMALL_TABLE_BYTES = 512 * 1024
 
 
 class Athenaeum:
@@ -47,14 +70,21 @@ class Athenaeum:
         df.createOrReplaceTempView(name)
 
     def register_parquet_dir(self, path: str) -> list[str]:
-        """Register every ``<name>.parquet`` under ``path`` (lazy scans)."""
+        """Register every ``<name>.parquet`` under ``path``. A table of at
+        most ``SMALL_TABLE_BYTES`` is read now, through the same scan
+        ``catalog.load_table`` returns, into an in-memory local relation
+        with that scan's schema and rows: a snapshot, which a change to
+        the file reaches only through a new ``register_parquet_dir``.
+        Larger tables are registered as the lazy scan itself."""
         names = []
         for fn in sorted(os.listdir(path)):
             if fn.endswith(".parquet"):
                 name = fn[: -len(".parquet")]
-                from minoan_athenaeum_spark.catalog import load_table
-
-                self.register(name, load_table(self.spark, path, name))
+                df = load_table(self.spark, path, name)
+                files = source_files(os.path.join(path, fn))
+                if sum(map(os.path.getsize, files)) <= SMALL_TABLE_BYTES:
+                    df = self.spark.createDataFrame(df.toArrow(), schema=df.schema)
+                self.register(name, df)
                 names.append(name)
         return names
 

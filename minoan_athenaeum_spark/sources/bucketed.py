@@ -65,6 +65,23 @@ def read_table(spark: SparkSession, table: str) -> DataFrame:
     return spark.table(table)
 
 
+def source_files(path: str) -> list[str]:
+    """Data files of the parquet source at ``path``: the file itself, or
+    every file under the directory whose name does not start with ``_``
+    or ``.`` (Spark's rule for metadata and hidden files), in directory
+    walk order."""
+    import os
+
+    if not os.path.isdir(path):
+        return [path] if os.path.exists(path) else []
+    return [
+        os.path.join(root, f)
+        for root, _dirs, files in sorted(os.walk(path))
+        for f in sorted(files)
+        if not f.startswith(("_", "."))
+    ]
+
+
 def _source_fingerprint(path: str) -> str:
     """Deterministic fingerprint of the parquet source: every data
     file's relative path, size, and mtime. Folding this into the managed
@@ -75,18 +92,11 @@ def _source_fingerprint(path: str) -> str:
     import os
 
     h = hashlib.md5()
-    if os.path.isdir(path):
-        for root, _dirs, files in sorted(os.walk(path)):
-            for f in sorted(files):
-                if f.startswith(("_", ".")):
-                    continue
-                fp = os.path.join(root, f)
-                st = os.stat(fp)
-                rel = os.path.relpath(fp, path)
-                h.update(f"{rel}:{st.st_size}:{st.st_mtime_ns}".encode())
-    elif os.path.exists(path):
-        st = os.stat(path)
-        h.update(f"{st.st_size}:{st.st_mtime_ns}".encode())
+    is_dir = os.path.isdir(path)
+    for fp in source_files(path):
+        st = os.stat(fp)
+        rel = f"{os.path.relpath(fp, path)}:" if is_dir else ""
+        h.update(f"{rel}{st.st_size}:{st.st_mtime_ns}".encode())
     return h.hexdigest()[:8]
 
 

@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import os
 import sys
+import uuid
 
 import pytest
 
@@ -22,3 +23,28 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture(scope="session")
+def sf01_dir(sf_dir):
+    """The sf0.01 test data, which sits beside the sf0.001 data."""
+    return os.path.join(os.path.dirname(sf_dir), "sf0.01")
+
+
+@pytest.fixture
+def jobs_run(spark):
+    """``jobs_run(fn)``: the number of Spark jobs ``fn()`` runs, counted
+    in a job group of its own."""
+    sc = spark.sparkContext
+
+    def count(fn) -> int:
+        group = f"jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return count

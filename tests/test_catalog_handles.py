@@ -1,0 +1,118 @@
+"""Pins for ``catalog.load_table``'s handles: the scan's schema comes
+from the parquet footer (no schema-inference Spark job) and equals what
+Spark infers, and a cached handle is never served for a rewritten
+source."""
+
+from __future__ import annotations
+
+import importlib.util
+import os
+import shutil
+import uuid
+
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pytest
+from pyspark.sql import functions as F
+
+from minoan_athenaeum_spark.catalog import TABLES, footer_schema, load_table
+from minoan_athenaeum_spark.engine import Athenaeum
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+@pytest.fixture(scope="module")
+def datagen_dir(tmp_path_factory):
+    spec = importlib.util.spec_from_file_location(
+        "perfbench_datagen", os.path.join(ROOT, "perfbench", "datagen.py")
+    )
+    datagen = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(datagen)
+    out = str(tmp_path_factory.mktemp("datagen"))
+    datagen.generate(out, seed=7, sf=0.001)
+    return out
+
+
+@pytest.fixture(scope="module")
+def spark_written_dir(spark, tmp_path_factory):
+    """A directory table written by Spark, with types pandas never writes."""
+    out = str(tmp_path_factory.mktemp("spark_written"))
+    spark.sql(
+        """SELECT CAST(id AS INT) AS a, CAST(id AS TINYINT) AS b,
+                  CAST(id AS DECIMAL(12, 2)) AS d, TIMESTAMP'2024-01-02 03:04:05' AS ts,
+                  CAST(TIMESTAMP'2024-01-02 03:04:05' AS TIMESTAMP_NTZ) AS ts_ntz,
+                  DATE'2024-01-02' AS dt, array(CAST(id AS FLOAT)) AS arr,
+                  named_struct('x', id, 'y', 'z') AS st, map('k', id) AS m,
+                  CAST('ab' AS BINARY) AS bin, id
+           FROM range(20)"""
+    ).repartition(3).write.parquet(f"{out}/mixed.parquet")
+    return out
+
+
+def _parquet_sources(d):
+    return sorted(fn[: -len(".parquet")] for fn in os.listdir(d) if fn.endswith(".parquet"))
+
+
+@pytest.mark.parametrize("which", ["sf0.001", "sf0.01", "datagen", "spark_written"])
+def test_pinned_schema_equals_inferred(spark, which, sf_dir, datagen_dir, spark_written_dir):
+    d = {
+        "datagen": datagen_dir,
+        "spark_written": spark_written_dir,
+    }.get(which) or os.path.join(os.path.dirname(sf_dir), which)
+    names = _parquet_sources(d)
+    assert names
+    for name in names:
+        path = f"{d}/{name}.parquet"
+        inferred = spark.read.parquet(path).schema
+        pinned = spark.read.schema(footer_schema(spark, path)).parquet(path)
+        assert pinned.schema == inferred, name
+        if name != "events":  # events has its own timestamp-unit path
+            assert load_table(spark, d, name).schema == inferred, name
+
+
+def test_load_table_runs_no_job(spark, sf_dir, tmp_path, jobs_run):
+    # A fresh directory, so no handle is cached yet.
+    d = str(tmp_path / "sf")
+    shutil.copytree(sf_dir, d)
+    for name in TABLES:
+        assert jobs_run(lambda: load_table(spark, d, name)) == 0, name
+
+
+def _write_ids(path, ids, as_dir):
+    table = pa.table({"k": pa.array(ids, pa.int64()), "v": pa.array([f"v{i}" for i in ids])})
+    if os.path.isdir(path):
+        shutil.rmtree(path)
+    elif os.path.exists(path):
+        os.remove(path)
+    # Many small row groups: a reader holding the old file length misses
+    # the ones past it.
+    if as_dir:
+        # New part-file names, as a rewrite by another writer leaves them.
+        os.makedirs(path)
+        half = len(ids) // 2
+        pq.write_table(table.slice(0, half), f"{path}/part-{uuid.uuid4().hex}.parquet", row_group_size=100)
+        pq.write_table(table.slice(half), f"{path}/part-{uuid.uuid4().hex}.parquet", row_group_size=100)
+    else:
+        pq.write_table(table, path, row_group_size=100)
+
+
+@pytest.mark.parametrize("as_dir", [True, False], ids=["directory", "single-file"])
+def test_rewritten_source_gets_a_fresh_handle(spark, tmp_path, as_dir):
+    d = str(tmp_path)
+    path = f"{d}/t.parquet"
+    _write_ids(path, list(range(10)), as_dir)
+    eng = Athenaeum(spark)
+    eng.register_parquet_dir(d)
+    assert eng.sql("SELECT count(*) AS n FROM t").first().n == 10
+    assert load_table(spark, d, "t").count() == 10
+
+    new = list(range(100, 2100))
+    _write_ids(path, new, as_dir)
+    # A registered table is a snapshot until the directory is registered
+    # again; load_table sees the rewrite at once.
+    got = load_table(spark, d, "t").agg(F.count("*"), F.min("k"), F.max("k")).first()
+    assert tuple(got) == (2000, 100, 2099)
+    eng.register_parquet_dir(d)
+    assert sorted(r.k for r in eng.sql("SELECT k FROM t").collect()) == new
+    rows = eng.show(eng.sql_strict("SELECT v FROM t WHERE k = 1110")).splitlines()
+    assert rows[2:] == ["v1110"]
