@@ -100,9 +100,8 @@ HEADLINE = [
     "pipeline_curation_v4",
     # r8: the Gopher heuristic battery and the v5 capstone that
     # composes it in front of the learned + LM gates. (The BM25/IVF
-    # compaction paths are measured by scripts/compaction_probe.py's
-    # A/B, not the bench — their cost is an index rewrite, not a
-    # query.)
+    # compaction paths are not benched here — their cost is an index
+    # rewrite, not a query.)
     "text_gopher_quality_filters",
     "pipeline_curation_v5",
     # late-r8 additions: the full repetition battery (9 n-gram signals,

@@ -679,8 +679,7 @@ def dedup_minhash_incremental(spark, sf_dir):
     persisted index serves EXACTLY the pairs a from-scratch run finds.
     In-batch (new-vs-new) duplicates are dedup_minhash_lsh's job
     scoped to the batch; this query is the cross-generation check."""
-    import os
-
+    from minoan_athenaeum_spark.sources.index_family import read_manifest, read_table
     from minoan_athenaeum_spark.sources.lsh_index import (
         BANDS,
         band_rows,
@@ -690,8 +689,9 @@ def dedup_minhash_incremental(spark, sf_dir):
     )
 
     idx_path = ensure_minhash_index(spark, sf_dir)
-    idx_bands = spark.read.parquet(os.path.join(idx_path, "bands"))
-    idx_sh = spark.read.parquet(os.path.join(idx_path, "shingles"))
+    snap = read_manifest(idx_path)
+    idx_bands = read_table(spark, idx_path, "bands", snap)
+    idx_sh = read_table(spark, idx_path, "shingles", snap)
     release_tracked()
     # The filtered batch arrives as however few file-splits the source
     # had (ONE at the test SFs) and the 16-permutation signature is the
@@ -946,9 +946,8 @@ def dedup_semdedup_incremental(spark, sf_dir):
     admitted batch into the members table (assignment against the
     FIXED codebook — centroid retraining is the compaction event),
     pinned append-equals-rebuild in tests/test_dedup_similarity.py."""
-    import os
-
     from minoan_athenaeum_spark.operators.similarity import cosine_q
+    from minoan_athenaeum_spark.sources.index_family import read_manifest, read_table
     from minoan_athenaeum_spark.sources.ivf_index import (
         _assigned,
         _quantized,
@@ -956,8 +955,9 @@ def dedup_semdedup_incremental(spark, sf_dir):
     )
 
     idx = ensure_ivf_index(spark, sf_dir)
-    members = spark.read.parquet(os.path.join(idx, "members"))
-    cents = spark.read.parquet(os.path.join(idx, "centroids"))
+    snap = read_manifest(idx)
+    members = read_table(spark, idx, "members", snap)
+    cents = read_table(spark, idx, "centroids", snap)
     # planted witnesses (the dedup_substring_spans pattern): the raw
     # synthetic embeddings are near-random (max cross-generation cosine
     # ~0.49), so batch vectors with vec_id % 20 == 0 take the embedding
@@ -1243,15 +1243,13 @@ def dedup_lines_incremental(spark, sf_dir):
     scratch over ALL documents in DuckDB, output restricted to batch
     docs — proving the persisted index serves exactly what a
     from-scratch run computes."""
-    import os
-
+    from minoan_athenaeum_spark.sources.index_family import read_table
     from minoan_athenaeum_spark.sources.line_index import (
         doc_lines,
         ensure_line_index,
     )
 
-    idx_path = ensure_line_index(spark, sf_dir)
-    owners_idx = spark.read.parquet(os.path.join(idx_path, "lines"))
+    owners_idx = read_table(spark, ensure_line_index(spark, sf_dir), "lines")
     release_tracked()
     bl = persist_tracked(
         doc_lines(

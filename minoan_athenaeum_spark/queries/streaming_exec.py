@@ -613,6 +613,7 @@ def stream_minhash_dedup_exec(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from minoan_athenaeum_spark.operators.dedup import jaccard
+    from minoan_athenaeum_spark.sources.index_family import read_manifest, read_table
     from minoan_athenaeum_spark.sources.lsh_index import (
         band_rows,
         ensure_minhash_index,
@@ -622,8 +623,9 @@ def stream_minhash_dedup_exec(spark, sf_dir):
     from minoan_athenaeum_spark.streaming.ops import read_documents_stream
 
     idx_path = ensure_minhash_index(spark, sf_dir)
-    idx_bands = spark.read.parquet(os.path.join(idx_path, "bands"))
-    idx_sh = spark.read.parquet(os.path.join(idx_path, "shingles"))
+    snap = read_manifest(idx_path)
+    idx_bands = read_table(spark, idx_path, "bands", snap)
+    idx_sh = read_table(spark, idx_path, "shingles", snap)
 
     # Deterministic scratch next to the index, wiped at query start
     # (same discipline as stream_bm25_index_append_exec's _streamwork
@@ -809,11 +811,9 @@ def stream_novelty_gate_exec(spark, sf_dir):
     text_novelty_incremental uses: stream-fold-then-serve ≡
     batch-rebuild, proven by one green row.
 
-    Replay safety note: the scratch copy is rebuilt per run, so the
-    appends are idempotent per execution; a production sink keys
-    delta generation directories by batch_id (the
-    idempotent_parquet_writer pattern) so checkpoint replays
-    overwrite rather than double-append."""
+    Replay safety: each fold passes its micro-batch id, so a batch
+    replayed from the checkpoint is a no-op append (the id is already
+    in the index manifest)."""
     import os
     import shutil
 
@@ -825,7 +825,9 @@ def stream_novelty_gate_exec(spark, sf_dir):
         GRAM_N,
         append_to_gram_index,
         ensure_gram_index,
+        merge_grams,
     )
+    from minoan_athenaeum_spark.sources.index_family import read_table
     from minoan_athenaeum_spark.streaming.ops import read_documents_stream
 
     base = ensure_gram_index(spark, sf_dir)
@@ -839,7 +841,7 @@ def stream_novelty_gate_exec(spark, sf_dir):
         batch = batch_df.filter(F.col("doc_id") % 10 == 0)
         if batch.isEmpty():
             return
-        append_to_gram_index(spark, work, batch)
+        append_to_gram_index(spark, work, batch, batch_id=batch_id)
 
     stream = read_documents_stream(spark, sf_dir)
     q = (
@@ -855,11 +857,7 @@ def stream_novelty_gate_exec(spark, sf_dir):
     # are one lean index aggregate; per-doc totals are a batch-only
     # featurize. Same output contract (and oracle) as
     # text_novelty_incremental.
-    merged = (
-        spark.read.parquet(os.path.join(work, "grams"))
-        .groupBy("gram")
-        .agg(F.min("first_doc").alias("first_doc"))
-    )
+    merged = merge_grams(read_table(spark, work, "grams"))
     novel = (
         merged.where(F.col("first_doc") % 10 == 0)
         .groupBy("first_doc")
@@ -939,15 +937,16 @@ def stream_lines_gate_exec(spark, sf_dir):
     the same FULL-recompute twin dedup_lines_incremental uses:
     stream-fold-then-serve ≡ batch-rebuild, one green row proves both.
 
-    Replay safety: the scratch copy is rebuilt per run so appends are
-    idempotent per execution; a production sink keys delta generation
-    directories by batch_id (the idempotent_parquet_writer pattern)."""
+    Replay safety: each fold passes its micro-batch id, so a batch
+    replayed from the checkpoint is a no-op append (the id is already
+    in the index manifest)."""
     import os
     import shutil
 
     from pyspark.sql import functions as F
 
     from minoan_athenaeum_spark.queries._util import t
+    from minoan_athenaeum_spark.sources.index_family import read_table
     from minoan_athenaeum_spark.sources.line_index import (
         append_to_line_index,
         doc_lines,
@@ -966,7 +965,7 @@ def stream_lines_gate_exec(spark, sf_dir):
         batch = batch_df.filter(F.col("doc_id") % 10 == 0)
         if batch.isEmpty():
             return
-        append_to_line_index(spark, work, batch)
+        append_to_line_index(spark, work, batch, batch_id=batch_id)
 
     stream = read_documents_stream(spark, sf_dir)
     q = (
@@ -987,7 +986,7 @@ def stream_lines_gate_exec(spark, sf_dir):
         t(spark, sf_dir, "documents").filter(F.col("doc_id") % 10 == 0)
     ).localCheckpoint(eager=True)
     owner = (
-        spark.read.parquet(os.path.join(work, "lines"))
+        read_table(spark, work, "lines")
         .join(F.broadcast(bl.select("fp").distinct()), "fp")
         .groupBy("fp")
         .agg(

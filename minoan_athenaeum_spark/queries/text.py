@@ -1684,9 +1684,8 @@ def text_bm25_index_compact(spark, sf_dir):
     one-segment-per-term-range layout with one index-sized rewrite —
     rows unchanged by construction, published as one new generation by
     a manifest commit so serving never sees a half-written index. The
-    measured many-delta vs compacted serve A/B lives in BASELINE.md
-    (scripts/compaction_probe.py); the file-count + row-identity pins
-    in tests/test_posting_sink.py."""
+    measured many-delta vs compacted serve A/B lives in BASELINE.md;
+    the file-count + row-identity pins in tests/test_posting_sink.py."""
     import os
     import shutil
 
@@ -2671,21 +2670,16 @@ def text_novelty_incremental(spark, sf_dir):
     from scratch over the WHOLE corpus in DuckDB, restricted to batch
     docs — proving the persisted index serves exactly what a
     from-scratch run computes."""
-    from minoan_athenaeum_spark.sources.gram_index import (
-        ensure_gram_index,
-    )
-
-    n = _NOVELTY_N
-    idx_path = ensure_gram_index(spark, sf_dir, n)
-    import os
-
     from minoan_athenaeum_spark.operators.text import ngram_structs, tokens
     from minoan_athenaeum_spark.queries._util import (
         persist_tracked,
         release_tracked,
     )
+    from minoan_athenaeum_spark.sources.gram_index import ensure_gram_index
+    from minoan_athenaeum_spark.sources.index_family import read_table
 
-    idx = spark.read.parquet(os.path.join(idx_path, "grams"))
+    n = _NOVELTY_N
+    idx = read_table(spark, ensure_gram_index(spark, sf_dir, n), "grams")
     docs = t(spark, sf_dir, "documents").filter(F.col("doc_id") % 10 == 0)
     d = docs.select("doc_id", tokens().alias("tk"))
     grams = d.select(

@@ -13,13 +13,13 @@ serving a batch is:
 
 The corpus side never re-tokenizes and never shuffles; the index scan
 carries two lean columns (no text). First-occurrence is a MIN — the
-canonical mergeable aggregate — so the whole lifecycle (fingerprinted
-path, crash-recovering ensure, delta-generation append whose
-min-merge ≡ rebuild-from-union, merge+swap compaction) is the shared
-:mod:`minoan_athenaeum_spark.sources.index_family` harness; this
-module contributes only the key shape (VERDICT r9 #5 consolidation —
-pins unchanged: append ≡ rebuild in tests/test_r8_ops.py, crash-swap
-states in tests/test_crash_safety.py).
+canonical mergeable aggregate — so the whole lifecycle is the shared
+snapshot-manifest harness of
+:mod:`minoan_athenaeum_spark.sources.index_family`: one ``grams/``
+table whose appended generations min-merge to the rebuild from the
+union, compacted through that min-merge. This module contributes only
+the key shape (append ≡ rebuild is pinned in tests/test_r8_ops.py, the
+crash points in tests/test_crash_safety.py).
 """
 
 from __future__ import annotations
@@ -28,10 +28,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from minoan_athenaeum_spark.sources.index_family import (
-    MergeableIndexFamily,
+    Maintained,
     append_index,
     compact_index,
     ensure_index,
+    hash_layout,
+    warehouse_index_path,
 )
 
 GRAM_N = 5  # the novelty unit, same as text_ngram_novelty
@@ -53,31 +55,24 @@ def gram_rows(docs: DataFrame, n: int = GRAM_N) -> DataFrame:
     return grams.groupBy("gram").agg(F.min("doc_id").alias("first_doc"))
 
 
-def _merge(gens: DataFrame) -> DataFrame:
+def merge_grams(gens: DataFrame) -> DataFrame:
+    """One (gram, first_doc) row per gram across any set of
+    generations."""
     return gens.groupBy("gram").agg(F.min("first_doc").alias("first_doc"))
-
-
-def _family(n: int) -> MergeableIndexFamily:
-    # n is part of the cache key (directory name), so an index built
-    # for one gram length can never be served or extended for another
-    # (ADVICE r8: previously only sf_dir + source fingerprint keyed it)
-    return MergeableIndexFamily(
-        prefix="mas_gramidx",
-        subdir="grams",
-        rows_fn=lambda docs: gram_rows(docs, n),
-        merge_fn=_merge,
-        part_col="gram",
-        source_table="documents",
-        params=f"n{n}",
-    )
 
 
 def gram_index_path(
     spark: SparkSession, sf_dir: str, n: int = GRAM_N
 ) -> str | None:
     """Warehouse directory for the documents table's first-occurrence
-    gram index — None when the warehouse isn't a local filesystem."""
-    return _family(n).path(spark, sf_dir)
+    gram index — None when the warehouse isn't a local filesystem. n is
+    part of the directory name, so an index built for one gram length
+    can never be served or extended for another (ADVICE r8)."""
+    # idx2: manifest + generation layout; the bump keeps the former
+    # live-directory layout from ever being served.
+    return warehouse_index_path(
+        spark, sf_dir, "mas_gramidx2", "documents", params=f"n{n}"
+    )
 
 
 def ensure_gram_index(
@@ -85,37 +80,45 @@ def ensure_gram_index(
 ) -> str:
     """Materialize the first-occurrence index for the EXISTING corpus
     (documents with ``doc_id % 10 != 0`` — the driver-visible batch
-    split this repo's incremental queries use) as gram-hash-partitioned
-    parquet under ``<path>/grams``. Idempotent per source
-    fingerprint."""
+    split this repo's incremental queries use) as one generation of
+    gram-hash-partitioned parquet under ``<path>/grams``. Idempotent
+    per source fingerprint."""
     from minoan_athenaeum_spark.catalog import load_table
 
-    existing = load_table(spark, sf_dir, "documents").filter(
-        F.col("doc_id") % 10 != 0
-    )
-    return ensure_index(_family(n), spark, sf_dir, existing, n_files)
+    def build(write):
+        existing = load_table(spark, sf_dir, "documents").filter(
+            F.col("doc_id") % 10 != 0
+        )
+        write.stage("grams", gram_rows(existing, n), hash_layout("gram", n_files))
+
+    return ensure_index(spark, gram_index_path(spark, sf_dir, n), build)
 
 
 def append_to_gram_index(
-    spark: SparkSession, path: str, new_docs: DataFrame, n: int = GRAM_N
+    spark: SparkSession,
+    path: str,
+    new_docs: DataFrame,
+    n: int = GRAM_N,
+    batch_id: str | int | None = None,
 ) -> None:
     """Fold a document batch INTO the persisted index: the batch's
     (gram, batch_min) rows land as one delta generation. No
     read-modify-write — min-over-generations ≡ rebuild-from-union
     under any doc_id interleaving (pinned by
-    tests/test_r8_ops.py::test_gram_index_append_equals_rebuild).
-    Per-doc_id idempotence is the caller's contract."""
-    append_index(_family(n), path, new_docs)
+    tests/test_r8_ops.py::test_gram_index_append_equals_rebuild). A
+    ``batch_id`` already applied makes the append a no-op."""
+    append_index(
+        spark,
+        path,
+        lambda write: write.stage("grams", gram_rows(new_docs, n)),
+        batch_id,
+    )
 
 
-def compact_gram_index(
-    spark: SparkSession, path: str, n_files: int = 8, n: int = GRAM_N
-) -> None:
+def compact_gram_index(spark: SparkSession, path: str, n_files: int = 8) -> None:
     """Rewrite accumulated generations into ``n_files`` fresh
     gram-partitioned files with the min-merge APPLIED (one row per
-    gram again) — the LSM compaction step, swapped live crash-safely
-    (sources/swap.py — pinned by tests/test_crash_safety.py).
-    ``n`` selects the family like the ensure/append siblings (ADVICE
-    r10: a hardcoded GRAM_N here would silently desynchronize if the
-    family ever gained n-dependent merge or layout)."""
-    compact_index(_family(n), spark, path, n_files)
+    gram again) — the LSM compaction step, one manifest commit."""
+    compact_index(
+        spark, path, {"grams": Maintained(hash_layout("gram", n_files), merge_grams)}
+    )

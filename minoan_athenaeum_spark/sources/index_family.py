@@ -1,38 +1,34 @@
-"""Shared lifecycle harness for the persisted-index families.
+"""Shared lifecycle for the persisted-index families.
 
-Several index families keep serving state in the Spark warehouse (LSH
-bands, BM25 postings, IVF cells, first-occurrence grams, LM scores,
-line fingerprints). This module holds the lifecycle they share, in
-three layers:
+Six index families keep serving state in the Spark warehouse: LSH bands
+and shingles, BM25 postings, IVF cells, first-occurrence grams, line
+fingerprints and LM scores. This module holds the lifecycle they all
+share, in two layers:
 
-1. :func:`warehouse_index_path` — the path/freshness convention EVERY
-   family shares (warehouse dir + sf_dir tag + source-parquet
-   fingerprint, so a changed corpus resolves to a new path and a stale
-   index is never served).
+1. :func:`warehouse_index_path` — the path/freshness convention (warehouse
+   dir + sf_dir tag + source-parquet fingerprint, so a changed corpus
+   resolves to a new path and a stale index is never served).
 
-2. :class:`MergeableIndexFamily` + ensure/append/compact — the LSM
-   lifecycle for families whose state is a per-key MERGEABLE
-   aggregate: appends land as delta files in one live directory, a
-   reader (or the compactor) restores the exact rebuilt-from-union
-   index by applying ``merge_fn`` across them, and compaction swaps
-   live via the crash-safe two-rename dance (sources/swap.py). The
-   gram and line families are defined entirely on this layer; the LSH
-   band index compacts through it.
+2. Snapshot manifests — an index is a set of tables (``grams/``,
+   ``bands/`` + ``shingles/``, ``centroids/`` + ``members/``, ...), each
+   a list of immutable generation directories ``<index>/<table>/<gen>/``
+   with one pinned schema, and one JSON manifest lists them all.
+   :func:`ensure_index`, :func:`append_index` and :func:`compact_index`
+   stage each table's rows, rename them into place and publish the next
+   manifest with one ``os.replace``; :func:`read_table` reads a manifest
+   once and then exactly one table's files with its schema (no listing,
+   no schema-inference job). The publish is the only commit point, so a
+   crash at any step leaves the previous snapshot served. A generation
+   is deleted only once neither the current manifest nor the one it
+   replaced names it, so a reader that built its plan on one snapshot
+   can still read it after the next commit. A batch id already in the
+   manifest makes an append a no-op.
 
-3. Snapshot manifests — immutable generation directories plus one JSON
-   manifest per index (:func:`stage_generation`, :func:`commit`,
-   :func:`read_manifest`). Each write stages its files, renames them
-   into ``<index>/<subdir>/<gen>/`` and publishes a new manifest with
-   one ``os.replace``; a reader reads the manifest once and then
-   exactly its files with its pinned schema. A published manifest is
-   the only commit point, so a crash at any step leaves the previous
-   snapshot served, and a reader that built its plan on one snapshot
-   can still read it after the next commit. The BM25 index
-   (sources/posting_sink.py) is built on this layer.
-
-The IVF and LM-score families keep their own writers on layer 1 and
-sources/swap.py. Every family's crash invariants are pinned in
-tests/test_crash_safety.py.
+Compaction rewrites each maintained table through its family's merge
+(one row per key again; the identity for tables whose generations are
+key-disjoint) and layout, all in one commit; model tables (the IVF
+codebook, the LM tables) carry over untouched. Every family's crash
+invariants are pinned in tests/test_crash_safety.py.
 """
 
 from __future__ import annotations
@@ -47,12 +43,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-from minoan_athenaeum_spark.sources.swap import (
-    recover_swap,
-    swap_live,
-    swap_paths,
-)
+from pyspark.sql.types import StructType
 
 
 def warehouse_index_path(
@@ -85,115 +76,47 @@ def warehouse_index_path(
     return os.path.join(wh, f"{prefix}_{tag}{mid}_{fresh}")
 
 
+# A layout writes a table's rows as parquet into a fresh directory.
+Layout = Callable[[DataFrame, str], None]
+
+
+def write_parquet(rows: DataFrame, target: str) -> None:
+    """The default layout: one file per partition of ``rows``."""
+    rows.write.parquet(target)
+
+
+def single_file(rows: DataFrame, target: str) -> None:
+    """One file, for small model tables."""
+    rows.coalesce(1).write.parquet(target)
+
+
+def hash_layout(col: str, n_files: int) -> Layout:
+    """``n_files`` files, hash-partitioned by ``col``."""
+    return lambda rows, target: (
+        rows.repartition(n_files, F.col(col)).write.parquet(target)
+    )
+
+
 @dataclass(frozen=True)
-class MergeableIndexFamily:
-    """A persisted index whose state is a per-key mergeable aggregate.
+class Maintained:
+    """How compaction rewrites one maintained table: ``merge`` restores
+    one row per key across all of the table's generations (idempotent
+    and order-insensitive, min/max/sum style; the default identity
+    suits tables whose generations are key-disjoint), and ``layout``
+    writes the merged rows."""
 
-    ``rows_fn(slice) -> DataFrame`` maps a source slice to per-key rows
-    ALREADY merged within the slice (the one definition both the full
-    build and every batch append use, so append ≡ rebuild holds by
-    construction). ``merge_fn(generations) -> DataFrame`` restores one
-    row per key across any set of delta generations; it must be
-    idempotent and order-insensitive (min/max/sum-style). ``part_col``
-    is the key column the files are hash-partitioned by.
-
-    ``layout_fn(rows, target_dir, n_files)``, when set, replaces the
-    default hash-repartition overwrite for the FULL layout (ensure +
-    compact) — e.g. the BM25 postings' term-range-sorted segment
-    layout. ``append_fn(rows, live_dir)``, when set, replaces the
-    default plain parquet append for delta generations (e.g. sorting
-    a batch's postings within the delta file). Both defaults preserve
-    the pre-r11 single-table behavior exactly."""
-
-    prefix: str
-    subdir: str
-    rows_fn: Callable[[DataFrame], DataFrame]
-    merge_fn: Callable[[DataFrame], DataFrame]
-    part_col: str
-    source_table: str = "documents"
-    params: str = ""
-
-    def path(self, spark: SparkSession, sf_dir: str) -> str | None:
-        return warehouse_index_path(
-            spark, sf_dir, self.prefix, self.source_table, self.params
-        )
-
-    def live_dir(self, path: str) -> str:
-        return os.path.join(path, self.subdir)
-
-
-def ensure_index(
-    fam: MergeableIndexFamily,
-    spark: SparkSession,
-    sf_dir: str,
-    existing: DataFrame,
-    n_files: int = 8,
-) -> str:
-    """Materialize ``fam`` for the ``existing`` source slice as
-    ``part_col``-hash-partitioned parquet. Idempotent per source
-    fingerprint; repairs any interrupted compaction swap FIRST (a
-    crash between swap renames must not look like a missing index and
-    silently discard appended generations — the ADVICE-r8 recovery
-    window, pinned in tests/test_crash_safety.py)."""
-    path = fam.path(spark, sf_dir)
-    if path is None:
-        raise RuntimeError(f"{fam.prefix} index needs a local warehouse dir")
-    live = fam.live_dir(path)
-    recover_swap(live)
-    if os.path.isfile(os.path.join(live, "_SUCCESS")):
-        return path
-    _write_layout(fam, fam.rows_fn(existing), live, n_files)
-    return path
-
-
-def _write_layout(
-    fam: MergeableIndexFamily, rows: DataFrame, target: str, n_files: int
-) -> None:
-    (
-        rows.repartition(n_files, F.col(fam.part_col))
-        .write.mode("overwrite")
-        .parquet(target)
-    )
-
-
-def append_index(
-    fam: MergeableIndexFamily, path: str, new_slice: DataFrame
-) -> None:
-    """Fold a source batch INTO the persisted index as one delta
-    generation (parquet append of the batch's per-key merged rows). No
-    read-modify-write: ``merge_fn`` over generations ≡ rebuild from
-    the unioned source under any interleaving. Per-record idempotence
-    (each source row appended once) is the caller's contract."""
-    fam.rows_fn(new_slice).write.mode("append").parquet(fam.live_dir(path))
-
-
-def compact_index(
-    fam: MergeableIndexFamily,
-    spark: SparkSession,
-    path: str,
-    n_files: int = 8,
-) -> None:
-    """Rewrite accumulated generations into ``n_files`` fresh files
-    with ``merge_fn`` APPLIED (one row per key again) — the LSM
-    compaction step, landed in a sibling dir and swapped live with the
-    crash-safe two-rename dance (sources/swap.py)."""
-    live = fam.live_dir(path)
-    recover_swap(live)
-    _write_layout(
-        fam, fam.merge_fn(spark.read.parquet(live)), swap_paths(live)[0], n_files
-    )
-    swap_live(live)
-
-
+    layout: Layout
+    merge: Callable[[DataFrame], DataFrame] = lambda rows: rows
 
 
 # --------------------------------------------------------------------------
-# Snapshot manifests (layer 3). A manifest is a JSON object holding
-# ``generations`` ({gen dir relative to the index: its data file
-# names}), ``previous`` (the generation dirs of the manifest it
-# replaced) and whatever fields the family keeps beside them. Paths are
-# relative, so a copied index directory stays valid. One writer per
-# index; readers never take a lock.
+# Manifests. A manifest is a JSON object holding ``generations`` ({gen
+# dir relative to the index, ``<table>/<name>``: its data file names}),
+# ``schemas`` ({table: pinned schema}), ``batches`` (applied batch ids),
+# ``previous`` (the generation dirs of the manifest it replaced) and
+# whatever fields the family keeps beside them. Paths are relative, so a
+# copied index directory stays valid. One writer per index; readers
+# never take a lock.
 # --------------------------------------------------------------------------
 
 MANIFEST = "_manifest.json"
@@ -207,13 +130,36 @@ def read_manifest(path: str) -> dict:
         return json.load(f)
 
 
-def manifest_files(path: str, manifest: dict) -> list[str]:
-    """Absolute paths of exactly the data files the manifest lists."""
+def _files(path: str, generations: dict[str, list[str]], table: str) -> list[str]:
     return [
         os.path.join(path, gen, name)
-        for gen, names in manifest["generations"].items()
+        for gen, names in generations.items()
+        if os.path.dirname(gen) == table
         for name in names
     ]
+
+
+def table_files(path: str, manifest: dict, table: str) -> list[str]:
+    """Absolute paths of exactly the data files the manifest lists for
+    ``table``."""
+    return _files(path, manifest["generations"], table)
+
+
+def _scan(spark: SparkSession, files: list[str], schema: dict) -> DataFrame:
+    # every generation holds at least one file: Spark writes an empty
+    # parquet file for an empty DataFrame
+    return spark.read.schema(StructType.fromJson(schema)).parquet(*files)
+
+
+def read_table(
+    spark: SparkSession, path: str, table: str, manifest: dict | None = None
+) -> DataFrame:
+    """One table of the index: exactly the files ``manifest`` (default:
+    the current one) lists for it, read with the table's pinned schema.
+    Pass one manifest to read several tables of the same snapshot. The
+    DataFrame stays readable across the next commit."""
+    m = manifest if manifest is not None else read_manifest(path)
+    return _scan(spark, table_files(path, m, table), m["schemas"][table])
 
 
 def stage_generation(
@@ -261,21 +207,123 @@ def collect_garbage(path: str, manifest: dict) -> None:
         shutil.rmtree(os.path.join(path, _STAGING))
 
 
-def commit(
+class IndexWrite:
+    """The generations one commit stages on top of ``base``, the
+    manifest it follows (None while the index is first built)."""
+
+    def __init__(self, spark: SparkSession, path: str, base: dict | None):
+        self.spark, self.path, self.base = spark, path, base
+        self.generations: dict[str, list[str]] = {}
+        self.schemas: dict[str, dict] = dict(base["schemas"]) if base else {}
+
+    def stage(
+        self, table: str, rows: DataFrame, layout: Layout = write_parquet
+    ) -> None:
+        """Write ``rows`` as a new generation of ``table``: cast to the
+        table's pinned schema, or pinning it on the table's first
+        write."""
+        if table in self.schemas:
+            # compare without nullability: parquet reads back nullable
+            have = {f.name: f.dataType.simpleString() for f in rows.schema}
+            rows = rows.select(*[
+                F.col(f.name)
+                if have[f.name] == f.dataType.simpleString()
+                else F.col(f.name).cast(f.dataType)
+                for f in StructType.fromJson(self.schemas[table])
+            ])
+        else:
+            self.schemas[table] = rows.schema.jsonValue()
+        self.generations.update(
+            stage_generation(self.path, table, lambda target: layout(rows, target))
+        )
+
+    def read(self, table: str) -> DataFrame:
+        """``table`` as this write staged it, else as ``base`` holds it
+        (how a build reads back a model table before the commit)."""
+        if not any(os.path.dirname(gen) == table for gen in self.generations):
+            return read_table(self.spark, self.path, table, self.base)
+        files = _files(self.path, self.generations, table)
+        return _scan(self.spark, files, self.schemas[table])
+
+    def commit(self, generations: dict[str, list[str]], **fields) -> None:
+        """Publish the manifest that follows ``base``: ``generations``
+        live, the tables' schemas, ``fields`` replacing base's family
+        fields and the rest carried over. Then collect garbage."""
+        base = self.base or {"generations": {}}
+        manifest = {
+            **base,
+            **fields,
+            "schemas": self.schemas,
+            "generations": generations,
+            "previous": list(base["generations"]),
+        }
+        publish_manifest(self.path, manifest)
+        collect_garbage(self.path, manifest)
+
+
+def ensure_index(
+    spark: SparkSession,
+    path: str | None,
+    build: Callable[[IndexWrite], dict | None],
+) -> str:
+    """Build the index at ``path`` unless it exists, which it does once
+    its manifest does. ``build(write)`` stages every table (and may read
+    a staged model table back through ``write.read``); it returns the
+    family's manifest fields, if any. One commit publishes it all."""
+    if path is None:
+        raise RuntimeError("a persisted index needs a local warehouse dir")
+    if not os.path.isfile(os.path.join(path, MANIFEST)):
+        write = IndexWrite(spark, path, None)
+        fields = build(write) or {}
+        write.commit(write.generations, batches=[], **fields)
+    return path
+
+
+def append_index(
+    spark: SparkSession,
     path: str,
-    prev: dict | None,
-    generations: dict[str, list[str]],
-    **fields,
+    batch: Callable[[IndexWrite], dict | None],
+    batch_id: str | int | None = None,
 ) -> None:
-    """Publish the manifest that follows ``prev`` (None for a new
-    index): ``generations`` live, ``fields`` replacing prev's family
-    fields, the rest carried over. Then collect garbage."""
-    base = prev if prev is not None else {"generations": {}}
-    manifest = {
-        **base,
+    """Fold one source batch into the index as new generations:
+    ``batch(write)`` stages each table's rows (``write.base`` is the
+    current manifest) and returns changed manifest fields, if any; one
+    commit publishes them. No read-modify-write — a table's merge over
+    generations equals a rebuild from the union.
+
+    ``batch_id`` makes a re-sent batch a no-op: an id already in the
+    manifest is skipped, and a fresh one is recorded with the commit.
+    Without it, each source row appended once is the caller's
+    contract."""
+    m = read_manifest(path)
+    if batch_id is not None and str(batch_id) in m["batches"]:
+        return
+    write = IndexWrite(spark, path, m)
+    fields = batch(write) or {}
+    ids = [] if batch_id is None else [str(batch_id)]
+    write.commit(
+        {**m["generations"], **write.generations},
+        batches=m["batches"] + ids,
         **fields,
-        "generations": generations,
-        "previous": list(base["generations"]),
+    )
+
+
+def compact_index(
+    spark: SparkSession, path: str, maintained: dict[str, Maintained]
+) -> None:
+    """Rewrite every generation of each maintained table into one new
+    generation through its merge and layout — the LSM compaction step
+    that caps read amplification — and publish them in one commit.
+    Other tables and the manifest fields carry over unchanged; the
+    replaced generations stay on disk until the next commit, so a read
+    planned before this compaction still reads its snapshot."""
+    m = read_manifest(path)
+    write = IndexWrite(spark, path, m)
+    for table, spec in maintained.items():
+        write.stage(table, spec.merge(read_table(spark, path, table, m)), spec.layout)
+    kept = {
+        gen: files
+        for gen, files in m["generations"].items()
+        if os.path.dirname(gen) not in maintained
     }
-    publish_manifest(path, manifest)
-    collect_garbage(path, manifest)
+    write.commit({**kept, **write.generations})

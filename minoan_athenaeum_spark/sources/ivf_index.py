@@ -16,6 +16,12 @@ the BATCH (map-only, broadcast codebook), join the batch against
 pruned scan), exact integer-cosine verify the same-cell candidates.
 The corpus side never re-embeds, never re-assigns, never shuffles.
 
+Both tables live on the shared snapshot-manifest harness
+(sources/index_family.py): ``centroids/`` is a model table, written
+once at the build and carried over untouched; ``members/`` is the
+maintained table, appended per admitted batch and compacted back into
+N_CELLS cell-partitioned files.
+
 Codebook convention follows sim_semdedup: the existing slice's eight
 smallest vec_ids are the stand-in codebook (a production run k-means a
 sample — operators/similarity.kmeans_refine is the trained variant);
@@ -28,17 +34,25 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from minoan_athenaeum_spark.sources.index_family import (
+    Maintained,
+    append_index,
+    compact_index,
+    ensure_index,
+    hash_layout,
+    single_file,
+    warehouse_index_path,
+)
+
 N_CELLS = 8
 
 
 def ivf_index_path(spark: SparkSession, sf_dir: str) -> str | None:
     """Warehouse directory for the embeddings table's IVF cell index —
     None when the warehouse isn't a local filesystem."""
-    from minoan_athenaeum_spark.sources.index_family import (
-        warehouse_index_path,
-    )
-
-    return warehouse_index_path(spark, sf_dir, "mas_ivfidx", "embeddings")
+    # idx2: manifest + generation layout; the bump keeps the former
+    # live-directory layout from ever being served.
+    return warehouse_index_path(spark, sf_dir, "mas_ivfidx2", "embeddings")
 
 
 def _quantized(emb: DataFrame) -> DataFrame:
@@ -65,90 +79,65 @@ def _assigned(v: DataFrame, cents: DataFrame) -> DataFrame:
 def ensure_ivf_index(spark: SparkSession, sf_dir: str) -> str:
     """Materialize the IVF index of the EXISTING corpus slice
     (vec_id % 10 != 0 — the same generation convention as the LSH and
-    BM25 incremental indexes). Idempotent per source fingerprint."""
-    import os
-
+    BM25 incremental indexes). The members are assigned against the
+    codebook read back from its staged generation. Idempotent per
+    source fingerprint."""
     from minoan_athenaeum_spark.catalog import load_table
 
-    from minoan_athenaeum_spark.sources.swap import recover_swap
+    def build(write):
+        existing = _quantized(
+            load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") % 10 != 0)
+        ).localCheckpoint(eager=True)
+        try:
+            cents = (
+                existing.orderBy("vec_id")
+                .limit(N_CELLS)
+                .select(F.col("vec_id").alias("cell"), F.col("q").alias("cq"))
+            )
+            write.stage("centroids", cents, single_file)
+            write.stage(
+                "members",
+                _assigned(existing, write.read("centroids")),
+                hash_layout("cell", N_CELLS),
+            )
+        finally:
+            existing.unpersist()
 
-    path = ivf_index_path(spark, sf_dir)
-    if path is None:
-        raise RuntimeError("IVF index needs a local warehouse dir")
-    recover_swap(os.path.join(path, "members"))
-    if os.path.isfile(
-        os.path.join(path, "centroids", "_SUCCESS")
-    ) and os.path.isfile(os.path.join(path, "members", "_SUCCESS")):
-        return path
-    existing = _quantized(
-        load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") % 10 != 0)
-    ).localCheckpoint(eager=True)
-    try:
-        cents = (
-            existing.orderBy("vec_id")
-            .limit(N_CELLS)
-            .select(F.col("vec_id").alias("cell"), F.col("q").alias("cq"))
-        )
-        cents.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(path, "centroids")
-        )
-        cents_local = spark.read.parquet(os.path.join(path, "centroids"))
-        (
-            _assigned(existing, cents_local)
-            .repartition(N_CELLS, F.col("cell"))
-            .write.mode("overwrite")
-            .parquet(os.path.join(path, "members"))
-        )
-    finally:
-        existing.unpersist()
-    return path
+    return ensure_index(spark, ivf_index_path(spark, sf_dir), build)
 
 
 def compact_ivf_members(spark: SparkSession, path: str) -> None:
     """Rewrite the accumulated member generations (base files + one
     file per appended batch) back into N_CELLS cell-partitioned files
-    — the same LSM compaction contract as
+    in one commit — the same LSM compaction contract as
     posting_sink.compact_bm25_index: rows unchanged by construction
-    (one repartition-by-cell rewrite), here swapped in by directory rename
-    so a reader never sees a half-written index. Centroids are
-    untouched (retraining the codebook is a model event, not a
-    layout event). Pinned by tests/test_dedup_similarity.py::
-    test_ivf_compact_preserves_members_and_layout; crash states of the
-    swap itself by tests/test_crash_safety.py."""
-    import os
-
-    from minoan_athenaeum_spark.sources.swap import (
-        recover_swap,
-        swap_live,
-        swap_paths,
-    )
-
-    mdir = os.path.join(path, "members")
-    recover_swap(mdir)
-    (
-        spark.read.parquet(mdir)
-        .repartition(N_CELLS, F.col("cell"))
-        .write.mode("overwrite")
-        .parquet(swap_paths(mdir)[0])
-    )
-    swap_live(mdir)
+    (identity merge, one repartition-by-cell rewrite). Centroids are
+    untouched (retraining the codebook is a model event, not a layout
+    event). Pinned by tests/test_dedup_similarity.py::
+    test_ivf_compact_preserves_members_and_layout."""
+    compact_index(spark, path, {"members": Maintained(hash_layout("cell", N_CELLS))})
 
 
 def append_to_ivf_index(
-    spark: SparkSession, path: str, new_vectors: DataFrame
+    spark: SparkSession,
+    path: str,
+    new_vectors: DataFrame,
+    batch_id: str | int | None = None,
 ) -> None:
     """Fold an admitted batch into the persisted index: assign against
     the EXISTING codebook (centroids are a model artifact — they do not
     drift per batch; retrain + rebuild is the compaction event) and
-    append the (cell, vec_id, q) member rows. Mirrors
-    lsh_index.append_to_minhash_index; per-vec_id idempotence is the
-    caller's contract."""
-    import os
-
-    cents = spark.read.parquet(os.path.join(path, "centroids"))
-    (
-        _assigned(_quantized(new_vectors), cents)
-        .repartition(1, F.col("cell"))
-        .write.mode("append")
-        .parquet(os.path.join(path, "members"))
+    append the (cell, vec_id, q) member rows as one generation. Mirrors
+    lsh_index.append_to_minhash_index; a ``batch_id`` already applied
+    makes the append a no-op, and without one, per-vec_id idempotence
+    is the caller's contract."""
+    append_index(
+        spark,
+        path,
+        lambda write: write.stage(
+            "members",
+            _assigned(_quantized(new_vectors), write.read("centroids")),
+            hash_layout("cell", 1),
+        ),
+        batch_id,
     )

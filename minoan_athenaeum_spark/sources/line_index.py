@@ -11,15 +11,14 @@ batch is: batch lines map-only → per-fp batch minima → broadcast hash
 probe against ONE map-only scan of the index → merged-owner compare.
 
 First-occurrence over the (doc_id, line_no) struct is a MIN — the
-canonical mergeable aggregate — so the whole lifecycle (fingerprinted
-path, crash-recovering ensure, delta-generation append whose
-min-merge ≡ rebuild-from-union regardless of doc_id interleaving,
-merge+swap compaction) is the shared
-:mod:`minoan_athenaeum_spark.sources.index_family` harness; this
-module contributes only the key shape (VERDICT r9 #5 consolidation —
-pins unchanged: append ≡ rebuild + order-commutation in
-tests/test_line_index.py, crash-swap states in
-tests/test_crash_safety.py).
+canonical mergeable aggregate — so the whole lifecycle is the shared
+snapshot-manifest harness of
+:mod:`minoan_athenaeum_spark.sources.index_family`: one ``lines/``
+table whose appended generations min-merge to the rebuild from the
+union regardless of doc_id interleaving, compacted through that
+min-merge. This module contributes only the key shape (append ≡
+rebuild + order-commutation are pinned in tests/test_line_index.py,
+the crash points in tests/test_crash_safety.py).
 """
 
 from __future__ import annotations
@@ -28,10 +27,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from minoan_athenaeum_spark.sources.index_family import (
-    MergeableIndexFamily,
+    Maintained,
     append_index,
     compact_index,
     ensure_index,
+    hash_layout,
+    warehouse_index_path,
 )
 
 LINE_LEN = 10  # tokens per synthesized line, same as dedup_lines_global
@@ -76,7 +77,9 @@ def line_owner_rows(docs: DataFrame, line_len: int = LINE_LEN) -> DataFrame:
     )
 
 
-def _merge(gens: DataFrame) -> DataFrame:
+def merge_lines(gens: DataFrame) -> DataFrame:
+    """One (fp, first_doc, first_line) row per fp across any set of
+    generations."""
     return (
         gens.groupBy("fp")
         .agg(F.min(F.struct("first_doc", "first_line")).alias("own"))
@@ -88,26 +91,18 @@ def _merge(gens: DataFrame) -> DataFrame:
     )
 
 
-def _family(line_len: int) -> MergeableIndexFamily:
-    # line length is part of the cache key (the gram-index n lesson,
-    # ADVICE r8)
-    return MergeableIndexFamily(
-        prefix="mas_lineidx",
-        subdir="lines",
-        rows_fn=lambda docs: line_owner_rows(docs, line_len),
-        merge_fn=_merge,
-        part_col="fp",
-        source_table="documents",
-        params=f"L{line_len}",
-    )
-
-
 def line_index_path(
     spark: SparkSession, sf_dir: str, line_len: int = LINE_LEN
 ) -> str | None:
     """Warehouse directory for the documents table's first-occurrence
-    line index — None when the warehouse isn't a local filesystem."""
-    return _family(line_len).path(spark, sf_dir)
+    line index — None when the warehouse isn't a local filesystem. The
+    line length is part of the directory name (the gram-index n
+    lesson, ADVICE r8)."""
+    # idx2: manifest + generation layout; the bump keeps the former
+    # live-directory layout from ever being served.
+    return warehouse_index_path(
+        spark, sf_dir, "mas_lineidx2", "documents", params=f"L{line_len}"
+    )
 
 
 def ensure_line_index(
@@ -115,37 +110,45 @@ def ensure_line_index(
 ) -> str:
     """Materialize the first-occurrence line index for the EXISTING
     corpus slice (doc_id % 10 != 0 — the repo's standard incremental
-    split) as fp-hash-partitioned parquet under ``<path>/lines``.
-    Idempotent per source fingerprint; repairs any interrupted
-    compaction swap first."""
+    split) as one generation of fp-hash-partitioned parquet under
+    ``<path>/lines``. Idempotent per source fingerprint."""
     from minoan_athenaeum_spark.catalog import load_table
 
-    existing = load_table(spark, sf_dir, "documents").filter(
-        F.col("doc_id") % 10 != 0
-    )
-    return ensure_index(_family(line_len), spark, sf_dir, existing, n_files)
+    def build(write):
+        existing = load_table(spark, sf_dir, "documents").filter(
+            F.col("doc_id") % 10 != 0
+        )
+        write.stage(
+            "lines", line_owner_rows(existing, line_len), hash_layout("fp", n_files)
+        )
+
+    return ensure_index(spark, line_index_path(spark, sf_dir, line_len), build)
 
 
 def append_to_line_index(
-    spark: SparkSession, path: str, new_docs: DataFrame, line_len: int = LINE_LEN
+    spark: SparkSession,
+    path: str,
+    new_docs: DataFrame,
+    line_len: int = LINE_LEN,
+    batch_id: str | int | None = None,
 ) -> None:
     """Fold a document batch INTO the persisted index as one delta
-    generation (parquet append of the batch's per-fp minima). No
-    read-modify-write — min-over-generations ≡ rebuild-from-union
-    under any interleaving (pinned by
-    tests/test_line_index.py::test_append_equals_rebuild). Per-doc_id
-    idempotence is the caller's contract."""
-    append_index(_family(line_len), path, new_docs)
+    generation of the batch's per-fp minima. No read-modify-write —
+    min-over-generations ≡ rebuild-from-union under any interleaving
+    (pinned by tests/test_line_index.py::test_append_equals_rebuild).
+    A ``batch_id`` already applied makes the append a no-op."""
+    append_index(
+        spark,
+        path,
+        lambda write: write.stage("lines", line_owner_rows(new_docs, line_len)),
+        batch_id,
+    )
 
 
-def compact_line_index(
-    spark: SparkSession, path: str, n_files: int = 8, line_len: int = LINE_LEN
-) -> None:
+def compact_line_index(spark: SparkSession, path: str, n_files: int = 8) -> None:
     """Rewrite accumulated generations into ``n_files`` fresh
     fp-partitioned files with the min-merge APPLIED (one row per fp) —
-    the LSM compaction step, swapped live crash-safely
-    (sources/swap.py). ``line_len`` selects the family like the
-    ensure/append siblings (ADVICE r10: a hardcoded LINE_LEN here
-    would silently desynchronize if the family ever gained
-    line_len-dependent merge or layout)."""
-    compact_index(_family(line_len), spark, path, n_files)
+    the LSM compaction step, one manifest commit."""
+    compact_index(
+        spark, path, {"lines": Maintained(hash_layout("fp", n_files), merge_lines)}
+    )

@@ -22,14 +22,14 @@ path, so staleness is impossible):
             postings convention)
 
 The split mirrors the IVF family's codebook/members contract: the LM
-tables are a model artifact (appends score against the FROZEN LM;
-retrain + rebuild is a model event, not a maintenance event), while
-``scores/`` is the maintained half — ``append_to_lm_index`` scores an
+tables are model tables (appends score against the FROZEN LM;
+retraining is a rebuild, a model event, not a maintenance event), while
+``scores/`` is the maintained table — ``append_to_lm_index`` scores an
 arriving batch under the frozen LM (map-only explode + two
 bigram-keyed joins over the BATCH ONLY; the corpus never re-tokenizes)
-and appends its rows as a delta generation, and ``compact_lm_scores``
-rewrites accumulated generations through the crash-safe two-rename
-swap.
+and commits its rows as a delta generation, and ``compact_lm_scores``
+rewrites accumulated generations in one commit. All four tables live
+on the shared snapshot-manifest harness (sources/index_family.py).
 
 BUCKETS ARE DERIVED AT READ TIME: terciles are global state (every
 append shifts them), so ``read_lm_buckets`` ranks the current score
@@ -54,28 +54,31 @@ extension queries only.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from minoan_athenaeum_spark.sources.swap import (
-    recover_swap,
-    swap_live,
-    swap_paths,
+from minoan_athenaeum_spark.sources.index_family import (
+    Maintained,
+    append_index,
+    compact_index,
+    ensure_index,
+    hash_layout,
+    read_manifest,
+    read_table,
+    single_file,
+    warehouse_index_path,
 )
 
 N_SCORE_FILES = 8
+_MODEL = ("lm_bg", "lm_ctx", "lm_meta")
 
 
 def lm_index_path(spark: SparkSession, sf_dir: str) -> str | None:
     """Warehouse directory for the documents table's LM-bucket index —
     None when the warehouse isn't a local filesystem."""
-    from minoan_athenaeum_spark.sources.index_family import (
-        warehouse_index_path,
-    )
-
-    return warehouse_index_path(spark, sf_dir, "mas_lmidx", "documents")
+    # idx2: manifest + generation layout; the bump keeps the former
+    # live-directory layout from ever being served.
+    return warehouse_index_path(spark, sf_dir, "mas_lmidx2", "documents")
 
 
 def _with_bigrams(docs_tokenized: DataFrame) -> DataFrame:
@@ -87,99 +90,86 @@ def _with_bigrams(docs_tokenized: DataFrame) -> DataFrame:
 def _read_lm(spark: SparkSession, path: str):
     """The frozen model artifact read back as the (cbg2, cctx2, lgv)
     triple ``ccnet_score_docs`` expects."""
-    cbg2 = spark.read.parquet(os.path.join(path, "lm_bg"))
-    cctx2 = spark.read.parquet(os.path.join(path, "lm_ctx"))
-    lgv = spark.read.parquet(os.path.join(path, "lm_meta"))
-    return cbg2, cctx2, lgv
+    m = read_manifest(path)
+    return tuple(read_table(spark, path, t, m) for t in _MODEL)
 
 
 def ensure_lm_index(spark: SparkSession, sf_dir: str) -> str:
     """Materialize the LM-bucket index for ``sf_dir``'s FULL documents
-    table: fit the add-one bigram LM on the lang='en' slice, persist
-    the three frozen LM tables, then score every document AGAINST THE
-    PERSISTED ARTIFACT (read back, like the IVF codebook — so the
-    build exercises the same serve path appends use) and persist the
-    score table. Idempotent per source fingerprint; repairs an
-    interrupted scores compaction swap first."""
+    table: fit the add-one bigram LM on the lang='en' slice, stage the
+    three frozen LM tables, then score every document AGAINST THE
+    STAGED ARTIFACT (read back, like the IVF codebook — so the build
+    exercises the same serve path appends use) and stage the score
+    table; one commit publishes all four. Idempotent per source
+    fingerprint."""
     from minoan_athenaeum_spark.queries.text import (
         ccnet_lm_fit,
         ccnet_score_docs,
         ccnet_tokenized,
     )
 
-    path = lm_index_path(spark, sf_dir)
-    if path is None:
-        raise RuntimeError("LM-bucket index needs a local warehouse dir")
-    scores_dir = os.path.join(path, "scores")
-    recover_swap(scores_dir)
-    if all(
-        os.path.isfile(os.path.join(path, sub, "_SUCCESS"))
-        for sub in ("lm_bg", "lm_ctx", "lm_meta", "scores")
-    ):
-        return path
-    withbg = _with_bigrams(ccnet_tokenized(spark, sf_dir))
-    cbg2, cctx2, lgv = ccnet_lm_fit(withbg)
-    cbg2.repartition(N_SCORE_FILES, F.col("w1")).write.mode("overwrite").parquet(
-        os.path.join(path, "lm_bg")
-    )
-    cctx2.repartition(N_SCORE_FILES, F.col("w1")).write.mode("overwrite").parquet(
-        os.path.join(path, "lm_ctx")
-    )
-    lgv.coalesce(1).write.mode("overwrite").parquet(os.path.join(path, "lm_meta"))
-    (
-        ccnet_score_docs(withbg, *_read_lm(spark, path))
-        .repartition(N_SCORE_FILES, F.col("doc_id"))
-        .write.mode("overwrite")
-        .parquet(scores_dir)
-    )
-    return path
+    def build(write):
+        withbg = _with_bigrams(ccnet_tokenized(spark, sf_dir))
+        cbg2, cctx2, lgv = ccnet_lm_fit(withbg)
+        write.stage("lm_bg", cbg2, hash_layout("w1", N_SCORE_FILES))
+        write.stage("lm_ctx", cctx2, hash_layout("w1", N_SCORE_FILES))
+        write.stage("lm_meta", lgv, single_file)
+        write.stage(
+            "scores",
+            ccnet_score_docs(withbg, *map(write.read, _MODEL)),
+            hash_layout("doc_id", N_SCORE_FILES),
+        )
+
+    return ensure_index(spark, lm_index_path(spark, sf_dir), build)
 
 
 def append_to_lm_index(
-    spark: SparkSession, path: str, new_docs: DataFrame
+    spark: SparkSession,
+    path: str,
+    new_docs: DataFrame,
+    batch_id: str | int | None = None,
 ) -> None:
     """Fold a document batch into the persisted index: tokenize and
     score THE BATCH ONLY against the frozen LM tables (unseen bigrams
     and contexts take the same add-one fallbacks scoring always uses)
-    and append the (doc_id, n_bg, lg_sum) rows as one delta
+    and commit the (doc_id, n_bg, lg_sum) rows as one delta
     generation. The corpus pays nothing; buckets need no maintenance
     because ``read_lm_buckets`` derives terciles from the current
     score set. Mirrors ivf_index.append_to_ivf_index (frozen-model
-    assign); per-doc_id idempotence is the caller's contract."""
+    assign); a ``batch_id`` already applied makes the append a no-op,
+    and without one, per-doc_id idempotence is the caller's
+    contract."""
     from minoan_athenaeum_spark.operators.dedup import normalized
+    from minoan_athenaeum_spark.queries.text import ccnet_score_docs
 
     tok = new_docs.select(
         "doc_id", "lang", F.split(normalized(), " ").alias("tk")
     )
-    from minoan_athenaeum_spark.queries.text import ccnet_score_docs
-
-    (
-        ccnet_score_docs(_with_bigrams(tok), *_read_lm(spark, path))
-        .write.mode("append")
-        .parquet(os.path.join(path, "scores"))
+    append_index(
+        spark,
+        path,
+        lambda write: write.stage(
+            "scores",
+            ccnet_score_docs(_with_bigrams(tok), *map(write.read, _MODEL)),
+        ),
+        batch_id,
     )
 
 
 def compact_lm_scores(spark: SparkSession, path: str) -> None:
     """Rewrite accumulated score generations back into N_SCORE_FILES
-    doc_id-partitioned files — rows unchanged by construction (merge is
-    the identity: generations are doc-disjoint), swapped live with the
-    crash-safe two-rename dance. LM tables untouched (retraining is a
-    model event)."""
-    sdir = os.path.join(path, "scores")
-    recover_swap(sdir)
-    (
-        spark.read.parquet(sdir)
-        .repartition(N_SCORE_FILES, F.col("doc_id"))
-        .write.mode("overwrite")
-        .parquet(swap_paths(sdir)[0])
+    doc_id-partitioned files in one commit — rows unchanged by
+    construction (merge is the identity: generations are
+    doc-disjoint). LM tables untouched (retraining is a model
+    event)."""
+    compact_index(
+        spark, path, {"scores": Maintained(hash_layout("doc_id", N_SCORE_FILES))}
     )
-    swap_live(sdir)
 
 
 def read_lm_scores(spark: SparkSession, path: str) -> DataFrame:
-    """The maintained per-doc score table (all landed generations)."""
-    return spark.read.parquet(os.path.join(path, "scores"))
+    """The maintained per-doc score table (all committed generations)."""
+    return read_table(spark, path, "scores")
 
 
 def lm_tail_set(spark: SparkSession, sf_dir: str) -> DataFrame:

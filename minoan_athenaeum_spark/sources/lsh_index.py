@@ -20,13 +20,27 @@ doc-length norms, sources/posting_sink.py:78).
 
 Freshness follows the bucketed-facts convention: the index path embeds
 a fingerprint of the source parquet, so a changed corpus resolves to a
-new path and a stale index is simply never served.
+new path and a stale index is simply never served. The lifecycle is the
+shared snapshot-manifest harness (sources/index_family.py): ``bands/``
+and ``shingles/`` are two tables of one manifest, so a build, an append
+or a compaction of both lands in one commit and a serve reads both from
+the same snapshot. Rows are doc-disjoint across generations, so merge
+is the identity and compaction is a pure layout rewrite.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from minoan_athenaeum_spark.sources.index_family import (
+    Maintained,
+    append_index,
+    compact_index,
+    ensure_index,
+    hash_layout,
+    warehouse_index_path,
+)
 
 # Banding scheme shared by the build, append, and serve paths (and by
 # the serve's broadcast-size estimate in queries/dedup.py — ADVICE r11:
@@ -43,13 +57,11 @@ def minhash_index_path(spark: SparkSession, sf_dir: str) -> str | None:
     xxhash64'd longs (``hashed_shingles``), so the version bump
     resolves to a new path and a pre-r13 string-form index is simply
     never served (the standard freshness convention — content-shape
-    changes are params changes)."""
-    from minoan_athenaeum_spark.sources.index_family import (
-        warehouse_index_path,
-    )
-
+    changes are params changes). The prefix's idx2 marks the manifest
+    + generation layout, so the former live-directory layout is never
+    served either."""
     return warehouse_index_path(
-        spark, sf_dir, "mas_lshidx", "documents", params="hsh2"
+        spark, sf_dir, "mas_lshidx2", "documents", params="hsh2"
     )
 
 
@@ -113,22 +125,6 @@ def ensure_minhash_index(
     4.6M corpus-sized array rows and dominated the serve scan). The
     verify join against ``shingles/`` is candidate-sized, never
     corpus-sized. Idempotent per source fingerprint."""
-    import os
-
-    from minoan_athenaeum_spark.sources.swap import recover_swap
-
-    path = minhash_index_path(spark, sf_dir)
-    if path is None:
-        raise RuntimeError("MinHash index needs a local warehouse dir")
-    # every reader's entry point repairs an interrupted compaction swap
-    # FIRST (the ADVICE-r8 recovery window, same as the siblings) — a
-    # crash between the two renames must not look like a missing index
-    recover_swap(os.path.join(path, "bands"))
-    recover_swap(os.path.join(path, "shingles"))
-    if os.path.isfile(
-        os.path.join(path, "bands", "_SUCCESS")
-    ) and os.path.isfile(os.path.join(path, "shingles", "_SUCCESS")):
-        return path
     from minoan_athenaeum_spark.catalog import load_table
     from minoan_athenaeum_spark.operators.dedup import char_shingles, normalized
 
@@ -156,49 +152,49 @@ def ensure_minhash_index(
     # byte-identical to the per-doc build (pinned by
     # test_append_to_index_equals_rebuild + the incremental query's
     # full-recompute DuckDB oracle).
-    docs_nt = (
-        load_table(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") % 10 != 0)
-        .select(
-            # same NULL→'' coalesce as shingled(): a NULL _nt would md5 to
-            # NULL and vanish from the inner join-backs, diverging from the
-            # append path (append-equals-rebuild byte identity).
-            "doc_id",
-            F.coalesce(normalized(), F.lit("")).alias("_nt"),
+    def build(write):
+        docs_nt = (
+            load_table(spark, sf_dir, "documents")
+            .filter(F.col("doc_id") % 10 != 0)
+            .select(
+                # same NULL→'' coalesce as shingled(): a NULL _nt would md5
+                # to NULL and vanish from the inner join-backs, diverging
+                # from the append path (append-equals-rebuild byte identity).
+                "doc_id",
+                F.coalesce(normalized(), F.lit("")).alias("_nt"),
+            )
         )
-    )
-    keyed = docs_nt.select(
-        "doc_id", F.md5(F.col("_nt")).alias("_fp")
-    ).localCheckpoint(eager=True)
-    rep_sh = (
-        docs_nt.select("_nt")
-        .distinct()
-        .select(
-            F.md5(F.col("_nt")).alias("_fp"),
-            char_shingles(F.col("_nt"), 3).alias("sh"),
+        keyed = docs_nt.select(
+            "doc_id", F.md5(F.col("_nt")).alias("_fp")
+        ).localCheckpoint(eager=True)
+        rep_sh = (
+            docs_nt.select("_nt")
+            .distinct()
+            .select(
+                F.md5(F.col("_nt")).alias("_fp"),
+                char_shingles(F.col("_nt"), 3).alias("sh"),
+            )
+            .localCheckpoint(eager=True)
         )
-        .localCheckpoint(eager=True)
-    )
-    try:
-        rep_bands = band_rows(rep_sh, bands, rows, key="_fp")
-        (
-            keyed.join(rep_bands, "_fp")
-            .select("bucket", "doc_id")
-            .repartition(8, F.col("bucket"))
-            .write.mode("overwrite")
-            .parquet(os.path.join(path, "bands"))
-        )
-        (
-            keyed.join(rep_sh, "_fp")
-            .select("doc_id", hashed_shingles(F.col("sh")).alias("sh"))
-            .write.mode("overwrite")
-            .parquet(os.path.join(path, "shingles"))
-        )
-    finally:
-        # release the checkpoint blocks — the index lives on disk now
-        keyed.unpersist()
-        rep_sh.unpersist()
-    return path
+        try:
+            rep_bands = band_rows(rep_sh, bands, rows, key="_fp")
+            write.stage(
+                "bands",
+                keyed.join(rep_bands, "_fp").select("bucket", "doc_id"),
+                hash_layout("bucket", 8),
+            )
+            write.stage(
+                "shingles",
+                keyed.join(rep_sh, "_fp").select(
+                    "doc_id", hashed_shingles(F.col("sh")).alias("sh")
+                ),
+            )
+        finally:
+            # release the checkpoint blocks — the index lives on disk now
+            keyed.unpersist()
+            rep_sh.unpersist()
+
+    return ensure_index(spark, minhash_index_path(spark, sf_dir), build)
 
 
 def write_training_shards(
@@ -236,63 +232,32 @@ def append_to_minhash_index(
     new_docs: DataFrame,
     bands: int = BANDS,
     rows: int = ROWS_PER_BAND,
+    batch_id: str | int | None = None,
 ) -> None:
     """Fold a deduplicated batch INTO the persisted index — the
     maintenance step after a batch passes the incremental dedup gate,
     so the next batch dedups against old + new without any rebuild.
-    Appends the batch's lean band rows and shingle rows (parquet
-    append); per-doc-id idempotence is the caller's contract (the
-    dedup pipeline admits each doc_id once). Equivalence with a
-    from-scratch rebuild is pinned by
+    The batch's lean band rows and shingle rows land as one generation
+    of each table in one commit; a ``batch_id`` already applied makes
+    the append a no-op, and without one, per-doc-id idempotence is the
+    caller's contract (the dedup pipeline admits each doc_id once).
+    Equivalence with a from-scratch rebuild is pinned by
     tests/test_dedup_similarity.py::test_append_to_index_equals_rebuild."""
-    import os
 
-    batch_sh = shingled(new_docs).localCheckpoint(eager=True)
-    try:
-        (
-            band_rows(batch_sh, bands, rows)
-            .repartition(1, F.col("bucket"))
-            .write.mode("append")
-            .parquet(os.path.join(path, "bands"))
-        )
-        (
-            batch_sh.select(
-                "doc_id", hashed_shingles(F.col("sh")).alias("sh")
+    def batch(write):
+        batch_sh = shingled(new_docs).localCheckpoint(eager=True)
+        try:
+            write.stage(
+                "bands", band_rows(batch_sh, bands, rows), hash_layout("bucket", 1)
             )
-            .write.mode("append")
-            .parquet(os.path.join(path, "shingles"))
-        )
-    finally:
-        batch_sh.unpersist()
+            write.stage(
+                "shingles",
+                batch_sh.select("doc_id", hashed_shingles(F.col("sh")).alias("sh")),
+            )
+        finally:
+            batch_sh.unpersist()
 
-
-def _lsh_families() -> tuple:
-    """The two-table band index expressed as harness families (VERDICT
-    r12 #2 — the one family of seven without compaction). Rows are
-    doc-disjoint across generations (per-doc_id append idempotence is
-    the caller's contract), so merge is the identity and compaction is
-    a pure layout rewrite, exactly the BM25-postings convention. The
-    build path keeps its distinct-text fast path (ensure above); these
-    families carry the LIFECYCLE contract (layout + compact + swap)."""
-    from minoan_athenaeum_spark.sources.index_family import (
-        MergeableIndexFamily,
-    )
-
-    bands_fam = MergeableIndexFamily(
-        prefix="mas_lshidx",
-        subdir="bands",
-        rows_fn=lambda docs: band_rows(shingled(docs)),
-        merge_fn=lambda gens: gens,
-        part_col="bucket",
-    )
-    shingles_fam = MergeableIndexFamily(
-        prefix="mas_lshidx",
-        subdir="shingles",
-        rows_fn=shingled,
-        merge_fn=lambda gens: gens,
-        part_col="doc_id",
-    )
-    return bands_fam, shingles_fam
+    append_index(spark, path, batch, batch_id)
 
 
 def compact_minhash_index(
@@ -300,15 +265,15 @@ def compact_minhash_index(
 ) -> None:
     """Rewrite accumulated band + shingle generations (base files plus
     one file per appended batch) back into ``n_files`` bucket- /
-    doc_id-partitioned files per table — the LSM compaction step the
-    other index families already carry (VERDICT r12 #2). Rows
-    unchanged by construction (identity merge over doc-disjoint
-    generations); each table lands in a sibling dir and swaps live
-    with the crash-safe two-rename dance, and ``ensure_minhash_index``
-    repairs any interrupted swap on entry. Pinned by
-    tests/test_dedup_similarity.py::test_lsh_compact_preserves_index
-    and tests/test_crash_safety.py::test_lsh_index_crash_recovery."""
-    from minoan_athenaeum_spark.sources.index_family import compact_index
-
-    for fam in _lsh_families():
-        compact_index(fam, spark, path, n_files)
+    doc_id-partitioned files per table in ONE commit — the LSM
+    compaction step the other index families carry. Rows unchanged by
+    construction (identity merge over doc-disjoint generations).
+    Pinned by tests/test_dedup_similarity.py::test_lsh_compact_preserves_index."""
+    compact_index(
+        spark,
+        path,
+        {
+            "bands": Maintained(hash_layout("bucket", n_files)),
+            "shingles": Maintained(hash_layout("doc_id", n_files)),
+        },
+    )

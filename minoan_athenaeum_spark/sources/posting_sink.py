@@ -17,39 +17,31 @@ ever holds a posting list in memory. Parquet keeps row-group min/max
 stats on term, giving the one-file-per-lookup property to any reader
 that pushes a term predicate down.
 
-The BM25 serving index below is built from such segments, one
-immutable generation directory per build, append or compaction, and
-one snapshot manifest (sources/index_family.py, layer 3):
-
-  <index>/_manifest.json     live generations, postings schema, applied
-                             batch ids, exact n_docs and sum_dl
-  <index>/postings/<gen>/    term-range-sorted parquet segments
-
-Every write stages a generation, renames it under ``postings/`` and
-publishes the next manifest with one ``os.replace``; that publish is
-the only commit point. A serve reads the manifest once, then exactly
-its files with its schema (no listing, no schema inference), and takes
-the corpus stats from it as literals. A generation is deleted only
-once neither the current manifest nor the one it replaced names it, so
-a serve built on one snapshot still reads after the next commit. One
-writer per index; any number of readers.
+The BM25 serving index below is built from such segments on the shared
+snapshot-manifest lifecycle (sources/index_family.py): one table,
+``postings/``, whose generations are written through
+:func:`write_posting_segments`, plus two BM25 fields in the manifest,
+the exact integer corpus stats ``n_docs`` and ``sum_dl``. A serve reads
+the manifest once, then exactly its posting files with their pinned
+schema, and takes the corpus stats from the same manifest as literals.
 """
 
 from __future__ import annotations
 
-import os
 from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
 
 from minoan_athenaeum_spark.sources.index_family import (
-    MANIFEST,
-    commit,
-    manifest_files,
+    IndexWrite,
+    Layout,
+    Maintained,
+    append_index,
+    compact_index,
+    ensure_index,
     read_manifest,
-    stage_generation,
+    read_table,
     warehouse_index_path,
 )
 
@@ -94,12 +86,12 @@ def bm25_index_path(
     never served). ``slice_`` distinguishes the full-corpus index from
     the existing-corpus base the incremental queries append onto. None
     when the warehouse isn't a local filesystem."""
-    # v4: manifest + generation layout; the bump keeps v3 directories
-    # (live postings dir + stats sidecar table) from ever being served.
+    # v5: per-table manifest schemas; the bump keeps older layouts from
+    # ever being served.
     return warehouse_index_path(
         spark,
         sf_dir,
-        "mas_bm25idx4",
+        "mas_bm25idx5",
         "documents",
         params="" if slice_ == "full" else slice_,
     )
@@ -149,18 +141,13 @@ def _stats(manifest: dict) -> Bm25Stats:
     return Bm25Stats(n, float(s) / float(n), s)
 
 
-def _postings(spark: SparkSession, path: str, manifest: dict) -> DataFrame:
-    schema = StructType.fromJson(manifest["schema"])
-    return spark.read.schema(schema).parquet(*manifest_files(path, manifest))
-
-
 def bm25_snapshot(spark: SparkSession, path: str) -> tuple[DataFrame, Bm25Stats]:
     """One consistent read of a BM25 index: the (term, doc_id, tf, dl)
     postings of exactly the current manifest's files, read with its
     pinned schema, and the same manifest's exact corpus stats. The
     DataFrame stays readable across the next commit."""
     m = read_manifest(path)
-    return _postings(spark, path, m), _stats(m)
+    return read_table(spark, path, "postings", m), _stats(m)
 
 
 def bm25_stats(spark: SparkSession, path: str) -> Bm25Stats:
@@ -168,13 +155,9 @@ def bm25_stats(spark: SparkSession, path: str) -> Bm25Stats:
     return _stats(read_manifest(path))
 
 
-def _stage_postings(path: str, rows: DataFrame, num_segments: int) -> dict:
-    return stage_generation(
-        path,
-        "postings",
-        lambda staging: write_posting_segments(
-            rows, staging, num_segments=num_segments
-        ),
+def _segments(num_segments: int) -> Layout:
+    return lambda rows, target: write_posting_segments(
+        rows, target, num_segments=num_segments
     )
 
 
@@ -195,32 +178,21 @@ def ensure_bm25_index(
     sources/lsh_index.py)."""
     from minoan_athenaeum_spark.catalog import load_table
 
-    path = bm25_index_path(spark, sf_dir, slice_)
-    if path is None:
-        raise RuntimeError("BM25 index needs a local warehouse dir")
-    if os.path.isfile(os.path.join(path, MANIFEST)):
-        return path
-    docs = load_table(spark, sf_dir, "documents")
-    if slice_ == "existing":
-        docs = docs.filter(F.col("doc_id") % 10 != 0)
-    n_docs, sum_dl = _doc_stats(docs)
-    if n_docs == 0:
-        raise ValueError(
-            "BM25 index stats over an empty documents slice (n_docs=0): "
-            "refusing to write a 0-doc index — check the slice filter / "
-            "source path"
-        )
-    rows = doc_postings(docs)
-    commit(
-        path,
-        None,
-        _stage_postings(path, rows, num_segments),
-        schema=rows.schema.jsonValue(),
-        batches=[],
-        n_docs=n_docs,
-        sum_dl=sum_dl,
-    )
-    return path
+    def build(write: IndexWrite) -> dict:
+        docs = load_table(spark, sf_dir, "documents")
+        if slice_ == "existing":
+            docs = docs.filter(F.col("doc_id") % 10 != 0)
+        n_docs, sum_dl = _doc_stats(docs)
+        if n_docs == 0:
+            raise ValueError(
+                "BM25 index stats over an empty documents slice (n_docs=0): "
+                "refusing to write a 0-doc index — check the slice filter / "
+                "source path"
+            )
+        write.stage("postings", doc_postings(docs), _segments(num_segments))
+        return {"n_docs": n_docs, "sum_dl": sum_dl}
+
+    return ensure_index(spark, bm25_index_path(spark, sf_dir, slice_), build)
 
 
 def compact_bm25_index(
@@ -236,12 +208,9 @@ def compact_bm25_index(
     re-partitioned/re-sorted through the same write_posting_segments
     the full build uses, so compacted ≡ appended ≡ rebuilt (pinned by
     tests/test_posting_sink.py and by text_bm25_index_compact's
-    full-rebuild oracle). The stats and batch ids carry over unchanged.
-    The new manifest lists only the new generation; the replaced ones
-    stay on disk until the next commit, so a serve planned before this
-    compaction still reads its snapshot."""
-    m = read_manifest(path)
-    commit(path, m, _stage_postings(path, _postings(spark, path, m), num_segments))
+    full-rebuild oracle). The stats and batch ids carry over
+    unchanged."""
+    compact_index(spark, path, {"postings": Maintained(_segments(num_segments))})
 
 
 def append_to_bm25_index(
@@ -255,34 +224,23 @@ def append_to_bm25_index(
     posting generation — the maintenance step that keeps a growing
     corpus searchable without the full tokenize+segment rebuild.
 
-    The batch's (term, doc_id, tf, dl) rows, cast to the manifest's
-    schema, are written as a term-range-sorted delta generation; a
-    term lookup prunes by row-group min/max over base + delta files,
-    the classic LSM read shape (compact_bm25_index rewrites them when
-    generations accumulate). The batch's exact (n_docs, sum_dl) are
-    added to the manifest's, so the merged avgdl is BIT-EQUAL to a
-    from-scratch rebuild — pinned by tests/test_posting_sink.py and
-    by text_bm25_index_append's full-rebuild oracle. The postings and
-    the stats land in one manifest publish, so an append is all or
-    nothing.
+    The batch's (term, doc_id, tf, dl) rows are written as a
+    term-range-sorted delta generation; a term lookup prunes by
+    row-group min/max over base + delta files, the classic LSM read
+    shape (compact_bm25_index rewrites them when generations
+    accumulate). The batch's exact (n_docs, sum_dl) are added to the
+    manifest's, so the merged avgdl is BIT-EQUAL to a from-scratch
+    rebuild — pinned by tests/test_posting_sink.py and by
+    text_bm25_index_append's full-rebuild oracle. The postings and the
+    stats land in one manifest publish, so an append is all or nothing,
+    and a ``batch_id`` already applied makes it a no-op."""
 
-    ``batch_id`` makes a re-sent batch a no-op: an id already in the
-    manifest is skipped, and a fresh one is recorded with the commit.
-    Without it, each doc appended once is the caller's contract."""
-    m = read_manifest(path)
-    if batch_id is not None and str(batch_id) in m["batches"]:
-        return
-    schema = StructType.fromJson(m["schema"])
-    rows = doc_postings(new_docs).select(
-        *[F.col(f.name).cast(f.dataType) for f in schema.fields]
-    )
-    n_docs, sum_dl = _doc_stats(new_docs)
-    gen = _stage_postings(path, rows, num_segments)
-    commit(
-        path,
-        m,
-        {**m["generations"], **gen},
-        batches=m["batches"] + ([] if batch_id is None else [str(batch_id)]),
-        n_docs=m["n_docs"] + n_docs,
-        sum_dl=m["sum_dl"] + sum_dl,
-    )
+    def batch(write: IndexWrite) -> dict:
+        n_docs, sum_dl = _doc_stats(new_docs)
+        write.stage("postings", doc_postings(new_docs), _segments(num_segments))
+        return {
+            "n_docs": write.base["n_docs"] + n_docs,
+            "sum_dl": write.base["sum_dl"] + sum_dl,
+        }
+
+    append_index(spark, path, batch, batch_id)

@@ -87,3 +87,20 @@ def check_query_against_oracle(spark, sf_dir: str, fn, oracle: str) -> list[str]
     finally:
         con.close()
     return compare_results(spark_cols, spark_rows, oracle_cols, oracle_rows)
+
+
+def index_rows(spark, path: str, merges: dict | None = None) -> tuple[dict, dict]:
+    """What a serve of a persisted index reads, from one manifest: each
+    table's rows (through ``merges[table]`` when given), sorted, and the
+    manifest's family fields (e.g. BM25's corpus stats)."""
+    from minoan_athenaeum_spark.sources.index_family import read_manifest, read_table
+
+    m = read_manifest(path)
+    tables = {}
+    for table in m["schemas"]:
+        df = read_table(spark, path, table, m)
+        if merges and table in merges:
+            df = merges[table](df)
+        tables[table] = sorted(map(tuple, df.collect()), key=repr)
+    structural = {"generations", "previous", "schemas", "batches"}
+    return tables, {k: v for k, v in m.items() if k not in structural}

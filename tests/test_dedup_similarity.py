@@ -368,6 +368,7 @@ def test_minhash_index_idempotent_and_lean(spark, sf_dir):
     import os
     import time
 
+    from minoan_athenaeum_spark.sources.index_family import read_manifest, read_table
     from minoan_athenaeum_spark.sources.lsh_index import (
         ensure_minhash_index,
         minhash_index_path,
@@ -375,16 +376,17 @@ def test_minhash_index_idempotent_and_lean(spark, sf_dir):
 
     p1 = ensure_minhash_index(spark, sf_dir)
     assert p1 == minhash_index_path(spark, sf_dir)
-    assert os.path.isfile(os.path.join(p1, "bands", "_SUCCESS"))
-    assert os.path.isfile(os.path.join(p1, "shingles", "_SUCCESS"))
+    # one committed generation per table
+    gens = read_manifest(p1)["generations"]
+    assert sorted(os.path.dirname(g) for g in gens) == ["bands", "shingles"]
     # second call is a fingerprint-hit no-op (no Spark job)
     t0 = time.time()
     assert ensure_minhash_index(spark, sf_dir) == p1
     assert time.time() - t0 < 1.0
     # lean layout: the band table carries ids only, shingles exactly once
-    bands = spark.read.parquet(os.path.join(p1, "bands"))
+    bands = read_table(spark, p1, "bands")
     assert set(bands.columns) == {"bucket", "doc_id"}
-    sh = spark.read.parquet(os.path.join(p1, "shingles"))
+    sh = read_table(spark, p1, "shingles")
     assert sh.groupBy("doc_id").count().filter("count > 1").count() == 0
 
 
@@ -431,11 +433,10 @@ def test_append_to_index_equals_rebuild(spark, sf_dir, tmp_path):
     # Maintenance contract: ensure(existing) + append(batch) holds the
     # same (bucket, doc_id) set and shingle set as building an index
     # over existing+batch from scratch.
-    import os
-
     from pyspark.sql import functions as F
 
     from minoan_athenaeum_spark.catalog import load_table
+    from minoan_athenaeum_spark.sources.index_family import read_table
     from minoan_athenaeum_spark.sources.lsh_index import (
         append_to_minhash_index,
         band_rows,
@@ -461,10 +462,10 @@ def test_append_to_index_equals_rebuild(spark, sf_dir, tmp_path):
     }
     got_bands = {
         (r["bucket"], r["doc_id"])
-        for r in spark.read.parquet(os.path.join(work, "bands")).collect()
+        for r in read_table(spark, work, "bands").collect()
     }
     assert got_bands == want_bands
-    got_sh = spark.read.parquet(os.path.join(work, "shingles"))
+    got_sh = read_table(spark, work, "shingles")
     assert got_sh.count() == all_docs.count()
     assert got_sh.select("doc_id").distinct().count() == all_docs.count()
 
@@ -475,12 +476,12 @@ def test_ivf_append_equals_rebuild(spark, sf_dir, tmp_path):
     (cell, vec_id) member set as assigning existing+batch against the
     SAME codebook from scratch — centroids are fixed between
     compactions, so append ≡ rebuild exactly."""
-    import os
     import shutil
 
     from pyspark.sql import functions as F
 
     from minoan_athenaeum_spark.catalog import load_table
+    from minoan_athenaeum_spark.sources.index_family import read_table
     from minoan_athenaeum_spark.sources.ivf_index import (
         _assigned,
         _quantized,
@@ -496,7 +497,7 @@ def test_ivf_append_equals_rebuild(spark, sf_dir, tmp_path):
     )
     append_to_ivf_index(spark, work, batch)
 
-    cents = spark.read.parquet(os.path.join(work, "centroids"))
+    cents = read_table(spark, work, "centroids")
     want = {
         (r.cell, r.vec_id)
         for r in _assigned(
@@ -505,7 +506,7 @@ def test_ivf_append_equals_rebuild(spark, sf_dir, tmp_path):
     }
     got = {
         (r.cell, r.vec_id)
-        for r in spark.read.parquet(os.path.join(work, "members")).collect()
+        for r in read_table(spark, work, "members").collect()
     }
     assert got == want
 
@@ -515,13 +516,16 @@ def test_ivf_compact_preserves_members_and_layout(spark, sf_dir, tmp_path):
     BM25 pin): three append generations accumulate one file each;
     compact_ivf_members restores <= N_CELLS data files with the
     member MULTISET and the centroids bit-unchanged."""
-    import glob
-    import os
     import shutil
 
     from pyspark.sql import functions as F
 
     from minoan_athenaeum_spark.catalog import load_table
+    from minoan_athenaeum_spark.sources.index_family import (
+        read_manifest,
+        read_table,
+        table_files,
+    )
     from minoan_athenaeum_spark.sources.ivf_index import (
         N_CELLS,
         append_to_ivf_index,
@@ -530,44 +534,37 @@ def test_ivf_compact_preserves_members_and_layout(spark, sf_dir, tmp_path):
     )
 
     def data_files(p):
-        return [
-            f
-            for f in glob.glob(os.path.join(p, "*.parquet"))
-            if not os.path.basename(f).startswith(("_", "."))
-        ]
+        return table_files(p, read_manifest(p), "members")
 
     base = ensure_ivf_index(spark, sf_dir)
     work = str(tmp_path / "ivfidx_compact")
     shutil.copytree(base, work)
-    mdir = os.path.join(work, "members")
-    n0 = len(data_files(mdir))
+    n0 = len(data_files(work))
 
     batch = load_table(spark, sf_dir, "embeddings").filter(
         F.col("vec_id") % 10 == 0
     )
     for r in (0, 10, 20):
         append_to_ivf_index(spark, work, batch.filter(F.col("vec_id") % 30 == r))
-    assert len(data_files(mdir)) > n0
+    assert len(data_files(work)) > n0
 
     def members_multiset(p):
         out = {}
-        for r in spark.read.parquet(p).collect():
+        for r in read_table(spark, p, "members").collect():
             k = (r.cell, r.vec_id, tuple(r.q))
             out[k] = out.get(k, 0) + 1
         return out
 
-    pre = members_multiset(mdir)
+    pre = members_multiset(work)
     cents_pre = sorted(
-        (r.cell, tuple(r.cq))
-        for r in spark.read.parquet(os.path.join(work, "centroids")).collect()
+        (r.cell, tuple(r.cq)) for r in read_table(spark, work, "centroids").collect()
     )
 
     compact_ivf_members(spark, work)
-    assert len(data_files(mdir)) <= N_CELLS
-    assert members_multiset(mdir) == pre
+    assert len(data_files(work)) <= N_CELLS
+    assert members_multiset(work) == pre
     cents_post = sorted(
-        (r.cell, tuple(r.cq))
-        for r in spark.read.parquet(os.path.join(work, "centroids")).collect()
+        (r.cell, tuple(r.cq)) for r in read_table(spark, work, "centroids").collect()
     )
     assert cents_post == cents_pre
 
@@ -645,12 +642,16 @@ def test_lsh_compact_preserves_index(spark, sf_dir, tmp_path):
     band/shingle generations into the n_files layout with rows
     unchanged (identity merge over doc-disjoint generations), and the
     serve contract (bucket set + shingle set) survives byte-for-byte."""
-    import os
     import shutil
 
     from pyspark.sql import functions as F
 
     from minoan_athenaeum_spark.catalog import load_table
+    from minoan_athenaeum_spark.sources.index_family import (
+        read_manifest,
+        read_table,
+        table_files,
+    )
     from minoan_athenaeum_spark.sources.lsh_index import (
         append_to_minhash_index,
         compact_minhash_index,
@@ -668,29 +669,24 @@ def test_lsh_compact_preserves_index(spark, sf_dir, tmp_path):
         append_to_minhash_index(
             spark, work, batch.filter(F.col("doc_id") % 30 == m)
         )
-    bands_dir = os.path.join(work, "bands")
-    sh_dir = os.path.join(work, "shingles")
     before_b = {
         (r["bucket"], r["doc_id"])
-        for r in spark.read.parquet(bands_dir).collect()
+        for r in read_table(spark, work, "bands").collect()
     }
     before_s = {
         (r["doc_id"], tuple(r["sh"]))
-        for r in spark.read.parquet(sh_dir).collect()
+        for r in read_table(spark, work, "shingles").collect()
     }
-    n_files_before = len(
-        [f for f in os.listdir(bands_dir) if f.endswith(".parquet")]
-    )
+    n_files_before = len(table_files(work, read_manifest(work), "bands"))
     compact_minhash_index(spark, work, n_files=8)
     assert {
         (r["bucket"], r["doc_id"])
-        for r in spark.read.parquet(bands_dir).collect()
+        for r in read_table(spark, work, "bands").collect()
     } == before_b
     assert {
         (r["doc_id"], tuple(r["sh"]))
-        for r in spark.read.parquet(sh_dir).collect()
+        for r in read_table(spark, work, "shingles").collect()
     } == before_s
-    for d in (bands_dir, sh_dir):
-        files = [f for f in os.listdir(d) if f.endswith(".parquet")]
-        assert len(files) <= 8
+    for table in ("bands", "shingles"):
+        assert len(table_files(work, read_manifest(work), table)) <= 8
     assert n_files_before > 8  # the A/B was real: generations existed

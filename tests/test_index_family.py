@@ -1,12 +1,12 @@
 """Pins for the shared persisted-index lifecycle harness
-(sources/index_family.py, VERDICT r9 #5 consolidation).
+(sources/index_family.py).
 
-The gram/line families exercise the harness through their own pins
+The shipped families exercise the harness through their own pins
 (tests/test_r8_ops.py, tests/test_line_index.py,
-tests/test_crash_safety.py). This file pins the harness's OWN
-contract with a synthetic family the repo does not ship — a per-key
-MAX aggregate — proving the lifecycle (fingerprinted path, ensure
-idempotence, append ≡ rebuild, compact+swap, crash recovery) is
+tests/test_crash_safety.py, ...). This file pins the harness's OWN
+contract with a synthetic table the repo does not ship — a per-key MAX
+aggregate — proving the lifecycle (fingerprinted path, ensure
+idempotence, append ≡ rebuild, compaction through the merge) is
 family-agnostic and not accidentally min- or schema-specific.
 """
 
@@ -19,10 +19,14 @@ import pytest
 from pyspark.sql import functions as F
 
 from minoan_athenaeum_spark.sources.index_family import (
-    MergeableIndexFamily,
+    Maintained,
     append_index,
     compact_index,
     ensure_index,
+    hash_layout,
+    read_manifest,
+    read_table,
+    table_files,
     warehouse_index_path,
 )
 
@@ -47,22 +51,24 @@ def _merge_fn(gens):
     return gens.groupBy("k").agg(F.max("v").alias("v"))
 
 
-FAM = MergeableIndexFamily(
-    prefix="mas_testidx",
-    subdir="vals",
-    rows_fn=_rows_fn,
-    merge_fn=_merge_fn,
-    part_col="k",
-    source_table="documents",
-    params="m1",
-)
+def _ensure(spark, sf, base, n_files):
+    path = warehouse_index_path(spark, sf, "mas_testidx", "documents", "m1")
+    layout = hash_layout("k", n_files)
+    return ensure_index(spark, path, lambda w: w.stage("vals", _rows_fn(base), layout))
+
+
+def _append(spark, path, docs):
+    append_index(spark, path, lambda w: w.stage("vals", _rows_fn(docs)))
+
+
+def _compact(spark, path, n_files):
+    spec = Maintained(hash_layout("k", n_files), _merge_fn)
+    compact_index(spark, path, {"vals": spec})
 
 
 def _served(spark, path):
-    df = spark.read.parquet(os.path.join(path, "vals"))
-    return {
-        (r["k"], r["v"]) for r in _merge_fn(df).collect()
-    }
+    rows = _merge_fn(read_table(spark, path, "vals")).collect()
+    return {(r["k"], r["v"]) for r in rows}
 
 
 def test_path_embeds_params_and_fingerprint(spark, tmp_path):
@@ -91,14 +97,14 @@ def test_append_equals_rebuild_any_interleaving(spark, tmp_path):
     # base = first two rows; two appends in an order where the LATER
     # generation carries the SMALLER key values for 'en'
     base = docs.filter(F.col("doc_id").isin(9, 4))
-    path = ensure_index(FAM, spark, sf, base, n_files=2)
-    append_index(FAM, path, docs.filter(F.col("doc_id").isin(2, 7)))
-    append_index(FAM, path, docs.filter(F.col("doc_id") == 5))
+    path = _ensure(spark, sf, base, n_files=2)
+    _append(spark, path, docs.filter(F.col("doc_id").isin(2, 7)))
+    _append(spark, path, docs.filter(F.col("doc_id") == 5))
     rebuilt = {(r["k"], r["v"]) for r in _rows_fn(docs).collect()}
     assert _served(spark, path) == rebuilt == {("en", 9), ("de", 7), ("fr", 4)}
     # ensure is idempotent: a second call must NOT rebuild (which
     # would discard the appended generations)
-    assert ensure_index(FAM, spark, sf, base, n_files=2) == path
+    assert _ensure(spark, sf, base, n_files=2) == path
     assert _served(spark, path) == rebuilt
 
 
@@ -106,48 +112,19 @@ def test_compact_preserves_rows_and_caps_files(spark, tmp_path):
     rows = [(i, "x", f"l{i % 3}", "s") for i in range(12)]
     sf = _docs(tmp_path, rows)
     docs = spark.read.parquet(f"{sf}/documents.parquet")
-    path = ensure_index(FAM, spark, sf, docs.filter("doc_id < 4"), n_files=2)
+    path = _ensure(spark, sf, docs.filter("doc_id < 4"), n_files=2)
     for lo, hi in ((4, 8), (8, 12)):
-        append_index(
-            FAM, path, docs.filter((F.col("doc_id") >= lo) & (F.col("doc_id") < hi))
-        )
+        _append(spark, path, docs.filter(F.col("doc_id").between(lo, hi - 1)))
     before = _served(spark, path)
-    live = FAM.live_dir(path)
-    n_before = len([f for f in os.listdir(live) if f.endswith(".parquet")])
-    compact_index(FAM, spark, path, n_files=2)
-    n_after = len([f for f in os.listdir(live) if f.endswith(".parquet")])
+    n_before = len(table_files(path, read_manifest(path), "vals"))
+    _compact(spark, path, n_files=2)
+    n_after = len(table_files(path, read_manifest(path), "vals"))
     assert n_after <= 2 < n_before
     assert _served(spark, path) == before
-    # post-compaction the live dir holds exactly one row per key
-    assert spark.read.parquet(live).count() == 3
-    # no swap leftovers
-    assert not os.path.isdir(live + "_compacting")
-    assert not os.path.isdir(live + "_old")
-
-
-def test_crash_between_renames_recovers_forward(spark, tmp_path):
-    """The harness's own recovery path: fabricate the worst crash
-    state (live renamed away, completed rewrite not yet renamed in)
-    and assert ensure_index rolls it FORWARD instead of rebuilding a
-    generations-discarding base."""
-    import shutil
-
-    rows = [(i, "x", f"l{i % 2}", "s") for i in range(6)]
-    sf = _docs(tmp_path, rows)
-    docs = spark.read.parquet(f"{sf}/documents.parquet")
-    base = docs.filter("doc_id < 2")
-    path = ensure_index(FAM, spark, sf, base, n_files=1)
-    append_index(FAM, path, docs.filter("doc_id >= 2"))
-    want = _served(spark, path)
-    live = FAM.live_dir(path)
-    # fabricate: completed rewrite in tmp, live renamed to old
-    compact_index(FAM, spark, path, n_files=1)  # a clean compact first
-    shutil.copytree(live, live + "_compacting")
-    os.rename(live, live + "_old")
-    assert not os.path.isdir(live)
-    # ensure must repair (roll forward) and serve the appended state
-    assert ensure_index(FAM, spark, sf, base, n_files=1) == path
-    assert _served(spark, path) == want
+    # post-compaction the table holds exactly one row per key, in one
+    # generation
+    assert read_table(spark, path, "vals").count() == 3
+    assert len(read_manifest(path)["generations"]) == 1
 
 
 @pytest.mark.parametrize("order", [(0, 1), (1, 0)])
@@ -156,7 +133,7 @@ def test_append_order_commutes(spark, tmp_path, order):
     sf = _docs(tmp_path, rows)
     docs = spark.read.parquet(f"{sf}/documents.parquet")
     batches = [docs.filter("doc_id = 8"), docs.filter("doc_id = 3")]
-    path = ensure_index(FAM, spark, sf, docs.filter("doc_id = 1"), n_files=1)
+    path = _ensure(spark, sf, docs.filter("doc_id = 1"), n_files=1)
     for i in order:
-        append_index(FAM, path, batches[i])
+        _append(spark, path, batches[i])
     assert _served(spark, path) == {("en", 8), ("de", 3)}

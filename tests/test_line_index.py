@@ -2,18 +2,20 @@
 first-occurrence LINE-fingerprint index (sources/line_index.py).
 Same contract battery as the gram index: append ≡ rebuild, append
 order commutes, cross-generation ownership steal, compaction
-preserves + collapses, crash-swap recovery (the swap states
-themselves are pinned family-generically in tests/test_crash_safety.py
-via sources/swap.py; here we pin the min-merge algebra)."""
+preserves + collapses (the crash points are pinned family-generically
+in tests/test_crash_safety.py; here we pin the min-merge algebra)."""
 
 from __future__ import annotations
 
-import glob
 import os
 
 import pandas as pd
-from pyspark.sql import functions as F
 
+from minoan_athenaeum_spark.sources.index_family import (
+    read_manifest,
+    read_table,
+    table_files,
+)
 from minoan_athenaeum_spark.sources.line_index import (
     append_to_line_index,
     compact_line_index,
@@ -21,6 +23,7 @@ from minoan_athenaeum_spark.sources.line_index import (
     ensure_line_index,
     line_index_path,
     line_owner_rows,
+    merge_lines,
 )
 
 
@@ -42,16 +45,15 @@ def _df(spark, rows):
     )
 
 
-def _served(spark, gdir):
+def _served(spark, idx):
     return {
         (r["fp"], r["first_doc"], r["first_line"])
-        for r in spark.read.parquet(gdir)
-        .groupBy("fp")
-        .agg(F.min(F.struct("first_doc", "first_line")).alias("o"))
-        .select("fp", F.col("o.first_doc").alias("first_doc"),
-                F.col("o.first_line").alias("first_line"))
-        .collect()
+        for r in merge_lines(read_table(spark, idx, "lines")).collect()
     }
+
+
+def _n_files(idx):
+    return len(table_files(idx, read_manifest(idx), "lines"))
 
 
 def test_append_equals_rebuild_and_ownership_steal(spark, tmp_path):
@@ -63,10 +65,9 @@ def test_append_equals_rebuild_and_ownership_steal(spark, tmp_path):
     gen2 = [(2, _seq(10, 20), "en", "a")]
     sf = _write_docs(tmp_path, corpus)
     idx = ensure_line_index(spark, sf)
-    ldir = os.path.join(idx, "lines")
     append_to_line_index(spark, idx, _df(spark, gen1))
     append_to_line_index(spark, idx, _df(spark, gen2))
-    merged = _served(spark, ldir)
+    merged = _served(spark, idx)
     rebuilt = {
         (r["fp"], r["first_doc"], r["first_line"])
         for r in line_owner_rows(_df(spark, corpus + gen1 + gen2)).collect()
@@ -77,12 +78,12 @@ def test_append_equals_rebuild_and_ownership_steal(spark, tmp_path):
     b_fp = next(iter(lines2))  # doc 2's only line is line B
     assert owners[b_fp] == (2, 0)  # stolen by the smaller doc_id
 
-    files_before = len(glob.glob(os.path.join(ldir, "*.parquet")))
+    files_before = _n_files(idx)
     compact_line_index(spark, idx)
-    assert _served(spark, ldir) == rebuilt
-    assert len(glob.glob(os.path.join(ldir, "*.parquet"))) <= files_before
+    assert _served(spark, idx) == rebuilt
+    assert _n_files(idx) <= files_before
     # post-compaction each fp appears exactly once
-    assert len(rebuilt) == spark.read.parquet(ldir).count()
+    assert len(rebuilt) == read_table(spark, idx, "lines").count()
 
 
 def test_append_order_commutes(spark, tmp_path):
@@ -98,7 +99,7 @@ def test_append_order_commutes(spark, tmp_path):
         idx = ensure_line_index(spark, sf)
         for rows in order:
             append_to_line_index(spark, idx, _df(spark, rows))
-        return _served(spark, os.path.join(idx, "lines"))
+        return _served(spark, idx)
 
     (tmp_path / "a").mkdir()
     (tmp_path / "b").mkdir()
@@ -112,5 +113,5 @@ def test_path_keys_on_line_len(spark, tmp_path):
     assert p10 != p5 and "_L10_" in p10 and "_L5_" in p5
     i10, i5 = ensure_line_index(spark, sf, 10), ensure_line_index(spark, sf, 5)
     # 20 tokens -> 2 ten-token lines vs 4 five-token lines
-    assert spark.read.parquet(os.path.join(i10, "lines")).count() == 2
-    assert spark.read.parquet(os.path.join(i5, "lines")).count() == 4
+    assert read_table(spark, i10, "lines").count() == 2
+    assert read_table(spark, i5, "lines").count() == 4

@@ -9,7 +9,7 @@ Contract mirrors the siblings':
     codebook convention: the model artifact does not drift per batch —
     retrain + rebuild is a model event);
   * serving touches the warehouse artifact ONLY — never the corpus;
-  * compaction preserves rows (crash states of the swap itself are in
+  * compaction preserves rows (the crash points are pinned in
     tests/test_crash_safety.py).
 """
 
@@ -137,6 +137,7 @@ def test_compact_preserves_scores(spark, tmp_path):
     """Compaction rewrites generations into the doc_id-partitioned
     layout with rows unchanged (merge is the identity — generations
     are doc-disjoint)."""
+    from minoan_athenaeum_spark.sources.index_family import read_manifest, table_files
     from minoan_athenaeum_spark.sources.lm_index import (
         N_SCORE_FILES,
         append_to_lm_index,
@@ -155,17 +156,13 @@ def test_compact_preserves_scores(spark, tmp_path):
     compact_lm_scores(spark, idx)
     after = {tuple(r) for r in read_lm_scores(spark, idx).collect()}
     assert after == before
-    files = [
-        f
-        for f in os.listdir(os.path.join(idx, "scores"))
-        if f.endswith(".parquet")
-    ]
-    assert len(files) <= N_SCORE_FILES
+    assert len(table_files(idx, read_manifest(idx), "scores")) <= N_SCORE_FILES
 
 
 def test_lm_tables_are_frozen_by_append(spark, tmp_path):
     """The model artifact must not drift when batches land (the IVF
     codebook convention)."""
+    from minoan_athenaeum_spark.sources.index_family import read_table
     from minoan_athenaeum_spark.sources.lm_index import (
         append_to_lm_index,
         ensure_lm_index,
@@ -174,7 +171,7 @@ def test_lm_tables_are_frozen_by_append(spark, tmp_path):
     sf = _docs_sf(tmp_path, _CORPUS)
     idx = ensure_lm_index(spark, sf)
     lm_before = {
-        sub: {tuple(r) for r in spark.read.parquet(os.path.join(idx, sub)).collect()}
+        sub: {tuple(r) for r in read_table(spark, idx, sub).collect()}
         for sub in ("lm_bg", "lm_ctx", "lm_meta")
     }
     batch = spark.createDataFrame(
@@ -182,6 +179,4 @@ def test_lm_tables_are_frozen_by_append(spark, tmp_path):
     )
     append_to_lm_index(spark, idx, batch)
     for sub, rows in lm_before.items():
-        assert {
-            tuple(r) for r in spark.read.parquet(os.path.join(idx, sub)).collect()
-        } == rows
+        assert {tuple(r) for r in read_table(spark, idx, sub).collect()} == rows

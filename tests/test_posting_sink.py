@@ -8,15 +8,27 @@ import glob
 import os
 
 import pyarrow.parquet as pq
+import pytest
 from pyspark.sql import functions as F
 
 from minoan_athenaeum_spark.catalog import load_table
-from minoan_athenaeum_spark.sources.index_family import manifest_files, read_manifest
+from minoan_athenaeum_spark.sources import (
+    gram_index,
+    ivf_index,
+    lm_index,
+    lsh_index,
+    posting_sink,
+)
+from minoan_athenaeum_spark.sources.index_family import (
+    read_manifest,
+    read_table,
+    table_files,
+)
 from minoan_athenaeum_spark.sources.posting_sink import (
     lookup_term,
     write_posting_segments,
 )
-from minoan_athenaeum_spark.testing import compare_results
+from minoan_athenaeum_spark.testing import compare_results, index_rows
 
 
 def _postings(spark, sf_dir):
@@ -154,7 +166,7 @@ def test_bm25_compact_equals_append_equals_rebuild(spark, sf_dir, tmp_path):
     )
 
     def data_files(p):
-        return manifest_files(p, read_manifest(p))
+        return table_files(p, read_manifest(p), "postings")
 
     base = ensure_bm25_index(spark, sf_dir, slice_="existing")
     work = str(tmp_path / "bm25idx_compact")
@@ -281,32 +293,55 @@ def _serve_matches(df, oracle):
     return not compare_results(df.columns, [tuple(r) for r in df.collect()], *oracle)
 
 
-def test_bm25_resent_batch_applies_once(spark, sf_dir, tmp_path):
+# Families whose generations are key-disjoint (identity merge), where a
+# re-sent batch would otherwise show up as duplicate rows: (ensure the
+# base index, append, source table, key column).
+RESEND_FAMILIES = {
+    "bm25": (
+        lambda spark, sf: posting_sink.ensure_bm25_index(spark, sf, slice_="existing"),
+        posting_sink.append_to_bm25_index,
+        "documents",
+        "doc_id",
+    ),
+    "lsh": (
+        lsh_index.ensure_minhash_index,
+        lsh_index.append_to_minhash_index,
+        "documents",
+        "doc_id",
+    ),
+    "ivf": (
+        ivf_index.ensure_ivf_index,
+        ivf_index.append_to_ivf_index,
+        "embeddings",
+        "vec_id",
+    ),
+    "lm": (
+        lm_index.ensure_lm_index,
+        lm_index.append_to_lm_index,
+        "documents",
+        "doc_id",
+    ),
+}
+
+
+@pytest.mark.parametrize("family", list(RESEND_FAMILIES))
+def test_resent_batch_applies_once(spark, sf_dir, tmp_path, family):
     """A batch sent again under the same batch id (a retried or replayed
-    micro-batch) is a no-op: the index holds the postings and stats of
-    ONE append, equal to the full rebuild's."""
-    from minoan_athenaeum_spark.sources.posting_sink import (
-        append_to_bm25_index,
-        bm25_snapshot,
-        bm25_stats,
-        ensure_bm25_index,
-    )
+    micro-batch) is a no-op: the index holds every table's rows and the
+    manifest fields (BM25's stats) of ONE append."""
+    import shutil
 
-    work = _work_index(spark, sf_dir, tmp_path, "bm25idx_resend")
-    batch = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") % 10 == 0)
-    append_to_bm25_index(spark, work, batch, batch_id=7)
-    append_to_bm25_index(spark, work, batch, batch_id=7)
-
-    def multiset(p):
-        return sorted(
-            tuple(r)
-            for r in bm25_snapshot(spark, p)[0].select("term", "doc_id", "tf", "dl").collect()
-        )
-
-    full = ensure_bm25_index(spark, sf_dir, slice_="full")
-    assert multiset(work) == multiset(full)
-    assert tuple(bm25_stats(spark, work)) == tuple(bm25_stats(spark, full))
-    assert read_manifest(work)["batches"] == ["7"]
+    ensure, append, source, key = RESEND_FAMILIES[family]
+    base = ensure(spark, sf_dir)
+    once, twice = str(tmp_path / "once"), str(tmp_path / "twice")
+    shutil.copytree(base, once)
+    shutil.copytree(base, twice)
+    batch = load_table(spark, sf_dir, source).filter(F.col(key) % 10 == 0)
+    append(spark, once, batch)
+    append(spark, twice, batch, batch_id=7)
+    append(spark, twice, batch, batch_id=7)
+    assert index_rows(spark, twice) == index_rows(spark, once)
+    assert read_manifest(twice)["batches"] == ["7"]
 
 
 def test_bm25_serve_reads_its_snapshot_across_a_commit(spark, sf_dir, tmp_path):
@@ -334,25 +369,97 @@ def test_bm25_serve_reads_its_snapshot_across_a_commit(spark, sf_dir, tmp_path):
     assert _serve_matches(bm25_serve_from_index(spark, work), _snapshot_oracle(sf_dir, b0 + b1))
 
 
-def test_bm25_serves_under_concurrent_writes(spark, sf_dir, tmp_path):
-    """Serves loop in a thread while appends and compactions commit;
-    every serve returns the oracle rows of some committed snapshot.
-    Readers keep the manifest contract: a serve is collected before the
-    second commit after the one it was built on (the writer waits for
-    one serve to finish after each commit)."""
-    import threading
-
-    from minoan_athenaeum_spark.queries.text import bm25_serve_from_index
-    from minoan_athenaeum_spark.sources.posting_sink import (
-        append_to_bm25_index,
-        compact_bm25_index,
+def _with_batches(spark, sf_dir, ids):
+    return load_table(spark, sf_dir, "documents").filter(
+        (F.col("doc_id") % 10 != 0) | F.col("doc_id").isin(ids)
     )
 
-    work = _work_index(spark, sf_dir, tmp_path, "bm25idx_threads")
+
+def _sorted_rows(df):
+    return sorted(map(tuple, df.collect()), key=repr)
+
+
+def _bm25_serving(spark, sf_dir):
+    from minoan_athenaeum_spark.queries.text import bm25_serve_from_index
+
+    def serve(work):
+        df = bm25_serve_from_index(spark, work)
+        return df.columns, [tuple(r) for r in df.collect()]
+
+    def same(got, want):
+        return not compare_results(*got, *want)
+
+    return (
+        lambda: posting_sink.ensure_bm25_index(spark, sf_dir, slice_="existing"),
+        posting_sink.append_to_bm25_index,
+        posting_sink.compact_bm25_index,
+        serve,
+        lambda ids: _snapshot_oracle(sf_dir, ids),
+        same,
+    )
+
+
+def _gram_serving(spark, sf_dir):
+    """The novelty serve's read: the min-merged (gram, first_doc) table;
+    a snapshot's oracle is the rebuild from its documents."""
+    return (
+        lambda: gram_index.ensure_gram_index(spark, sf_dir),
+        gram_index.append_to_gram_index,
+        gram_index.compact_gram_index,
+        lambda work: _sorted_rows(
+            gram_index.merge_grams(read_table(spark, work, "grams"))
+        ),
+        lambda ids: _sorted_rows(
+            gram_index.gram_rows(_with_batches(spark, sf_dir, ids))
+        ),
+        lambda got, want: got == want,
+    )
+
+
+def _lsh_serving(spark, sf_dir):
+    """The dedup serve's read: band rows and shingle sets, both from one
+    manifest; a snapshot's oracle is the rebuild from its documents."""
+
+    def serve(work):
+        m = read_manifest(work)
+        return tuple(
+            _sorted_rows(read_table(spark, work, t, m)) for t in ("bands", "shingles")
+        )
+
+    def oracle(ids):
+        sh = lsh_index.shingled(_with_batches(spark, sf_dir, ids))
+        hashed = sh.select("doc_id", lsh_index.hashed_shingles(F.col("sh")).alias("sh"))
+        return _sorted_rows(lsh_index.band_rows(sh)), _sorted_rows(hashed)
+
+    return (
+        lambda: lsh_index.ensure_minhash_index(spark, sf_dir),
+        lsh_index.append_to_minhash_index,
+        lsh_index.compact_minhash_index,
+        serve,
+        oracle,
+        lambda got, want: got == want,
+    )
+
+
+SERVINGS = {"bm25": _bm25_serving, "gram": _gram_serving, "lsh": _lsh_serving}
+
+
+@pytest.mark.parametrize("family", list(SERVINGS))
+def test_serves_under_concurrent_writes(spark, sf_dir, tmp_path, family):
+    """Serves loop in a thread while appends and compactions commit;
+    every serve returns the oracle of some committed snapshot. Readers
+    keep the manifest contract: a serve is collected before the second
+    commit after the one it was built on (the writer waits for one
+    serve to finish after each commit)."""
+    import shutil
+    import threading
+
+    ensure, append, compact, serve, oracle, same = SERVINGS[family](spark, sf_dir)
+    work = str(tmp_path / "idx")
+    shutil.copytree(ensure(), work)
     batches = _arriving_batches(sf_dir, 4)
     oracles = [
-        _snapshot_oracle(sf_dir, [d for b in batches[:k] for d in b])
-        for k in range(len(batches) + 1)
+        oracle([d for b in batches[:k] for d in b]) for k in range(len(batches) + 1)
     ]
     done = threading.Event()
     served = threading.Condition()
@@ -361,10 +468,9 @@ def test_bm25_serves_under_concurrent_writes(spark, sf_dir, tmp_path):
     def reader():
         try:
             while not done.is_set():
-                df = bm25_serve_from_index(spark, work)
-                rows = [tuple(r) for r in df.collect()]
+                got = serve(work)
                 with served:
-                    results.append((df.columns, rows))
+                    results.append(got)
                     served.notify_all()
         except Exception as e:  # surfaced by the assertion below
             errors.append(e)
@@ -380,15 +486,14 @@ def test_bm25_serves_under_concurrent_writes(spark, sf_dir, tmp_path):
     t.start()
     try:
         for i, b in enumerate(batches):
-            append_to_bm25_index(spark, work, _docs_of(spark, sf_dir, b), batch_id=i)
+            append(spark, work, _docs_of(spark, sf_dir, b), batch_id=i)
             after_commit()
-            if i % 2 == 1:
-                compact_bm25_index(spark, work)
-                after_commit()
+            compact(spark, work)
+            after_commit()
     finally:
         done.set()
         t.join(timeout=120)
     assert not t.is_alive()
     assert not errors, errors
-    for cols, rows in results:
-        assert any(not compare_results(cols, rows, *o) for o in oracles), rows
+    for got in results:
+        assert any(same(got, o) for o in oracles), got

@@ -6,7 +6,6 @@ weight reference (independent reimplementation over log2_fixed_int)."""
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import functions as F
 
 from minoan_athenaeum_spark.queries.pipeline import (
     _DSIR_B,
@@ -283,9 +282,6 @@ def test_novelty_incremental_crafted_cross_generation(spark, tmp_path):
 
 
 def test_gram_index_append_equals_rebuild_and_compaction(spark, tmp_path):
-    import glob
-    import os
-
     import pandas as pd
 
     from minoan_athenaeum_spark.sources.gram_index import (
@@ -293,6 +289,12 @@ def test_gram_index_append_equals_rebuild_and_compaction(spark, tmp_path):
         compact_gram_index,
         ensure_gram_index,
         gram_rows,
+        merge_grams,
+    )
+    from minoan_athenaeum_spark.sources.index_family import (
+        read_manifest,
+        read_table,
+        table_files,
     )
 
     seq = lambda a, b: " ".join(f"w{i}" for i in range(a, b))  # noqa: E731
@@ -301,7 +303,6 @@ def test_gram_index_append_equals_rebuild_and_compaction(spark, tmp_path):
     gen2 = [(2, seq(0, 8), "en", "a")]     # id 2 < 3: min must MOVE back
     sf = _write_docs(tmp_path, corpus)
     idx = ensure_gram_index(spark, sf)
-    gdir = os.path.join(idx, "grams")
 
     def batch_df(rows):
         return spark.createDataFrame(
@@ -312,10 +313,7 @@ def test_gram_index_append_equals_rebuild_and_compaction(spark, tmp_path):
     append_to_gram_index(spark, idx, batch_df(gen2))
     merged = {
         (r["gram"], r["first_doc"])
-        for r in spark.read.parquet(gdir)
-        .groupBy("gram")
-        .agg(F.min("first_doc").alias("first_doc"))
-        .collect()
+        for r in merge_grams(read_table(spark, idx, "grams")).collect()
     }
     rebuilt = {
         (r["gram"], r["first_doc"])
@@ -326,28 +324,28 @@ def test_gram_index_append_equals_rebuild_and_compaction(spark, tmp_path):
     owners = dict(merged)
     assert owners[" ".join(f"w{i}" for i in range(0, 5))] == 2
 
-    files_before = len(glob.glob(os.path.join(gdir, "*.parquet")))
+    files_before = len(table_files(idx, read_manifest(idx), "grams"))
     compact_gram_index(spark, idx)
-    files_after = len(glob.glob(os.path.join(gdir, "*.parquet")))
+    files_after = len(table_files(idx, read_manifest(idx), "grams"))
     compacted = {
         (r["gram"], r["first_doc"])
-        for r in spark.read.parquet(gdir).collect()
+        for r in read_table(spark, idx, "grams").collect()
     }
     assert compacted == rebuilt      # compaction applied the min-merge
     assert files_after <= files_before  # and collapsed the generations
     # post-compaction each gram appears exactly once
-    assert len(compacted) == spark.read.parquet(gdir).count()
+    assert len(compacted) == read_table(spark, idx, "grams").count()
 
 
 def test_gram_index_append_order_commutes(spark, tmp_path):
-    import os
-
     import pandas as pd
 
     from minoan_athenaeum_spark.sources.gram_index import (
         append_to_gram_index,
         ensure_gram_index,
+        merge_grams,
     )
+    from minoan_athenaeum_spark.sources.index_family import read_table
 
     seq = lambda a, b: " ".join(f"w{i}" for i in range(a, b))  # noqa: E731
     corpus = [(3, seq(0, 10), "en", "a")]
@@ -369,10 +367,7 @@ def test_gram_index_append_order_commutes(spark, tmp_path):
             )
         return {
             (r["gram"], r["first_doc"])
-            for r in spark.read.parquet(os.path.join(idx, "grams"))
-            .groupBy("gram")
-            .agg(F.min("first_doc").alias("first_doc"))
-            .collect()
+            for r in merge_grams(read_table(spark, idx, "grams")).collect()
         }
 
     (tmp_path / "a").mkdir()
