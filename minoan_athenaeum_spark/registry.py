@@ -45,514 +45,30 @@ def query(name: str, oracle: str | None = None, tags: tuple[str, ...] = ()):
     return deco
 
 
-# The external driver's per-round correctness check covers only the
-# FIRST 50 registry entries. This prefix is CURATED and STABLE across
-# rounds (rounds 1 and 2 each rotated different families through the
-# window, so neither round re-verified both halves — don't repeat
-# that): every SURVEY §2 parity operator plus at least one
-# representative of every COVERAGE.md family. Secondary variants of a
-# family (the other 16 TPC-H shapes, the remaining fn_*/win_*/agg_*
-# forms, ...) deliberately sit after the prefix — they are re-verified
-# every round by the full local pytest oracle suite
-# (tests/test_oracle_parity.py runs all registered oracles), just not
-# by the driver's sf0.01 gate. Keep this list at exactly 50; swap an
-# entry only for a like-for-like family representative.
-#
-# Rotation policy (round 5+): when a round ADDS an oracle-gated query
-# that supersedes or extends an in-window family member, swap it in for
-# that member the next round so every new operator gets at least one
-# external driver verification. Round 5 rotated in the round-3/4
-# additions: components_star (for components), ivf_kmeans (for seeded
-# ivf), real PPM decode (for the fake decoder), the RANGE-interval
-# window frame (for row_number top-k), and SCD2 (for pivot); later the
-# same round, the new baseline-JPEG decode replaced the PPM row (same
-# image-decode family, strictly harder codec path — PPM was
-# driver-green in r3/r4 and stays pytest-oracled). The rotated-out
-# members remain oracle-verified by local pytest.
-#
-# Later in round 5 the session's four strongest additions rotated in,
-# each like-for-like: PQ-ADC for sign-LSH (ANN subfamily; brute + IVF
-# stay), ADPCM decode for the grouped-map demo (the hardest Arrow-
-# Python path now in window; applyInPandasWithState still covers the
-# grouped-state shape), PII redaction for token counting (text-scrub
-# family; token counts are embedded in every pipeline capstone), and
-# watermark-bounded streaming dedup for session windows (evt_sessionize
-# keeps the session shape in window via its batch twin).
-#
-# Round-4 continuation rotated four more like-for-like slots so the
-# session's new operators get their one external verification:
-# cdc_apply_changelog for merge_upsert_orders (merge/CDC family),
-# rollup_incremental_refresh for rollup_daily_by_type (rollup family;
-# the refresh path exercises the same aggregate_at_grain math),
-# text_inverted_index for text_quality_score (text family), and
-# graph_triangle_count for fn_array_ops (scalar functions keep two
-# reps: fn_string_basics + fn_pandas_udf_vectorized; the new graph
-# family gains its representative). All four verified green at sf0.01
-# before rotation; rotated-out members stay pytest-oracled.
-#
-# Round-5 session rotated five like-for-like slots for the round's new
-# operators (each verified green vs its DuckDB oracle at sf0.001 AND
-# sf0.01 before rotation): text_bm25_search for text_inverted_index
-# (index lookup subsumes the index-stats pass; inverted index was
-# driver-green r4), sketch_bloom_membership for sketch_hll_distinct
-# (sketch family; HLL green r1-r4), graph_sssp_weighted for
-# graph_triangle_count (graph family; triangles green r4),
-# sim_hybrid_rrf for sim_knn_cosine_brute (the RRF fusion contains the
-# brute-cosine leg wholesale plus the BM25 leg; brute kNN green r1-r4),
-# and text_bpe_train for pipeline_pack_sequences (tokenizer-pipeline
-# family; packing green r2-r4 — and the BPE train is the operator that
-# produces the tokens packing assumes). Rotated-out members stay
-# pytest-oracled every round.
-#
-# Later in the round-4 continuation, three more like-for-like swaps
-# for the session's flagship additions (each verified green vs its
-# DuckDB oracle at sf0.001 AND sf0.01 before rotation):
-# dedup_substring_spans for dedup_simhash (dedup family — simhash was
-# driver-green r2/r3; substring dedup is the Lee-et-al. operator the
-# family lacked), text_suffix_array for ts_resample_gapfill (the
-# time-series family keeps ts_asof_join; the text-index family gains
-# the prefix-doubling suffix array next to the inverted index), and
-# sketch_heavy_hitters for stat_variance_stddev (summary-statistics
-# family — variance/stddev was driver-green r1-r3 and stays
-# pytest-oracled; the Misra-Gries sketch-then-verify plan is the
-# scale-relevant member).
-# Round-6 executed the documented rotation (each incoming query
-# re-verified green vs its DuckDB oracle at sf0.001 AND sf0.01 this
-# session before the swap; every outgoing member was driver-green in
-# r5 and stays pytest-oracled): text_bpe_tokenize for text_bpe_train,
-# sketch_kmv_intersection for sketch_bloom_membership,
-# misc_skyline_pareto for misc_scd2_dimension (mining family gains its
-# rep; SCD2 was driver-green r5), pipeline_curation_v2 for
-# pipeline_clean_corpus (strictly more stages),
-# stream_stream_left_join_exec for stream_stream_join_exec
-# (outer ⊃ inner), and misc_incremental_join_view for
-# cdc_apply_changelog (maintenance family; CDC driver-green r4/r5).
-# Also this round: parity_j4_range_join_ge now emits BOTH the `>=` and
-# `<=` join results row-tagged by op, closing the one §2 operator (J6)
-# without its own driver-verified line — no slot burned.
-# Round-7 executed the documented rotation of the r6 operator crop
-# (every incoming query RE-verified green vs its DuckDB oracle at
-# sf0.001 AND sf0.01 this session before the swap; every outgoing
-# member was driver-green in r6 or earlier and stays pytest-oracled
-# every round). Eight like-for-like swaps:
-#   ml_perceptron_quality_train for fn_string_basics (the new ML
-#     family gains its rep — the oracle replays the full integer
-#     training recurrence in a recursive CTE, so the driver
-#     hash-checks an ITERATIVE TRAINING trajectory end-to-end; the
-#     functions family keeps fn_pandas_udf_vectorized, which carries
-#     both the 'functions' and 'pandas-udf' tags);
-#   sketch_hll_distinct for sketch_heavy_hitters (sketch family —
-#     HLL's only prior appearance was r3's no_oracle row, the oldest
-#     never-green query in the repo; heavy hitters was green r6);
-#   stat_winsorize_approx for skew_salted_agg (the stats family
-#     returns to the window with the GK-sketch default; the salted-agg
-#     plan stays pytest-oracled + oracle-parity-gated);
-#   dedup_minhash_incremental for dedup_minhash_lsh (the operational
-#     persisted-index form; batch LSH was green r1-r6);
-#   sim_pca_covariance for sim_ann_ivf_kmeans_topk (decomposition rep
-#     joins; ANN keeps sim_ann_pq_adc_topk + the RRF fusion);
-#   text_bm25_search_indexed for text_bm25_search (the posting-index
-#     serving path strictly contains the ranking math);
-#   pipeline_token_budget_head for pipeline_decontaminate
-#     (selection-under-budget rep; decontaminate green r2-r6);
-#   pipeline_curation_v3 for pipeline_curation_v2 (strictly more
-#     stages: composes the TRAINED quality gate into the recipe).
-# Round-8 WINDOW POLICY (VERDICT r7 #6 — the standing rule from here
-# on). The never-checked backlog grows whenever operators are added
-# faster than 50 slots rotate, so rotation is now mechanical:
-#   1. Eight parity sentinels are permanent (the SURVEY §2 core is
-#      Catalyst built-ins with 7+ consecutive green external rounds):
-#      parity_f1_filter_ops, parity_j1_equijoin,
-#      parity_j3_theta_self_join, parity_j4_range_join_ge (carries
-#      both >= and <= legs), parity_j9_multiway_join,
-#      parity_x1_cross_join, parity_j10_self_equijoin_alias, and
-#      theta_distinct_key_join (the reference's one optimization).
-#      The other parity rows (p1 projection — exercised by literally
-#      every query's output projection; j2 !=; j5 < — same
-#      distinct-key NLJ plan family as the retained j3/j4) rotate
-#      like any slot.
-#   2. Like-for-like family swaps are preferred, but any query with
-#      >= 3 consecutive green external rounds may be retired in favor
-#      of ANY never-checked query; rotated-out members stay
-#      pytest-oracled every round (tests/test_oracle_parity.py runs
-#      ALL registered oracles).
-#   3. New operators added in a round enter the window THAT round
-#      whenever a family slot exists, so the backlog never grows by
-#      more than the genuinely-new family count.
-#   4. Every incoming query is re-verified green vs its DuckDB oracle
-#      at sf0.001 AND sf0.01 locally (scripts/window_sim.py) before
-#      the swap lands.
-# Round-8 executed eighteen swaps under this policy (each incoming
-# query verified per rule 4 this session; every outgoing member was
-# driver-green in r7): the full r7 operator crop
-# (text_ccnet_ppl_buckets_log, text_kneser_ney_ppl,
-# text_gopher_quality_filters, text_bm25_index_append for
-# text_bm25_search_indexed [maintenance ⊃ serve],
-# stream_minhash_dedup_exec for stream_dedup_exec [index-gated ⊃
-# watermark dedup], stream_bm25_index_append_exec for
-# stream_stateful_totals_exec, dedup_semdedup_incremental for
-# sim_semdedup [incremental ⊃ batch], text_suffix_array_sharded for
-# text_suffix_array [the bounded production form — VERDICT #2
-# promotion; global doubling stays pytest-oracled],
-# pipeline_curation_v4 for v3), the r8 additions
-# (pipeline_curation_v5 for pipeline_token_budget_head,
-# text_bm25_index_compact for dedup_ngram_jaccard [green r1-r7; the
-# dedup family keeps six window reps, and the index-maintenance
-# cluster gains its hardest member]), and seven backlog burns under
-# rule 2 (tpch_q9_product_profit for tpch_q18_large_orders,
-# win_grouped_topk_two_phase for win_time_range_moving_sum [the
-# scale-relevant two-phase form], fn_python_udtf for
-# fn_pandas_udf_vectorized [the other Python-UDF path; Arrow paths
-# stay via mm_adpcm], evt_retention_cohorts for evt_sessionize,
-# misc_fuzzy_join_dist1 for misc_incremental_join_view,
-# graph_pagerank_fixed_point for graph_sssp_weighted,
-# dedup_sorted_neighborhood for dedup_exact).
-# Late round-8: the session's two NEW operators enter under rule 3
-# (both verified green vs their DuckDB oracles at sf0.001 AND sf0.01
-# this session before the swap): text_repetition_filters (the full
-# Rae et al. repetition battery) for agg_tpch_q1 (green r1/3/5/6/7;
-# the aggregate family keeps q3_top10, q9 and g1), and
-# pipeline_dsir_select (hashed-ngram importance resampling) for
-# dedup_embedding_cosine_lsh (green r2/3/5/6/7; the dedup family
-# keeps five window reps). Both outgoing members stay pytest-oracled
-# every round.
-# Late round-8 backlog burn (rule 2 — retire the longest-green rows
-# for never-checked ones; each incoming verified green vs its DuckDB
-# oracle at sf0.001 AND sf0.01 this session before the swap):
-# src_csv_events_agg for setop_intersect (green r1..r7 — the source-
-# format connectors get their first external row; setops remain
-# Catalyst built-ins pytest-oracled every round), sketch_count_min for
-# misc_skyline_pareto (green r6/r7; the mining family's other window
-# rep is misc_fuzzy_join_dist1), text_phrase_search for
-# mm_adpcm_audio_features (green r5..r7; the multimodal family keeps
-# mm_jpeg_decode_stats, the harder codec path).
-# Round-9 WINDOW (VERDICT r8 #1 — a verification-debt burn round).
-# The judge's top directive: shrink the parity sentinels to ~5 slots
-# and rotate 15+ never-driver-checked rows in, prioritizing the
-# zero-history families (mm_/evt_/misc_/tpch_/sim_/stream_/src_).
-# Twenty swaps executed (every incoming query verified green vs its
-# DuckDB oracle — or rows-stable for the no-oracle stream execs — at
-# sf0.001 AND sf0.01 via scripts/window_sim.py this session BEFORE the
-# swap landed; every outgoing member was driver-green in r8 and stays
-# pytest-oracled every round):
-#   Parity sentinels 8 → 5 (keep f1 filters, j1 equijoin, j3 theta
-#   self-join, j9 multiway, theta_distinct_key_join — the reference's
-#   one optimization; retire j4/x1/j10, each with 4-round streaks and
-#   plan shapes subsumed by the keepers).
-#   Rule-2 retirements (streak >= 3): agg_g1_groupby_count_sum,
-#   agg_tpch_q3_top10 (still the entry() flagship — smoke-checked
-#   every round by the driver's entry contract even out of window),
-#   sketch_kmv_intersection, dedup_substring_spans,
-#   dedup_components_star, sim_hybrid_rrf, sim_ann_pq_adc_topk,
-#   pipeline_pii_redact, rollup_incremental_refresh, ts_asof_join,
-#   mm_jpeg_decode_stats, stream_stream_left_join_exec,
-#   bucketed_colocated_join, text_bpe_tokenize.
-#   Like-for-like single-green swaps (r8-green outgoing, precedent
-#   from every prior round): stream_minhash_dedup_exec →
-#   stream_novelty_gate_exec (streaming ingest-gate family; VERDICT
-#   #5), text_bm25_index_append → text_bm25_search_robertson (BM25
-#   family keeps compact, which replays append generations),
-#   evt_retention_cohorts → evt_funnel_stages (events family).
-#   Incoming (all never externally checked): mm_png_decode_stats,
-#   mm_wav_audio_features, mm_video_frame_sample, evt_funnel_stages,
-#   evt_markov_transitions, misc_entity_resolution,
-#   tpch_q2_best_supplier, tpch_q7_volume_shipping,
-#   tpch_q8_market_share, tpch_q21_waiting_suppliers,
-#   sim_ann_ivfadc_topk, sim_ann_prefix_rerank,
-#   stream_novelty_gate_exec, stream_quality_gate_exec,
-#   text_novelty_incremental, src_jsonl_events_agg,
-#   src_orc_events_agg, text_bm25_search_robertson,
-#   pipeline_mixture_temperature, ml_quality_filter.
-# Expected backlog after the r9 driver run: 94 - 20 = 74 (< 75, the
-# VERDICT target). Remaining documented candidates for r10+:
-# sim_jl_project_topk, pipeline_shuffle_shards, text_ngram_novelty
-# (batch twin of the in-window incremental), the remaining tpch_q*
-# zero-history rows (q10/q11/q13-q17/q19/q20/q22), the stat_* exact
-# quantile family, win_lag_lead/win_rank_dense_ntile, the
-# remaining mm_ rows (ppm/g711/ms_adpcm/quarantine), and the r9 crop
-# (dedup_lines_global, dedup_cluster_keep_best, sim_ann_recall_eval,
-# dedup_lines_incremental + stream_lines_gate_exec — the sixth
-# persisted-index family — all oracle-verified ×2 SFs at birth).
-# Rule 3 applied to the r9 crop (all five verified green vs their
-# DuckDB oracles at sf0.001 AND sf0.01 at birth, window re-simulated
-# ×2 SFs after the swaps): dedup_lines_global for
-# dedup_sorted_neighborhood (dedup-blocking family, r8-green),
-# dedup_lines_incremental for dedup_semdedup_incremental
-# (incremental-persisted-index family, r8-green; the IVF machinery
-# stays externally exercised via sim_ann_ivfadc_topk),
-# stream_lines_gate_exec for stream_bm25_index_append_exec (streaming
-# index-maintenance family, r8-green; BM25 maintenance stays in-window
-# via text_bm25_index_compact which replays append generations),
-# sim_ann_recall_eval for sim_pca_covariance (similarity family,
-# greens r7+r8), and dedup_cluster_keep_best for
-# ml_perceptron_quality_train (greens r7+r8; judgment call rather than
-# strict family match — the trainer's integer recurrence is replayed
-# verbatim inside the in-window pipeline_curation_v4/v5 oracles and
-# applied by the in-window ml_quality_filter, so its surface keeps
-# triple external coverage while the duplicate-cluster resolution
-# family gains its first row). Never-checked in-window: 25; expected
-# backlog after the r9 driver run: 99 - 25 = 74 (< 75, the VERDICT
-# target, now against the 249-query registry).
-# Round-10 WINDOW (VERDICT r9 #1/#7 — finish the verification-debt
-# burn). Directive: shrink parity sentinels to 4 and rotate 25+
-# never-driver-checked rows in; drive the two remaining streaming
-# rows. Thirty-one swaps executed under the standing r8 policy (every
-# incoming query verified green vs its DuckDB oracle — or rows-stable
-# for the no-oracle stream execs — at sf0.001 AND sf0.01 via
-# scripts/window_sim.py this session BEFORE the swap landed; every
-# outgoing member was driver-green in r9 and stays pytest-oracled
-# every round by tests/test_oracle_parity.py):
-#   Parity sentinels 5 -> 4 (keep f1 filters, j1 equijoin, j9
-#   multiway, theta_distinct_key_join — the reference's one
-#   optimization; retire parity_j3_theta_self_join, 8-round streak,
-#   its distinct-key NLJ plan family stays via the keeper).
-#   Rule-2 retirements (streak >= 2 post-burn-directive; judge's
-#   r9 priority list drives the incoming): text_repetition_filters,
-#   tpch_q9_product_profit, src_csv_events_agg,
-#   win_grouped_topk_two_phase, sketch_hll_distinct,
-#   sketch_count_min, stat_winsorize_approx,
-#   graph_pagerank_fixed_point, fn_python_udtf, misc_fuzzy_join_dist1,
-#   text_phrase_search, text_bm25_index_compact,
-#   text_ccnet_ppl_buckets_log, text_kneser_ney_ppl,
-#   text_gopher_quality_filters, text_suffix_array_sharded,
-#   pipeline_curation_v4, pipeline_curation_v5 (the incoming
-#   pipeline_full_curation is the family superset; the LM-quality
-#   gates it composes stay replayed verbatim in its oracle).
-#   Like-for-like single-green swaps (r9-green outgoing, precedent
-#   from every prior round): tpch_q2/q7/q8/q21 -> four of the ten
-#   zero-history TPC-H shapes; text_novelty_incremental ->
-#   text_ngram_novelty (its batch twin; the incremental form stays
-#   pytest-pinned + bench-split); mm_png_decode_stats ->
-#   mm_ppm_decode_stats and mm_wav_audio_features ->
-#   mm_g711_audio_features (image/audio decode families);
-#   mm_video_frame_sample -> evt_anomaly_zscore (judgment call: the
-#   mm family keeps two incoming reps, the events family — whose two
-#   r9 rows funnel/markov also retire — regains one);
-#   sim_ann_prefix_rerank -> sim_jl_project_topk (ANN family keeps
-#   ivfadc + recall_eval); evt_markov_transitions + evt_funnel_stages
-#   + misc_entity_resolution retire with evt/misc reps maintained via
-#   evt_anomaly_zscore incoming and the keeper-free misc family
-#   staying pytest-oracled (misc_* greens r8+r9).
-#   Kept single-green rows deliberately NOT rotated: the three r9
-#   streaming gates (novelty/quality/lines — new infrastructure, a
-#   second consecutive external row is worth more than one backlog
-#   burn), dedup_minhash_incremental + pipeline_dsir_select (both
-#   modified this round per VERDICT #3/#4 — they need external
-#   re-verification), and the r9 crop (lines_global/incremental,
-#   cluster_keep_best, recall_eval, ivfadc, robertson).
-#   Incoming (all 31 never externally checked): tpch_q10_returned,
-#   tpch_q11_important_parts, tpch_q13_order_distribution,
-#   tpch_q14_promo_ratio, tpch_q15_top_supplier,
-#   tpch_q16_supplier_counts, tpch_q17_small_quantity_revenue,
-#   tpch_q19_disjunctive, tpch_q20_excess_suppliers,
-#   tpch_q22_global_scalar_subquery, stat_correlation,
-#   stat_exact_median, stat_exact_quantiles_two_phase, stat_group_ols,
-#   stat_equidepth_histogram, sketch_approx_percentiles,
-#   sketch_hll_mergeable, sketch_kmv_distinct, pipeline_full_curation,
-#   join_full_outer, agg_grouping_sets, stream_idempotent_sink_exec,
-#   stream_rollup_refresh_exec, text_ngram_novelty, win_lag_lead,
-#   win_rank_dense_ntile, mm_ppm_decode_stats,
-#   mm_g711_audio_features, sim_jl_project_topk, graph_triangle_count,
-#   evt_anomaly_zscore.
-# Expected backlog after the r10 driver run: 74 - 31 = 43 (< 50, the
-# VERDICT target). ALL 43 remaining never-checked queries were
-# pre-validated against their DuckDB oracles at sf0.01 late in r10
-# (43/43 green after the session.py worker-PYTHONPATH fix the sweep
-# itself surfaced), so the r11 rotation can swap any of them in
-# without per-query re-verification risk. Remaining documented
-# candidates for r11+:
-# pipeline_* sampling/splitting rows (10), evt_cusum/rolling/decay/
-# variant (4), misc_* (8), text_* index/diversity rows (9),
-# mm_ms_adpcm + mm_decode_quarantine, ml_perceptron_quality_eval,
-# stat_median_abs_deviation + stat_winsorize, skew_salted_join,
-# theta_count_by_key, agg_count_if_bool + agg_tpch_q6,
-# sim_centroid_alignment, join/setop leftovers.
-# Round-11 WINDOW (VERDICT r10 #1 — burn the last 43-query backlog).
-# Twenty-five swaps under the standing policy: every incoming query
-# was pre-validated green vs its DuckDB oracle at sf0.001 AND sf0.01
-# in r10 (43/43, COVERAGE.md:275) AND re-simulated through
-# scripts/window_sim.py --json this session with the results checked
-# in at bench_records/r11_window_presim_sf{0.001,0.01}.json (VERDICT
-# r10 #8); every outgoing member was driver-green in r10 and stays
-# pytest-oracled every round.
-#   Parity sentinels: unchanged at 4.
-#   Holdovers (21): the five queries whose code paths are touched by
-#   this round's VERDICT items #4-#7 and so need external
-#   re-verification (dedup_minhash_incremental — broadcast size
-#   guard; pipeline_dsir_select — lazy_dataframe rework;
-#   text_bm25_search_robertson — BM25 joins the index-family
-#   harness; dedup_lines_incremental + text_ngram_novelty — the
-#   compaction n/line_len parameterization from ADVICE); the five
-#   streaming gates (idempotent_sink + rollup_refresh are
-#   single-green, novelty/quality/lines keep a third row through the
-#   foreachBatch infra the round touches); the r10 single-green
-#   capstones pipeline_full_curation + sim_ann_recall_eval; two
-#   hardest TPC-H shapes (q17 correlated-avg, q22 global scalar
-#   subquery); the full sketch family (hll_mergeable, kmv,
-#   approx_percentiles — no sketch incoming exists in the backlog);
-#   stat_group_ols + stat_exact_quantiles_two_phase (hardest stat
-#   shapes); dedup_lines_global (pairs with the incremental form);
-#   ml_quality_filter (pairs with incoming ml_perceptron_quality_eval
-#   — the eval scores what the filter gates).
-#   Retired (25, ALL r10-green, most single-green burn-directive
-#   swaps per the r9/r10 precedent): tpch_q10/q11/q13/q14/q15/q16/
-#   q19/q20 (family keeps q17+q22 plus the full pytest DECIMAL-exact
-#   sweep), src_jsonl_events_agg + src_orc_events_agg (multi-round
-#   streaks), join_full_outer, agg_grouping_sets (relational core
-#   stays covered by sentinels + TPC-H), win_lag_lead +
-#   win_rank_dense_ntile (window family rep arrives via incoming
-#   win_distribution_funcs), stat_correlation + stat_exact_median +
-#   stat_equidepth_histogram (stat reps incoming), dedup_cluster_keep
-#   _best (greens r9+r10), graph_triangle_count, evt_anomaly_zscore
-#   (four evt incoming), pipeline_mixture_temperature (greens
-#   r9+r10), sim_ann_ivfadc_topk + sim_jl_project_topk (ANN family
-#   keeps recall_eval, which certifies IVFADC recall inside its
-#   oracle), mm_ppm_decode_stats + mm_g711_audio_features (mm family
-#   swaps to quarantine + ms_adpcm).
-#   Incoming (25, all never externally checked): agg_count_if_bool,
-#   agg_tpch_q6, theta_count_by_key, win_distribution_funcs,
-#   stat_median_abs_deviation, stat_winsorize, skew_salted_join,
-#   sim_centroid_alignment, ml_perceptron_quality_eval,
-#   mm_decode_quarantine, mm_ms_adpcm_audio_features,
-#   evt_cusum_changepoint, evt_rolling_distinct_users,
-#   evt_time_decayed_value, evt_variant_extract,
-#   misc_compaction_roundtrip, misc_zorder_roundtrip,
-#   misc_scd2_point_in_time_join, misc_skew_diagnostics,
-#   pipeline_dup_capping, pipeline_train_test_split,
-#   pipeline_unicode_clean, text_token_count_bpe,
-#   text_inverted_index, text_ccnet_ppl_buckets.
-# Expected backlog after the r11 driver run: 43 - 25 = 18 (<= 18, the
-# VERDICT target). Remaining documented candidates for r12 (the
-# final burn): misc_association_rules, misc_dq_constraint_checks,
-# misc_snapshot_diff, misc_surrogate_keys, misc_unpivot_melt,
-# pipeline_mixing_allocation, pipeline_priority_sample,
-# pipeline_quantile_normalize, pipeline_remove_dup_spans,
-# pipeline_shuffle_shards, pipeline_url_blocklist_filter,
-# pipeline_weighted_sample, text_bigram_lm_score,
-# text_chunk_sliding_window, text_lcp_adjacent,
-# text_repetition_score, text_simpson_diversity, text_term_drift.
-#
-# STALENESS RULE (VERDICT r11 #5 — standing policy from round 12 on).
-# Once the never-checked backlog is 0, rotation has a second debt
-# dimension: rows whose ONLY external green is many rounds old. Policy:
-#   a. Window slots not needed for (i) the 4 parity sentinels, (ii)
-#      queries whose code paths were MODIFIED this round (they must be
-#      externally re-verified), or (iii) genuinely new operators
-#      entering under rule 3, are spent re-greening the rows with the
-#      OLDEST last-green round (scripts/rotation_debt.py prints the
-#      table, oldest first).
-#   b. Target: every registered query externally re-verified at least
-#      once every ~6 rounds (50 slots x 6 rounds ≈ 300 > 249 rows, so
-#      the budget closes with slack for holdovers).
-#   c. All other rotation mechanics (pre-sim at sf0.001 AND sf0.01 via
-#      scripts/window_sim.py with checked-in JSON, like-for-like
-#      documentation here, FAMILY_REPRESENTATIVES sync) unchanged.
-# Round-12 WINDOW (VERDICT r11 #1 — burn the final 18-query backlog —
-# and #5 — first staleness re-green pass). Forty-four swaps:
-#   Parity sentinels: unchanged at 4 (f1, j1, j9, theta_distinct).
-#   Holdovers (2): the queries this round's code changes touch and
-#   that must be externally re-verified — dedup_minhash_incremental
-#   (ADVICE null-text coalesce + BANDS constant + the VERDICT #4
-#   backfill router: over-ceiling batches verify BUCKET-LOCALLY —
-#   hashed shingle payloads shuffled once by band bucket, Jaccard
-#   pipelined inside the join, pair-dedup after the >=0.5 filter; the
-#   exploded-intersection form was rejected as dying at probe scale
-#   [ADVICE r12 correction]) and pipeline_dsir_select (VERDICT
-#   #6: declarative fit, lazy_dataframe deleted).
-#   Incoming backlog burn (18 — the ENTIRE remaining never-checked
-#   list): the 5 misc_* / 7 pipeline_* / 6 text_* rows named above.
-#   All 18 were pre-validated green at sf0.01 in r10's 43/43 sweep
-#   (COVERAGE.md:275), re-validated in r11's pre-sim, and re-simulated
-#   this round (bench_records/r12_window_presim_sf{0.001,0.01}.json).
-#   Incoming staleness re-greens (26, all last green in r1, the oldest
-#   cohort — rotation_debt table): agg_anti_join, agg_count_distinct,
-#   agg_cube, agg_having, agg_orderby_limit, agg_outer_join_coalesce,
-#   agg_rollup, agg_subquery_in, agg_tpch_q5_region_revenue (also the
-#   r11 perf-gate exceedance — its driver re-timing doubles as part of
-#   the adjudication), dedup_embedding_cosine, evt_json_extract,
-#   evt_pivot_counts, evt_sliding_window, evt_tumbling_window,
-#   fn_conditional, fn_date_trunc_add, fn_hash_encode, fn_map_struct,
-#   fn_math, fn_string_regex_split, misc_arg_extremes,
-#   misc_deterministic_sample, misc_lateral_explode,
-#   misc_string_agg_sorted, setop_except, setop_union_all_count.
-#   (4 r1 rows wait for r13 — agg_distinct, agg_min_max, fn_date_parts,
-#   misc_like_family — each family-covered by an in-window sibling.)
-#   Retired (44, ALL r11-green; the burn+re-green directive spends the
-#   whole non-sentinel window, same single-green-retire precedent as
-#   r9-r11): agg_count_if_bool, agg_tpch_q6, theta_count_by_key,
-#   tpch_q17, tpch_q22, win_distribution_funcs, the 4 stat_* rows, the
-#   3 sketch_* rows, skew_salted_join, sim_centroid_alignment,
-#   sim_ann_recall_eval, ml_perceptron_quality_eval, ml_quality_filter,
-#   the 4 evt_* rows, the 4 misc_* rows, pipeline_dup_capping,
-#   pipeline_train_test_split, pipeline_unicode_clean,
-#   pipeline_full_curation, text_token_count_bpe, text_inverted_index,
-#   text_ccnet_ppl_buckets, text_bm25_search_robertson,
-#   text_ngram_novelty, dedup_lines_global, dedup_lines_incremental,
-#   mm_decode_quarantine, mm_ms_adpcm_audio_features, and the 5
-#   stream_*_exec gates (novelty/quality/lines now have 3 consecutive
-#   external greens, idempotent/rollup 1 each; all five remain
-#   pytest-oracled and the foreachBatch infra is untouched this
-#   round). Every retired row stays oracle-verified every round by
-#   tests/test_oracle_parity.py.
-# Round-13 WINDOW (VERDICT r12 #4 — continue the staleness rotation).
-# Forty-six swaps against the r12 window:
-#   Parity sentinels: unchanged at 4 (f1, j1, j9, theta_distinct).
-#   Modified-this-round holdovers (9 — every query this round's code
-#   changes touch, per standing policy):
-#     dedup_minhash_incremental + stream_minhash_dedup_exec (hashed
-#       shingle index layout + length prune, VERDICT r12 #3 + ADVICE
-#       array_distinct),
-#     pipeline_curation_v4/v5 + text_ccnet_buckets_indexed (NEW, rule
-#       3) + text_ccnet_ppl_buckets_log (the LM-bucket index family,
-#       VERDICT r12 #1, incl. the fit/score/bucketize refactor),
-#     pipeline_curation_v3 + stream_quality_gate_exec (warehouse-
-#       cached perceptron weights),
-#     text_bm25_index_append (BM25 append path, ADVICE r12).
-#   Incoming staleness re-greens (37): the 4 remaining r1 rows
-#   (agg_distinct, agg_min_max, fn_date_parts, misc_like_family), the
-#   full r2 cohort (15: mm_binary_meta, pipeline_stratified_sample,
-#   rollup_6h_purchases, sim_label_centroid_top3, stream_sliding/
-#   static_join/tumbling_exec, text_fingerprint/lang_id/source_stats/
-#   tfidf_top_terms, tpch_q4/q12, ts_range_join, win_running_sum) and
-#   the full r3 cohort (18: dedup_components, dedup_simhash,
-#   fn_array_ops, merge_upsert_orders, misc_pivot_api,
-#   mm_fake_decode_features, pdf_grouped_map_topnorm,
-#   pipeline_pack_sequences, rollup_daily_by_type, sim_ann_ivf/
-#   lsh_topk, sim_knn_cosine_brute, stat_variance_stddev,
-#   stream_session_exec, text_quality_score, text_token_count,
-#   ts_resample_gapfill, win_row_number_topk_per_group) — after this
-#   round the oldest external green is r5, on pace for the ≤~6-round
-#   target.
-#   Retired (44, ALL r12-green; single-green-retire precedent): the 18
-#   r12 backlog burns, the 26 r12 staleness re-greens, and
-#   pipeline_dsir_select (r12-green, untouched this round).
-#   Pre-simulated ×2 SFs:
-#   bench_records/r13_window_presim_sf{0.001,0.01}.json.
+# The external driver checks only the first 50 registry entries, so
+# load_all() puts this curated list first and it must stay stable: 50
+# names covering every SURVEY §2 parity operator and at least one
+# representative of every COVERAGE.md family. Other variants follow in
+# import order and are checked by the full local oracle suite
+# (tests/test_oracle_parity.py). tests/test_registry_prefix.py pins it.
 CURATED_PREFIX = [
-    # SURVEY §2 parity sentinels + the reference's one optimization
     "parity_f1_filter_ops",
     "parity_j1_equijoin",
     "parity_j9_multiway_join",
     "theta_distinct_key_join",
-    # modified-this-round holdovers: LSH hashed layout + length prune
     "dedup_minhash_incremental",
     "stream_minhash_dedup_exec",
-    # modified-this-round holdovers: LM-bucket index family (r12 #1)
     "pipeline_curation_v4",
     "pipeline_curation_v5",
     "text_ccnet_buckets_indexed",
     "text_ccnet_ppl_buckets_log",
-    # modified-this-round holdovers: cached perceptron weights
     "pipeline_curation_v3",
     "stream_quality_gate_exec",
-    # modified-this-round holdover: append intent markers
     "text_bm25_index_append",
-    # staleness re-greens (last green r1 — the final four)
     "agg_distinct",
     "agg_min_max",
     "fn_date_parts",
     "misc_like_family",
-    # staleness re-greens (last green r2)
     "mm_binary_meta",
     "pipeline_stratified_sample",
     "rollup_6h_purchases",
@@ -568,7 +84,6 @@ CURATED_PREFIX = [
     "tpch_q4_order_priority",
     "ts_range_join",
     "win_running_sum",
-    # staleness re-greens (last green r3)
     "dedup_components",
     "dedup_simhash",
     "fn_array_ops",

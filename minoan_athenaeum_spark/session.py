@@ -4,7 +4,7 @@ Local-mode settings mirror what we would set on a real cluster where it
 matters for plan shape (AQE, shuffle partitions, Arrow, UTC); memory
 sizing is local-only. On a 1000-executor cluster the same code runs
 unchanged — only master/memory/shuffle-partition counts move to
-spark-submit conf.
+spark-submit conf. ``extra_conf`` is the one override path.
 """
 
 from __future__ import annotations
@@ -17,37 +17,13 @@ from pyspark.sql import SparkSession
 def get_spark(
     app_name: str = "minoan-athenaeum-spark",
     cpus: int | str | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
-    cpus = cpus if cpus is not None else os.environ.get("SPARK_GRAFT_CPUS", "32")
-    shuffle = shuffle_partitions or int(os.environ.get("SPARK_GRAFT_SHUFFLE", cpus))
-    # Driver heap default 8g (optimization r14; was 48g since r1).
-    # Memory sizing is local-only (cluster posture is per-executor conf)
-    # and the oversized heap was MEASURED as the dominant cause of the
-    # r13 in-bench dedup_minhash_incremental regression: with 48g, G1
-    # grows eden to ~20 GB by mid-bench and every allocation-heavy
-    # stage (shingle arrays, OpenHashSet growth) churns tens of GB of
-    # cold pages per execution — in-bench minhash ran 92->145->252 s
-    # and 108->178->527 s (monotonically WORSE, two sessions) at 48g
-    # vs 50->16.5->7.5 s (monotonically BETTER, JIT-warm) at 8g, with
-    # calm single-core probes throughout; full-bench pair 99.7 s (8g)
-    # vs 122.3 s (48g) at REPS=2. The sf-scale local data needs far
-    # less than 8g; amplified scale probes must export
-    # SPARK_GRAFT_DRIVER_MEM explicitly (they always could).
-    mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g")
-    # Python WORKERS must be able to import this package no matter what
-    # the driver's cwd is: cloudpickle serializes module-level functions
-    # (the multimodal decoders' mapInPandas fns) BY REFERENCE, so a
-    # worker spawned from a non-repo cwd dies with ModuleNotFoundError
-    # (found by running the oracle sweep from /tmp — every pytest/driver
-    # run happened to use the repo root as cwd). Prepending the package
-    # root to PYTHONPATH before the JVM forks workers is the local-mode
-    # analogue of shipping a wheel via --py-files on a real cluster.
-    # Limitation: if a SparkContext already exists in this process,
-    # getOrCreate returns it and the JVM's env (captured at its launch)
-    # wins — the builder conf below and this env prepend only help
-    # sessions get_spark itself starts.
+    if cpus is None:
+        cpus = len(os.sched_getaffinity(0))
+    # Python workers must import this package whatever the driver's cwd:
+    # cloudpickle ships module-level functions by reference. Only helps
+    # a session this call starts; an existing JVM keeps its launch env.
     pkg_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     pp = os.environ.get("PYTHONPATH", "")
     if pkg_root not in pp.split(os.pathsep):
@@ -62,105 +38,44 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # Match local parallelism, not the 200 default.
-        .config("spark.sql.shuffle.partitions", str(shuffle))
-        # Start every shuffle WIDE and let AQE coalesce down to the
-        # advisory size (64 MB default). With only shuffle.partitions=32,
-        # a 150M-row join sorts ~600 MB per partition and spills — the
-        # scale probes went super-linear past 64×. 1024 initial
-        # partitions keep per-task sorts in memory at any amplification
-        # we test, while AQE collapses small-data shuffles to a handful
-        # of partitions so tiny queries pay no extra task overhead. This
-        # mirrors the standard cluster posture (high initial partition
-        # count + AQE coalescing), so plans here have cluster shape.
+        .config("spark.sql.shuffle.partitions", str(int(cpus)))
+        # Start shuffles wide so large joins sort in memory; AQE
+        # coalesces small ones back down.
+        .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", "1024")
+        # Widen the runtime bloom-filter window so a hard-filtered join
+        # side prunes the other side's scan at local data volumes.
         .config(
-            "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-            os.environ.get("SPARK_GRAFT_INITIAL_PARTITIONS", "1024"),
-        )
-        # Runtime bloom-filter join reduction: when one join side is
-        # filtered hard (q18's HAVING semi-join, date-filtered orders),
-        # inject its key bloom filter into the other side's SCAN so
-        # pruned rows never enter the shuffle. Spark's defaults only
-        # engage past a 10 GB scan with a <10 MB build side — cluster
-        # posture for genuinely huge inputs; at our probe volumes that
-        # window never opens, so widen it (256 MB build / 256 MB scan).
-        # Measured at 256× amplification: tpch_q18 136 s → 27 s; q3/q5
-        # unchanged within disk-cache noise.
-        .config(
-            "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold",
-            os.environ.get("SPARK_GRAFT_BLOOM_CREATE_MAX", "256MB"),
+            "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold", "256MB"
         )
         .config(
             "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold",
-            os.environ.get("SPARK_GRAFT_BLOOM_SCAN_MIN", "256MB"),
+            "256MB",
         )
-        # Let AQE re-optimize (coalesce) the output partitioning of
-        # CACHED plans too. Off (the default) every persist_tracked()
-        # aggregate materializes all initialPartitionNum=1024 shuffle
-        # partitions as real cached partitions, and every downstream
-        # stage over the cache runs 1024 near-empty tasks — measured
-        # 81 s -> 6 s cold / 2.7 s warm on pipeline_dsir_select at
-        # sf0.1 (OPTIMIZATION_r13.md). Scale-independent: it applies
-        # the same advisory-size coalescing to cached exchanges that
-        # uncached ones already get, so cluster plans keep their
-        # 100 MB-1 GB post-AQE partitions either way.
-        .config(
-            "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-            os.environ.get("SPARK_GRAFT_CACHED_AQE", "true"),
-        )
-        # AQE coalescing already maximizes parallelism by default
-        # (coalescePartitions.parallelismFirst=true), but the
-        # minPartitionSize floor (default 1 MB) re-serializes any
-        # CPU-DENSE stage whose shuffle is byte-small: the minhash
-        # serve's exact-Jaccard verify reads ~5 MB of hashed-shingle
-        # pairs but burns ~34 s of CPU, and the 1 MB floor capped it
-        # at 5 tasks (measured: serve 15.7 s -> 4.2 s at sf0.1 with
-        # the floor at 64 KB; ngram_jaccard 3.7 -> 2.6 s). Scale-
-        # neutral: the floor only binds when a shuffle's total bytes
-        # are under parallelism x 1 MB, which never happens at
-        # production volumes — post-AQE partitions stay advisory-sized
-        # (64 MB+) there either way.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            os.environ.get("SPARK_GRAFT_AQE_MIN_PARTITION", "64KB"),
-        )
-        # ContextCleaner hygiene (optimization r14): Spark frees dead
-        # RDD/broadcast/shuffle state via weak references, which only
-        # enqueue after a JVM GC — and the cleaner's own safety-net GC
-        # (spark.cleaner.periodicGC.interval) defaults to 30 MINUTES,
-        # longer than an entire bench run. A session running many
-        # queries therefore accumulates every dead localCheckpoint
-        # block, broadcast and shuffle registration until the heap
-        # happens to full-GC (G1 never did: 0 full GCs observed), and
-        # late queries pay for the garbage: in-bench minhash rep0
-        # measured 50.1 s with the default vs 19.0 s with a 2-minute
-        # interval (8g heap, calm probes, same code). 90 s keeps a
-        # multi-query session clean; single-query sessions see at most
-        # one extra concurrent GC (~100 ms on an 8g heap).
-        .config(
-            "spark.cleaner.periodicGC.interval",
-            os.environ.get("SPARK_GRAFT_CLEANER_GC", "90s"),
-        )
+        # Let AQE coalesce cached plans too, or every cached aggregate
+        # keeps all 1024 initial partitions.
+        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
+        # A lower coalescing floor keeps CPU-heavy but byte-small
+        # shuffles parallel.
+        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64KB")
+        # The cleaner's 30-minute default GC lets dead shuffle and
+        # broadcast state pile up over a multi-query session.
+        .config("spark.cleaner.periodicGC.interval", "90s")
         .config("spark.sql.session.timeZone", "UTC")
         # Write timestamps as INT64 micros, never legacy INT96: INT96
         # loses the unit annotation (footer-based unit detection in
         # catalog.events_ts_unit can't see it) and is deprecated in the
-        # parquet spec. Derived copies (scale-probe amplification,
-        # compaction, sinks) must stay loadable by the same catalog.
+        # parquet spec. Derived copies (compaction, sinks) must stay
+        # loadable by the same catalog.
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
         # Arrow for any pandas-UDF path and fast toPandas.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", mem)
+        # A larger heap made allocation-heavy stages churn GC.
+        .config("spark.driver.memory", "8g")
         .config("spark.ui.enabled", "false")
         # Managed-table warehouse (bucketed tables) outside the repo.
         .config("spark.sql.warehouse.dir", "/tmp/mas_spark_warehouse")
-        # Belt-and-braces with the PYTHONPATH env prepend above: the
-        # executor-env route survives env mutations between fork and
-        # worker spawn (real-cluster posture: ship a wheel and set
-        # spark.executorEnv.PYTHONPATH the same way).
-        .config(
-            "spark.executorEnv.PYTHONPATH",
-            os.environ["PYTHONPATH"],
-        )
+        # Same package path for workers, via conf as well as the env.
+        .config("spark.executorEnv.PYTHONPATH", os.environ["PYTHONPATH"])
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -13,8 +13,8 @@ query.
 ``SPARK_GRAFT_BUCKETED_FACTS=1`` then makes ``catalog.load_table``
 serve them transparently, so EVERY registered query runs on the
 pre-bucketed layout with zero code changes — the pay-shuffle-once
-posture a 100 TB deployment would run with (scripts/bucketed_probe.py
-records the measured A/B).
+posture a 100 TB deployment would run with (BASELINE.md records the
+measured 256x A/B).
 """
 
 from __future__ import annotations

@@ -256,8 +256,8 @@ def test_bucketed_facts_q18_no_orderkey_exchange(spark, sf_dir):
     join and the post-join aggregate, which is exactly the residue the
     layout promises. Broadcast disabled to force the join shape the
     facts get at scale; the answer must equal the raw-parquet path
-    (which stays oracle-checked in test_oracle_parity;
-    scripts/bucketed_probe.py A/Bs both layouts at 256x)."""
+    (which stays oracle-checked in test_oracle_parity; BASELINE.md
+    records a 256x A/B of both layouts)."""
     import os
 
     from minoan_athenaeum_spark.sources.bucketed import ensure_bucketed_facts

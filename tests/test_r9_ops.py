@@ -94,7 +94,7 @@ def test_cluster_keep_best_tie_breaks_to_min_doc_id(spark, tmp_path):
 
 
 def test_oracles_match_at_sf0001(spark):
-    """Value-exact vs DuckDB at sf0.001 (the window_sim check, inline)."""
+    """Value-exact vs DuckDB at sf0.001, through each query's oracle SQL."""
     from collections import Counter
 
     import duckdb

@@ -13,15 +13,6 @@ from minoan_athenaeum_spark.registry import CURATED_PREFIX, load_all
 SPECS = load_all()
 
 # One prefix member per family; the family tag it must carry.
-# r13 rotation (registry.py's round-13 window note — VERDICT r12 #4,
-# continue the staleness rotation): the 4 remaining r1-stale rows,
-# the full r2 cohort (15) and the full r3 cohort (18) rotate in,
-# plus the nine queries this round's code changes touch (the LSH
-# hashed-shingle layout + length prune pair, the LM-bucket index
-# family's five consumers, the cached-perceptron pair, and the
-# append-marker BM25 row). Retired members (all r12-green) stay
-# pytest-oracled every round; registry.py's round-13 note lists every
-# outgoing/incoming swap and the standing staleness rule.
 FAMILY_REPRESENTATIVES = {
     "parity_f1_filter_ops": "F1",
     "parity_j1_equijoin": "J1",
