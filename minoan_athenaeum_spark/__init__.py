@@ -8,7 +8,7 @@ similarity search, text analysis, multimodal plumbing and streaming —
 all designed for partitioned execution on a large cluster.
 
 Layout:
-  session     — SparkSession factory (AQE on, UTC, Arrow on)
+  session     — SparkSession factory (local parallelism, UTC, Arrow on)
   catalog     — testdata parquet catalog (views + DataFrames)
   registry    — named query registry: spark fn + DuckDB oracle SQL
   queries/    — operator implementations registered by name

@@ -24,17 +24,13 @@ values agree with DuckDB's naive TIMESTAMP_NS truncated to µs).
 
 from __future__ import annotations
 
+import hashlib
+import os
 import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-from minoan_athenaeum_spark.sources.bucketed import (
-    _source_fingerprint,
-    bucketed_fact_table_name,
-    source_files,
-)
 
 TABLES = (
     "region",
@@ -86,7 +82,6 @@ def events_ts_unit(sf_dir: str) -> str:
     unit = _EVENTS_TS_UNIT_CACHE.get(sf_dir)
     if unit is None:
         import glob
-        import os
 
         import pyarrow as pa
         import pyarrow.parquet as pq
@@ -150,10 +145,33 @@ def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 _HANDLE_CACHE: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
 
-def _use_bucketed_facts() -> bool:
-    import os
+def source_files(path: str) -> list[str]:
+    """Data files of the parquet source at ``path``: the file itself, or
+    every file under the directory whose name does not start with ``_``
+    or ``.`` (Spark's rule for metadata and hidden files), in directory
+    walk order."""
+    if not os.path.isdir(path):
+        return [path] if os.path.exists(path) else []
+    return [
+        os.path.join(root, f)
+        for root, _dirs, files in sorted(os.walk(path))
+        for f in sorted(files)
+        if not f.startswith(("_", "."))
+    ]
 
-    return os.environ.get("SPARK_GRAFT_BUCKETED_FACTS", "") not in ("", "0")
+
+def source_fingerprint(path: str) -> str:
+    """Deterministic fingerprint of the parquet source at ``path``: every
+    data file's relative path, size and mtime. Anything derived from the
+    source (a cached handle, a managed table, an index) keys on it, so a
+    rewritten source never resolves to a stale copy."""
+    h = hashlib.md5()
+    is_dir = os.path.isdir(path)
+    for fp in source_files(path):
+        st = os.stat(fp)
+        rel = f"{os.path.relpath(fp, path)}:" if is_dir else ""
+        h.update(f"{rel}{st.st_size}:{st.st_mtime_ns}".encode())
+    return h.hexdigest()[:8]
 
 
 def footer_schema(spark: SparkSession, path: str) -> T.StructType | None:
@@ -186,26 +204,8 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         per_session = {}
         _HANDLE_CACHE[spark] = per_session
     path = f"{sf_dir}/{name}.parquet"
-    fingerprint = _source_fingerprint(path)
-    # Opt-in pre-bucketed fact layout: when SPARK_GRAFT_BUCKETED_FACTS
-    # is set and sources.bucketed.ensure_bucketed_facts has materialized
-    # this table for this sf_dir, serve the managed bucketed table —
-    # same rows and schema, but hash-bucketed + sorted on orderkey, so
-    # every orderkey join/aggregate downstream skips its Exchange.
-    if _use_bucketed_facts() and name in ("lineitem", "orders"):
-        cached = per_session.get((sf_dir, name, True))
-        if cached is not None and cached[0] == fingerprint:
-            return cached[1]
-        table = bucketed_fact_table_name(sf_dir, name)
-        if spark.catalog.tableExists(table):
-            df = spark.table(table)
-            per_session[(sf_dir, name, True)] = (fingerprint, df)
-            return df
-        # Not materialized yet: fall through to the raw parquet WITHOUT
-        # caching it under the bucketed key — a later
-        # ensure_bucketed_facts in this session must take effect on the
-        # next load_table call, not be shadowed by this fallback.
-    cached = per_session.get((sf_dir, name, False))
+    fingerprint = source_fingerprint(path)
+    cached = per_session.get((sf_dir, name))
     if cached is not None and cached[0] == fingerprint:
         return cached[1]
     if name == "events":
@@ -213,7 +213,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     else:
         schema = footer_schema(spark, path)
         df = (spark.read if schema is None else spark.read.schema(schema)).parquet(path)
-    per_session[(sf_dir, name, False)] = (fingerprint, df)
+    per_session[(sf_dir, name)] = (fingerprint, df)
     return df
 
 

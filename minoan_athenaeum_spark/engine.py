@@ -34,12 +34,11 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from minoan_athenaeum_spark.catalog import load_table
+from minoan_athenaeum_spark.catalog import load_table, source_files
 from minoan_athenaeum_spark.plans.dialect import parse
 from minoan_athenaeum_spark.plans.executor import Executor, check_duplicate_aliases
 from minoan_athenaeum_spark.session import get_spark
 from minoan_athenaeum_spark.sink import format_results
-from minoan_athenaeum_spark.sources.bucketed import source_files
 from minoan_athenaeum_spark.sources.table_json import load_table_json
 
 

@@ -1,7 +1,7 @@
 """Skew-handling operators: salting for hot keys.
 
 AQE's skew-join splitting handles most cases automatically
-(spark.sql.adaptive.skewJoin.enabled is on in session.py); these
+(spark.sql.adaptive.skewJoin.enabled is on by Spark's default); these
 helpers cover the two places AQE can't:
   - aggregation skew (one giant group saturates one reducer),
   - broadcast-infeasible skewed joins.

@@ -11,6 +11,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from minoan_athenaeum_spark.catalog import source_fingerprint
 from minoan_athenaeum_spark.operators.bucketing import ensure_bucketed
 from minoan_athenaeum_spark.queries._util import t
 from minoan_athenaeum_spark.registry import query
@@ -18,23 +19,25 @@ from minoan_athenaeum_spark.registry import query
 
 def _bucketed_pair(spark, sf_dir):
     """orders + lineitem bucketed on orderkey (16 buckets), built once
-    per session per sf_dir."""
+    per session per sf_dir and source fingerprint: a rewritten source
+    gets a fresh table instead of the copy built before."""
     import hashlib
 
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    o = ensure_bucketed(
-        spark,
-        t(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority"),
-        f"mas_b_orders_{tag}",
-        "o_orderkey",
+
+    def bucketed(name, cols, key):
+        fresh = source_fingerprint(f"{sf_dir}/{name}.parquet")
+        return ensure_bucketed(
+            spark,
+            t(spark, sf_dir, name).select(*cols),
+            f"mas_b_{name}_{tag}_{fresh}",
+            key,
+        )
+
+    return (
+        bucketed("orders", ["o_orderkey", "o_orderpriority"], "o_orderkey"),
+        bucketed("lineitem", ["l_orderkey", "l_quantity"], "l_orderkey"),
     )
-    l = ensure_bucketed(
-        spark,
-        t(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity"),
-        f"mas_b_lineitem_{tag}",
-        "l_orderkey",
-    )
-    return o, l
 
 
 @query(

@@ -404,7 +404,7 @@ def misc_snapshot_diff(spark, sf_dir):
     Scale shape: fingerprints are map-only md5 projections; ONE
     doc_id-keyed full-outer shuffle joins the snapshots (with both
     sides bucketed on the key it would be shuffle-free — see
-    sources/bucketed.py); text never shuffles, only (id, fp) pairs.
+    operators/bucketing.py); text never shuffles, only (id, fp) pairs.
     """
     from minoan_athenaeum_spark.operators.dedup import normalized
 
@@ -509,7 +509,7 @@ def misc_incremental_join_view(spark, sf_dir):
     Scale shape: the whole point of IVM — the three delta joins touch
     |Δ| rows, not |V|; each is an equi-join on orderkey (broadcastable
     when deltas are small, co-partitioned when the base is bucketed on
-    the key, as ensure_bucketed_facts provides). The verdict-side full
+    the key, as operators/bucketing.py writes it). The verdict-side full
     recompute exists only to certify the algebra at test SF.
     """
     orders = t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")

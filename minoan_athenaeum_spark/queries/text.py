@@ -788,8 +788,8 @@ def text_bm25_search_indexed(spark, sf_dir):
 
     Scale shape: per-query work is proportional to the matched terms'
     posting lists, not the corpus; the index build pays the one
-    corpus-sized tokenize+shuffle ONCE (the pay-once posture of the
-    bucketed facts, applied to search)."""
+    corpus-sized tokenize+shuffle ONCE (the pay-once posture of
+    bucketed tables, applied to search)."""
     from minoan_athenaeum_spark.sources.posting_sink import ensure_bm25_index
 
     return bm25_serve_from_index(spark, ensure_bm25_index(spark, sf_dir))

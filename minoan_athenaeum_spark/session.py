@@ -1,9 +1,11 @@
 """SparkSession factory.
 
-Local-mode settings mirror what we would set on a real cluster where it
-matters for plan shape (AQE, shuffle partitions, Arrow, UTC); memory
-sizing is local-only. On a 1000-executor cluster the same code runs
-unchanged — only master/memory/shuffle-partition counts move to
+``get_spark`` sets only what changes a result, a file format or the
+deployment: local parallelism, the UTC session time zone, INT64
+timestamps, Arrow, the JVM heap, the warehouse location and the
+workers' package path. Everything else, AQE and its skew-join split
+included, runs at Spark's defaults. On a cluster the same code runs
+unchanged; only the master, memory and shuffle-partition count move to
 spark-submit conf. ``extra_conf`` is the one override path.
 """
 
@@ -33,33 +35,8 @@ def get_spark(
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
-        # AQE: runtime shuffle coalescing, skew-join splitting, plan re-opt.
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # Match local parallelism, not the 200 default.
         .config("spark.sql.shuffle.partitions", str(int(cpus)))
-        # Start shuffles wide so large joins sort in memory; AQE
-        # coalesces small ones back down.
-        .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", "1024")
-        # Widen the runtime bloom-filter window so a hard-filtered join
-        # side prunes the other side's scan at local data volumes.
-        .config(
-            "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold", "256MB"
-        )
-        .config(
-            "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold",
-            "256MB",
-        )
-        # Let AQE coalesce cached plans too, or every cached aggregate
-        # keeps all 1024 initial partitions.
-        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-        # A lower coalescing floor keeps CPU-heavy but byte-small
-        # shuffles parallel.
-        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64KB")
-        # The cleaner's 30-minute default GC lets dead shuffle and
-        # broadcast state pile up over a multi-query session.
-        .config("spark.cleaner.periodicGC.interval", "90s")
         .config("spark.sql.session.timeZone", "UTC")
         # Write timestamps as INT64 micros, never legacy INT96: INT96
         # loses the unit annotation (footer-based unit detection in
@@ -69,7 +46,8 @@ def get_spark(
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
         # Arrow for any pandas-UDF path and fast toPandas.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # A larger heap made allocation-heavy stages churn GC.
+        # Local mode runs every task in this one JVM, so this is the
+        # whole engine's heap.
         .config("spark.driver.memory", "8g")
         .config("spark.ui.enabled", "false")
         # Managed-table warehouse (bucketed tables) outside the repo.

@@ -63,7 +63,7 @@ def warehouse_index_path(
     hyper-parameters that change index CONTENT (gram length n, line
     length L, corpus slice) so one setting's index can never be served
     for another (the ADVICE-r8 gram-index n lesson)."""
-    from minoan_athenaeum_spark.sources.bucketed import _source_fingerprint
+    from minoan_athenaeum_spark.catalog import source_fingerprint
 
     wh = spark.conf.get("spark.sql.warehouse.dir", "")
     if wh.startswith("file:"):
@@ -71,7 +71,7 @@ def warehouse_index_path(
     elif "://" in wh:
         return None
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    fresh = _source_fingerprint(f"{sf_dir}/{source_table}.parquet")
+    fresh = source_fingerprint(f"{sf_dir}/{source_table}.parquet")
     mid = f"_{params}" if params else ""
     return os.path.join(wh, f"{prefix}_{tag}{mid}_{fresh}")
 

@@ -18,7 +18,7 @@ rows precisely so the verify step needs no join back to the corpus
 (the same denormalization trick the BM25 serving index uses for
 doc-length norms, sources/posting_sink.py:78).
 
-Freshness follows the bucketed-facts convention: the index path embeds
+Freshness follows catalog.source_fingerprint: the index path embeds
 a fingerprint of the source parquet, so a changed corpus resolves to a
 new path and a stale index is simply never served. The lifecycle is the
 shared snapshot-manifest harness (sources/index_family.py): ``bands/``

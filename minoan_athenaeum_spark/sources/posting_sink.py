@@ -81,7 +81,7 @@ def bm25_index_path(
     spark: SparkSession, sf_dir: str, slice_: str = "full"
 ) -> str | None:
     """Warehouse directory for the BM25 index of ``sf_dir``'s documents
-    table, freshness-fingerprinted like the bucketed facts (a changed
+    table, freshness-fingerprinted by catalog.source_fingerprint (a changed
     source parquet resolves to a new path, so a stale index is simply
     never served). ``slice_`` distinguishes the full-corpus index from
     the existing-corpus base the incremental queries append onto. None

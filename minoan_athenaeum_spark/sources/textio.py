@@ -10,8 +10,8 @@ is a full extra pass over the data at 100 TB and can silently widen or
 mistype columns; a declared schema makes the scan single-pass and the
 result deterministic.
 
-Materialized exports are keyed by a source-file fingerprint (same
-scheme as sources/bucketed.py): regenerating the testdata changes the
+Materialized exports are keyed by a source-file fingerprint
+(catalog.source_fingerprint): regenerating the testdata changes the
 directory name, so a stale export can never be served.
 """
 
@@ -22,8 +22,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from minoan_athenaeum_spark.catalog import load_table
-from minoan_athenaeum_spark.sources.bucketed import _source_fingerprint
+from minoan_athenaeum_spark.catalog import load_table, source_fingerprint
 
 EVENTS_TEXT_SCHEMA = (
     "event_id BIGINT, us BIGINT, user_id BIGINT, event_type STRING, "
@@ -45,7 +44,7 @@ def _events_text_df(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _export_path(sf_dir: str, fmt: str) -> str:
-    fp = _source_fingerprint(f"{sf_dir}/events.parquet")[:16]
+    fp = source_fingerprint(f"{sf_dir}/events.parquet")
     return f"/tmp/mas_textio/{fp}/events_{fmt}"
 
 

@@ -8,13 +8,25 @@ once in each checkout, each in a fresh process with the checkout as its
 working directory. The side that runs first alternates from one pair to
 the next. Each run's ``correct`` and ``failed`` print as it finishes.
 
-At the end, for every end-to-end metric of the parent's BENCHMARK.json,
-it prints each side's median and quartiles, the change's wins out of the
-pairs (ties count for neither), and whether the gain rule holds: the
-change wins at least nine tenths of the pairs, and the medians differ by
-more than the parent's interquartile range. It then prints every
-operation kind's median latency on each side. ``--out FILE`` also
-writes each run's report and result as one JSON line.
+At the end it prints each side's failed operations, summed over its
+runs, out of the operations attempted. Then, for every end-to-end metric
+of the parent's BENCHMARK.json, it prints each side's median and
+quartiles, the change's wins out of the pairs (ties count for neither),
+whether the gain rule holds, and a no-regression verdict:
+
+- gain rule: the change wins at least nine tenths of the pairs, and the
+  medians differ by more than the parent's interquartile range;
+- ``within bound``: the change's median is worse than the parent's by
+  no more than the metric's ``bound``, taken relative to the parent's
+  median;
+- ``worse past bound``: it is worse by more than that;
+- ``unresolved``: the parent's interquartile range, relative to its
+  median, is wider than the bound, unless every change run beats every
+  parent run.
+
+It then prints every operation kind's median latency on each side.
+``--out FILE`` also writes each run's report and result as one JSON
+line.
 """
 
 from __future__ import annotations
@@ -47,6 +59,20 @@ def quartiles(values: list[float]) -> tuple[float, float, float]:
     return q1, q2, q3
 
 
+def verdict(pairs: list[tuple[float, float]], lower: bool, bound: float) -> str:
+    """No-regression verdict on (parent, change) values of one metric."""
+    parent = [p for p, _ in pairs]
+    change = [c for _, c in pairs]
+    q1, median, q3 = quartiles(parent)
+    worse = (statistics.median(change) - median) if lower else (median - statistics.median(change))
+    beats_all = max(change) < min(parent) if lower else min(change) > max(parent)
+    if (q3 - q1) > bound * median and not beats_all:
+        return "unresolved"
+    if worse > bound * median:
+        return f"worse past bound {bound:g}"
+    return f"within bound {bound:g}"
+
+
 def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("parent")
@@ -73,6 +99,14 @@ def main(argv: list[str] | None = None) -> int:
                 with open(args.out, "a") as f:
                     f.write(json.dumps({"side": side, "seed": seed, **r}) + "\n")
 
+    print(f"\n{args.workload}, seeds {lo}-{hi}: failed ops / attempted")
+    for side, rs in runs.items():
+        done = [r["result"] for r in rs if r["result"]["failed"] is not None]
+        failed = sum(r["failed"] for r in done)
+        attempted = sum(r["attempted"] for r in done)
+        crashed = len(rs) - len(done)
+        print(f"  {side}: {failed} / {attempted}" + (f", {crashed} runs crashed" if crashed else ""))
+
     print(f"\n{args.workload}, seeds {lo}-{hi}: median [Q1, Q3] parent -> change")
     for m in end_to_end:
         name, lower = m["name"], m["better"] == "lower"
@@ -92,7 +126,8 @@ def main(argv: list[str] | None = None) -> int:
         print(
             f"  {name}: {p_q[1]:.4g} [{p_q[0]:.4g}, {p_q[2]:.4g}] -> "
             f"{c_q[1]:.4g} [{c_q[0]:.4g}, {c_q[2]:.4g}]  "
-            f"change wins {wins}/{len(pairs)}, gain rule {'holds' if holds else 'does not hold'}"
+            f"change wins {wins}/{len(pairs)}, gain rule {'holds' if holds else 'does not hold'}, "
+            f"{verdict(pairs, lower, m['bound'])}"
         )
 
     print("\nper-kind median latency (s), median over runs: parent -> change")

@@ -11,6 +11,7 @@ import shutil
 import uuid
 
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
@@ -116,3 +117,24 @@ def test_rewritten_source_gets_a_fresh_handle(spark, tmp_path, as_dir):
     assert sorted(r.k for r in eng.sql("SELECT k FROM t").collect()) == new
     rows = eng.show(eng.sql_strict("SELECT v FROM t WHERE k = 1110")).splitlines()
     assert rows[2:] == ["v1110"]
+
+
+def test_rewritten_sources_get_fresh_bucketed_tables(spark, sf_dir, tmp_path):
+    """``bucketed_colocated_join`` answers from managed tables built from
+    ``orders`` and ``lineitem``; once both sources are rewritten it must
+    answer from the new rows, not from the tables built before."""
+    from minoan_athenaeum_spark.registry import load_all
+    from minoan_athenaeum_spark.testing import check_query_against_oracle
+
+    spec = load_all()["bucketed_colocated_join"]
+    d = str(tmp_path / "sf")
+    shutil.copytree(sf_dir, d)
+    assert check_query_against_oracle(spark, d, spec.fn, spec.oracle) == []
+
+    for name, key in (("orders", "o_orderkey"), ("lineitem", "l_orderkey")):
+        path = f"{d}/{name}.parquet"
+        table = pq.read_table(path)
+        os.remove(path)
+        even = pc.equal(pc.bit_wise_and(table[key], 1), 0)
+        pq.write_table(table.filter(even), path)
+    assert check_query_against_oracle(spark, d, spec.fn, spec.oracle) == []

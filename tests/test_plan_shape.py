@@ -247,103 +247,6 @@ def test_bucketed_join_is_exchange_free(spark, sf_dir):
     )
 
 
-def test_bucketed_facts_q18_no_orderkey_exchange(spark, sf_dir):
-    """With SPARK_GRAFT_BUCKETED_FACTS on and lineitem/orders
-    pre-bucketed on orderkey, q18's entire orderkey pipeline — the
-    HAVING aggregate over lineitem, the semi-join onto orders, and the
-    lineitem⋈orders fact join — runs WITHOUT exchanging either fact on
-    orderkey; the only remaining shuffles are the (unbucketed) customer
-    join and the post-join aggregate, which is exactly the residue the
-    layout promises. Broadcast disabled to force the join shape the
-    facts get at scale; the answer must equal the raw-parquet path
-    (which stays oracle-checked in test_oracle_parity; BASELINE.md
-    records a 256x A/B of both layouts)."""
-    import os
-
-    from minoan_athenaeum_spark.sources.bucketed import ensure_bucketed_facts
-
-    ensure_bucketed_facts(spark, sf_dir, n_buckets=4)
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    os.environ["SPARK_GRAFT_BUCKETED_FACTS"] = "1"
-    try:
-        p = plan_of(spark, sf_dir, "tpch_q18_large_orders", "simple")
-        df = SPECS["tpch_q18_large_orders"].fn(spark, sf_dir)
-        got = {tuple(r) for r in df.collect()}
-    finally:
-        os.environ.pop("SPARK_GRAFT_BUCKETED_FACTS", None)
-        p_raw = plan_of(spark, sf_dir, "tpch_q18_large_orders", "simple")
-        raw = {
-            tuple(r)
-            for r in SPECS["tpch_q18_large_orders"].fn(spark, sf_dir).collect()
-        }
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-    assert p.count("Bucketed: true") >= 2, "scans must read bucket layout"
-    assert "hashpartitioning(l_orderkey" not in p
-    assert "hashpartitioning(o_orderkey" not in p
-    # The raw-parquet plan pays those orderkey shuffles (that's the A).
-    assert "hashpartitioning(l_orderkey" in p_raw
-    assert p.count("Exchange hashpartitioning") < p_raw.count(
-        "Exchange hashpartitioning"
-    )
-    assert got == raw
-
-
-def test_reattach_bucketed_build_is_metadata_only(spark, sf_dir, tmp_path):
-    """Cross-session pay-once: a completed bucketed build re-attaches
-    via DDL (CLUSTERED BY ... LOCATION) without rewriting — simulated
-    by copying a built table's directory to a fresh location and
-    registering it under a new name. The reattached table must (a) hold
-    the same rows, (b) scan as Bucketed: true, and (c) sort-merge-join
-    against the other bucketed fact with no orderkey exchange."""
-    import shutil
-
-    from minoan_athenaeum_spark.sources.bucketed import (
-        _table_location,
-        bucketed_fact_table_name,
-        ensure_bucketed_facts,
-        reattach_bucketed_table,
-    )
-
-    ensure_bucketed_facts(spark, sf_dir, n_buckets=4)
-    src_table = bucketed_fact_table_name(sf_dir, "orders")
-    src_loc = _table_location(spark, src_table)
-    copy_loc = str(tmp_path / "orders_copy")
-    shutil.copytree(src_loc, copy_loc)
-    new_table = "mas_test_reattach_orders"
-    spark.sql(f"DROP TABLE IF EXISTS {new_table}")
-    assert reattach_bucketed_table(
-        spark, new_table, copy_loc, "o_orderkey", 4
-    )
-    try:
-        re_df = spark.table(new_table)
-        assert re_df.count() == spark.table(src_table).count()
-
-        li = spark.table(bucketed_fact_table_name(sf_dir, "lineitem"))
-        old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try:
-            j = li.join(
-                re_df, li.l_orderkey == re_df.o_orderkey
-            ).groupBy("o_orderpriority").count()
-            j.collect()
-            p = j._jdf.queryExecution().executedPlan().toString()
-        finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-        # the executed-plan dump repeats the tree (Final + Initial plan)
-        assert p.count("Bucketed: true") >= 2
-        assert "SortMergeJoin" in p
-        assert "hashpartitioning(l_orderkey" not in p
-        assert "hashpartitioning(o_orderkey" not in p
-        # an incomplete location (no _SUCCESS) is refused
-        (tmp_path / "empty").mkdir()
-        assert not reattach_bucketed_table(
-            spark, "mas_test_nope", str(tmp_path / "empty"), "o_orderkey", 4
-        )
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {new_table}")
-
-
 def test_bm25_pruned_shuffle_and_topk(spark, sf_dir):
     p = plan_of(spark, sf_dir, "text_bm25_search")
     # top-20 must be TakeOrdered, never a global sort

@@ -1,7 +1,7 @@
-"""Pin the session confs ``get_spark`` sets, and that the package has no
-second configuration path: ``extra_conf`` is the one override, and the
-only ``SPARK_GRAFT_*`` env var the package reads is the opt-in bucketed
-fact layout.
+"""Pin the session confs ``get_spark`` sets, that none of them restates
+a Spark default, and that the package has no second configuration path:
+``extra_conf`` is the one override and the package reads no
+``SPARK_GRAFT_*`` env var.
 """
 
 from __future__ import annotations
@@ -19,15 +19,42 @@ def test_session_confs(spark):
     conf = spark.sparkContext.getConf()
     cpus = re.fullmatch(r"local\[(\d+)\]", conf.get("spark.master")).group(1)
     expected = {
-        "spark.sql.adaptive.coalescePartitions.initialPartitionNum": "1024",
-        "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold": "256MB",
-        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": "256MB",
-        "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
-        "spark.sql.adaptive.coalescePartitions.minPartitionSize": "64KB",
-        "spark.cleaner.periodicGC.interval": "90s",
         "spark.sql.shuffle.partitions": cpus,
+        "spark.sql.session.timeZone": "UTC",
+        "spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS",
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        "spark.driver.memory": "8g",
+        "spark.ui.enabled": "false",
     }
     assert {k: conf.get(k) for k in expected} == expected
+    # Spark writes the qualified form back once a managed table exists.
+    warehouse = conf.get("spark.sql.warehouse.dir").removeprefix("file:")
+    assert warehouse == "/tmp/mas_spark_warehouse"
+    assert REPO in conf.get("spark.executorEnv.PYTHONPATH").split(os.pathsep)
+
+
+def test_no_sql_conf_restates_a_spark_default(spark):
+    """Every runtime ``spark.sql.*`` conf the session was launched with
+    differs from Spark's own default: unset it, read the default, put it
+    back. The static ``spark.sql.warehouse.dir`` cannot be unset on a
+    live session and is a location, not a tuning conf."""
+    launched = {
+        k: v
+        for k, v in spark.sparkContext.getConf().getAll()
+        if k.startswith("spark.sql.") and spark.conf.isModifiable(k)
+    }
+    assert "spark.sql.shuffle.partitions" in launched
+    restated = {}
+    for k in launched:
+        current = spark.conf.get(k)
+        spark.conf.unset(k)
+        try:
+            default = spark.conf.get(k)
+        finally:
+            spark.conf.set(k, current)
+        if default == current:
+            restated[k] = current
+    assert restated == {}
 
 
 def test_default_cpus_is_affinity_count(tmp_path):
@@ -56,10 +83,10 @@ def test_default_cpus_is_affinity_count(tmp_path):
     assert out.stdout.split()[-2:] == [f"local[{n}]", str(n)]
 
 
-def test_package_reads_only_the_bucketed_env_var():
+def test_package_reads_no_spark_graft_env_var():
     names = set()
     pattern = os.path.join(REPO, "minoan_athenaeum_spark", "**", "*.py")
     for path in glob.glob(pattern, recursive=True):
         with open(path) as f:
             names.update(re.findall(r"SPARK_GRAFT_\w+", f.read()))
-    assert names == {"SPARK_GRAFT_BUCKETED_FACTS"}
+    assert names == set()

@@ -151,13 +151,13 @@ def test_bucketed_join_has_no_shuffle(spark, sf_dir):
     import contextlib
     import io
 
-    from minoan_athenaeum_spark.sources.bucketed import read_table, write_bucketed
+    from minoan_athenaeum_spark.operators.bucketing import write_bucketed
 
     orders = load_table(spark, sf_dir, "orders")
     lineitem = load_table(spark, sf_dir, "lineitem")
-    write_bucketed(orders, "b_orders", ["o_orderkey"], 8, ["o_orderkey"])
-    write_bucketed(lineitem, "b_lineitem", ["l_orderkey"], 8, ["l_orderkey"])
-    bo, bl = read_table(spark, "b_orders"), read_table(spark, "b_lineitem")
+    write_bucketed(orders, "b_orders", "o_orderkey", 8)
+    write_bucketed(lineitem, "b_lineitem", "l_orderkey", 8)
+    bo, bl = spark.table("b_orders"), spark.table("b_lineitem")
     # Force the shuffle-join path (at this sf the dim would broadcast,
     # which also avoids a shuffle but hides the bucketing effect).
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
