@@ -15,11 +15,11 @@ Special case: ``events.parquet``'s ``ts`` column. Some driver rounds
 generate it as parquet TIMESTAMP(NANOS), which Spark's parquet reader
 rejects (PARQUET_TYPE_ILLEGAL); others as TIMESTAMP(MICROS), which
 Spark reads natively. The unit is detected from the parquet footer per
-sf_dir (NOT assumed — round 4's testdata silently switched ns → µs and
-the hardcoded ns workaround divided every microsecond timestamp by
-1000). For ns we read the physical INT64 with an explicit schema and
-convert ns → a microsecond TIMESTAMP column (session tz is UTC, so
-values agree with DuckDB's naive TIMESTAMP_NS truncated to µs).
+source fingerprint (NOT assumed — round 4's testdata silently switched
+ns → µs and the hardcoded ns workaround divided every microsecond
+timestamp by 1000). For ns we read the physical INT64 with an explicit
+schema and convert ns → a microsecond TIMESTAMP column (session tz is
+UTC, so values agree with DuckDB's naive TIMESTAMP_NS truncated to µs).
 """
 
 from __future__ import annotations
@@ -71,49 +71,42 @@ EVENTS_NATIVE_SCHEMA = T.StructType(
     ]
 )
 
-_EVENTS_TS_UNIT_CACHE: dict[str, str] = {}
-
-
 def events_ts_unit(sf_dir: str) -> str:
     """Timestamp unit of ``events.parquet``'s ``ts`` column ('ns', 'us',
     'ms', 's'), read from the parquet footer of one part file. 'ns'
     needs the raw-INT64 workaround; everything else reads natively.
-    Cached per sf_dir — the footer read is a driver-side one-off."""
-    unit = _EVENTS_TS_UNIT_CACHE.get(sf_dir)
-    if unit is None:
-        import glob
+    Not cached: ``load_table`` reads it once per source fingerprint, on
+    a handle-cache miss, so a rewritten source is read at its new unit."""
+    import glob
 
-        import pyarrow as pa
-        import pyarrow.parquet as pq
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
-        path = os.path.join(sf_dir, "events.parquet")
-        if os.path.isdir(path):
-            parts = sorted(
-                glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True)
-            )
-            if not parts:
-                raise FileNotFoundError(f"no parquet part files under {path}")
-            path = parts[0]
-        pf = pq.ParquetFile(path)
-        # Legacy INT96 timestamps carry no unit annotation — pyarrow
-        # surfaces them as timestamp[ns], which would mis-route them to
-        # the raw-int64 reader. Detect the physical type and let Spark's
-        # native INT96 path read them instead.
-        pschema = pf.schema
-        ts_idx = next(
-            i for i in range(len(pschema)) if pschema.column(i).name == "ts"
+    path = os.path.join(sf_dir, "events.parquet")
+    if os.path.isdir(path):
+        parts = sorted(
+            glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True)
         )
-        if pschema.column(ts_idx).physical_type == "INT96":
-            _EVENTS_TS_UNIT_CACHE[sf_dir] = "int96"
-            return "int96"
-        field = pf.schema_arrow.field("ts")
-        if not pa.types.is_timestamp(field.type):
-            raise TypeError(
-                f"events.ts is {field.type}, expected a parquet timestamp"
-            )
-        unit = field.type.unit
-        _EVENTS_TS_UNIT_CACHE[sf_dir] = unit
-    return unit
+        if not parts:
+            raise FileNotFoundError(f"no parquet part files under {path}")
+        path = parts[0]
+    pf = pq.ParquetFile(path)
+    # Legacy INT96 timestamps carry no unit annotation — pyarrow
+    # surfaces them as timestamp[ns], which would mis-route them to
+    # the raw-int64 reader. Detect the physical type and let Spark's
+    # native INT96 path read them instead.
+    pschema = pf.schema
+    ts_idx = next(
+        i for i in range(len(pschema)) if pschema.column(i).name == "ts"
+    )
+    if pschema.column(ts_idx).physical_type == "INT96":
+        return "int96"
+    field = pf.schema_arrow.field("ts")
+    if not pa.types.is_timestamp(field.type):
+        raise TypeError(
+            f"events.ts is {field.type}, expected a parquet timestamp"
+        )
+    return field.type.unit
 
 
 def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -215,18 +208,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         df = (spark.read if schema is None else spark.read.schema(schema)).parquet(path)
     per_session[(sf_dir, name)] = (fingerprint, df)
     return df
-
-
-def load_tables(
-    spark: SparkSession, sf_dir: str, register: bool = True
-) -> dict[str, DataFrame]:
-    """Open every testdata table in ``sf_dir`` and (optionally) register
-    each as a temp view so ``spark.sql`` sees the same names the DuckDB
-    oracle does."""
-    dfs: dict[str, DataFrame] = {}
-    for name in TABLES:
-        df = load_table(spark, sf_dir, name)
-        if register:
-            df.createOrReplaceTempView(name)
-        dfs[name] = df
-    return dfs

@@ -167,44 +167,6 @@ def decode_ima_adpcm(data: bytes, block_align: int) -> np.ndarray:
     return np.concatenate(pieces) if pieces else np.empty(0, np.int16)
 
 
-def decode_ima_adpcm_stereo(data: bytes, block_align: int) -> np.ndarray:
-    """Decode a STEREO IMA ADPCM 'data' chunk to (n_frames, 2) int16.
-
-    WAV stereo IMA layout per block: one 4-byte state header PER
-    CHANNEL (L then R), then the nibble payload INTERLEAVED in 4-byte
-    groups — 8 left samples, 8 right samples, repeating. Each channel's
-    predictor/step state machine runs independently over its own
-    nibble subsequence."""
-    if block_align < 8:
-        raise ValueError(f"stereo IMA ADPCM block_align {block_align} < 8")
-    left_parts, right_parts = [], []
-    for start in range(0, len(data), block_align):
-        block = data[start : start + block_align]
-        if len(block) < 8:
-            raise ValueError("truncated stereo IMA ADPCM block header")
-        states = []
-        for c in range(2):
-            pred = int.from_bytes(block[4 * c : 4 * c + 2], "little", signed=True)
-            index = block[4 * c + 2]
-            if index > 88:
-                raise ValueError(f"IMA ADPCM step index {index} > 88")
-            states.append((pred, index))
-        body = np.frombuffer(block[8:], dtype=np.uint8)
-        usable = len(body) - len(body) % 8
-        groups = body[:usable].reshape(-1, 2, 4)  # (ngroups, channel, 4 bytes)
-        for c, parts in ((0, left_parts), (1, right_parts)):
-            chan_bytes = groups[:, c, :].reshape(-1).tobytes()
-            nibbles = unpack_nibbles(chan_bytes)
-            parts.append(np.array([states[c][0]], dtype=np.int16))
-            parts.append(
-                decode_ima_adpcm_block(nibbles, states[c][0], states[c][1])
-            )
-    left = np.concatenate(left_parts) if left_parts else np.empty(0, np.int16)
-    right = np.concatenate(right_parts) if right_parts else np.empty(0, np.int16)
-    n = min(len(left), len(right))
-    return np.stack([left[:n], right[:n]], axis=1)
-
-
 MS_ADPCM_COEFFS = [
     (256, 0), (512, -256), (0, 0), (192, 64),
     (240, 0), (460, -208), (392, -232),
@@ -267,11 +229,11 @@ def decode_ms_adpcm(data: bytes, block_align: int) -> np.ndarray:
 def decode_ima_adpcm_multi(
     data: bytes, block_align: int, n_channels: int
 ) -> np.ndarray:
-    """Decode N-CHANNEL IMA ADPCM to (n_frames, n_channels) int16 — the
-    generalization of :func:`decode_ima_adpcm_stereo`: one 4-byte state
-    header per channel, then the nibble payload interleaved in 4-byte
-    groups round-robin across channels (8 samples per channel per
-    group). Each channel's predictor/step machine runs independently
+    """Decode N-CHANNEL IMA ADPCM to (n_frames, n_channels) int16. WAV
+    layout per block: one 4-byte state header per channel, then the
+    nibble payload interleaved in 4-byte groups round-robin across
+    channels (8 samples per channel per group; stereo is 8 left, 8
+    right, repeating). Each channel's predictor/step machine runs independently
     over its own subsequence, so channels decode in parallel at scale.
     """
     if n_channels < 1:

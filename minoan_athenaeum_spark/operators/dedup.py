@@ -68,39 +68,27 @@ def portable_hash60(col: Column, salt: Column | None = None) -> Column:
     the minhash/simhash LSH pipelines have exact DuckDB oracle twins.
     60 bits stay inside a signed int64, and the value is non-negative so
     its decimal string rendering is identical in both engines (band keys
-    hash a comma-joined rendering of signature slices).
-
-    ~2-4× slower than xxhash64 per call; pass ``portable=False`` to the
-    operators below for the xxhash64 fast path when cross-engine
-    reproducibility isn't needed (hash *values* differ, but minhash /
-    simhash quality statistics are equivalent)."""
+    hash a comma-joined rendering of signature slices)."""
     s = col if salt is None else F.concat(col, F.lit("#"), salt)
     return F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("bigint")
 
 
-def _h60_or_xx(s: Column, salt: Column, portable: bool) -> Column:
-    if portable:
-        return portable_hash60(s, salt)
-    return F.xxhash64(F.concat(s, F.lit("#"), salt))
-
-
-def minhash_signature(shingles: Column, k: int = 16, portable: bool = True) -> Column:
+def minhash_signature(shingles: Column, k: int = 16) -> Column:
     """k-permutation MinHash signature: min over shingles of
-    hash(shingle ++ '#' ++ i) for each of k salted hash functions.
-    Default hash is :func:`portable_hash60` (DuckDB-replicable);
-    ``portable=False`` switches to xxhash64."""
+    hash(shingle ++ '#' ++ i) for each of k salted hash functions, with
+    the DuckDB-replicable :func:`portable_hash60`."""
     return F.transform(
         F.sequence(F.lit(0), F.lit(k - 1)),
         lambda i: F.array_min(
             F.transform(
                 shingles,
-                lambda s: _h60_or_xx(s, i.cast("string"), portable),
+                lambda s: portable_hash60(s, i.cast("string")),
             )
         ),
     )
 
 
-def band_keys(sig: Column, bands: int, rows: int, portable: bool = True) -> Column:
+def band_keys(sig: Column, bands: int, rows: int) -> Column:
     """LSH banding: hash each contiguous ``rows``-slice of the signature
     into one bucket key per band. Equal band key ⇒ candidate pair.
     The slice is rendered as a comma-joined decimal string before
@@ -108,24 +96,20 @@ def band_keys(sig: Column, bands: int, rows: int, portable: bool = True) -> Colu
     signature values)."""
     return F.transform(
         F.sequence(F.lit(0), F.lit(bands - 1)),
-        lambda b: _h60_or_xx(
+        lambda b: portable_hash60(
             F.concat_ws(",", F.slice(sig, b * rows + 1, rows)),
             b.cast("string"),
-            portable,
         ),
     )
 
 
-def simhash60(tokens: Column, portable: bool = True) -> Column:
+def simhash60(tokens: Column) -> Column:
     """60-bit SimHash over a token array: per bit, sum ±1 votes from
     hash(token); bit set iff the vote is positive. 60 bits so the
     portable md5-derived hash (:func:`portable_hash60`) supplies every
     bit position and the accumulated value stays inside a signed bigint;
     `getbit` and pow-of-two arithmetic are used because
     shiftleft/shiftright only take literal shift amounts."""
-    def tok_hash(tok: Column) -> Column:
-        return portable_hash60(tok) if portable else F.xxhash64(tok)
-
     return F.aggregate(
         F.sequence(F.lit(0), F.lit(59)),
         F.lit(0).cast("bigint"),
@@ -135,7 +119,7 @@ def simhash60(tokens: Column, portable: bool = True) -> Column:
                 tokens,
                 F.lit(0),
                 lambda a, tok: a
-                + F.when(F.getbit(tok_hash(tok), i) == 1, 1).otherwise(-1),
+                + F.when(F.getbit(portable_hash60(tok), i) == 1, 1).otherwise(-1),
             )
             > 0,
             F.pow(F.lit(2.0), i).cast("bigint"),

@@ -166,8 +166,6 @@ def decode_wav(payload: bytes) -> tuple[int, np.ndarray]:
         block_align = int.from_bytes(fmt[12:14], "little")
         if n_channels == 1:
             flat = ac.decode_ima_adpcm(data, block_align)
-        elif n_channels == 2:
-            return sample_rate, ac.decode_ima_adpcm_stereo(data, block_align)
         else:
             return sample_rate, ac.decode_ima_adpcm_multi(
                 data, block_align, n_channels

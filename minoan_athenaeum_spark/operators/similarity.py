@@ -47,15 +47,15 @@ def cosine_q(a: Column, b: Column) -> Column:
     return F.try_divide(dot_int(a, b).cast("double"), norm_int(a) * norm_int(b))
 
 
-def sign_lsh_key(q: Column, n_bits: int = 8, portable: bool = True) -> Column:
+def sign_lsh_key(q: Column, n_bits: int = 8) -> Column:
     """Random-hyperplane LSH reduced to sign bits: bit i = sign of a
     pseudo-random ±1 combination of vector components, with
-    deterministic weights from the parity of a hash of (i, j). The
-    default hash is the engine-portable md5-derived 60-bit value
+    deterministic weights from the parity of a hash of (i, j). The hash
+    is the engine-portable md5-derived 60-bit value
     (operators.dedup.portable_hash60), so the signature — and therefore
-    the whole ANN probe — is replicable as DuckDB oracle SQL;
-    ``portable=False`` switches to xxhash64. Vectors in the same bucket
-    are likely cosine-close; probe = same-bucket join.
+    the whole ANN probe — is replicable as DuckDB oracle SQL. Vectors
+    in the same bucket are likely cosine-close; probe = same-bucket
+    join.
 
     The weights depend only on (bit, dim) — an n_bits×dim ±1 matrix. At
     cluster scale you'd materialize it once and broadcast instead of
@@ -67,8 +67,7 @@ def sign_lsh_key(q: Column, n_bits: int = 8, portable: bool = True) -> Column:
 
     def weight_is_pos(i: Column, j: Column) -> Column:
         s = F.concat(i.cast("string"), F.lit("_"), j.cast("string"))
-        h = portable_hash60(s) if portable else F.xxhash64(s)
-        return h.bitwiseAND(F.lit(1).cast("bigint")) == 1
+        return portable_hash60(s).bitwiseAND(F.lit(1).cast("bigint")) == 1
 
     return F.aggregate(
         F.sequence(F.lit(0), F.lit(n_bits - 1)),

@@ -123,19 +123,18 @@ def averaged_weights(spark, sf_dir) -> list[int]:
     )
 
     path = warehouse_index_path(spark, sf_dir, "mas_perceptron", "documents")
-    cache = os.path.join(path, "weights.json") if path is not None else None
-    if cache is not None and os.path.isfile(cache):
+    cache = os.path.join(path, "weights.json")
+    if os.path.isfile(cache):
         with open(cache, encoding="utf-8") as fh:
             return json.load(fh)
     feats = _features(spark, sf_dir)
     hist = batch_perceptron_train(feats, _XCOLS, "y", iters=_ITERS, lr=1)
     w = [sum(row[2 + i] for row in hist) for i in range(_D)]
-    if cache is not None:
-        os.makedirs(path, exist_ok=True)
-        tmp = cache + ".tmp"
-        with open(tmp, "w", encoding="utf-8") as fh:
-            json.dump(w, fh)
-        os.replace(tmp, cache)
+    os.makedirs(path, exist_ok=True)
+    tmp = cache + ".tmp"
+    with open(tmp, "w", encoding="utf-8") as fh:
+        json.dump(w, fh)
+    os.replace(tmp, cache)
     return w
 
 

@@ -569,11 +569,10 @@ def misc_compaction_roundtrip(spark, sf_dir):
     behavior is pinned separately in tests/test_compaction.py."""
     import os
 
-    from minoan_athenaeum_spark.catalog import source_fingerprint
+    from minoan_athenaeum_spark.sources.index_family import warehouse_index_path
     from minoan_athenaeum_spark.sources.parquet_sink import compact_small_files
 
-    fp = source_fingerprint(f"{sf_dir}/events.parquet")
-    base = f"/tmp/mas_compaction/{fp}"
+    base = warehouse_index_path(spark, sf_dir, "mas_compaction", "events")
     shattered, compacted = f"{base}/shattered", f"{base}/compacted"
     if not os.path.exists(os.path.join(compacted, "_SUCCESS")):
         ev = t(spark, sf_dir, "events").select(
@@ -810,11 +809,10 @@ def misc_zorder_roundtrip(spark, sf_dir):
     row-group statistics."""
     import os
 
-    from minoan_athenaeum_spark.catalog import source_fingerprint
+    from minoan_athenaeum_spark.sources.index_family import warehouse_index_path
     from minoan_athenaeum_spark.sources.parquet_sink import write_zordered
 
-    fp = source_fingerprint(f"{sf_dir}/events.parquet")
-    out = f"/tmp/mas_zorder/{fp}/events"
+    out = warehouse_index_path(spark, sf_dir, "mas_zorder", "events")
     if not os.path.exists(os.path.join(out, "_SUCCESS")):
         ev = t(spark, sf_dir, "events").select(
             "event_id",

@@ -4,37 +4,36 @@ driver contract.
 The rollup store (operators/rollup_store.py) materializes decomposable
 per-grain aggregates once and answers coarser-grain questions from the
 stored tables instead of the raw events — the hypertable continuous-
-aggregate pattern. Here the store is built on first use per sf_dir
-(tagged temp directory) and the registered query reads ONLY the rollup,
-while the oracle recomputes from raw events — so the driver's hash gate
-proves store+re-aggregation end-to-end.
+aggregate pattern. Here the store is built on first use per events
+fingerprint (in the warehouse, through index_family.warehouse_index_path)
+and the registered query reads ONLY the rollup, while the oracle
+recomputes from raw events — so the driver's hash gate proves
+store+re-aggregation end-to-end.
 """
 
 from __future__ import annotations
 
-import hashlib
 import os
-import tempfile
 
 from pyspark.sql import functions as F
 
 from minoan_athenaeum_spark.catalog import load_table
-from minoan_athenaeum_spark.operators.rollup_store import build_rollups, query_rollup
+from minoan_athenaeum_spark.operators.rollup_store import (
+    GRAINS,
+    build_rollups,
+    query_rollup,
+)
 from minoan_athenaeum_spark.registry import query
+from minoan_athenaeum_spark.sources.index_family import warehouse_index_path
 
 
 def _store_dir(spark, sf_dir: str) -> str:
-    """Build (once per distinct events input) and return the rollup
-    store path. The cache tag covers the source file's mtime+size, so a
-    regenerated events.parquet gets a fresh store instead of stale
-    rollups."""
-    src = os.path.join(sf_dir, "events.parquet")
-    st = os.stat(src)
-    tag = hashlib.md5(
-        f"{sf_dir}:{st.st_mtime_ns}:{st.st_size}".encode()
-    ).hexdigest()[:8]
-    out = os.path.join(tempfile.gettempdir(), f"mas_rollup_store_{tag}")
-    if not os.path.exists(os.path.join(out, "rollup_1h")):
+    """Build (once per events fingerprint) and return the rollup store
+    path. The store counts as built only once every grain's write has
+    finished (its ``_SUCCESS``): a crashed build leaves output dirs
+    behind, and those are rebuilt, not served."""
+    out = warehouse_index_path(spark, sf_dir, "mas_rollup_store", "events")
+    if not all(os.path.exists(f"{out}/rollup_{g}/_SUCCESS") for g in GRAINS):
         build_rollups(load_table(spark, sf_dir, "events"), out)
     return out
 

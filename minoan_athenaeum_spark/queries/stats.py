@@ -17,7 +17,6 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from minoan_athenaeum_spark.catalog import load_tables
 from minoan_athenaeum_spark.queries._util import dec, t
 from minoan_athenaeum_spark.registry import query
 
@@ -149,18 +148,19 @@ def agg_tpch_q6(spark, sf_dir):
     tags=("agg", "grouping-sets"),
 )
 def agg_grouping_sets(spark, sf_dir):
-    """Explicit GROUPING SETS with GROUPING() markers (SQL API —
-    registered temp views + spark.sql; same Catalyst plan as the DSL)."""
-    load_tables(spark, sf_dir)
+    """Explicit GROUPING SETS with GROUPING() markers (SQL API — the
+    orders DataFrame is passed to spark.sql as an argument, so no
+    session view is touched; same Catalyst plan as the DSL)."""
     return spark.sql(
         """
         SELECT o_orderstatus AS status, o_orderpriority AS priority,
                COUNT(*) AS cnt,
                CAST(GROUPING(o_orderstatus) AS TINYINT) AS g_status,
                CAST(GROUPING(o_orderpriority) AS TINYINT) AS g_priority
-        FROM orders
+        FROM {orders}
         GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
-        """
+        """,
+        orders=t(spark, sf_dir, "orders"),
     )
 
 

@@ -11,6 +11,10 @@ from __future__ import annotations
 import itertools
 
 from minoan_athenaeum_spark.registry import query
+from minoan_athenaeum_spark.sources.index_family import (
+    scratch_dir,
+    warehouse_index_path,
+)
 from minoan_athenaeum_spark.streaming.ops import (
     read_events_stream,
     run_to_memory,
@@ -169,11 +173,11 @@ def stream_idempotent_sink_exec(spark, sf_dir):
     stream → sink → read-back round trip is lossless and duplicate-free.
     Replay/restart idempotency is separately pinned in
     tests/test_streaming.py."""
-    import tempfile
-
     from minoan_athenaeum_spark.streaming.ops import run_with_idempotent_sink
 
-    base = tempfile.mkdtemp(prefix="mas_idem_sink_")
+    base = scratch_dir(
+        warehouse_index_path(spark, sf_dir, "mas_idem_sink", "events")
+    )
     out, ckpt = f"{base}/out", f"{base}/ckpt"
     stream = read_events_stream(spark, sf_dir)
     run_with_idempotent_sink(stream, out, ckpt)
@@ -375,13 +379,13 @@ def stream_rollup_refresh_exec(spark, sf_dir):
     so a green row proves the incremental maintenance math is
     batch-split-invariant — including the non-mergeable
     COUNT(DISTINCT user_id)."""
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from minoan_athenaeum_spark.streaming.ops import run_with_rollup_refresh
 
-    base = tempfile.mkdtemp(prefix="mas_stream_rollup_")
+    base = scratch_dir(
+        warehouse_index_path(spark, sf_dir, "mas_stream_rollup", "events")
+    )
     stream = read_events_stream(spark, sf_dir, max_files_per_trigger=1)
     latest = run_with_rollup_refresh(stream, base, 3600)
     out = spark.read.parquet(latest)
@@ -608,7 +612,6 @@ def stream_minhash_dedup_exec(spark, sf_dir):
     live ingest path. At 100 TB each arriving batch pays O(batch +
     matched index buckets); the corpus is never re-shingled."""
     import os
-    import shutil
 
     from pyspark.sql import functions as F
 
@@ -627,14 +630,10 @@ def stream_minhash_dedup_exec(spark, sf_dir):
     idx_bands = read_table(spark, idx_path, "bands", snap)
     idx_sh = read_table(spark, idx_path, "shingles", snap)
 
-    # Deterministic scratch next to the index, wiped at query start
-    # (same discipline as stream_bm25_index_append_exec's _streamwork
-    # dir) — repeated bench/test runs reuse one directory instead of
-    # accumulating mkdtemp leftovers in /tmp. The wipe also clears the
-    # checkpoint, so the availableNow drain always replays the batch.
-    base = idx_path + "_gatework"
-    if os.path.isdir(base):
-        shutil.rmtree(base)
+    # Scratch next to the index, wiped at query start; the wipe also
+    # clears the checkpoint, so the availableNow drain always replays
+    # the batch.
+    base = scratch_dir(idx_path + "_gatework")
     out, ckpt = f"{base}/out", f"{base}/ckpt"
 
     def gate(batch_df, batch_id: int) -> None:
@@ -742,7 +741,6 @@ def stream_bm25_index_append_exec(spark, sf_dir):
     Replay safety: each fold passes its micro-batch id, so a batch
     replayed from the checkpoint is a no-op append (the id is already
     in the index manifest)."""
-    import os
     import shutil
 
     from pyspark.sql import functions as F
@@ -755,10 +753,8 @@ def stream_bm25_index_append_exec(spark, sf_dir):
     from minoan_athenaeum_spark.streaming.ops import read_documents_stream
 
     base = ensure_bm25_index(spark, sf_dir, slice_="existing")
-    work = base + "_streamwork"
-    for d in (work, work + "_ckpt"):
-        if os.path.isdir(d):
-            shutil.rmtree(d)  # stale checkpoint would skip the replayed batch
+    work = scratch_dir(base + "_streamwork")
+    ckpt = scratch_dir(work + "_ckpt")
     shutil.copytree(base, work)
 
     def fold(batch_df, batch_id: int) -> None:
@@ -770,7 +766,7 @@ def stream_bm25_index_append_exec(spark, sf_dir):
     stream = read_documents_stream(spark, sf_dir)
     q = (
         stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", work + "_ckpt")
+        .option("checkpointLocation", ckpt)
         .outputMode("append")
         .trigger(availableNow=True)
         .start()
@@ -814,7 +810,6 @@ def stream_novelty_gate_exec(spark, sf_dir):
     Replay safety: each fold passes its micro-batch id, so a batch
     replayed from the checkpoint is a no-op append (the id is already
     in the index manifest)."""
-    import os
     import shutil
 
     from pyspark.sql import functions as F
@@ -831,10 +826,8 @@ def stream_novelty_gate_exec(spark, sf_dir):
     from minoan_athenaeum_spark.streaming.ops import read_documents_stream
 
     base = ensure_gram_index(spark, sf_dir)
-    work = base + "_streamwork"
-    for d in (work, work + "_ckpt"):
-        if os.path.isdir(d):
-            shutil.rmtree(d)  # stale checkpoint would skip the replayed batch
+    work = scratch_dir(base + "_streamwork")
+    ckpt = scratch_dir(work + "_ckpt")
     shutil.copytree(base, work)
 
     def fold(batch_df, batch_id: int) -> None:
@@ -846,7 +839,7 @@ def stream_novelty_gate_exec(spark, sf_dir):
     stream = read_documents_stream(spark, sf_dir)
     q = (
         stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", work + "_ckpt")
+        .option("checkpointLocation", ckpt)
         .outputMode("append")
         .trigger(availableNow=True)
         .start()
@@ -940,7 +933,6 @@ def stream_lines_gate_exec(spark, sf_dir):
     Replay safety: each fold passes its micro-batch id, so a batch
     replayed from the checkpoint is a no-op append (the id is already
     in the index manifest)."""
-    import os
     import shutil
 
     from pyspark.sql import functions as F
@@ -955,10 +947,8 @@ def stream_lines_gate_exec(spark, sf_dir):
     from minoan_athenaeum_spark.streaming.ops import read_documents_stream
 
     base = ensure_line_index(spark, sf_dir)
-    work = base + "_streamwork"
-    for d in (work, work + "_ckpt"):
-        if os.path.isdir(d):
-            shutil.rmtree(d)
+    work = scratch_dir(base + "_streamwork")
+    ckpt = scratch_dir(work + "_ckpt")
     shutil.copytree(base, work)
 
     def fold(batch_df, batch_id: int) -> None:
@@ -970,7 +960,7 @@ def stream_lines_gate_exec(spark, sf_dir):
     stream = read_documents_stream(spark, sf_dir)
     q = (
         stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", work + "_ckpt")
+        .option("checkpointLocation", ckpt)
         .outputMode("append")
         .trigger(availableNow=True)
         .start()

@@ -1641,18 +1641,16 @@ def text_bm25_index_append(spark, sf_dir):
     one delta generation with the term filter pushed into both
     (row-group min/max pruning);
     generations compact by rewriting through write_posting_segments."""
-    import os
     import shutil
 
+    from minoan_athenaeum_spark.sources.index_family import scratch_dir
     from minoan_athenaeum_spark.sources.posting_sink import (
         append_to_bm25_index,
         ensure_bm25_index,
     )
 
     base = ensure_bm25_index(spark, sf_dir, slice_="existing")
-    work = base + "_appendwork"
-    if os.path.isdir(work):
-        shutil.rmtree(work)
+    work = scratch_dir(base + "_appendwork")
     shutil.copytree(base, work)
     batch = t(spark, sf_dir, "documents").filter(F.col("doc_id") % 10 == 0)
     append_to_bm25_index(spark, work, batch)
@@ -1686,9 +1684,9 @@ def text_bm25_index_compact(spark, sf_dir):
     a manifest commit so serving never sees a half-written index. The
     measured many-delta vs compacted serve A/B lives in BASELINE.md;
     the file-count + row-identity pins in tests/test_posting_sink.py."""
-    import os
     import shutil
 
+    from minoan_athenaeum_spark.sources.index_family import scratch_dir
     from minoan_athenaeum_spark.sources.posting_sink import (
         append_to_bm25_index,
         compact_bm25_index,
@@ -1696,9 +1694,7 @@ def text_bm25_index_compact(spark, sf_dir):
     )
 
     base = ensure_bm25_index(spark, sf_dir, slice_="existing")
-    work = base + "_compactwork"
-    if os.path.isdir(work):
-        shutil.rmtree(work)
+    work = scratch_dir(base + "_compactwork")
     shutil.copytree(base, work)
     arriving = t(spark, sf_dir, "documents").filter(F.col("doc_id") % 10 == 0)
     for r in (0, 10, 20):

@@ -63,11 +63,10 @@ def merge_grams(gens: DataFrame) -> DataFrame:
 
 def gram_index_path(
     spark: SparkSession, sf_dir: str, n: int = GRAM_N
-) -> str | None:
+) -> str:
     """Warehouse directory for the documents table's first-occurrence
-    gram index — None when the warehouse isn't a local filesystem. n is
-    part of the directory name, so an index built for one gram length
-    can never be served or extended for another (ADVICE r8)."""
+    gram index. n is part of the directory name, so an index built for
+    one gram length can never be served or extended for another."""
     # idx2: manifest + generation layout; the bump keeps the former
     # live-directory layout from ever being served.
     return warehouse_index_path(

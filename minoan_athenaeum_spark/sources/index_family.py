@@ -1,15 +1,20 @@
-"""Shared lifecycle for the persisted-index families.
+"""One home for everything derived from a source table, and the shared
+lifecycle of the persisted-index families.
 
-Six index families keep serving state in the Spark warehouse: LSH bands
-and shingles, BM25 postings, IVF cells, first-occurrence grams, line
-fingerprints and LM scores. This module holds the lifecycle they all
-share, in two layers:
+Every directory a query writes (the six index families, the perceptron
+cache, the rollup store, text/ORC exports, compaction and Z-order
+copies, stream source and sink directories, scratch copies of an index)
+lives in the Spark warehouse. This module holds two layers:
 
-1. :func:`warehouse_index_path` — the path/freshness convention (warehouse
-   dir + sf_dir tag + source-parquet fingerprint, so a changed corpus
-   resolves to a new path and a stale index is never served).
+1. :func:`warehouse_index_path` — the path/freshness convention for all
+   of them (warehouse dir + sf_dir tag + source-parquet fingerprint, so
+   a changed source resolves to a new path and stale derived data is
+   never served), and :func:`scratch_dir`, the one place a per-run
+   scratch directory is wiped.
 
-2. Snapshot manifests — an index is a set of tables (``grams/``,
+2. Snapshot manifests — six index families (LSH bands and shingles,
+   BM25 postings, IVF cells, first-occurrence grams, line fingerprints,
+   LM scores) keep serving state as a set of tables (``grams/``,
    ``bands/`` + ``shingles/``, ``centroids/`` + ``members/``, ...), each
    a list of immutable generation directories ``<index>/<table>/<gen>/``
    with one pinned schema, and one JSON manifest lists them all.
@@ -52,28 +57,39 @@ def warehouse_index_path(
     prefix: str,
     source_table: str = "documents",
     params: str = "",
-) -> str | None:
-    """Resolve the warehouse directory for a persisted index of
-    ``sf_dir``'s ``source_table``: ``<wh>/<prefix>_<sfTag>[_<params>]_
-    <sourceFingerprint>``. Returns None when the warehouse isn't a
-    local filesystem (these indexes are local-disk artifacts). Folding
-    the source fingerprint into the name is the freshness contract —
-    a regenerated source parquet resolves to a NEW path, so a stale
-    index is simply never served. ``params`` carries family
+) -> str:
+    """Resolve the warehouse directory for data derived from ``sf_dir``'s
+    ``source_table``: ``<wh>/<prefix>_<sfTag>[_<params>]_
+    <sourceFingerprint>``. Raises RuntimeError when the warehouse isn't
+    a local filesystem (derived data lives on local disk). Folding the
+    source fingerprint into the name is the freshness contract — a
+    regenerated source parquet resolves to a NEW path, so stale derived
+    data is simply never served. ``params`` carries family
     hyper-parameters that change index CONTENT (gram length n, line
     length L, corpus slice) so one setting's index can never be served
-    for another (the ADVICE-r8 gram-index n lesson)."""
+    for another."""
     from minoan_athenaeum_spark.catalog import source_fingerprint
 
     wh = spark.conf.get("spark.sql.warehouse.dir", "")
     if wh.startswith("file:"):
         wh = wh[len("file:"):]
     elif "://" in wh:
-        return None
+        raise RuntimeError("a persisted index needs a local warehouse dir")
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
     fresh = source_fingerprint(f"{sf_dir}/{source_table}.parquet")
     mid = f"_{params}" if params else ""
     return os.path.join(wh, f"{prefix}_{tag}{mid}_{fresh}")
+
+
+def scratch_dir(path: str) -> str:
+    """Wipe the per-run scratch directory ``path`` (a query's sink,
+    checkpoint or working copy of an index, named after a
+    :func:`warehouse_index_path`) and return it. A stale checkpoint
+    would make a replayed stream skip its batch, so every run starts
+    from nothing."""
+    if os.path.isdir(path):
+        shutil.rmtree(path)
+    return path
 
 
 # A layout writes a table's rows as parquet into a fresh directory.
@@ -263,15 +279,13 @@ class IndexWrite:
 
 def ensure_index(
     spark: SparkSession,
-    path: str | None,
+    path: str,
     build: Callable[[IndexWrite], dict | None],
 ) -> str:
     """Build the index at ``path`` unless it exists, which it does once
     its manifest does. ``build(write)`` stages every table (and may read
     a staged model table back through ``write.read``); it returns the
     family's manifest fields, if any. One commit publishes it all."""
-    if path is None:
-        raise RuntimeError("a persisted index needs a local warehouse dir")
     if not os.path.isfile(os.path.join(path, MANIFEST)):
         write = IndexWrite(spark, path, None)
         fields = build(write) or {}

@@ -47,9 +47,8 @@ from minoan_athenaeum_spark.sources.index_family import (
 N_CELLS = 8
 
 
-def ivf_index_path(spark: SparkSession, sf_dir: str) -> str | None:
-    """Warehouse directory for the embeddings table's IVF cell index —
-    None when the warehouse isn't a local filesystem."""
+def ivf_index_path(spark: SparkSession, sf_dir: str) -> str:
+    """Warehouse directory for the embeddings table's IVF cell index."""
     # idx2: manifest + generation layout; the bump keeps the former
     # live-directory layout from ever being served.
     return warehouse_index_path(spark, sf_dir, "mas_ivfidx2", "embeddings")

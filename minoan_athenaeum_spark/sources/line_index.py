@@ -93,11 +93,10 @@ def merge_lines(gens: DataFrame) -> DataFrame:
 
 def line_index_path(
     spark: SparkSession, sf_dir: str, line_len: int = LINE_LEN
-) -> str | None:
+) -> str:
     """Warehouse directory for the documents table's first-occurrence
-    line index — None when the warehouse isn't a local filesystem. The
-    line length is part of the directory name (the gram-index n
-    lesson, ADVICE r8)."""
+    line index. The line length is part of the directory name, as the
+    gram index's n is."""
     # idx2: manifest + generation layout; the bump keeps the former
     # live-directory layout from ever being served.
     return warehouse_index_path(

@@ -73,9 +73,8 @@ N_SCORE_FILES = 8
 _MODEL = ("lm_bg", "lm_ctx", "lm_meta")
 
 
-def lm_index_path(spark: SparkSession, sf_dir: str) -> str | None:
-    """Warehouse directory for the documents table's LM-bucket index —
-    None when the warehouse isn't a local filesystem."""
+def lm_index_path(spark: SparkSession, sf_dir: str) -> str:
+    """Warehouse directory for the documents table's LM-bucket index."""
     # idx2: manifest + generation layout; the bump keeps the former
     # live-directory layout from ever being served.
     return warehouse_index_path(spark, sf_dir, "mas_lmidx2", "documents")

@@ -50,11 +50,10 @@ BANDS = 4
 ROWS_PER_BAND = 4
 
 
-def minhash_index_path(spark: SparkSession, sf_dir: str) -> str | None:
-    """Warehouse directory for the documents table's LSH band index —
-    None when the warehouse isn't a local filesystem. ``params``
-    carries the LAYOUT version: r13 switched the shingles table to
-    xxhash64'd longs (``hashed_shingles``), so the version bump
+def minhash_index_path(spark: SparkSession, sf_dir: str) -> str:
+    """Warehouse directory for the documents table's LSH band index.
+    ``params`` carries the LAYOUT version: r13 switched the shingles
+    table to xxhash64'd longs (``hashed_shingles``), so the version bump
     resolves to a new path and a pre-r13 string-form index is simply
     never served (the standard freshness convention — content-shape
     changes are params changes). The prefix's idx2 marks the manifest

@@ -79,13 +79,12 @@ def lookup_term(
 
 def bm25_index_path(
     spark: SparkSession, sf_dir: str, slice_: str = "full"
-) -> str | None:
+) -> str:
     """Warehouse directory for the BM25 index of ``sf_dir``'s documents
     table, freshness-fingerprinted by catalog.source_fingerprint (a changed
     source parquet resolves to a new path, so a stale index is simply
     never served). ``slice_`` distinguishes the full-corpus index from
-    the existing-corpus base the incremental queries append onto. None
-    when the warehouse isn't a local filesystem."""
+    the existing-corpus base the incremental queries append onto."""
     # v5: per-table manifest schemas; the bump keeps older layouts from
     # ever being served.
     return warehouse_index_path(

@@ -10,9 +10,10 @@ is a full extra pass over the data at 100 TB and can silently widen or
 mistype columns; a declared schema makes the scan single-pass and the
 result deterministic.
 
-Materialized exports are keyed by a source-file fingerprint
-(catalog.source_fingerprint): regenerating the testdata changes the
-directory name, so a stale export can never be served.
+Materialized exports live in the warehouse under
+index_family.warehouse_index_path (keyed by the events source
+fingerprint): regenerating the testdata changes the directory name, so
+a stale export can never be served.
 """
 
 from __future__ import annotations
@@ -22,7 +23,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from minoan_athenaeum_spark.catalog import load_table, source_fingerprint
+from minoan_athenaeum_spark.catalog import load_table
+from minoan_athenaeum_spark.sources.index_family import warehouse_index_path
 
 EVENTS_TEXT_SCHEMA = (
     "event_id BIGINT, us BIGINT, user_id BIGINT, event_type STRING, "
@@ -43,9 +45,9 @@ def _events_text_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _export_path(sf_dir: str, fmt: str) -> str:
-    fp = source_fingerprint(f"{sf_dir}/events.parquet")
-    return f"/tmp/mas_textio/{fp}/events_{fmt}"
+def _export_path(spark: SparkSession, sf_dir: str, fmt: str) -> str:
+    base = warehouse_index_path(spark, sf_dir, "mas_textio", "events")
+    return os.path.join(base, f"events_{fmt}")
 
 
 def ensure_events_export(
@@ -54,7 +56,7 @@ def ensure_events_export(
     """Write the events table as CSV or JSONL once per (source
     fingerprint); later calls reuse the files. Returns the directory."""
     assert fmt in ("csv", "json")
-    path = _export_path(sf_dir, fmt)
+    path = _export_path(spark, sf_dir, fmt)
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         df = _events_text_df(spark, sf_dir)
         w = df.write.mode("overwrite")
@@ -81,7 +83,7 @@ def ensure_events_orc(spark: SparkSession, sf_dir: str) -> str:
     """Write the events table as ORC once per source fingerprint (same
     lossless schema as the text exports — epoch-µs BIGINT + integer
     cents — so the three interchange connectors share one oracle)."""
-    path = _export_path(sf_dir, "orc")
+    path = _export_path(spark, sf_dir, "orc")
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         _events_text_df(spark, sf_dir).write.mode("overwrite").orc(path)
     return path

@@ -23,31 +23,31 @@ from minoan_athenaeum_spark.catalog import (
     EVENTS_NATIVE_SCHEMA,
     EVENTS_RAW_SCHEMA,
     events_ts_unit,
+    load_table,
 )
+from minoan_athenaeum_spark.sources.index_family import warehouse_index_path
 
 
-def _events_stream_dir(sf_dir: str) -> str:
+def _stream_dir(spark: SparkSession, sf_dir: str, table: str) -> str:
     """The file stream source requires a *directory*.
 
-    When ``events.parquet`` is itself a directory of part files (every
+    When ``<table>.parquet`` is itself a directory of part files (every
     real parquet dataset), stream straight from it — wrapping it in a
     symlink directory would nest the parts one level below the glob and
     the source would silently read ZERO files. Only the single-file
-    testdata layout needs the per-sf symlink-directory wrapper (a real
-    deployment streams from a directory or Kafka anyway)."""
-    import hashlib
+    testdata layout needs a symlink-directory wrapper, kept in the
+    warehouse per source fingerprint (a real deployment streams from a
+    directory or Kafka anyway)."""
     import os
-    import tempfile
 
-    src = os.path.join(sf_dir, "events.parquet")
+    src = os.path.join(sf_dir, f"{table}.parquet")
     if os.path.isdir(src):
         return src
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    d = os.path.join(tempfile.gettempdir(), f"mas_events_stream_{tag}")
+    d = warehouse_index_path(spark, sf_dir, f"mas_{table}_stream", table)
     os.makedirs(d, exist_ok=True)
-    link = os.path.join(d, "events.parquet")
+    link = os.path.join(d, f"{table}.parquet")
     if not os.path.exists(link):
-        os.symlink(src, link)
+        os.symlink(os.path.abspath(src), link)
     return d
 
 
@@ -63,7 +63,7 @@ def read_events_stream(
     )
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    raw = reader.format("parquet").load(_events_stream_dir(sf_dir))
+    raw = reader.format("parquet").load(_stream_dir(spark, sf_dir, "events"))
     if is_ns:
         return raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     return raw
@@ -263,34 +263,11 @@ def run_with_rollup_refresh(
 def read_documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents.parquet as a file-source stream (same directory /
     symlink handling as the events stream) — the ingest side of a
-    streaming corpus pipeline."""
-    import hashlib
-    import os
-    import tempfile
-    from pyspark.sql.types import (
-        LongType,
-        StringType,
-        StructField,
-        StructType,
+    streaming corpus pipeline. The schema is the catalog's, pinned from
+    the footer."""
+    schema = load_table(spark, sf_dir, "documents").schema
+    return (
+        spark.readStream.schema(schema)
+        .format("parquet")
+        .load(_stream_dir(spark, sf_dir, "documents"))
     )
-
-    src = os.path.join(sf_dir, "documents.parquet")
-    if os.path.isdir(src):
-        d = src
-    else:
-        tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-        d = os.path.join(tempfile.gettempdir(), f"mas_docs_stream_{tag}")
-        os.makedirs(d, exist_ok=True)
-        link = os.path.join(d, "documents.parquet")
-        if not os.path.exists(link):
-            os.symlink(src, link)
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("text", StringType()),
-            StructField("lang", StringType()),
-            StructField("source", StringType()),
-            StructField("n_chars", LongType()),
-        ]
-    )
-    return spark.readStream.schema(schema).format("parquet").load(d)

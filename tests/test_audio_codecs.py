@@ -138,7 +138,7 @@ def test_stereo_ima_adpcm_matches_reference_loop():
 
     from minoan_athenaeum_spark.operators.audio_codecs import (
         decode_ima_adpcm,
-        decode_ima_adpcm_stereo,
+        decode_ima_adpcm_multi,
     )
     from minoan_athenaeum_spark.operators.multimodal import (
         decode_wav,
@@ -169,7 +169,7 @@ def test_stereo_ima_adpcm_matches_reference_loop():
             )
             acc.append(decode_ima_adpcm(mono_block, 4 + len(chan)))
     data = b"".join(blocks)
-    out = decode_ima_adpcm_stereo(data, block_align)
+    out = decode_ima_adpcm_multi(data, block_align, 2)
     want_l = np.concatenate(mono_l)
     want_r = np.concatenate(mono_r)
     assert (out[:, 0] == want_l).all()

@@ -6,15 +6,14 @@ outputTimestampType) — must all load to identical rows."""
 
 from __future__ import annotations
 
+import os
 import shutil
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
-from minoan_athenaeum_spark.catalog import (
-    _EVENTS_TS_UNIT_CACHE,
-    events_ts_unit,
-    load_table,
-)
+from minoan_athenaeum_spark.catalog import events_ts_unit, load_table
 
 
 def _checksum(df):
@@ -40,7 +39,6 @@ def test_int96_events_copy_loads_identically(spark, sf_dir, tmp_path):
     assert events_ts_unit(int96_dir) == "int96"
     got = _checksum(load_table(spark, int96_dir, "events"))
     assert (got.n, got.x) == (want.n, want.x)
-    _EVENTS_TS_UNIT_CACHE.pop(int96_dir, None)
     shutil.rmtree(int96_dir, ignore_errors=True)
 
 
@@ -55,3 +53,37 @@ def test_session_writes_int64_micros(spark, sf_dir, tmp_path):
     sch = pq.ParquetFile(part).schema
     idx = next(i for i in range(len(sch)) if sch.column(i).name == "ts")
     assert sch.column(idx).physical_type == "INT64"
+
+
+def test_rewritten_events_are_read_at_their_new_unit(spark, tmp_path):
+    """The ts unit is read per source fingerprint: rewriting a
+    TIMESTAMP(NANOS) events file as µs must not keep the ns reader (that
+    divides every µs value by 1000)."""
+    us = 1704067798778549
+    path = tmp_path / "events.parquet"
+
+    def write(ts, unit, mtime_ns):
+        pq.write_table(
+            pa.table({
+                "event_id": pa.array([1], pa.int64()),
+                "ts": pa.array([ts], pa.timestamp(unit)),
+                "user_id": pa.array([7], pa.int64()),
+                "event_type": ["click"],
+                "value": [1.5],
+                "props": ["{}"],
+            }),
+            path,
+        )
+        os.utime(path, ns=(mtime_ns, mtime_ns))
+
+    def micros():
+        return load_table(spark, str(tmp_path), "events").select(
+            F.unix_micros("ts")
+        ).first()[0]
+
+    write(us * 1000 + 123, "ns", 1_700_000_000_000_000_000)
+    assert events_ts_unit(str(tmp_path)) == "ns"
+    assert micros() == us
+    write(us, "us", 1_700_000_001_000_000_000)
+    assert micros() == us
+    assert events_ts_unit(str(tmp_path)) == "us"

@@ -137,3 +137,15 @@ def test_append_order_commutes(spark, tmp_path, order):
     for i in order:
         _append(spark, path, batches[i])
     assert _served(spark, path) == {("en", 8), ("de", 3)}
+
+
+def test_non_local_warehouse_raises():
+    class Conf:
+        def get(self, key, default=None):
+            return "s3a://bucket/warehouse"
+
+    class Session:
+        conf = Conf()
+
+    with pytest.raises(RuntimeError, match="local warehouse"):
+        warehouse_index_path(Session(), "/data/sf", "mas_testidx")

@@ -102,3 +102,13 @@ def test_dialect_errors_unchanged_over_tier(eng, query, message):
     with pytest.raises(DialectError) as err:
         eng.sql_strict(query)
     assert str(err.value) == message
+
+
+def test_registry_query_leaves_engine_tables_alone(spark, eng, sf_dir, sf01_dir):
+    """A registry query over another sf_dir must not rebind the views
+    the engine registered."""
+    from minoan_athenaeum_spark.queries.stats import agg_grouping_sets
+
+    agg_grouping_sets(spark, sf_dir).collect()
+    want = load_table(spark, sf01_dir, "customer").count()
+    assert eng.sql("SELECT count(*) FROM customer").first()[0] == want
