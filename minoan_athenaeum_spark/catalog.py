@@ -11,15 +11,18 @@ fresh scan. ``engine.Athenaeum.register_parquet_dir`` snapshots small
 tables into in-memory local relations on top of these scans; the
 handles returned here stay file scans.
 
-Special case: ``events.parquet``'s ``ts`` column. Some driver rounds
-generate it as parquet TIMESTAMP(NANOS), which Spark's parquet reader
-rejects (PARQUET_TYPE_ILLEGAL); others as TIMESTAMP(MICROS), which
-Spark reads natively. The unit is detected from the parquet footer per
-source fingerprint (NOT assumed — round 4's testdata silently switched
-ns → µs and the hardcoded ns workaround divided every microsecond
-timestamp by 1000). For ns we read the physical INT64 with an explicit
-schema and convert ns → a microsecond TIMESTAMP column (session tz is
-UTC, so values agree with DuckDB's naive TIMESTAMP_NS truncated to µs).
+Every table, whatever its name, is read through one plan taken from
+its first data file's footer (:func:`read_plan`), in batch and as a
+stream. Each column maps to the type Spark infers for it (a timestamp
+stored without a UTC adjustment, like the testdata's ``o_orderdate``
+and ``events.ts``, is TIMESTAMP_NTZ), with two rules chosen by the
+column's parquet type, never by its name: an INT64 TIMESTAMP(NANOS)
+column, which Spark's reader rejects, is read as its raw ``bigint`` and
+converted to microseconds (integer division, so a 19-digit value loses
+no µs); a legacy INT96 column, which pyarrow shows as a naive ns
+timestamp, reads as TIMESTAMP, as Spark infers it. The plan is taken
+per source fingerprint, so a table rewritten at another unit is read at
+its new one.
 """
 
 from __future__ import annotations
@@ -28,7 +31,7 @@ import hashlib
 import os
 import weakref
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -44,88 +47,6 @@ TABLES = (
     "documents",
     "embeddings",
 )
-
-# Physical read schema for events: ts as raw int64 nanoseconds.
-EVENTS_RAW_SCHEMA = T.StructType(
-    [
-        T.StructField("event_id", T.LongType()),
-        T.StructField("ts", T.LongType()),
-        T.StructField("user_id", T.LongType()),
-        T.StructField("event_type", T.StringType()),
-        T.StructField("value", T.DoubleType()),
-        T.StructField("props", T.StringType()),
-    ]
-)
-
-
-# Native read schema for events when ts is already a µs/ms timestamp
-# (file streams require an explicit schema, so both variants are here).
-EVENTS_NATIVE_SCHEMA = T.StructType(
-    [
-        T.StructField("event_id", T.LongType()),
-        T.StructField("ts", T.TimestampType()),
-        T.StructField("user_id", T.LongType()),
-        T.StructField("event_type", T.StringType()),
-        T.StructField("value", T.DoubleType()),
-        T.StructField("props", T.StringType()),
-    ]
-)
-
-def events_ts_unit(sf_dir: str) -> str:
-    """Timestamp unit of ``events.parquet``'s ``ts`` column ('ns', 'us',
-    'ms', 's'), read from the parquet footer of one part file. 'ns'
-    needs the raw-INT64 workaround; everything else reads natively.
-    Not cached: ``load_table`` reads it once per source fingerprint, on
-    a handle-cache miss, so a rewritten source is read at its new unit."""
-    import glob
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    path = os.path.join(sf_dir, "events.parquet")
-    if os.path.isdir(path):
-        parts = sorted(
-            glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True)
-        )
-        if not parts:
-            raise FileNotFoundError(f"no parquet part files under {path}")
-        path = parts[0]
-    pf = pq.ParquetFile(path)
-    # Legacy INT96 timestamps carry no unit annotation — pyarrow
-    # surfaces them as timestamp[ns], which would mis-route them to
-    # the raw-int64 reader. Detect the physical type and let Spark's
-    # native INT96 path read them instead.
-    pschema = pf.schema
-    ts_idx = next(
-        i for i in range(len(pschema)) if pschema.column(i).name == "ts"
-    )
-    if pschema.column(ts_idx).physical_type == "INT96":
-        return "int96"
-    field = pf.schema_arrow.field("ts")
-    if not pa.types.is_timestamp(field.type):
-        raise TypeError(
-            f"events.ts is {field.type}, expected a parquet timestamp"
-        )
-    return field.type.unit
-
-
-def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    unit = events_ts_unit(sf_dir)
-    if unit == "int96":
-        # Spark reads legacy INT96 into a native TimestampType itself;
-        # forcing a schema would fight the vectorized reader.
-        return spark.read.parquet(f"{sf_dir}/events.parquet")
-    if unit == "ns":
-        raw = spark.read.schema(EVENTS_RAW_SCHEMA).parquet(
-            f"{sf_dir}/events.parquet"
-        )
-        # Integer division — float division loses µs precision on
-        # 19-digit ns.
-        return raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    return spark.read.schema(EVENTS_NATIVE_SCHEMA).parquet(
-        f"{sf_dir}/events.parquet"
-    )
-
 
 # Per-session handle cache: re-creating a DataFrame re-reads parquet
 # footers and re-lists files; reusing the analyzed relation skips that
@@ -167,28 +88,47 @@ def source_fingerprint(path: str) -> str:
     return h.hexdigest()[:8]
 
 
-def footer_schema(spark: SparkSession, path: str) -> T.StructType | None:
-    """A read schema for the parquet source at ``path``, taken in-process
-    from the footer of its first part file instead of by a Spark job. A
-    scan given it has the schema ``spark.read.parquet(path)`` infers:
-    Spark's reader makes a given schema nullable throughout, as its
-    inference does, and timestamps without a UTC adjustment map to
-    TIMESTAMP_NTZ under the same session conf. None when there is no
-    part file or a top-level nanosecond timestamp (INT96 or
-    TIMESTAMP(NANOS), which Spark's inference maps differently): the
-    caller then lets Spark infer."""
+def read_plan(
+    spark: SparkSession, path: str
+) -> tuple[T.StructType | None, dict[str, Column]]:
+    """How to read the parquet source at ``path``: a read schema taken
+    in-process from the footer of its first data file, so opening the
+    source runs no schema-inference Spark job, and the conversions to
+    apply to the scan. For every column Spark can infer, the schema is
+    what ``spark.read.parquet(path)`` infers (a given schema is made
+    nullable throughout, as inference does, and timestamps without a
+    UTC adjustment map to TIMESTAMP_NTZ under the same session conf).
+    An INT96 column reads as TIMESTAMP. A top-level TIMESTAMP(NANOS)
+    column, which Spark's reader rejects, reads as ``bigint`` and is
+    converted to the microsecond timestamp type the same column would
+    infer at µs. The schema is None only when there is no data file."""
     import pyarrow as pa
     import pyarrow.parquet as pq
     from pyspark.sql.pandas.types import from_arrow_schema
 
     files = source_files(path)
     if not files:
-        return None
-    arrow = pq.read_schema(files[0])
-    if any(pa.types.is_timestamp(f.type) and f.type.unit == "ns" for f in arrow):
-        return None
+        return None, {}
+    footer = pq.ParquetFile(files[0])
+    leaves = map(footer.schema.column, range(len(footer.schema)))
+    physical = {c.path: c.physical_type for c in leaves}
     ntz = spark.conf.get("spark.sql.parquet.inferTimestampNTZ.enabled") == "true"
-    return from_arrow_schema(arrow, prefer_timestamp_ntz=ntz)
+    arrow, nanos = footer.schema_arrow, {}
+    for i, f in enumerate(arrow):
+        if physical.get(f.name) == "INT96":
+            # A tz-aware arrow timestamp maps to TIMESTAMP.
+            arrow = arrow.set(i, f.with_type(pa.timestamp("us", "UTC")))
+        elif pa.types.is_timestamp(f.type) and f.type.unit == "ns":
+            arrow = arrow.set(i, f.with_type(pa.int64()))
+            epoch = (
+                "TIMESTAMP_NTZ'1970-01-01 00:00:00'"
+                if ntz and f.type.tz is None
+                else "timestamp_micros(0)"
+            )
+            nanos[f.name] = F.expr(
+                f"timestampadd(MICROSECOND, `{f.name}` div 1000, {epoch})"
+            )
+    return from_arrow_schema(arrow, prefer_timestamp_ntz=ntz), nanos
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -201,10 +141,9 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     cached = per_session.get((sf_dir, name))
     if cached is not None and cached[0] == fingerprint:
         return cached[1]
-    if name == "events":
-        df = load_events(spark, sf_dir)
-    else:
-        schema = footer_schema(spark, path)
-        df = (spark.read if schema is None else spark.read.schema(schema)).parquet(path)
+    schema, nanos = read_plan(spark, path)
+    df = (spark.read if schema is None else spark.read.schema(schema)).parquet(path)
+    if nanos:
+        df = df.withColumns(nanos)
     per_session[(sf_dir, name)] = (fingerprint, df)
     return df

@@ -80,7 +80,7 @@ def aggregate_at_grain(events: DataFrame, secs: int) -> DataFrame:
             "user_id",
             F.col("value").cast("decimal(12,2)").alias("v"),
             (
-                F.floor(F.expr("unix_micros(ts) div 1000000") / secs) * secs
+                F.floor(F.expr("unix_micros(CAST(ts AS TIMESTAMP)) div 1000000") / secs) * secs
             ).cast("long").alias("bucket"),
         )
         .groupBy("event_type", "bucket")
@@ -115,14 +115,14 @@ def refresh_dirty_buckets(
     never read.
     """
     bucket_of = (
-        F.floor(F.expr("unix_micros(ts) div 1000000") / secs) * secs
+        F.floor(F.expr("unix_micros(CAST(ts AS TIMESTAMP)) div 1000000") / secs) * secs
     ).cast("long")
     dirty = delta.select("event_type", bucket_of.alias("bucket")).distinct()
     min_bucket = dirty.agg(F.min("bucket")).collect()[0][0]
     if min_bucket is None:  # empty delta: nothing to refresh
         return existing
     recomputed = aggregate_at_grain(
-        all_events.where(F.expr("unix_micros(ts) div 1000000") >= min_bucket),
+        all_events.where(F.expr("unix_micros(CAST(ts AS TIMESTAMP)) div 1000000") >= min_bucket),
         secs,
     ).join(F.broadcast(dirty), ["event_type", "bucket"], "left_semi")
     kept = existing.join(

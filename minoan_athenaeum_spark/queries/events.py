@@ -4,8 +4,12 @@ These are the batch-semantics twins of the Structured Streaming
 operators in ``minoan_athenaeum_spark/streaming/`` (same windowing
 logic; streaming adds watermarks/state). Window starts are emitted as
 epoch seconds (BIGINT) so Spark and DuckDB compare exactly regardless of
-timestamp-type plumbing (events.parquet is TIMESTAMP(NANOS), which
-Spark cannot read natively — see catalog.load_events).
+timestamp-type plumbing. ``events.ts`` is read like every other column,
+through ``catalog.read_plan``: the testdata's TIMESTAMP(MICROS) without
+a UTC adjustment loads as TIMESTAMP_NTZ, and a TIMESTAMP(NANOS) copy
+gives the same rows. ``unix_micros`` takes a TIMESTAMP, so epoch-µs
+arithmetic casts ``ts`` first (the session time zone is UTC, so the
+value is unchanged).
 """
 
 from __future__ import annotations
@@ -106,7 +110,7 @@ def evt_sessionize(spark, sf_dir):
     running sum — batch twin of streaming session windows. Integer-µs
     arithmetic keeps both engines exact."""
     e = t(spark, sf_dir, "events").select(
-        "user_id", "event_id", F.unix_micros(F.col("ts")).alias("us")
+        "user_id", "event_id", F.unix_micros(F.col("ts").cast("timestamp")).alias("us")
     )
     w = W.partitionBy("user_id").orderBy("us", "event_id")
     x = e.withColumn(

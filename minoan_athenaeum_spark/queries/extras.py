@@ -577,7 +577,7 @@ def misc_compaction_roundtrip(spark, sf_dir):
     if not os.path.exists(os.path.join(compacted, "_SUCCESS")):
         ev = t(spark, sf_dir, "events").select(
             "event_id",
-            F.unix_micros("ts").alias("us"),
+            F.unix_micros(F.col("ts").cast("timestamp")).alias("us"),
             "event_type",
             (F.col("value").cast("decimal(12,2)") * 100)
             .cast("bigint")
@@ -816,7 +816,7 @@ def misc_zorder_roundtrip(spark, sf_dir):
     if not os.path.exists(os.path.join(out, "_SUCCESS")):
         ev = t(spark, sf_dir, "events").select(
             "event_id",
-            F.unix_micros("ts").alias("us"),
+            F.unix_micros(F.col("ts").cast("timestamp")).alias("us"),
             "event_type",
             "user_id",
             (F.col("value").cast("decimal(12,2)") * 100)

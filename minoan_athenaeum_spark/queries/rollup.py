@@ -139,11 +139,11 @@ def rollup_incremental_refresh(spark, sf_dir):
 
     ev = load_table(spark, sf_dir, "events")
     max_day = ev.agg(
-        F.max(F.expr("unix_micros(ts) div 1000000 div 86400"))
+        F.max(F.expr("unix_micros(CAST(ts AS TIMESTAMP)) div 1000000 div 86400"))
     ).collect()[0][0]
     split_us = (max_day - 1) * 86400 * 1_000_000  # last 2 calendar days
-    base = ev.where(F.expr("unix_micros(ts)") < split_us)
-    delta = ev.where(F.expr("unix_micros(ts)") >= split_us)
+    base = ev.where(F.expr("unix_micros(CAST(ts AS TIMESTAMP))") < split_us)
+    delta = ev.where(F.expr("unix_micros(CAST(ts AS TIMESTAMP))") >= split_us)
 
     existing = aggregate_at_grain(base, 3600)
     merged = refresh_dirty_buckets(existing, ev, delta, 3600)

@@ -16,9 +16,11 @@ from minoan_athenaeum_spark.sources.index_family import (
     warehouse_index_path,
 )
 from minoan_athenaeum_spark.streaming.ops import (
-    read_events_stream,
+    fold_arrivals_into_copy,
+    read_stream,
     run_to_memory,
     tumbling_counts,
+    watermarked,
 )
 
 _counter = itertools.count()
@@ -39,7 +41,7 @@ def stream_tumbling_exec(spark, sf_dir):
     (availableNow drain), checked against the same DuckDB oracle as the
     batch twin evt_tumbling_window — proving batch/stream result parity
     through the driver's own gate."""
-    stream = tumbling_counts(read_events_stream(spark, sf_dir))
+    stream = tumbling_counts(read_stream(spark, sf_dir, "events"))
     name = f"q_stream_tumbling_{next(_counter)}"
     return run_to_memory(stream, name, mode="complete")
 
@@ -62,7 +64,7 @@ def stream_sliding_exec(spark, sf_dir):
     cross join in SQL."""
     from minoan_athenaeum_spark.streaming.ops import sliding_counts
 
-    stream = sliding_counts(read_events_stream(spark, sf_dir))
+    stream = sliding_counts(read_stream(spark, sf_dir, "events"))
     name = f"q_stream_sliding_{next(_counter)}"
     return run_to_memory(stream, name, mode="complete")
 
@@ -96,7 +98,7 @@ def stream_session_exec(spark, sf_dir):
     hence the >= gap comparison."""
     from minoan_athenaeum_spark.streaming.ops import session_windows
 
-    stream = session_windows(read_events_stream(spark, sf_dir))
+    stream = session_windows(read_stream(spark, sf_dir, "events"))
     name = f"q_stream_session_{next(_counter)}"
     return run_to_memory(stream, name, mode="complete")
 
@@ -136,7 +138,7 @@ def stream_stateful_totals_exec(spark, sf_dir):
 
     from minoan_athenaeum_spark.streaming.stateful import user_running_totals
 
-    cents = read_events_stream(spark, sf_dir).withColumn(
+    cents = read_stream(spark, sf_dir, "events").withColumn(
         "value",
         (F.col("value").cast("decimal(12,2)") * 100).cast("long").cast("double"),
     )
@@ -179,7 +181,7 @@ def stream_idempotent_sink_exec(spark, sf_dir):
         warehouse_index_path(spark, sf_dir, "mas_idem_sink", "events")
     )
     out, ckpt = f"{base}/out", f"{base}/ckpt"
-    stream = read_events_stream(spark, sf_dir)
+    stream = read_stream(spark, sf_dir, "events")
     run_with_idempotent_sink(stream, out, ckpt)
     from pyspark.sql import functions as F
 
@@ -214,22 +216,18 @@ def stream_static_join_exec(spark, sf_dir):
 
     At scale the static dim is the broadcast side, so the stream never
     shuffles for the join — only for the windowed aggregate."""
-    from minoan_athenaeum_spark.catalog import load_events
-    from minoan_athenaeum_spark.streaming.ops import (
-        read_events_stream,
-        run_to_memory,
-    )
     from pyspark.sql import functions as F
 
+    from minoan_athenaeum_spark.catalog import load_table
+
     segments = (
-        load_events(spark, sf_dir)
+        load_table(spark, sf_dir, "events")
         .select("user_id")
         .distinct()
         .withColumn("segment", F.col("user_id") % 4)
     )
     stream = (
-        read_events_stream(spark, sf_dir)
-        .withWatermark("ts", "2 hours")
+        watermarked(read_stream(spark, sf_dir, "events"), "ts", "2 hours")
         .join(F.broadcast(segments), "user_id")
         .groupBy(F.window("ts", "1 hour"), "segment")
         .agg(F.count("*").alias("cnt"))
@@ -266,30 +264,27 @@ def stream_stream_join_exec(spark, sf_dir):
     join."""
     from pyspark.sql import functions as F
 
-    from minoan_athenaeum_spark.streaming.ops import (
-        read_events_stream,
-        run_to_memory,
-    )
-
-    p = (
-        read_events_stream(spark, sf_dir)
+    p = watermarked(
+        read_stream(spark, sf_dir, "events")
         .filter(F.col("event_type") == "purchase")
         .select(
             F.col("event_id").alias("purchase_id"),
             F.col("user_id").alias("p_user"),
             F.col("ts").alias("p_ts"),
-        )
-        .withWatermark("p_ts", "2 hours")
+        ),
+        "p_ts",
+        "2 hours",
     )
-    c = (
-        read_events_stream(spark, sf_dir)
+    c = watermarked(
+        read_stream(spark, sf_dir, "events")
         .filter(F.col("event_type") == "click")
         .select(
             F.col("event_id").alias("click_id"),
             F.col("user_id").alias("c_user"),
             F.col("ts").alias("c_ts"),
-        )
-        .withWatermark("c_ts", "2 hours")
+        ),
+        "c_ts",
+        "2 hours",
     )
     joined = p.join(
         c,
@@ -330,11 +325,11 @@ def stream_dedup_exec(spark, sf_dir):
     the watermark horizon; the doubling is map-side."""
     from pyspark.sql import functions as F
 
-    ev = read_events_stream(spark, sf_dir)
+    ev = read_stream(spark, sf_dir, "events")
     doubled = ev.withColumn(
         "_copy", F.explode(F.array(F.lit(0), F.lit(1)))
     ).drop("_copy")
-    deduped = doubled.withWatermark("ts", "10 days").dropDuplicatesWithinWatermark(
+    deduped = watermarked(doubled, "ts", "10 days").dropDuplicatesWithinWatermark(
         ["event_id"]
     )
     out = deduped.select(
@@ -386,7 +381,7 @@ def stream_rollup_refresh_exec(spark, sf_dir):
     base = scratch_dir(
         warehouse_index_path(spark, sf_dir, "mas_stream_rollup", "events")
     )
-    stream = read_events_stream(spark, sf_dir, max_files_per_trigger=1)
+    stream = read_stream(spark, sf_dir, "events", max_files_per_trigger=1)
     latest = run_with_rollup_refresh(stream, base, 3600)
     out = spark.read.parquet(latest)
     return out.select(
@@ -436,36 +431,32 @@ def stream_stream_left_join_exec(spark, sf_dir):
     """
     from pyspark.sql import functions as F
 
-    from minoan_athenaeum_spark.streaming.ops import (
-        read_events_stream,
-        run_to_memory,
-    )
-
     # The cutoff filter sits AFTER the watermark node: filtering first
     # would cap the purchase-side watermark at cutoff - 2 h, and the
     # global watermark (min of both inputs) would strand the last
     # pre-cutoff unmatched purchase in state (observed: exactly one
     # missing outer row per SF before this ordering was fixed).
-    p = (
-        read_events_stream(spark, sf_dir)
+    p = watermarked(
+        read_stream(spark, sf_dir, "events")
         .filter(F.col("event_type") == "purchase")
         .select(
             F.col("event_id").alias("purchase_id"),
             F.col("user_id").alias("p_user"),
             F.col("ts").alias("p_ts"),
-        )
-        .withWatermark("p_ts", "2 hours")
-        .filter(F.col("p_ts") < F.lit("2024-01-28 00:00:00").cast("timestamp"))
-    )
-    c = (
-        read_events_stream(spark, sf_dir)
+        ),
+        "p_ts",
+        "2 hours",
+    ).filter(F.col("p_ts") < F.lit("2024-01-28 00:00:00").cast("timestamp"))
+    c = watermarked(
+        read_stream(spark, sf_dir, "events")
         .filter(F.col("event_type") == "click")
         .select(
             F.col("event_id").alias("click_id"),
             F.col("user_id").alias("c_user"),
             F.col("ts").alias("c_ts"),
-        )
-        .withWatermark("c_ts", "2 hours")
+        ),
+        "c_ts",
+        "2 hours",
     )
     joined = p.join(
         c,
@@ -526,10 +517,9 @@ def stream_quality_gate_exec(spark, sf_dir):
         feature_frame,
         logit_expr,
     )
-    from minoan_athenaeum_spark.streaming.ops import read_documents_stream
 
     w = averaged_weights(spark, sf_dir)
-    stream = read_documents_stream(spark, sf_dir)
+    stream = read_stream(spark, sf_dir, "documents")
     feats = feature_frame(stream, with_id=True)
     logit = logit_expr(w)
     gated = feats.select(
@@ -623,7 +613,6 @@ def stream_minhash_dedup_exec(spark, sf_dir):
         hashed_shingles,
         shingled,
     )
-    from minoan_athenaeum_spark.streaming.ops import read_documents_stream
 
     idx_path = ensure_minhash_index(spark, sf_dir)
     snap = read_manifest(idx_path)
@@ -700,7 +689,7 @@ def stream_minhash_dedup_exec(spark, sf_dir):
         finally:
             batch_sh.unpersist()
 
-    stream = read_documents_stream(spark, sf_dir)
+    stream = read_stream(spark, sf_dir, "documents")
     q = (
         stream.writeStream.foreachBatch(gate)
         .option("checkpointLocation", ckpt)
@@ -741,37 +730,18 @@ def stream_bm25_index_append_exec(spark, sf_dir):
     Replay safety: each fold passes its micro-batch id, so a batch
     replayed from the checkpoint is a no-op append (the id is already
     in the index manifest)."""
-    import shutil
-
-    from pyspark.sql import functions as F
-
     from minoan_athenaeum_spark.queries.text import bm25_serve_from_index
     from minoan_athenaeum_spark.sources.posting_sink import (
         append_to_bm25_index,
         ensure_bm25_index,
     )
-    from minoan_athenaeum_spark.streaming.ops import read_documents_stream
 
-    base = ensure_bm25_index(spark, sf_dir, slice_="existing")
-    work = scratch_dir(base + "_streamwork")
-    ckpt = scratch_dir(work + "_ckpt")
-    shutil.copytree(base, work)
-
-    def fold(batch_df, batch_id: int) -> None:
-        batch = batch_df.filter(F.col("doc_id") % 10 == 0)
-        if batch.isEmpty():
-            return
-        append_to_bm25_index(spark, work, batch, batch_id=batch_id)
-
-    stream = read_documents_stream(spark, sf_dir)
-    q = (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    work = fold_arrivals_into_copy(
+        spark,
+        sf_dir,
+        ensure_bm25_index(spark, sf_dir, slice_="existing"),
+        append_to_bm25_index,
     )
-    q.awaitTermination()
     return bm25_serve_from_index(spark, work)
 
 
@@ -810,8 +780,6 @@ def stream_novelty_gate_exec(spark, sf_dir):
     Replay safety: each fold passes its micro-batch id, so a batch
     replayed from the checkpoint is a no-op append (the id is already
     in the index manifest)."""
-    import shutil
-
     from pyspark.sql import functions as F
 
     from minoan_athenaeum_spark.operators.text import ngram_structs, tokens
@@ -823,28 +791,10 @@ def stream_novelty_gate_exec(spark, sf_dir):
         merge_grams,
     )
     from minoan_athenaeum_spark.sources.index_family import read_table
-    from minoan_athenaeum_spark.streaming.ops import read_documents_stream
 
-    base = ensure_gram_index(spark, sf_dir)
-    work = scratch_dir(base + "_streamwork")
-    ckpt = scratch_dir(work + "_ckpt")
-    shutil.copytree(base, work)
-
-    def fold(batch_df, batch_id: int) -> None:
-        batch = batch_df.filter(F.col("doc_id") % 10 == 0)
-        if batch.isEmpty():
-            return
-        append_to_gram_index(spark, work, batch, batch_id=batch_id)
-
-    stream = read_documents_stream(spark, sf_dir)
-    q = (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    work = fold_arrivals_into_copy(
+        spark, sf_dir, ensure_gram_index(spark, sf_dir), append_to_gram_index
     )
-    q.awaitTermination()
 
     # Serve from the min-merged index: novel-gram counts per batch doc
     # are one lean index aggregate; per-doc totals are a batch-only
@@ -933,8 +883,6 @@ def stream_lines_gate_exec(spark, sf_dir):
     Replay safety: each fold passes its micro-batch id, so a batch
     replayed from the checkpoint is a no-op append (the id is already
     in the index manifest)."""
-    import shutil
-
     from pyspark.sql import functions as F
 
     from minoan_athenaeum_spark.queries._util import t
@@ -944,28 +892,10 @@ def stream_lines_gate_exec(spark, sf_dir):
         doc_lines,
         ensure_line_index,
     )
-    from minoan_athenaeum_spark.streaming.ops import read_documents_stream
 
-    base = ensure_line_index(spark, sf_dir)
-    work = scratch_dir(base + "_streamwork")
-    ckpt = scratch_dir(work + "_ckpt")
-    shutil.copytree(base, work)
-
-    def fold(batch_df, batch_id: int) -> None:
-        batch = batch_df.filter(F.col("doc_id") % 10 == 0)
-        if batch.isEmpty():
-            return
-        append_to_line_index(spark, work, batch, batch_id=batch_id)
-
-    stream = read_documents_stream(spark, sf_dir)
-    q = (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    work = fold_arrivals_into_copy(
+        spark, sf_dir, ensure_line_index(spark, sf_dir), append_to_line_index
     )
-    q.awaitTermination()
 
     # Serve from the min-merged index (which now CONTAINS the batch
     # generations): the global owner of each batch fingerprint is one

@@ -44,7 +44,7 @@ def ts_asof_join(spark, sf_dir):
     composition in operators/timeseries.py — one shuffle on user_id,
     no nested loop (the scale-correct as-of plan)."""
     e = t(spark, sf_dir, "events").select(
-        "user_id", "event_id", "event_type", F.unix_micros(F.col("ts")).alias("us")
+        "user_id", "event_id", "event_type", F.unix_micros(F.col("ts").cast("timestamp")).alias("us")
     )
     purchases = e.filter(F.col("event_type") == "purchase").select(
         "user_id", F.col("event_id").alias("purchase_id"), F.col("us").alias("purchase_us")
@@ -79,12 +79,12 @@ def ts_range_join(spark, sf_dir):
     errors = e.filter(F.col("event_type") == "error").select(
         F.col("event_id").alias("err_id"),
         F.col("user_id"),
-        F.unix_micros(F.col("ts")).alias("err_us"),
+        F.unix_micros(F.col("ts").cast("timestamp")).alias("err_us"),
     )
     purchases = e.filter(F.col("event_type") == "purchase").select(
         F.col("event_id").alias("pur_id"),
         F.col("user_id").alias("p_user_id"),
-        F.unix_micros(F.col("ts")).alias("pur_us"),
+        F.unix_micros(F.col("ts").cast("timestamp")).alias("pur_us"),
     )
     j = banded_range_join(
         errors.withColumnRenamed("user_id", "uid"),
@@ -126,7 +126,7 @@ def ts_resample_gapfill(spark, sf_dir):
     aggregated actuals, zero-fill the gaps."""
     e = t(spark, sf_dir, "events").filter(F.col("user_id") < 5).select(
         "user_id",
-        F.unix_micros(F.col("ts")).alias("us"),
+        F.unix_micros(F.col("ts").cast("timestamp")).alias("us"),
         "value",
     )
     out = resample_gapfill(

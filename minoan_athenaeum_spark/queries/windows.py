@@ -96,13 +96,13 @@ def win_time_range_moving_sum(spark, sf_dir):
     self-join-per-row (the naive SQL-92 formulation)."""
     w = (
         W.partitionBy("user_id")
-        .orderBy(F.unix_micros(F.col("ts")))
+        .orderBy(F.unix_micros(F.col("ts").cast("timestamp")))
         .rangeBetween(-3_600_000_000, 0)
     )
     e = t(spark, sf_dir, "events").filter(F.col("user_id") <= 200)
     return e.select(
         "user_id",
-        F.unix_micros(F.col("ts")).alias("ts_us"),
+        F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"),
         F.sum(dec(F.col("value"), 12, 2)).over(w).cast("double").alias("hour_sum"),
         F.count("*").over(w).alias("n_in_hour"),
     )

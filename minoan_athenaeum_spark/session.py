@@ -39,10 +39,9 @@ def get_spark(
         .config("spark.sql.shuffle.partitions", str(int(cpus)))
         .config("spark.sql.session.timeZone", "UTC")
         # Write timestamps as INT64 micros, never legacy INT96: INT96
-        # loses the unit annotation (footer-based unit detection in
-        # catalog.events_ts_unit can't see it) and is deprecated in the
-        # parquet spec. Derived copies (compaction, sinks) must stay
-        # loadable by the same catalog.
+        # carries neither a unit nor a UTC-adjustment annotation and is
+        # deprecated in the parquet spec. Derived copies (compaction,
+        # sinks) then keep the annotations catalog.read_plan reads.
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
         # Arrow for any pandas-UDF path and fast toPandas.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

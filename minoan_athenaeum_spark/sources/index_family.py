@@ -9,8 +9,9 @@ lives in the Spark warehouse. This module holds two layers:
 1. :func:`warehouse_index_path` — the path/freshness convention for all
    of them (warehouse dir + sf_dir tag + source-parquet fingerprint, so
    a changed source resolves to a new path and stale derived data is
-   never served), and :func:`scratch_dir`, the one place a per-run
-   scratch directory is wiped.
+   never served; the first resolve of a new path deletes the copies
+   derived from the source's earlier states), and :func:`scratch_dir`,
+   the one place a per-run scratch directory is wiped.
 
 2. Snapshot manifests — six index families (LSH bands and shingles,
    BM25 postings, IVF cells, first-occurrence grams, line fingerprints,
@@ -41,6 +42,7 @@ from __future__ import annotations
 import hashlib
 import json
 import os
+import re
 import shutil
 import uuid
 from collections.abc import Callable
@@ -64,10 +66,11 @@ def warehouse_index_path(
     a local filesystem (derived data lives on local disk). Folding the
     source fingerprint into the name is the freshness contract — a
     regenerated source parquet resolves to a NEW path, so stale derived
-    data is simply never served. ``params`` carries family
-    hyper-parameters that change index CONTENT (gram length n, line
-    length L, corpus slice) so one setting's index can never be served
-    for another."""
+    data is never served, and resolving that new path for the first
+    time deletes the stale copies (:func:`_drop_stale`; a missing
+    source deletes nothing). ``params`` carries family hyper-parameters
+    that change index CONTENT (gram length n, line length L, corpus
+    slice) so one setting's index can never be served for another."""
     from minoan_athenaeum_spark.catalog import source_fingerprint
 
     wh = spark.conf.get("spark.sql.warehouse.dir", "")
@@ -76,9 +79,38 @@ def warehouse_index_path(
     elif "://" in wh:
         raise RuntimeError("a persisted index needs a local warehouse dir")
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    fresh = source_fingerprint(f"{sf_dir}/{source_table}.parquet")
+    source = f"{sf_dir}/{source_table}.parquet"
+    fresh = source_fingerprint(source)
     mid = f"_{params}" if params else ""
-    return os.path.join(wh, f"{prefix}_{tag}{mid}_{fresh}")
+    path = os.path.join(wh, f"{prefix}_{tag}{mid}_{fresh}")
+    if not os.path.exists(path) and os.path.exists(source):
+        _drop_stale(wh, f"{prefix}_{tag}{mid}_", fresh)
+    return path
+
+
+# Suffixes a query appends to a derived directory's name for its
+# scratch copies, checkpoints and work dirs, possibly chained
+# (``<index>_streamwork_ckpt``).
+_SCRATCH_SUFFIXES = ("_streamwork", "_ckpt", "_gatework", "_appendwork", "_compactwork")
+
+
+def _drop_stale(wh: str, stem: str, fresh: str) -> None:
+    """Delete every ``<stem><fingerprint>`` directory in ``wh`` whose
+    fingerprint is not ``fresh``, with its scratch directories: the
+    source was rewritten, so nothing resolves to them again. A name
+    with any other suffix (a different ``params``, a copy such as
+    ``<index>_warmup``) is left alone."""
+    stale = re.compile(
+        re.escape(stem) + r"([0-9a-f]{8})(?:" + "|".join(_SCRATCH_SUFFIXES) + ")*"
+    )
+    try:
+        names = os.listdir(wh)
+    except FileNotFoundError:
+        return
+    for name in names:
+        m = stale.fullmatch(name)
+        if m and m.group(1) != fresh:
+            shutil.rmtree(os.path.join(wh, name), ignore_errors=True)
 
 
 def scratch_dir(path: str) -> str:

@@ -42,10 +42,6 @@ def write_parquet(
     writer.parquet(path)
 
 
-def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
-
-
 def zorder_key(*cols, bits: int = 16):
     """Morton (Z-order) key over N non-negative integer columns:
     interleave the low ``bits`` bits of each — bit i of column j lands

@@ -36,7 +36,7 @@ def _events_text_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     return ev.select(
         "event_id",
-        F.unix_micros("ts").alias("us"),
+        F.unix_micros(F.col("ts").cast("timestamp")).alias("us"),
         "user_id",
         "event_type",
         (F.col("value").cast("decimal(12,2)") * 100)

@@ -19,13 +19,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from minoan_athenaeum_spark.catalog import (
-    EVENTS_NATIVE_SCHEMA,
-    EVENTS_RAW_SCHEMA,
-    events_ts_unit,
-    load_table,
+from minoan_athenaeum_spark.catalog import read_plan
+from minoan_athenaeum_spark.sources.index_family import (
+    scratch_dir,
+    warehouse_index_path,
 )
-from minoan_athenaeum_spark.sources.index_family import warehouse_index_path
 
 
 def _stream_dir(spark: SparkSession, sf_dir: str, table: str) -> str:
@@ -51,22 +49,33 @@ def _stream_dir(spark: SparkSession, sf_dir: str, table: str) -> str:
     return d
 
 
-def read_events_stream(
-    spark: SparkSession, sf_dir: str, max_files_per_trigger: int | None = None
+def read_stream(
+    spark: SparkSession,
+    sf_dir: str,
+    table: str,
+    max_files_per_trigger: int | None = None,
 ) -> DataFrame:
-    """events.parquet as a file-source stream, with the same
-    footer-detected ts-unit handling as the batch catalog (ns needs the
-    raw-INT64 → µs conversion; µs/ms read natively)."""
-    is_ns = events_ts_unit(sf_dir) == "ns"
-    reader = spark.readStream.schema(
-        EVENTS_RAW_SCHEMA if is_ns else EVENTS_NATIVE_SCHEMA
-    )
+    """``<table>.parquet`` as a file-source stream, read through the same
+    footer plan as the batch catalog (``catalog.read_plan``): the same
+    schema and the same timestamp conversions, so a stream and
+    ``load_table`` give identical rows."""
+    schema, nanos = read_plan(spark, f"{sf_dir}/{table}.parquet")
+    if schema is None:
+        raise FileNotFoundError(f"no parquet data files for {table} under {sf_dir}")
+    reader = spark.readStream.schema(schema)
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    raw = reader.format("parquet").load(_stream_dir(spark, sf_dir, "events"))
-    if is_ns:
-        return raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    return raw
+    df = reader.format("parquet").load(_stream_dir(spark, sf_dir, table))
+    return df.withColumns(nanos) if nanos else df
+
+
+def watermarked(df: DataFrame, col: str, delay: str) -> DataFrame:
+    """``df.withWatermark(col, delay)``, with ``col`` cast to TIMESTAMP
+    first: Spark keeps event time only on a TIMESTAMP column, and the
+    catalog reads a timestamp stored without a UTC adjustment (the
+    events testdata's ``ts``) as TIMESTAMP_NTZ, as Spark infers it. In
+    the engine's UTC session the cast keeps every value."""
+    return df.withColumn(col, F.col(col).cast("timestamp")).withWatermark(col, delay)
 
 
 def tumbling_counts(
@@ -76,7 +85,7 @@ def tumbling_counts(
     beyond the watermark are dropped; state for closed windows is
     evicted (bounded state at scale)."""
     return (
-        events.withWatermark("ts", watermark)
+        watermarked(events, "ts", watermark)
         .groupBy(F.window("ts", window), "event_type")
         .agg(
             F.count("*").alias("cnt"),
@@ -96,7 +105,7 @@ def tumbling_counts(
 def sliding_counts(events: DataFrame) -> DataFrame:
     """1-hour windows sliding every 15 min (watermarked)."""
     return (
-        events.withWatermark("ts", "2 hours")
+        watermarked(events, "ts", "2 hours")
         .groupBy(F.window("ts", "1 hour", "15 minutes"), "event_type")
         .agg(F.count("*").alias("cnt"))
         .select(
@@ -111,7 +120,7 @@ def session_windows(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
     """Native session windows (gap-based) per user — the streaming
     analogue of queries/events.py::evt_sessionize."""
     return (
-        events.withWatermark("ts", "2 hours")
+        watermarked(events, "ts", "2 hours")
         .groupBy(F.session_window("ts", gap), "user_id")
         .agg(F.count("*").alias("n_events"))
         .select(
@@ -125,7 +134,7 @@ def session_windows(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
 def streaming_dedup(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
     """Stateful exact dedup on event_id within the watermark horizon
     (dropDuplicates keeps first arrival; state bounded by watermark)."""
-    return events.withWatermark("ts", watermark).dropDuplicates(["event_id"])
+    return watermarked(events, "ts", watermark).dropDuplicates(["event_id"])
 
 
 def idempotent_parquet_writer(out_dir: str):
@@ -260,14 +269,34 @@ def run_with_rollup_refresh(
     return state["latest"]
 
 
-def read_documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """documents.parquet as a file-source stream (same directory /
-    symlink handling as the events stream) — the ingest side of a
-    streaming corpus pipeline. The schema is the catalog's, pinned from
-    the footer."""
-    schema = load_table(spark, sf_dir, "documents").schema
-    return (
-        spark.readStream.schema(schema)
-        .format("parquet")
-        .load(_stream_dir(spark, sf_dir, "documents"))
+def fold_arrivals_into_copy(spark: SparkSession, sf_dir: str, base: str, append) -> str:
+    """Streaming index maintenance: drain the documents stream
+    (availableNow) into a scratch copy of the persisted index at
+    ``base``, passing each micro-batch's arriving documents
+    (``doc_id % 10 == 0``) to ``append(spark, copy, batch,
+    batch_id=batch_id)``; a batch with none is skipped. Returns the
+    copy's path. The copy and its checkpoint are wiped first, so the
+    drain always replays every batch; a batch replayed from the
+    checkpoint is a no-op append, since its id is already in the copy's
+    manifest."""
+    import shutil
+
+    work = scratch_dir(base + "_streamwork")
+    ckpt = scratch_dir(work + "_ckpt")
+    shutil.copytree(base, work)
+
+    def fold(batch_df: DataFrame, batch_id: int) -> None:
+        batch = batch_df.filter(F.col("doc_id") % 10 == 0)
+        if not batch.isEmpty():
+            append(spark, work, batch, batch_id=batch_id)
+
+    q = (
+        read_stream(spark, sf_dir, "documents")
+        .writeStream.foreachBatch(fold)
+        .option("checkpointLocation", ckpt)
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
     )
+    q.awaitTermination()
+    return work

@@ -153,9 +153,11 @@ def session_summaries_with_timers(events: DataFrame, gap_s: int = 1800) -> DataF
     event-time timers (output: user_id, start_us, n_events)."""
     from pyspark.sql import functions as F
 
+    from minoan_athenaeum_spark.streaming.ops import watermarked
+
     proc = SessionTimerProcessor(gap_s)
     keyed = (
-        events.withWatermark("ts", "0 seconds")
+        watermarked(events, "ts", "0 seconds")
         .select("ts", "user_id", F.unix_micros(F.col("ts")).alias("us"))
         .groupBy("user_id")
     )

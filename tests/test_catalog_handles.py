@@ -16,8 +16,9 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
-from minoan_athenaeum_spark.catalog import TABLES, footer_schema, load_table
+from minoan_athenaeum_spark.catalog import TABLES, load_table, read_plan
 from minoan_athenaeum_spark.engine import Athenaeum
+from minoan_athenaeum_spark.streaming.ops import read_stream, run_to_memory
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -65,10 +66,21 @@ def test_pinned_schema_equals_inferred(spark, which, sf_dir, datagen_dir, spark_
     for name in names:
         path = f"{d}/{name}.parquet"
         inferred = spark.read.parquet(path).schema
-        pinned = spark.read.schema(footer_schema(spark, path)).parquet(path)
+        pinned = spark.read.schema(read_plan(spark, path)[0]).parquet(path)
         assert pinned.schema == inferred, name
-        if name != "events":  # events has its own timestamp-unit path
-            assert load_table(spark, d, name).schema == inferred, name
+        assert load_table(spark, d, name).schema == inferred, name
+
+
+def test_extra_column_survives_batch_and_stream(spark, sf_dir, tmp_path):
+    t = pq.read_table(f"{sf_dir}/events.parquet")
+    t = t.append_column("country", pa.array(["gr"] * len(t)))
+    pq.write_table(t, tmp_path / "events.parquet")
+    d = str(tmp_path)
+    batch = load_table(spark, d, "events")
+    assert batch.columns == t.column_names
+    stream = run_to_memory(read_stream(spark, d, "events"), "extra_column", mode="append")
+    assert stream.columns == t.column_names
+    assert sorted(stream.collect(), key=repr) == sorted(batch.collect(), key=repr)
 
 
 def test_load_table_runs_no_job(spark, sf_dir, tmp_path, jobs_run):

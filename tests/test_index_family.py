@@ -139,6 +139,42 @@ def test_append_order_commutes(spark, tmp_path, order):
     assert _served(spark, path) == {("en", 8), ("de", 3)}
 
 
+def test_rewritten_source_drops_stale_derived_dirs(spark, tmp_path):
+    """Resolving the path of a rewritten source deletes the derived dirs
+    of its earlier state, scratch dirs included, and nothing else."""
+    import shutil
+
+    from minoan_athenaeum_spark.catalog import source_fingerprint
+
+    (tmp_path / "a").mkdir()
+    (tmp_path / "b").mkdir()
+    sf = _docs(tmp_path / "a", [(1, "a", "en", "s")])
+    sf_other = _docs(tmp_path / "b", [(1, "a", "en", "s")])
+
+    def resolve(d, params="m1"):
+        return warehouse_index_path(spark, d, "mas_testidx", "documents", params)
+
+    old = resolve(sf)
+    suffixes = ("", "_streamwork", "_streamwork_ckpt", "_gatework", "_appendwork", "_compactwork")
+    stale = [old + suffix for suffix in suffixes]
+    kept = [resolve(sf, "m2"), resolve(sf_other)]
+    pd.DataFrame(
+        [(9, "b", "de", "s"), (10, "c", "fr", "s")], columns=["doc_id", "text", "lang", "source"]
+    ).to_parquet(f"{sf}/documents.parquet", index=False)
+    fresh = source_fingerprint(f"{sf}/documents.parquet")
+    current = old[: -len(fresh)] + fresh
+    kept += [current + "_streamwork", current + "_warmup"]
+    for d in stale + kept:
+        os.makedirs(d)
+    try:
+        assert resolve(sf) == current
+        assert [d for d in stale if os.path.exists(d)] == []
+        assert [d for d in kept if not os.path.exists(d)] == []
+    finally:
+        for d in stale + kept:
+            shutil.rmtree(d, ignore_errors=True)
+
+
 def test_non_local_warehouse_raises():
     class Conf:
         def get(self, key, default=None):

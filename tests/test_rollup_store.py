@@ -2,7 +2,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from minoan_athenaeum_spark.catalog import load_events
+from minoan_athenaeum_spark.catalog import load_table
 from minoan_athenaeum_spark.operators.rollup_store import (
     build_rollups,
     pick_grain,
@@ -18,7 +18,7 @@ def test_pick_grain():
 
 
 def test_rollup_matches_raw_recompute(spark, sf_dir, tmp_path):
-    events = load_events(spark, sf_dir)
+    events = load_table(spark, sf_dir, "events")
     out = str(tmp_path / "rollups")
     build_rollups(events, out)
 
@@ -29,7 +29,7 @@ def test_rollup_matches_raw_recompute(spark, sf_dir, tmp_path):
     raw = (
         events.select(
             "event_type",
-            (F.floor(F.expr("unix_micros(ts) div 1000000") / 21600) * 21600)
+            (F.floor(F.expr("unix_micros(CAST(ts AS TIMESTAMP)) div 1000000") / 21600) * 21600)
             .cast("long")
             .alias("bucket"),
             F.col("value").cast("decimal(12,2)").alias("v"),
@@ -44,7 +44,7 @@ def test_rollup_partition_pruning(spark, sf_dir, tmp_path):
     import contextlib
     import io
 
-    events = load_events(spark, sf_dir)
+    events = load_table(spark, sf_dir, "events")
     out = str(tmp_path / "rollups2")
     build_rollups(events, out)
     df = query_rollup(spark, out, 3600, event_type="purchase")

@@ -7,7 +7,7 @@ from pyspark.sql import functions as F
 
 from minoan_athenaeum_spark.catalog import load_table
 from minoan_athenaeum_spark.operators.skew import salted_agg, salted_join
-from minoan_athenaeum_spark.sources.parquet_sink import read_parquet, write_parquet
+from minoan_athenaeum_spark.sources.parquet_sink import write_parquet
 
 
 def test_salted_agg_matches_plain(spark, sf_dir):
@@ -129,7 +129,7 @@ def test_partitioned_write_roundtrip_and_pruning(spark, sf_dir):
         )
         # Hive layout on disk.
         assert any(d.startswith("o_year=") for d in os.listdir(path))
-        back = read_parquet(spark, path)
+        back = spark.read.parquet(path)
         assert back.count() == orders.count()
         # Partition pruning: a year filter must only list that partition.
         pruned = back.filter(F.col("o_year") == 1996)

@@ -11,7 +11,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
-from minoan_athenaeum_spark.catalog import events_ts_unit, load_table
+from minoan_athenaeum_spark.catalog import load_table
 from minoan_athenaeum_spark.engine import SMALL_TABLE_BYTES, Athenaeum
 from minoan_athenaeum_spark.plans.dialect import DialectError
 
@@ -56,7 +56,6 @@ def test_tier_reads_nanosecond_events(spark, sf01_dir, tmp_path):
     t = t.set_column(t.schema.get_field_index("ts"), "ts", t["ts"].cast(pa.timestamp("ns")))
     pq.write_table(t, tmp_path / "events.parquet")
     d = str(tmp_path)
-    assert events_ts_unit(d) == "ns"
     e = Athenaeum(spark)
     e.register_parquet_dir(d)
     scan = load_table(spark, d, "events")

@@ -7,10 +7,10 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from minoan_athenaeum_spark.catalog import load_events
+from minoan_athenaeum_spark.catalog import load_table
 from minoan_athenaeum_spark.queries.events import evt_tumbling_window
 from minoan_athenaeum_spark.streaming.ops import (
-    read_events_stream,
+    read_stream,
     run_to_memory,
     session_windows,
     sliding_counts,
@@ -24,16 +24,16 @@ def rows(df):
 
 
 def test_stream_tumbling_matches_batch(spark, sf_dir):
-    stream = tumbling_counts(read_events_stream(spark, sf_dir))
+    stream = tumbling_counts(read_stream(spark, sf_dir, "events"))
     got = run_to_memory(stream, "t_tumbling", mode="complete")
     expected = evt_tumbling_window(spark, sf_dir)
     assert rows(got) == rows(expected)
 
 
 def test_stream_sliding_matches_batch(spark, sf_dir):
-    stream = sliding_counts(read_events_stream(spark, sf_dir))
+    stream = sliding_counts(read_stream(spark, sf_dir, "events"))
     got = run_to_memory(stream, "t_sliding", mode="complete")
-    batch = load_events(spark, sf_dir)
+    batch = load_table(spark, sf_dir, "events")
     expected = (
         batch.groupBy(F.window("ts", "1 hour", "15 minutes"), "event_type")
         .agg(F.count("*").alias("cnt"))
@@ -47,24 +47,24 @@ def test_stream_sliding_matches_batch(spark, sf_dir):
 
 
 def test_stream_session_windows(spark, sf_dir):
-    stream = session_windows(read_events_stream(spark, sf_dir))
+    stream = session_windows(read_stream(spark, sf_dir, "events"))
     got = run_to_memory(stream, "t_sessions", mode="complete")
     # Same gap semantics as the batch lag/cumsum sessionizer: compare
     # (user_id, n_events) multiset and total event conservation.
-    batch = load_events(spark, sf_dir)
+    batch = load_table(spark, sf_dir, "events")
     assert got.agg(F.sum("n_events")).collect()[0][0] == batch.count()
     # Session starts must be actual event timestamps.
     starts = {r.start_us for r in got.collect()}
     event_us = {
-        r[0] for r in batch.select(F.unix_micros(F.col("ts"))).collect()
+        r[0] for r in batch.select(F.unix_micros(F.col("ts").cast("timestamp"))).collect()
     }
     assert starts <= event_us
 
 
 def test_streaming_dedup(spark, sf_dir):
-    stream = streaming_dedup(read_events_stream(spark, sf_dir))
+    stream = streaming_dedup(read_stream(spark, sf_dir, "events"))
     got = run_to_memory(stream, "t_dedup", mode="append")
-    batch = load_events(spark, sf_dir)
+    batch = load_table(spark, sf_dir, "events")
     assert got.count() == batch.select("event_id").distinct().count()
 
 
@@ -72,12 +72,12 @@ def test_stream_dedup_exec_injection_is_real(spark, sf_dir):
     # The oracle-gated stream_dedup_exec doubles the stream before
     # deduping; pin that the doubling alone really yields 2× rows, so
     # the green oracle row can only come from the dedup operator.
-    ev = read_events_stream(spark, sf_dir)
+    ev = read_stream(spark, sf_dir, "events")
     doubled = ev.withColumn(
         "_c", F.explode(F.array(F.lit(0), F.lit(1)))
     ).drop("_c")
     got = run_to_memory(doubled, "t_doubled", mode="append")
-    batch = load_events(spark, sf_dir)
+    batch = load_table(spark, sf_dir, "events")
     assert got.count() == 2 * batch.count()
 
 
@@ -86,10 +86,10 @@ def test_stateful_running_totals(spark, sf_dir):
 
     from minoan_athenaeum_spark.streaming.stateful import user_running_totals
 
-    stream = user_running_totals(read_events_stream(spark, sf_dir))
+    stream = user_running_totals(read_stream(spark, sf_dir, "events"))
     got = run_to_memory(stream, "t_stateful", mode="update")
     batch = (
-        load_events(spark, sf_dir)
+        load_table(spark, sf_dir, "events")
         .groupBy("user_id")
         .agg(F.count("*").alias("n"), F.sum("value").alias("v"))
     )
@@ -109,16 +109,14 @@ def test_stateful_accumulates_across_microbatches(spark, sf_dir, tmp_path):
     microbatches, so GroupState must carry totals across batches."""
     import math
 
-    from minoan_athenaeum_spark.catalog import EVENTS_NATIVE_SCHEMA
     from minoan_athenaeum_spark.streaming.stateful import user_running_totals
 
-    batch = load_events(spark, sf_dir)
+    batch = load_table(spark, sf_dir, "events")
     src = str(tmp_path / "events_split")
-    # load_events normalizes the ts unit, so the split copy is native µs
     batch.repartition(4).write.mode("overwrite").parquet(src)
 
     stream = (
-        spark.readStream.schema(EVENTS_NATIVE_SCHEMA)
+        spark.readStream.schema(batch.schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
@@ -172,12 +170,12 @@ def test_watermark_drops_late_events(spark, tmp_path):
         )
         spark.createDataFrame(pdf).coalesce(1).write.mode("append").parquet(src)
 
-    from minoan_athenaeum_spark.catalog import EVENTS_RAW_SCHEMA
-
     out = str(tmp_path / "late_out")
 
     def run_once(_name):
-        stream_raw = spark.readStream.schema(EVENTS_RAW_SCHEMA).parquet(src)
+        stream_raw = spark.readStream.schema(
+            "event_id long, ts long, user_id long, event_type string, value double, props string"
+        ).parquet(src)
         events = stream_raw.withColumn(
             "ts", F.timestamp_micros(F.expr("ts div 1000"))
         )
@@ -228,17 +226,15 @@ def test_idempotent_sink_replay_and_restart(spark, sf_dir, tmp_path):
     3. RESTART the stream on the same checkpoint -> source is already
        committed, nothing new is written.
     """
-    from minoan_athenaeum_spark.catalog import load_events
     from minoan_athenaeum_spark.streaming.ops import (
         idempotent_parquet_writer,
-        read_events_stream,
         run_with_idempotent_sink,
     )
 
     out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-    run_with_idempotent_sink(read_events_stream(spark, sf_dir), out, ckpt)
+    run_with_idempotent_sink(read_stream(spark, sf_dir, "events"), out, ckpt)
 
-    batch = load_events(spark, sf_dir)
+    batch = load_table(spark, sf_dir, "events")
     cols = batch.columns
     first = {tuple(r) for r in spark.read.parquet(out).select(*cols).collect()}
     n_first = spark.read.parquet(out).count()
@@ -256,7 +252,7 @@ def test_idempotent_sink_replay_and_restart(spark, sf_dir, tmp_path):
     # 3. Restart on the same checkpoint: source offsets are committed,
     # so the run writes nothing (a NAIVE append sink would also pass
     # this one — step 2 is what it would fail).
-    run_with_idempotent_sink(read_events_stream(spark, sf_dir), out, ckpt)
+    run_with_idempotent_sink(read_stream(spark, sf_dir, "events"), out, ckpt)
     assert spark.read.parquet(out).count() == n_first
 
 
@@ -267,7 +263,6 @@ def test_idempotent_sink_multi_batch(spark, sf_dir, tmp_path):
     re-deliver) and assert the union is unchanged."""
     import os
 
-    from minoan_athenaeum_spark.catalog import EVENTS_NATIVE_SCHEMA, load_events
     from minoan_athenaeum_spark.streaming.ops import (
         idempotent_parquet_writer,
     )
@@ -275,14 +270,13 @@ def test_idempotent_sink_multi_batch(spark, sf_dir, tmp_path):
 
     # Three source FILES (flat in one dir — the file-stream source
     # globs one level, nested dirs read zero rows) -> three batches.
-    # Sliced from load_events, which already normalizes the ts unit —
-    # the re-written slices are native µs timestamps.
     import glob
     import shutil
 
     src = str(tmp_path / "src")
     os.makedirs(src)
-    raw = load_events(spark, sf_dir).withColumn(
+    events = load_table(spark, sf_dir, "events")
+    raw = events.withColumn(
         "__b", F.pmod(F.col("event_id"), F.lit(3))
     )
     for b in range(3):
@@ -295,7 +289,7 @@ def test_idempotent_sink_multi_batch(spark, sf_dir, tmp_path):
 
     out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
     stream = (
-        spark.readStream.schema(EVENTS_NATIVE_SCHEMA)
+        spark.readStream.schema(events.schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
@@ -312,8 +306,8 @@ def test_idempotent_sink_multi_batch(spark, sf_dir, tmp_path):
         d for d in os.listdir(out) if d.startswith("batch_id=")
     )
     assert len(batch_dirs) >= 2, f"expected multiple batches, got {batch_dirs}"
-    expected = {tuple(r) for r in load_events(spark, sf_dir).collect()}
-    cols = load_events(spark, sf_dir).columns
+    expected = {tuple(r) for r in load_table(spark, sf_dir, "events").collect()}
+    cols = load_table(spark, sf_dir, "events").columns
     sunk = spark.read.parquet(out).select(*cols)
     n0 = sunk.count()
     assert {tuple(r) for r in sunk.collect()} == expected
