@@ -12,6 +12,18 @@ from minoan_athenaeum_spark.session import get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
 
+# The reference's golden-test fixtures (the cities/countries tables and
+# the example-1..3 queries): the reference checkout where it is present,
+# else the copy transcribed from FIXTURES.md §A into the repo. The
+# vendored copy holds expected row sets (example-N.rows.json) in place of
+# the reference's byte-exact example-N.out files.
+VENDORED_REFERENCE = os.path.join(
+    os.path.dirname(os.path.abspath(__file__)), "goldens", "reference"
+)
+REFERENCE_FIXTURES = (
+    "/root/reference" if os.path.isdir("/root/reference") else VENDORED_REFERENCE
+)
+
 
 @pytest.fixture(scope="session")
 def spark():

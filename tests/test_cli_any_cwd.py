@@ -3,6 +3,13 @@
 PYTHONPATH to run the goldens. ``bin/mas-cli`` self-locates the repo
 root; pyproject.toml's ``mas-cli`` console script covers installed
 deployments.
+
+``test_emit_json_from_tmp_cwd_no_pythonpath`` reads example-1.sql from
+``conftest.REFERENCE_FIXTURES`` (the reference checkout, else the copy
+vendored under tests/goldens/reference/). The Spark-backed golden
+drives and the example-error-1 pin compare against the reference's
+byte-exact ``.out`` files, which the repo holds no copy of, so they
+read ``REF``, the reference checkout, and fail where it is absent.
 """
 
 from __future__ import annotations
@@ -10,6 +17,8 @@ from __future__ import annotations
 import os
 import subprocess
 import sys
+
+from conftest import REFERENCE_FIXTURES
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 LAUNCHER = os.path.join(REPO, "bin", "mas-cli")
@@ -25,7 +34,12 @@ def test_emit_json_from_tmp_cwd_no_pythonpath(tmp_path):
     """Parse-only path (no Spark session — fast): byte-identical AST
     from a foreign cwd with PYTHONPATH stripped."""
     out = subprocess.run(
-        [sys.executable, LAUNCHER, f"{REF}/example-1.sql", "--emit-json"],
+        [
+            sys.executable,
+            LAUNCHER,
+            f"{REFERENCE_FIXTURES}/example-1.sql",
+            "--emit-json",
+        ],
         cwd=tmp_path,
         env=_clean_env(),
         capture_output=True,

@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import pytest
+from conftest import REFERENCE_FIXTURES
 
 from minoan_athenaeum_spark.engine import Athenaeum
 from minoan_athenaeum_spark.plans.dialect import DialectError
@@ -9,7 +10,7 @@ from minoan_athenaeum_spark.plans.dialect import DialectError
 @pytest.fixture(scope="module")
 def eng(spark, sf_dir):
     e = Athenaeum(spark)
-    e.register_table_json_dir("/root/reference")
+    e.register_table_json_dir(REFERENCE_FIXTURES)
     e.register_parquet_dir(sf_dir)
     return e
 
