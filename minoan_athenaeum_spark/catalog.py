@@ -76,15 +76,17 @@ def source_files(path: str) -> list[str]:
 
 def source_fingerprint(path: str) -> str:
     """Deterministic fingerprint of the parquet source at ``path``: every
-    data file's relative path, size and mtime. Anything derived from the
-    source (a cached handle, a managed table, an index) keys on it, so a
-    rewritten source never resolves to a stale copy."""
+    data file's relative path, size, mtime and ctime. Anything derived
+    from the source (a cached handle, a bucketed table, an index) keys on
+    it, so a rewritten source never resolves to a stale copy. The ctime
+    catches a rewrite that keeps size and mtime (``cp -p``,
+    ``shutil.copytree``): no copy can set it."""
     h = hashlib.md5()
     is_dir = os.path.isdir(path)
     for fp in source_files(path):
         st = os.stat(fp)
         rel = f"{os.path.relpath(fp, path)}:" if is_dir else ""
-        h.update(f"{rel}{st.st_size}:{st.st_mtime_ns}".encode())
+        h.update(f"{rel}{st.st_size}:{st.st_mtime_ns}:{st.st_ctime_ns}".encode())
     return h.hexdigest()[:8]
 
 

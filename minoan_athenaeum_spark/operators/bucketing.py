@@ -7,87 +7,49 @@ buckets on the key and sorted within buckets, so every later join reads
 bucket i of A against bucket i of B directly — `.explain` shows a
 SortMergeJoin with NO Exchange on either side.
 
-This is plain `DataFrameWriter.bucketBy` + managed parquet tables (the
-warehouse dir is configured in session.py); no custom machinery. The
-operator here just standardizes the write + the existence check so
-query code can declare "these two tables are co-located on key k".
+This is plain `DataFrameWriter.bucketBy` + parquet; no custom machinery.
+The bucketed files are a derived copy like any other, built once through
+``index_family.ensure_copy``; the catalog only holds an external table
+over them, which each session registers again from the files, so a new
+session reuses the layout instead of rewriting it.
 """
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 
-
-def clear_stale_table_location(spark: SparkSession, table: str) -> None:
-    """A previous session may have left a managed table's location on
-    disk while the (in-memory) catalog entry died with it; Spark refuses
-    to create a managed table over an existing location, so clear it.
-    Guarded: only delete a path that (a) is a local file: warehouse,
-    (b) resolves strictly inside the warehouse root, and (c) looks
-    like a Spark-written parquet table dir — never whatever else
-    happens to sit at the derived path."""
-    import os
-    import shutil
-    from urllib.parse import urlparse
-
-    warehouse = spark.conf.get("spark.sql.warehouse.dir") or ""
-    scheme = urlparse(warehouse).scheme
-    # Scheme-less paths are local too; anything else (hdfs:, s3a:, ...)
-    # can't be checked from the driver's filesystem — say so loudly
-    # rather than silently skipping, because a leftover location there
-    # would make the subsequent managed CREATE fail.
-    if scheme not in ("", "file"):
-        import warnings
-
-        warnings.warn(
-            f"cannot probe stale location for table {table!r}: warehouse "
-            f"scheme {scheme!r} is not a local filesystem",
-            stacklevel=2,
-        )
-        return
-    if warehouse:
-        root = os.path.abspath(warehouse.removeprefix("file:"))
-        loc = os.path.abspath(os.path.join(root, table.lower()))
-        inside = loc != root and os.path.commonpath([root, loc]) == root
-        if inside and os.path.isdir(loc):
-            entries = os.listdir(loc)
-            spark_table_markers = (
-                not entries
-                or "_SUCCESS" in entries
-                or any(e.startswith("part-") for e in entries)
-            )
-            if not spark_table_markers:
-                raise RuntimeError(
-                    f"refusing to clear {loc!r} — it does not look like a "
-                    f"Spark-written table directory"
-                )
-            shutil.rmtree(loc)
+from minoan_athenaeum_spark.sources.index_family import ensure_copy
 
 
-def write_bucketed(
-    df: DataFrame, table: str, key: str, n_buckets: int = 16
-) -> None:
-    """Materialize ``df`` as a managed parquet table bucketed AND
-    sorted by ``key`` — the layout that makes every future equi-join or
-    aggregation on ``key`` exchange-free."""
-    if not df.sparkSession.catalog.tableExists(table):
-        clear_stale_table_location(df.sparkSession, table)
-    (
-        df.write.mode("overwrite")
-        .format("parquet")
-        .bucketBy(n_buckets, key)
-        .sortBy(key)
-        .saveAsTable(table)
-    )
-
-
-def ensure_bucketed(
-    spark: SparkSession, df: DataFrame, table: str, key: str, n_buckets: int = 16
+def bucketed_table(
+    spark: SparkSession, df: DataFrame, path: str, key: str, n_buckets: int = 16
 ) -> DataFrame:
-    """Return the bucketed managed table for ``df``, writing it first if
-    this session has not materialized it yet (the in-memory catalog does
-    not survive session restarts; the write is the one-time cost the
-    bucketing amortizes)."""
-    if not spark.catalog.tableExists(table):
-        write_bucketed(df, table, key, n_buckets)
-    return spark.table(table)
+    """``df`` as the table ``basename(path)``: parquet files at ``path``,
+    bucketed AND sorted by ``key`` — the layout that makes every future
+    equi-join or aggregation on ``key`` exchange-free. The files are
+    written once; the table is registered over them when the catalog
+    lacks it."""
+    name = os.path.basename(path)
+
+    def write(staging):
+        # an external table under a throwaway name: dropping it keeps the files
+        tmp = os.path.basename(staging)
+        (
+            df.write.format("parquet")
+            .option("path", staging)
+            .bucketBy(n_buckets, key)
+            .sortBy(key)
+            .saveAsTable(tmp)
+        )
+        spark.sql(f"DROP TABLE {tmp}")
+
+    ensure_copy(path, write)
+    cols = ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema)
+    spark.sql(
+        f"CREATE TABLE IF NOT EXISTS {name} ({cols}) USING parquet "
+        f"CLUSTERED BY ({key}) SORTED BY ({key}) INTO {n_buckets} BUCKETS "
+        f"LOCATION '{path}'"
+    )
+    return spark.table(name)

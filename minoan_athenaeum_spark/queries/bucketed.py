@@ -1,9 +1,12 @@
 """Driver queries over pre-bucketed (co-located) tables.
 
-The registered query answers from managed tables bucketed on the join
-key — the read path a repeated-join workload would use — while the
-oracle recomputes the same answer from the raw parquet, so the driver's
-hash gate certifies the bucketed write + exchange-free join together.
+The registered query answers from tables bucketed on the join key — the
+read path a repeated-join workload would use — while the oracle
+recomputes the same answer from the raw parquet, so the driver's hash
+gate certifies the bucketed write + exchange-free join together. The
+bucketed files live in the warehouse under
+index_family.warehouse_index_path like every other derived copy, so a
+rewritten source resolves to a fresh copy and its stale one is deleted.
 tests/test_plan_shape.py pins the no-Exchange property.
 """
 
@@ -11,28 +14,19 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from minoan_athenaeum_spark.catalog import source_fingerprint
-from minoan_athenaeum_spark.operators.bucketing import ensure_bucketed
+from minoan_athenaeum_spark.operators.bucketing import bucketed_table
 from minoan_athenaeum_spark.queries._util import t
 from minoan_athenaeum_spark.registry import query
+from minoan_athenaeum_spark.sources.index_family import warehouse_index_path
 
 
 def _bucketed_pair(spark, sf_dir):
-    """orders + lineitem bucketed on orderkey (16 buckets), built once
-    per session per sf_dir and source fingerprint: a rewritten source
-    gets a fresh table instead of the copy built before."""
-    import hashlib
-
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
+    """orders + lineitem bucketed on orderkey (16 buckets), written once
+    per sf_dir and source fingerprint."""
 
     def bucketed(name, cols, key):
-        fresh = source_fingerprint(f"{sf_dir}/{name}.parquet")
-        return ensure_bucketed(
-            spark,
-            t(spark, sf_dir, name).select(*cols),
-            f"mas_b_{name}_{tag}_{fresh}",
-            key,
-        )
+        path = warehouse_index_path(spark, sf_dir, f"mas_bucketed_{name}", name)
+        return bucketed_table(spark, t(spark, sf_dir, name).select(*cols), path, key)
 
     return (
         bucketed("orders", ["o_orderkey", "o_orderpriority"], "o_orderkey"),

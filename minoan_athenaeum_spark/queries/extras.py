@@ -567,14 +567,13 @@ def misc_compaction_roundtrip(spark, sf_dir):
     is aggregated against the original-parquet oracle. A green row
     certifies compaction moved every row exactly once. File-count
     behavior is pinned separately in tests/test_compaction.py."""
-    import os
-
-    from minoan_athenaeum_spark.sources.index_family import warehouse_index_path
+    from minoan_athenaeum_spark.sources.index_family import (
+        ensure_copy,
+        warehouse_index_path,
+    )
     from minoan_athenaeum_spark.sources.parquet_sink import compact_small_files
 
-    base = warehouse_index_path(spark, sf_dir, "mas_compaction", "events")
-    shattered, compacted = f"{base}/shattered", f"{base}/compacted"
-    if not os.path.exists(os.path.join(compacted, "_SUCCESS")):
+    def build(d):
         ev = t(spark, sf_dir, "events").select(
             "event_id",
             F.unix_micros(F.col("ts").cast("timestamp")).alias("us"),
@@ -583,9 +582,13 @@ def misc_compaction_roundtrip(spark, sf_dir):
             .cast("bigint")
             .alias("cents"),
         )
-        ev.repartition(64).write.mode("overwrite").parquet(shattered)
-        compact_small_files(spark, shattered, compacted, target_bytes=4 * 1024 * 1024)
-    ev = spark.read.parquet(compacted)
+        ev.repartition(64).write.parquet(f"{d}/shattered")
+        compact_small_files(
+            spark, f"{d}/shattered", f"{d}/compacted", target_bytes=4 * 1024 * 1024
+        )
+
+    base = warehouse_index_path(spark, sf_dir, "mas_compaction", "events")
+    ev = spark.read.parquet(f"{ensure_copy(base, build)}/compacted")
     return ev.groupBy("event_type").agg(
         F.count("*").alias("cnt"),
         F.sum("cents").alias("total_cents"),
@@ -601,11 +604,11 @@ def src_orc_events_agg(spark, sf_dir):
     by the same round trip: export once, explicit-schema read back,
     aggregate against the original-parquet oracle."""
     from minoan_athenaeum_spark.sources.textio import (
-        ensure_events_orc,
+        ensure_events_export,
         read_events_orc,
     )
 
-    path = ensure_events_orc(spark, sf_dir)
+    path = ensure_events_export(spark, sf_dir, "orc")
     ev = read_events_orc(spark, path)
     return ev.groupBy("event_type").agg(
         F.count("*").alias("cnt"),
@@ -807,13 +810,13 @@ def misc_zorder_roundtrip(spark, sf_dir):
     certifies the space-filling-curve rewrite moved every row exactly
     once; the layout's pruning benefit is pinned separately on real
     row-group statistics."""
-    import os
-
-    from minoan_athenaeum_spark.sources.index_family import warehouse_index_path
+    from minoan_athenaeum_spark.sources.index_family import (
+        ensure_copy,
+        warehouse_index_path,
+    )
     from minoan_athenaeum_spark.sources.parquet_sink import write_zordered
 
-    out = warehouse_index_path(spark, sf_dir, "mas_zorder", "events")
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
+    def build(d):
         ev = t(spark, sf_dir, "events").select(
             "event_id",
             F.unix_micros(F.col("ts").cast("timestamp")).alias("us"),
@@ -823,7 +826,9 @@ def misc_zorder_roundtrip(spark, sf_dir):
             .cast("bigint")
             .alias("cents"),
         )
-        write_zordered(ev, out, ("user_id", "cents"))
+        write_zordered(ev, d, ("user_id", "cents"))
+
+    out = ensure_copy(warehouse_index_path(spark, sf_dir, "mas_zorder", "events"), build)
     z = spark.read.parquet(out)
     return z.groupBy("event_type").agg(
         F.count("*").alias("cnt"),

@@ -13,29 +13,22 @@ store+re-aggregation end-to-end.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import functions as F
 
 from minoan_athenaeum_spark.catalog import load_table
-from minoan_athenaeum_spark.operators.rollup_store import (
-    GRAINS,
-    build_rollups,
-    query_rollup,
-)
+from minoan_athenaeum_spark.operators.rollup_store import build_rollups, query_rollup
 from minoan_athenaeum_spark.registry import query
-from minoan_athenaeum_spark.sources.index_family import warehouse_index_path
+from minoan_athenaeum_spark.sources.index_family import ensure_copy, warehouse_index_path
 
 
 def _store_dir(spark, sf_dir: str) -> str:
     """Build (once per events fingerprint) and return the rollup store
-    path. The store counts as built only once every grain's write has
-    finished (its ``_SUCCESS``): a crashed build leaves output dirs
-    behind, and those are rebuilt, not served."""
+    path; ``index_family.ensure_copy`` renames the store into place only
+    once every grain is written, so a crashed build is rebuilt, not
+    served."""
     out = warehouse_index_path(spark, sf_dir, "mas_rollup_store", "events")
-    if not all(os.path.exists(f"{out}/rollup_{g}/_SUCCESS") for g in GRAINS):
-        build_rollups(load_table(spark, sf_dir, "events"), out)
-    return out
+    # build_rollups is looked up at call time so tests can patch it
+    return ensure_copy(out, lambda d: build_rollups(load_table(spark, sf_dir, "events"), d))
 
 
 @query(

@@ -49,7 +49,8 @@ def get_spark(
         # whole engine's heap.
         .config("spark.driver.memory", "8g")
         .config("spark.ui.enabled", "false")
-        # Managed-table warehouse (bucketed tables) outside the repo.
+        # Home of every derived copy (index_family.warehouse_index_path),
+        # outside the repo.
         .config("spark.sql.warehouse.dir", "/tmp/mas_spark_warehouse")
         # Same package path for workers, via conf as well as the env.
         .config("spark.executorEnv.PYTHONPATH", os.environ["PYTHONPATH"])

@@ -15,7 +15,7 @@ from pyspark.sql import types as T
 def read_csv(
     spark: SparkSession,
     path: str,
-    schema: T.StructType,
+    schema: T.StructType | str,
     header: bool = True,
     delimiter: str = ",",
 ) -> DataFrame:
@@ -29,7 +29,7 @@ def read_csv(
     )
 
 
-def read_jsonl(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
+def read_jsonl(spark: SparkSession, path: str, schema: T.StructType | str) -> DataFrame:
     return spark.read.schema(schema).option("mode", "FAILFAST").json(path)
 
 

@@ -10,8 +10,12 @@ lives in the Spark warehouse. This module holds two layers:
    of them (warehouse dir + sf_dir tag + source-parquet fingerprint, so
    a changed source resolves to a new path and stale derived data is
    never served; the first resolve of a new path deletes the copies
-   derived from the source's earlier states), and :func:`scratch_dir`,
-   the one place a per-run scratch directory is wiped.
+   derived from the source's earlier states); :func:`scratch_dir`, the
+   one place a per-run scratch directory is wiped; and
+   :func:`ensure_copy`, the one build-once step of every derived copy
+   that is not an index (rollup store, exports, compaction and Z-order
+   copies, stream source wrapper, bucketed tables): it stages the copy
+   and renames it into place, so a copy exists only once complete.
 
 2. Snapshot manifests — six index families (LSH bands and shingles,
    BM25 postings, IVF cells, first-occurrence grams, line fingerprints,
@@ -89,9 +93,11 @@ def warehouse_index_path(
 
 
 # Suffixes a query appends to a derived directory's name for its
-# scratch copies, checkpoints and work dirs, possibly chained
-# (``<index>_streamwork_ckpt``).
-_SCRATCH_SUFFIXES = ("_streamwork", "_ckpt", "_gatework", "_appendwork", "_compactwork")
+# scratch copies, checkpoints, work dirs and build staging dirs,
+# possibly chained (``<index>_streamwork_ckpt``).
+_SCRATCH_SUFFIXES = (
+    "_streamwork", "_ckpt", "_gatework", "_appendwork", "_compactwork", "_building"
+)
 
 
 def _drop_stale(wh: str, stem: str, fresh: str) -> None:
@@ -121,6 +127,20 @@ def scratch_dir(path: str) -> str:
     from nothing."""
     if os.path.isdir(path):
         shutil.rmtree(path)
+    return path
+
+
+def ensure_copy(path: str, write: Callable[[str], None]) -> str:
+    """Return the derived copy ``path``, building it first if it does not
+    exist: ``write(staging)`` fills a wiped ``<path>_building`` directory,
+    which is then renamed onto ``path``. A copy therefore exists only once
+    complete; a crashed build leaves only its staging directory, wiped by
+    the next build (or by :func:`_drop_stale` once the source changes).
+    One writer per path, as for the indexes."""
+    if not os.path.exists(path):
+        staging = scratch_dir(path + "_building")
+        write(staging)
+        os.rename(staging, path)
     return path
 
 

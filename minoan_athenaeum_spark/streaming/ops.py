@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from minoan_athenaeum_spark.catalog import read_plan
 from minoan_athenaeum_spark.sources.index_family import (
+    ensure_copy,
     scratch_dir,
     warehouse_index_path,
 )
@@ -41,12 +42,12 @@ def _stream_dir(spark: SparkSession, sf_dir: str, table: str) -> str:
     src = os.path.join(sf_dir, f"{table}.parquet")
     if os.path.isdir(src):
         return src
-    d = warehouse_index_path(spark, sf_dir, f"mas_{table}_stream", table)
-    os.makedirs(d, exist_ok=True)
-    link = os.path.join(d, f"{table}.parquet")
-    if not os.path.exists(link):
-        os.symlink(os.path.abspath(src), link)
-    return d
+
+    def wrap(d):
+        os.makedirs(d)
+        os.symlink(os.path.abspath(src), os.path.join(d, f"{table}.parquet"))
+
+    return ensure_copy(warehouse_index_path(spark, sf_dir, f"mas_{table}_stream", table), wrap)
 
 
 def read_stream(

@@ -8,6 +8,7 @@ from __future__ import annotations
 import importlib.util
 import os
 import shutil
+import time
 import uuid
 
 import pyarrow as pa
@@ -16,7 +17,7 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
-from minoan_athenaeum_spark.catalog import TABLES, load_table, read_plan
+from minoan_athenaeum_spark.catalog import TABLES, load_table, read_plan, source_fingerprint
 from minoan_athenaeum_spark.engine import Athenaeum
 from minoan_athenaeum_spark.streaming.ops import read_stream, run_to_memory
 
@@ -131,8 +132,23 @@ def test_rewritten_source_gets_a_fresh_handle(spark, tmp_path, as_dir):
     assert rows[2:] == ["v1110"]
 
 
+def test_copy_keeping_size_and_mtime_gets_a_fresh_fingerprint(tmp_path):
+    """A source overwritten by another file of the same size, copied with
+    its mtime (``cp -p``), is a rewritten source."""
+    src, other = tmp_path / "t.parquet", tmp_path / "other"
+    src.write_bytes(b"a" * 64)
+    other.write_bytes(b"b" * 64)
+    mtime = src.stat().st_mtime_ns
+    os.utime(other, ns=(mtime, mtime))
+    before = source_fingerprint(str(src))
+    time.sleep(0.05)  # past a coarse kernel timestamp tick
+    shutil.copy2(other, src)
+    assert src.stat().st_mtime_ns == mtime
+    assert source_fingerprint(str(src)) != before
+
+
 def test_rewritten_sources_get_fresh_bucketed_tables(spark, sf_dir, tmp_path):
-    """``bucketed_colocated_join`` answers from managed tables built from
+    """``bucketed_colocated_join`` answers from bucketed tables built from
     ``orders`` and ``lineitem``; once both sources are rewritten it must
     answer from the new rows, not from the tables built before."""
     from minoan_athenaeum_spark.registry import load_all

@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -12,6 +13,7 @@ from minoan_athenaeum_spark.sources.delimited import (
     write_csv,
     write_jsonl,
 )
+from minoan_athenaeum_spark.sources.textio import read_events_csv, read_events_jsonl
 
 
 def test_csv_roundtrip(spark, sf_dir, tmp_path):
@@ -42,3 +44,23 @@ def test_jsonl_roundtrip(spark, sf_dir, tmp_path):
         back.filter(F.col("s_acctbal") > 0).count()
         == supplier.filter(F.col("s_acctbal") > 0).count()
     )
+
+
+# One events row whose ``us`` field is not a BIGINT, per text format.
+MALFORMED = {
+    "csv": (read_events_csv, "event_id,us,user_id,event_type,cents\n2,xx,5,click,200\n"),
+    "json": (
+        read_events_jsonl,
+        '{"event_id":2,"us":"xx","user_id":5,"event_type":"click","cents":200}\n',
+    ),
+}
+
+
+@pytest.mark.parametrize("fmt", sorted(MALFORMED))
+def test_malformed_field_raises(spark, tmp_path, fmt):
+    """A field that does not parse as its declared type fails the read
+    instead of reading as null."""
+    read, text = MALFORMED[fmt]
+    (tmp_path / f"events.{fmt}").write_text(text)
+    with pytest.raises(Exception, match="MALFORMED|Malformed"):
+        read(spark, str(tmp_path)).collect()

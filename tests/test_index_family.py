@@ -22,6 +22,7 @@ from minoan_athenaeum_spark.sources.index_family import (
     Maintained,
     append_index,
     compact_index,
+    ensure_copy,
     ensure_index,
     hash_layout,
     read_manifest,
@@ -155,7 +156,15 @@ def test_rewritten_source_drops_stale_derived_dirs(spark, tmp_path):
         return warehouse_index_path(spark, d, "mas_testidx", "documents", params)
 
     old = resolve(sf)
-    suffixes = ("", "_streamwork", "_streamwork_ckpt", "_gatework", "_appendwork", "_compactwork")
+    suffixes = (
+        "",
+        "_streamwork",
+        "_streamwork_ckpt",
+        "_gatework",
+        "_appendwork",
+        "_compactwork",
+        "_building",
+    )
     stale = [old + suffix for suffix in suffixes]
     kept = [resolve(sf, "m2"), resolve(sf_other)]
     pd.DataFrame(
@@ -173,6 +182,31 @@ def test_rewritten_source_drops_stale_derived_dirs(spark, tmp_path):
     finally:
         for d in stale + kept:
             shutil.rmtree(d, ignore_errors=True)
+
+
+def test_ensure_copy_crashed_build_leaves_nothing(tmp_path):
+    """A build that raises leaves nothing at the copy's path; the next
+    call rebuilds from a wiped staging dir, and a built copy is served
+    without running ``write`` again."""
+    path = str(tmp_path / "copy")
+
+    def crash(d):
+        os.makedirs(d)
+        open(os.path.join(d, "half"), "w").close()
+        raise RuntimeError("crash mid-build")
+
+    with pytest.raises(RuntimeError, match="crash mid-build"):
+        ensure_copy(path, crash)
+    assert not os.path.exists(path)
+
+    def build(d):
+        os.makedirs(d)
+        open(os.path.join(d, "whole"), "w").close()
+
+    assert ensure_copy(path, build) == path
+    assert os.listdir(path) == ["whole"]
+    assert ensure_copy(path, crash) == path
+    assert os.listdir(path) == ["whole"]
 
 
 def test_non_local_warehouse_raises():

@@ -144,20 +144,19 @@ def test_partitioned_write_roundtrip_and_pruning(spark, sf_dir):
         assert pruned.count() == orders.filter(F.col("o_year") == 1996).count()
 
 
-def test_bucketed_join_has_no_shuffle(spark, sf_dir):
+def test_bucketed_join_has_no_shuffle(spark, sf_dir, tmp_path):
     """Co-located bucketed join: both sides bucketed+sorted by the join
     key ⇒ the join plan contains NO Exchange (the shuffle happened once
     at write time — the decisive layout for recurring 100 TB joins)."""
     import contextlib
     import io
 
-    from minoan_athenaeum_spark.operators.bucketing import write_bucketed
+    from minoan_athenaeum_spark.operators.bucketing import bucketed_table
 
     orders = load_table(spark, sf_dir, "orders")
     lineitem = load_table(spark, sf_dir, "lineitem")
-    write_bucketed(orders, "b_orders", "o_orderkey", 8)
-    write_bucketed(lineitem, "b_lineitem", "l_orderkey", 8)
-    bo, bl = spark.table("b_orders"), spark.table("b_lineitem")
+    bo = bucketed_table(spark, orders, str(tmp_path / "b_orders"), "o_orderkey", 8)
+    bl = bucketed_table(spark, lineitem, str(tmp_path / "b_lineitem"), "l_orderkey", 8)
     # Force the shuffle-join path (at this sf the dim would broadcast,
     # which also avoids a shuffle but hides the bucketing effect).
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
