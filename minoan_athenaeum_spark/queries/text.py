@@ -742,18 +742,23 @@ def bm25_serve_from_index(spark, idx_path: str):
     snapshot: its exact posting files are scanned with the pinned
     schema (no listing, no schema-inference job) and the term IN-filter
     pushed down (row-group min/max pruning over base + delta
-    generations); df is recomputed exactly from the pruned postings;
+    generations); df is counted exactly over the pruned postings by a
+    window partitioned by term (one scan, no df subquery or join);
     n_docs and avgdl are the manifest's exact stats, bound as literals.
-    The returned DataFrame reads that snapshot even if one further
-    append or compaction commits before it is collected."""
+    A serve runs 3 Spark jobs: the term shuffle, the doc_id shuffle and
+    the top-20. The returned DataFrame reads that snapshot even if one
+    further append or compaction commits before it is collected."""
+    from pyspark.sql import Window
+
     from minoan_athenaeum_spark.sources.posting_sink import bm25_snapshot
 
     postings, stats = bm25_snapshot(spark, idx_path)
-    p = postings.where(F.col("term").isin(*_BM25_TERMS))
-    tf = p.select("doc_id", "term", F.col("tf").cast("double").alias("tf"), "dl")
-    df_ = tf.groupBy("term").agg(F.count("*").cast("double").alias("df"))
-    scored = tf.join(F.broadcast(df_), "term").select(
-        "*",
+    scored = postings.where(F.col("term").isin(*_BM25_TERMS)).select(
+        "doc_id",
+        "term",
+        F.col("tf").cast("double").alias("tf"),
+        "dl",
+        F.count("*").over(Window.partitionBy("term")).cast("double").alias("df"),
         F.lit(float(stats.n_docs)).alias("n_docs"),
         F.lit(stats.avgdl).alias("avgdl"),
     )
@@ -779,12 +784,11 @@ def text_bm25_search_indexed(spark, sf_dir):
     corpus stats, once per source fingerprint. Query time: a parquet
     scan with the term IN-filter PUSHED DOWN (row-group min/max on the
     term-sorted segments prune to the matching ranges — no tokenize,
-    no explode, no corpus scan), df recomputed from the pruned postings
-    (exact: df(t) = posting count of t), corpus stats as literals, the
-    SAME shared scoring expression as the explode path (bit-identical
-    doubles),
-    TakeOrdered top-20. Same oracle as text_bm25_search — the two
-    paths must return identical rows.
+    no explode, no corpus scan), df counted over the pruned postings by
+    a window on term (exact: df(t) = posting count of t), corpus stats
+    as literals, the SAME shared scoring expression as the explode path
+    (bit-identical doubles), TakeOrdered top-20. Same oracle as
+    text_bm25_search — the two paths must return identical rows.
 
     Scale shape: per-query work is proportional to the matched terms'
     posting lists, not the corpus; the index build pays the one
@@ -1636,8 +1640,10 @@ def text_bm25_index_append(spark, sf_dir):
     query is deterministic under re-execution.
 
     Scale shape: the corpus pays NOTHING per batch — only the batch is
-    tokenized (map-only) and its delta segments written; the stats
-    merge is integer arithmetic in the manifest. Serving reads base +
+    tokenized, and the append is map-only: ONE Spark job coalesces the
+    batch to one partition, tokenizes, counts, sorts and writes its one
+    delta file, observing the batch's stats on the way; the stats merge
+    is integer arithmetic in the manifest. Serving (3 jobs) reads base +
     one delta generation with the term filter pushed into both
     (row-group min/max pruning);
     generations compact by rewriting through write_posting_segments."""

@@ -24,13 +24,29 @@ snapshot-manifest lifecycle (sources/index_family.py): one table,
 the exact integer corpus stats ``n_docs`` and ``sum_dl``. A serve reads
 the manifest once, then exactly its posting files with their pinned
 schema, and takes the corpus stats from the same manifest as literals.
+
+Job shape. A write tokenizes its documents once (:func:`doc_postings`)
+and observes ``n_docs`` and ``sum_dl`` on the per-doc rows while the
+postings are written, so no second job reads the documents. An append
+runs one Spark job, a build at most four and a serve
+(queries/text.py::bm25_serve_from_index) three. A compaction keeps its
+three (range sample, shuffle map, write): they are what the
+``num_segments`` term-range layout costs.
+
+The observed stats are counted once although they are summed from
+per-task accumulators: index writes need a local warehouse
+(index_family.warehouse_index_path), so they run under ``local[n]``,
+which never retries a failed task, and no task's rows are observed
+twice.
 """
 
 from __future__ import annotations
 
+import shutil
+from collections.abc import Callable
 from typing import NamedTuple
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from minoan_athenaeum_spark.sources.index_family import (
@@ -55,13 +71,15 @@ def write_posting_segments(
 ) -> None:
     """Write (term, doc_id, ...) postings as term-sorted parquet
     segments: ``num_segments`` files, term ranges disjoint across
-    files, rows sorted by (term, doc) within each."""
-    (
-        postings.repartitionByRange(num_segments, F.col(term_col))
-        .sortWithinPartitions(term_col, doc_col)
-        .write.mode("overwrite")
-        .parquet(path)
+    files, rows sorted by (term, doc) within each. One segment needs no
+    range bounds, so it is a coalesce, not a sampled range shuffle."""
+    rows = (
+        postings.coalesce(1)
+        if num_segments == 1
+        else postings.repartitionByRange(num_segments, F.col(term_col))
     )
+    rows = rows.sortWithinPartitions(term_col, doc_col)
+    rows.write.mode("overwrite").parquet(path)
 
 
 def lookup_term(
@@ -96,33 +114,53 @@ def bm25_index_path(
     )
 
 
-def doc_postings(docs: DataFrame) -> DataFrame:
+def _corpus_stats(toks: str) -> list[Column]:
+    """Exact (n_docs, sum_dl) of per-doc token arrays ``toks``."""
+    return [
+        F.count("*").alias("n_docs"),
+        F.coalesce(F.sum(F.size(toks)), F.lit(0)).alias("sum_dl"),
+    ]
+
+
+def doc_postings(
+    docs: DataFrame,
+) -> tuple[DataFrame, Callable[[], tuple[int, int]]]:
     """(doc_id, term, tf, dl) postings of a documents slice — the ONE
     definition the full build and the batch append both use, so an
-    appended index is bit-identical to a rebuild."""
+    appended index is bit-identical to a rebuild — and a function that
+    returns the slice's exact (n_docs, sum_dl) once the postings are
+    written. The stats are observed on the per-doc rows before the
+    explode, so token-less documents still count.
+
+    Adaptive execution drops a query's observed metrics when it prunes
+    a shuffle stage that produced no rows, which happens only when the
+    postings are empty (an empty slice, or documents without tokens).
+    Only then are the stats counted directly, with one more job."""
     from minoan_athenaeum_spark.operators.text import tokens
 
     d = docs.select("doc_id", tokens().alias("toks"))
-    dl = d.select("doc_id", F.size("toks").cast("double").alias("dl"))
-    return (
-        d.select("doc_id", F.explode("toks").alias("term"))
-        .groupBy("doc_id", "term")
+    observed = Observation()
+    postings = (
+        d.observe(observed, *_corpus_stats("toks"))
+        .select(
+            "doc_id",
+            F.size("toks").cast("double").alias("dl"),
+            F.explode("toks").alias("term"),
+        )
+        .groupBy("doc_id", "dl", "term")
         .agg(F.count("*").cast("long").alias("tf"))
-        .join(dl, "doc_id")
+        .select("doc_id", "term", "tf", "dl")
     )
 
+    def stats() -> tuple[int, int]:
+        # the metrics as a map: ``observed.get`` fails on the empty row
+        # of dropped metrics
+        got = observed._jo.getAsJava()
+        if got.isEmpty():
+            got = d.agg(*_corpus_stats("toks")).first().asDict()
+        return int(got["n_docs"]), int(got["sum_dl"])
 
-def _doc_stats(docs: DataFrame) -> tuple[int, int]:
-    """Exact (n_docs, sum_dl) of a documents slice, computed from the
-    docs themselves (not the postings) so token-less documents still
-    count toward the corpus stats."""
-    from minoan_athenaeum_spark.operators.text import tokens
-
-    row = docs.select(F.size(tokens()).alias("dl")).agg(
-        F.count("*").alias("n_docs"),
-        F.coalesce(F.sum("dl"), F.lit(0)).alias("sum_dl"),
-    ).first()
-    return int(row.n_docs), int(row.sum_dl)
+    return postings, stats
 
 
 class Bm25Stats(NamedTuple):
@@ -174,21 +212,31 @@ def ensure_bm25_index(
     once at index-build time, never at query time. ``slice_='existing'``
     indexes only ``doc_id % 10 != 0`` — the base corpus of the
     incremental append/serve queries (same convention as
-    sources/lsh_index.py)."""
+    sources/lsh_index.py).
+
+    A build tokenizes the documents once and runs at most 4 Spark jobs:
+    the (doc_id, term) count's shuffle, the range-bounds sample, the
+    range shuffle and the write; the stats are observed on the way. They
+    are known only once the postings are staged, so an empty slice
+    deletes the staged index directory before it raises."""
     from minoan_athenaeum_spark.catalog import load_table
 
     def build(write: IndexWrite) -> dict:
         docs = load_table(spark, sf_dir, "documents")
         if slice_ == "existing":
             docs = docs.filter(F.col("doc_id") % 10 != 0)
-        n_docs, sum_dl = _doc_stats(docs)
+        postings, stats = doc_postings(docs)
+        write.stage("postings", postings, _segments(num_segments))
+        n_docs, sum_dl = stats()
         if n_docs == 0:
+            # nothing is published yet: the directory holds only this
+            # build's staged output
+            shutil.rmtree(write.path)
             raise ValueError(
                 "BM25 index stats over an empty documents slice (n_docs=0): "
                 "refusing to write a 0-doc index — check the slice filter / "
                 "source path"
             )
-        write.stage("postings", doc_postings(docs), _segments(num_segments))
         return {"n_docs": n_docs, "sum_dl": sum_dl}
 
     return ensure_index(spark, bm25_index_path(spark, sf_dir, slice_), build)
@@ -216,27 +264,32 @@ def append_to_bm25_index(
     spark: SparkSession,
     path: str,
     new_docs: DataFrame,
-    num_segments: int = 1,
     batch_id: str | int | None = None,
 ) -> None:
     """Fold a document batch INTO a persisted BM25 index as one new
     posting generation — the maintenance step that keeps a growing
     corpus searchable without the full tokenize+segment rebuild.
 
-    The batch's (term, doc_id, tf, dl) rows are written as a
-    term-range-sorted delta generation; a term lookup prunes by
-    row-group min/max over base + delta files, the classic LSM read
-    shape (compact_bm25_index rewrites them when generations
-    accumulate). The batch's exact (n_docs, sum_dl) are added to the
-    manifest's, so the merged avgdl is BIT-EQUAL to a from-scratch
-    rebuild — pinned by tests/test_posting_sink.py and by
-    text_bm25_index_append's full-rebuild oracle. The postings and the
-    stats land in one manifest publish, so an append is all or nothing,
-    and a ``batch_id`` already applied makes it a no-op."""
+    The batch's (term, doc_id, tf, dl) rows are written as one
+    term-sorted delta file; a term lookup prunes by row-group min/max
+    over base + delta files, the classic LSM read shape
+    (compact_bm25_index rewrites them when generations accumulate). The
+    batch's exact (n_docs, sum_dl) are added to the manifest's, so the
+    merged avgdl is BIT-EQUAL to a from-scratch rebuild — pinned by
+    tests/test_posting_sink.py and by text_bm25_index_append's
+    full-rebuild oracle. The postings and the stats land in one manifest
+    publish, so an append is all or nothing, and a ``batch_id`` already
+    applied makes it a no-op.
+
+    An append is ONE Spark job: the batch is coalesced to one partition
+    before the explode, so tokenize, the (doc_id, term) count, the
+    term sort and the parquet write run as one stage with no shuffle,
+    and the batch's stats are observed on the way (module docstring)."""
 
     def batch(write: IndexWrite) -> dict:
-        n_docs, sum_dl = _doc_stats(new_docs)
-        write.stage("postings", doc_postings(new_docs), _segments(num_segments))
+        postings, stats = doc_postings(new_docs.coalesce(1))
+        write.stage("postings", postings, _segments(1))
+        n_docs, sum_dl = stats()
         return {
             "n_docs": write.base["n_docs"] + n_docs,
             "sum_dl": write.base["sum_dl"] + sum_dl,

@@ -1,6 +1,8 @@
 from __future__ import annotations
 
+import hashlib
 import os
+import shutil
 import sys
 import uuid
 
@@ -27,9 +29,26 @@ REFERENCE_FIXTURES = (
 
 @pytest.fixture(scope="session")
 def spark():
+    """The session's SparkSession. At teardown it deletes the warehouse
+    entries the session created for the throwaway sf dirs tests write
+    under ``tmp_path``: every new entry whose name holds neither the
+    sf0.001 nor the sf0.01 data's tag (index_family.warehouse_index_path
+    names derived data ``<prefix>_<md5(sf_dir)[:8]>...``). Entries that
+    were there before the session are left alone, and so are the test
+    data's, which later sessions reuse."""
     s = get_spark(app_name="mas-tests", cpus=os.environ.get("SPARK_GRAFT_CPUS", "8"))
+    wh = s.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
+    before = set(os.listdir(wh)) if os.path.isdir(wh) else set()
+    data = os.path.dirname(SF_DIR)
+    tags = {
+        hashlib.md5(d.encode()).hexdigest()[:8]
+        for d in (SF_DIR, os.path.join(data, "sf0.001"), os.path.join(data, "sf0.01"))
+    }
     yield s
     s.stop()
+    for name in set(os.listdir(wh) if os.path.isdir(wh) else ()) - before:
+        if not any(tag in name for tag in tags):
+            shutil.rmtree(os.path.join(wh, name), ignore_errors=True)
 
 
 @pytest.fixture(scope="session")

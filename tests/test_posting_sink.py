@@ -497,3 +497,96 @@ def test_serves_under_concurrent_writes(spark, sf_dir, tmp_path, family):
     assert not errors, errors
     for got in results:
         assert any(same(got, o) for o in oracles), got
+
+
+def test_bm25_job_counts(spark, sf_dir, tmp_path, jobs_run):
+    """The Spark jobs of the ingest path, where the fixed cost per job
+    dominates: an append of a small batch is one job (tokenize, count,
+    sort and write in one stage), a serve three (term shuffle, doc_id
+    shuffle, top-20) and a fresh build at most four (count shuffle,
+    range-bounds sample, range shuffle, write)."""
+    import shutil
+
+    from minoan_athenaeum_spark.queries.text import bm25_serve_from_index
+    from minoan_athenaeum_spark.sources.posting_sink import (
+        append_to_bm25_index,
+        ensure_bm25_index,
+    )
+
+    work = _work_index(spark, sf_dir, tmp_path, "bm25idx_jobs")
+    batch = _docs_of(spark, sf_dir, [0, 10])
+    assert jobs_run(lambda: append_to_bm25_index(spark, work, batch)) == 1
+    assert jobs_run(lambda: bm25_serve_from_index(spark, work).collect()) == 3
+
+    fresh = str(tmp_path / "sf")
+    os.makedirs(fresh)
+    shutil.copy(os.path.join(sf_dir, "documents.parquet"), fresh)
+    assert jobs_run(lambda: ensure_bm25_index(spark, fresh, slice_="existing")) <= 4
+
+
+def _direct_stats(docs):
+    """The reference (n_docs, sum_dl): one aggregation over the
+    documents themselves."""
+    from minoan_athenaeum_spark.operators.text import tokens
+
+    row = docs.agg(
+        F.count("*").alias("n"),
+        F.coalesce(F.sum(F.size(tokens())), F.lit(0)).alias("s"),
+    ).first()
+    return row.n, row.s
+
+
+def _manifest_stats(path):
+    m = read_manifest(path)
+    return m["n_docs"], m["sum_dl"]
+
+
+def test_bm25_observed_stats_equal_direct_aggregation(spark, sf_dir, tmp_path):
+    """The stats a write observes while it writes equal a direct
+    aggregation over the documents: after a build, after an append of
+    a batch holding a null-text and an empty-text document, and after
+    an empty batch (stats unchanged, batch id recorded). A corpus whose
+    documents have no tokens at all writes no postings and still counts
+    them."""
+    import pandas as pd
+
+    from minoan_athenaeum_spark.sources.posting_sink import (
+        append_to_bm25_index,
+        ensure_bm25_index,
+    )
+
+    base = ensure_bm25_index(spark, sf_dir, slice_="existing")
+    existing = (
+        load_table(spark, sf_dir, "documents")
+        .filter(F.col("doc_id") % 10 != 0)
+        .select("doc_id", "text")
+    )
+    assert _manifest_stats(base) == _direct_stats(existing)
+
+    work = _work_index(spark, sf_dir, tmp_path, "bm25idx_stats")
+    batch = spark.createDataFrame(
+        [(0, None), (10, ""), (20, " Alpha  beta ")], "doc_id long, text string"
+    )
+    append_to_bm25_index(spark, work, batch, batch_id="b0")
+    assert _manifest_stats(work) == _direct_stats(existing.unionByName(batch))
+    want = _manifest_stats(work)
+
+    append_to_bm25_index(spark, work, batch.limit(0), batch_id="empty")
+    assert _manifest_stats(work) == want
+    assert read_manifest(work)["batches"] == ["b0", "empty"]
+
+    # fresh builds: a mixed corpus, and one without a single token (no
+    # postings, so its stats are counted directly)
+    for name, rows in (
+        ("mixed", [(1, " Alpha  beta "), (2, None), (3, ""), (4, "beta gamma")]),
+        ("tokenless", [(1, None), (2, None)]),
+    ):
+        sf = str(tmp_path / name)
+        os.makedirs(sf)
+        pd.DataFrame(rows, columns=["doc_id", "text"]).to_parquet(
+            os.path.join(sf, "documents.parquet"), index=False
+        )
+        idx = ensure_bm25_index(spark, sf)
+        assert _manifest_stats(idx) == _direct_stats(load_table(spark, sf, "documents"))
+    assert _manifest_stats(idx) == (2, 0)
+    assert index_rows(spark, idx)[0]["postings"] == []
